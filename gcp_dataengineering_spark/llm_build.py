@@ -20,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -352,6 +353,22 @@ def _parse_frac(text: str, flag: str) -> tuple[int, int]:
     return num, den
 
 
+@contextmanager
+def released_pins(spark):
+    """Unpersist, on exit, every RDD pinned inside the block — the
+    build's localCheckpoint / persist blocks — whether the block
+    returned or raised. RDDs persistent before the block (frames the
+    caller cached) keep their storage."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    try:
+        yield
+    finally:
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(True)
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_arg_parser().parse_args(argv)
     if args.bpe_train is not None and args.bpe_merges is not None:
@@ -426,145 +443,147 @@ def main(argv: list[str] | None = None) -> int:
         else None
     )
     spark = get_spark("llm_build", cpus=args.cpus)
-    docs = spark.read.parquet(args.docs)
-    eval_df = spark.read.parquet(args.eval) if args.eval else None
-    from .llm_ops.bpe import UNICODE_WORD_PATTERN
+    with released_pins(spark):
+        docs = spark.read.parquet(args.docs)
+        eval_df = spark.read.parquet(args.eval) if args.eval else None
+        from .llm_ops.bpe import UNICODE_WORD_PATTERN
 
-    word_pattern = {
-        "ascii": "[^a-z]+",
-        "unicode": UNICODE_WORD_PATTERN,
-        "whitespace": r"\s+",
-        # unset: let llm_ops.bpe resolve (ascii, or whitespace when
-        # byte-level)
-        None: None,
-    }[args.bpe_word_pattern]
-    merges_df = None
-    if args.bpe_train is not None:
-        from .llm_ops.bpe import bpe_train
+        word_pattern = {
+            "ascii": "[^a-z]+",
+            "unicode": UNICODE_WORD_PATTERN,
+            "whitespace": r"\s+",
+            # unset: let llm_ops.bpe resolve (ascii, or whitespace when
+            # byte-level)
+            None: None,
+        }[args.bpe_word_pattern]
+        merges_df = None
+        if args.bpe_train is not None:
+            from .llm_ops.bpe import bpe_train
 
-        learned = bpe_train(
-            docs, args.bpe_train, word_pattern=word_pattern,
-            byte_level=args.bpe_byte_level,
-        )
-        merges_df = spark.createDataFrame(
-            learned, "left string, right string, rank long"
-        )
-        # persist the vocabulary next to the corpus: a release without
-        # its tokenizer is not reproducible
-        os.makedirs(args.out, exist_ok=True)
-        merges_df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(args.out, "merges.parquet")
-        )
-    elif args.bpe_merges is not None:
-        merges_df = spark.read.parquet(args.bpe_merges)
-    unigram_df = None
-    if args.unigram_train:
-        from .llm_ops.unigram import unigram_train
+            learned = bpe_train(
+                docs, args.bpe_train, word_pattern=word_pattern,
+                byte_level=args.bpe_byte_level,
+            )
+            merges_df = spark.createDataFrame(
+                learned, "left string, right string, rank long"
+            )
+            # persist the vocabulary next to the corpus: a release without
+            # its tokenizer is not reproducible
+            os.makedirs(args.out, exist_ok=True)
+            merges_df.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(args.out, "merges.parquet")
+            )
+        elif args.bpe_merges is not None:
+            merges_df = spark.read.parquet(args.bpe_merges)
+        unigram_df = None
+        if args.unigram_train:
+            from .llm_ops.unigram import unigram_train
 
-        unigram_df = unigram_train(
+            unigram_df = unigram_train(
+                docs,
+                vocab_size=args.unigram_vocab_size,
+                max_piece_len=args.unigram_max_piece_len,
+                em_iters=args.unigram_em_iters,
+                # EM rounds + every downstream encode consume this table:
+                # pin it, the same contract bpe_train honors by returning
+                # driver-side rules
+                materialize=None,
+            )
+            # persist the vocabulary next to the corpus: a release without
+            # its tokenizer is not reproducible (the BPE branch's rule)
+            os.makedirs(args.out, exist_ok=True)
+            unigram_df.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(args.out, "unigram_vocab.parquet")
+            )
+        elif args.unigram_vocab is not None:
+            unigram_df = spark.read.parquet(args.unigram_vocab)
+        stages = build_training_corpus(
             docs,
-            vocab_size=args.unigram_vocab_size,
-            max_piece_len=args.unigram_max_piece_len,
-            em_iters=args.unigram_em_iters,
-            # EM rounds + every downstream encode consume this table:
-            # pin it, the same contract bpe_train honors by returning
-            # driver-side rules
+            eval_df,
+            PipelineConfig(
+                min_source_pass_pct=args.min_source_pass_pct,
+                max_tokens_per_source=args.max_tokens_per_source,
+                shard_budget_tokens=args.shard_budget,
+                bpe_merges=merges_df,
+                bpe_word_pattern=word_pattern,
+                bpe_byte_level=args.bpe_byte_level,
+                unigram_vocab=unigram_df,
+                unigram_max_piece_len=args.unigram_max_piece_len,
+                unigram_byte_fallback=args.unigram_byte_fallback,
+                unigram_sample_alpha=args.unigram_sample_alpha,
+                unigram_sample_salt=args.unigram_sample_salt,
+                mixture_budget_tokens=args.mixture_budget,
+                mixture_alpha=args.mixture_alpha,
+                quality_model_labeled=(
+                    spark.read.parquet(args.quality_model_labels)
+                    if args.quality_model_labels
+                    else None
+                ),
+                quality_model_threshold=args.quality_model_threshold,
+                quality_model_buckets=args.quality_model_buckets,
+                quality_model_target_precision_pct=args.quality_model_precision,
+                quality_model_ngrams=(
+                    args.quality_model_ngrams
+                    if args.quality_model_ngrams == "char3_5"
+                    else int(args.quality_model_ngrams)
+                ),
+                semantic_dedup_cos=args.semantic_dedup_cos,
+                retag_lang=args.retag_lang,
+                mixture_by=args.mixture_by,
+                gopher=args.gopher,
+                gopher_min_words=args.gopher_min_words,
+                gopher_repetition=args.gopher_repetition,
+                perplexity_max_bits=args.perplexity_max_bits,
+                perplexity_ref=(
+                    spark.read.parquet(args.perplexity_ref)
+                    if args.perplexity_ref
+                    else None
+                ),
+                perplexity_order=args.perplexity_order,
+                perplexity_smoothing=args.perplexity_smoothing,
+                perplexity_bucket_keep=bucket_keep,
+                dsir_target=(
+                    spark.read.parquet(args.dsir_target)
+                    if args.dsir_target
+                    else None
+                ),
+                dsir_keep=dsir_keep,
+                dsir_buckets=args.dsir_buckets,
+                dsir_gumbel=not args.dsir_top_k,
+                decontam_min_shared_frac=decontam_frac,
+                decontam_fuzzy_min_est_jaccard=args.decontam_fuzzy_min_est_jaccard,
+            ),
+            # CLI writes corpus AND shards and counts every stage: pin
+            # the branch points so each layer (the tokenizer encode
+            # and the LM scoring included) runs once per build;
+            # released_pins drops the pins when the build returns
             materialize=None,
         )
-        # persist the vocabulary next to the corpus: a release without
-        # its tokenizer is not reproducible (the BPE branch's rule)
-        os.makedirs(args.out, exist_ok=True)
-        unigram_df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(args.out, "unigram_vocab.parquet")
-        )
-    elif args.unigram_vocab is not None:
-        unigram_df = spark.read.parquet(args.unigram_vocab)
-    stages = build_training_corpus(
-        docs,
-        eval_df,
-        PipelineConfig(
-            min_source_pass_pct=args.min_source_pass_pct,
-            max_tokens_per_source=args.max_tokens_per_source,
-            shard_budget_tokens=args.shard_budget,
-            bpe_merges=merges_df,
-            bpe_word_pattern=word_pattern,
-            bpe_byte_level=args.bpe_byte_level,
-            unigram_vocab=unigram_df,
-            unigram_max_piece_len=args.unigram_max_piece_len,
-            unigram_byte_fallback=args.unigram_byte_fallback,
-            unigram_sample_alpha=args.unigram_sample_alpha,
-            unigram_sample_salt=args.unigram_sample_salt,
-            mixture_budget_tokens=args.mixture_budget,
-            mixture_alpha=args.mixture_alpha,
-            quality_model_labeled=(
-                spark.read.parquet(args.quality_model_labels)
-                if args.quality_model_labels
-                else None
-            ),
-            quality_model_threshold=args.quality_model_threshold,
-            quality_model_buckets=args.quality_model_buckets,
-            quality_model_target_precision_pct=args.quality_model_precision,
-            quality_model_ngrams=(
-                args.quality_model_ngrams
-                if args.quality_model_ngrams == "char3_5"
-                else int(args.quality_model_ngrams)
-            ),
-            semantic_dedup_cos=args.semantic_dedup_cos,
-            retag_lang=args.retag_lang,
-            mixture_by=args.mixture_by,
-            gopher=args.gopher,
-            gopher_min_words=args.gopher_min_words,
-            gopher_repetition=args.gopher_repetition,
-            perplexity_max_bits=args.perplexity_max_bits,
-            perplexity_ref=(
-                spark.read.parquet(args.perplexity_ref)
-                if args.perplexity_ref
-                else None
-            ),
-            perplexity_order=args.perplexity_order,
-            perplexity_smoothing=args.perplexity_smoothing,
-            perplexity_bucket_keep=bucket_keep,
-            dsir_target=(
-                spark.read.parquet(args.dsir_target)
-                if args.dsir_target
-                else None
-            ),
-            dsir_keep=dsir_keep,
-            dsir_buckets=args.dsir_buckets,
-            dsir_gumbel=not args.dsir_top_k,
-            decontam_min_shared_frac=decontam_frac,
-            decontam_fuzzy_min_est_jaccard=args.decontam_fuzzy_min_est_jaccard,
-        ),
-        # CLI writes corpus AND shards (two actions) and runs
-        # stage_counts: pin the branch points so the corpus is
-        # scanned once per action instead of 4x
-        materialize=None,
-    )
-    corpus_dir = os.path.join(args.out, "corpus")
-    shards_dir = os.path.join(args.out, "shards")
-    if "quality_model" in stages:
-        # persist the gate the corpus shipped under: a release
-        # without its quality model is not reproducible
-        stages["quality_model"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(args.out, "quality_model.parquet")
-        )
-    if "dsir_model" in stages:
-        # same rule for the selection model: the density-ratio
-        # weights the shipped corpus was sampled under
-        stages["dsir_model"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(args.out, "dsir_model.parquet")
-        )
-    stages["corpus"].write.mode("overwrite").partitionBy("split").parquet(corpus_dir)
-    stages["shards"].select(
-        "doc_id", "_shard_part", "shard_id", "n_tokens"
-    ).write.mode("overwrite").parquet(shards_dir)
-    # count the WRITTEN artifacts for corpus/shards (cheap metadata
-    # scans) and the lazy stages for the rest
-    report = stage_counts({k: v for k, v in stages.items() if k not in ("corpus", "shards")})
-    report["corpus"] = spark.read.parquet(corpus_dir).count()
-    report["shards"] = spark.read.parquet(shards_dir).count()
-    with open(os.path.join(args.out, "report.json"), "w") as f:
-        json.dump(report, f)
+        corpus_dir = os.path.join(args.out, "corpus")
+        shards_dir = os.path.join(args.out, "shards")
+        if "quality_model" in stages:
+            # persist the gate the corpus shipped under: a release
+            # without its quality model is not reproducible
+            stages["quality_model"].coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(args.out, "quality_model.parquet")
+            )
+        if "dsir_model" in stages:
+            # same rule for the selection model: the density-ratio
+            # weights the shipped corpus was sampled under
+            stages["dsir_model"].coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(args.out, "dsir_model.parquet")
+            )
+        stages["corpus"].write.mode("overwrite").partitionBy("split").parquet(corpus_dir)
+        stages["shards"].select(
+            "doc_id", "_shard_part", "shard_id", "n_tokens"
+        ).write.mode("overwrite").parquet(shards_dir)
+        # count the WRITTEN artifacts for corpus/shards (cheap metadata
+        # scans) and the stages for the rest (pinned ones read their pin)
+        report = stage_counts({k: v for k, v in stages.items() if k not in ("corpus", "shards")})
+        report["corpus"] = spark.read.parquet(corpus_dir).count()
+        report["shards"] = spark.read.parquet(shards_dir).count()
+        with open(os.path.join(args.out, "report.json"), "w") as f:
+            json.dump(report, f)
     print(json.dumps(report))
     return 0
 

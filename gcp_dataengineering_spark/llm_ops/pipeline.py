@@ -37,8 +37,9 @@ production pretraining-data build runs them:
 Laziness contract: the returned DataFrames are plans, not results —
 `corpus` is the cleaned corpus, `shards` the shard plan; nothing is
 collected here. `stage_counts` is the release report; it persists
-each stage around its count so the report costs one pipeline pass,
-not one per stage.
+each stage around its count. With ``materialize`` on, its counts read
+the branch points the build already pinned; fully lazy, the persist
+alone keeps the report to one pipeline pass, not one per stage.
 
 Scale shape: every stage is the shape its own module documents —
 scan-speed projections for gates/scrub, fingerprint-only shuffles
@@ -332,18 +333,30 @@ def build_training_corpus(
     (with `split`), plus ``shards`` (the shard plan). Each value is
     a lazy DataFrame; see `stage_counts` for the report.
 
-    ``materialize`` pins the two corpus-wide branch points
-    (``scrubbed`` fans out to the exact-dedup fingerprint join AND
-    everything downstream; ``exact_deduped`` to the minhash / CC /
-    keeper trio): without it, executing ``shards`` alone scans the
-    raw corpus 4× and runs the PII scrub twice (measured on the
-    executed plan), because lineage re-runs per consumer. At 100 TB
-    that is 4 corpus scans instead of 1 — pass ``None`` for the
-    module-wide strategy (localCheckpoint locally,
-    checkpoint/parquet-spill on a cluster; see llm_ops.materialize)
-    or keep the default ``False`` to stay fully lazy (the
+    ``materialize`` pins every branch point, the frames that more
+    than one consumer reads, so lineage does not re-run per consumer:
+
+    - ``scrubbed``: the exact-dedup fingerprint join and everything
+      downstream;
+    - ``exact_deduped``: the minhash / CC / keeper trio;
+    - ``perplexity`` (when the LM gate is on): the bucket cut, the
+      fluent-id semi-join and the report;
+    - ``capped``: the tokenized corpus, read by the mixture plan,
+      the split, the shard plan, and every write and count of them —
+      so the encoder runs once per build;
+    - the gated corpus ahead of each optional stage whose operator
+      references its input more than once (boilerplate, Gopher
+      repetition, self-trained LM, DSIR, semantic dedup, cluster
+      balance, span dedup, the tokenizers) and the small trained
+      models (quality model, DSIR weights, duplicate spans).
+
+    Pass ``None`` for the module-wide strategy (localCheckpoint
+    locally, checkpoint/parquet-spill on a cluster; see
+    llm_ops.materialize). The caller owns the pins and releases them
+    when done (``llm_build.main`` unpersists every RDD the build
+    pinned). Keep the default ``False`` to stay fully lazy: the
     stage_counts path persists every stage itself, and one-stage
-    consumers don't pay for materialization they don't need)."""
+    consumers don't pay for materialization they don't need."""
     from .materialize import materialize as _materialize
 
     cfg = config or PipelineConfig()
@@ -571,6 +584,11 @@ def build_training_corpus(
                 backoff_bits=cfg.perplexity_backoff_bits,
                 smoothing=cfg.perplexity_smoothing,
             )
+        if materialize is not False:
+            # three consumers (the bucket cut, the fluent-id semi-join
+            # and the `perplexity` report stage): pin the scores so
+            # the LM trains and scores once, not once per consumer
+            perplexity_scores = _materialize(perplexity_scores, materialize)
         if cfg.perplexity_bucket_keep is not None:
             # 2e. CCNet's head/middle/tail cut (r17 wave 3): bucket
             # the SCORES per language and keep only the configured
@@ -861,6 +879,12 @@ def build_training_corpus(
         if cfg.max_tokens_per_source is not None
         else with_tokens
     )
+    if materialize is not False:
+        # the tokenized corpus fans out to the mixture plan, the
+        # split/shard steps, and every write and count of them: pin
+        # it so the encoder (BPE, unigram, or the whitespace count)
+        # runs once per build
+        capped = _materialize(capped, materialize)
 
     mixture: DataFrame | None = None
     mixed = capped
@@ -869,16 +893,13 @@ def build_training_corpus(
         # REAL token counts this late stage sees (post-dedup,
         # post-cap, BPE counts when enabled), then the content-stable
         # hash downsample. The plan frame references `capped` once
-        # more (its aggregation), so pin the branch point per the
-        # documented rule. cfg.mixture_by (r12) regroups the budgets
-        # — e.g. "lang" (with retag_lang) gives the published
-        # per-LANGUAGE temperature mixture instead of per-source.
+        # more (its aggregation); `capped` is already pinned above.
+        # cfg.mixture_by (r12) regroups the budgets — e.g. "lang"
+        # (with retag_lang) gives the published per-LANGUAGE
+        # temperature mixture instead of per-source.
         from .corpus import apply_mixture, mixture_plan
 
         mix_col = cfg.mixture_by or source_col
-        if materialize is not False:
-            capped = _materialize(capped, materialize)
-            mixed = capped
         mixture = mixture_plan(
             capped,
             alpha=cfg.mixture_alpha,

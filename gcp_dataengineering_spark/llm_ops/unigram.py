@@ -656,9 +656,13 @@ def _assemble_docs(
     # `out` here re-ran its whole join+groupBy lineage a second time
     # just to list ids (r18). With `empty_arr` the anti-join (and the
     # third token-explode evaluation feeding it) disappears entirely
-    # (r19) — one row-wise filter over the doc scan.
+    # (r19) — one row-wise filter over the doc scan. NULL text gives
+    # a NULL array, whose size is NULL (or -1 under the legacy
+    # sizeOfNull rule): coalesce so those docs keep their empty row,
+    # as they did under the anti-join.
     base = (
-        docs.filter(F.size(empty_arr) == 0).select(F.col(id_col))
+        docs.filter(F.coalesce(F.size(empty_arr), F.lit(0)) <= 0)
+        .select(F.col(id_col))
         if empty_arr is not None
         else docs.select(F.col(id_col)).join(
             tokens.select(id_col), id_col, "left_anti"

@@ -1460,3 +1460,109 @@ def test_build_training_corpus_unigram_byte_fallback_budgets(spark):
             ),
             materialize=None,
         )
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _fluent_docs(spark):
+    """Ten distinct prose pages over a shared vocabulary plus one
+    word-salad page: enough text for a unigram vocab and a trigram
+    LM."""
+    import random
+
+    words = ("the cat sat on a mat and the dog ran to the house of "
+             "my old friend who lives by the river near town").split()
+    rows = [
+        (i, " ".join(random.Random(i).choices(words, k=60)) + ".",
+         f"site{i % 2}", "en")
+        for i in range(10)
+    ]
+    rows.append((99, " ".join(f"zq{j}w of vb{j}k to" for j in range(15)) + ".",
+                 "site0", "en"))
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, source string, lang string"
+    )
+
+
+def test_build_training_corpus_pins_tokenized_corpus_and_lm_scores(spark):
+    """With materialize on, the tokenized corpus (``capped``) and the
+    LM scores (``perplexity``) are bare checkpoint scans, so the
+    writes, the shard plan and the report read them instead of
+    re-running the unigram encode and the LM. Fully lazy
+    (materialize=False) neither is pinned, and both builds agree."""
+    from gcp_dataengineering_spark.llm_build import released_pins
+    from gcp_dataengineering_spark.llm_ops.pipeline import (
+        PipelineConfig,
+        build_training_corpus,
+    )
+    from gcp_dataengineering_spark.llm_ops.unigram import unigram_train
+
+    docs = _fluent_docs(spark)
+    cols = ("doc_id", "split", "n_tokens", "tokens")
+    with released_pins(spark):
+        vocab = unigram_train(docs, vocab_size=40, max_piece_len=4, em_iters=1)
+        cfg = PipelineConfig(
+            unigram_vocab=vocab, unigram_max_piece_len=4,
+            perplexity_max_bits=99.0, perplexity_order=3,
+            perplexity_smoothing="kn", shard_budget_tokens=500,
+        )
+        pinned = build_training_corpus(docs, config=cfg, materialize=None)
+        for name in ("capped", "perplexity"):
+            plan = _optimized_plan(pinned[name])
+            assert plan.startswith("LogicalRDD"), (name, plan)
+            for node in ("Join", "Window", "EvalPython", "InPandas", "InArrow"):
+                assert node not in plan, (name, node, plan)
+        want = sorted(map(tuple, pinned["corpus"].select(*cols).collect()))
+
+        lazy = build_training_corpus(docs, config=cfg, materialize=False)
+        for name in ("capped", "perplexity"):
+            plan = _optimized_plan(lazy[name])
+            assert not plan.startswith("LogicalRDD") and "Join" in plan, (name, plan)
+        assert sorted(map(tuple, lazy["corpus"].select(*cols).collect())) == want
+    assert len(want) == 11
+
+
+def test_llm_build_releases_its_pins(spark, tmp_path):
+    """llm_build.main unpersists every RDD the build pinned (the
+    trained vocab, the branch-point checkpoints) before it returns,
+    and a failed block releases too. A frame the caller cached before
+    the call keeps its storage."""
+    import json
+    import os
+
+    import pytest as _pytest
+
+    from gcp_dataengineering_spark.llm_build import main, released_pins
+
+    docs_path = os.path.join(tmp_path, "docs.parquet")
+    _fluent_docs(spark).write.parquet(docs_path)
+    jsc = spark.sparkContext._jsc
+    mine = spark.range(1000).withColumn("sq", F.col("id") * F.col("id")).persist()
+    assert mine.count() == 1000
+    level = mine.storageLevel
+    before = set(jsc.getPersistentRDDs().keySet())
+    try:
+        out = os.path.join(tmp_path, "build_out")
+        rc = main([
+            "--docs", docs_path, "--out", out, "--shard-budget", "500",
+            "--tokenizer", "unigram", "--unigram-train",
+            "--unigram-vocab-size", "40", "--unigram-max-piece-len", "4",
+            "--unigram-em-iters", "1",
+            "--perplexity-order", "3", "--perplexity-smoothing", "kn",
+            "--perplexity-max-bits", "99",
+        ])
+        assert rc == 0
+        with open(os.path.join(out, "report.json")) as f:
+            assert json.load(f)["corpus"] > 0
+        assert set(jsc.getPersistentRDDs().keySet()) == before
+        assert mine.is_cached and mine.storageLevel == level
+
+        with _pytest.raises(RuntimeError, match="build failed"):
+            with released_pins(spark):
+                spark.range(10).localCheckpoint(eager=True)
+                raise RuntimeError("build failed")
+        assert set(jsc.getPersistentRDDs().keySet()) == before
+    finally:
+        mine.unpersist()

@@ -63,13 +63,15 @@ def test_encode_words_matches_viterbi_py_and_covers(spark):
 def test_encode_docs_order_oov_and_empty(spark):
     vocab = U.unigram_train(_docs(spark), vocab_size=25, max_piece_len=4)
     docs = spark.createDataFrame(
-        [(1, "the cat"), (2, ""), (3, "zebra mat zebra"), (4, "!!!")],
+        [(1, "the cat"), (2, ""), (3, "zebra mat zebra"), (4, "!!!"), (5, None)],
         "doc_id long, text string",
     )
     out = {r.doc_id: r for r in U.unigram_encode_docs(docs, vocab, max_piece_len=4).collect()}
-    assert len(out) == 4
+    assert len(out) == 5
     assert out[2].n_pieces == 0 and list(out[2].pieces) == []
     assert out[4].n_pieces == 0
+    # NULL text: kept, with an empty encoding
+    assert list(out[5].pieces) == [] and out[5].n_pieces == 0 and out[5].n_oov == 0
     assert "".join(out[1].pieces) == "thecat"
     # word order preserved: zebra pieces, then mat, then zebra again
     joined = "".join(out[3].pieces)

@@ -1,0 +1,188 @@
+"""Spark job census of one corpus build, grouped by call site.
+
+Runs ``llm_build.main`` in-process with the Spark event log on, over
+the benchmark's seeded ``corpus_build`` input (generated by importing
+``perfbench/gen.py``) and with its flags (``perfbench/workloads.py``).
+Around every classic action (DataFrame, DataFrameWriter and RDD) it
+sets the job description to the innermost call site inside the
+package, so each Spark job the action submits carries that label.
+After the session stops it parses the uncompressed event log and
+prints jobs, tasks and summed job wall time per call site, in the
+order the build first reached each site.
+
+Usage:
+  python tools/job_census.py [--root CHECKOUT] [--seed 1] [--cpus N]
+
+``--root`` imports the package from another checkout (for example a
+clone of an older commit) for a before/after census; the inputs, the
+flags and the event-log reader always come from this checkout's
+``perfbench/``. Stdlib and pyspark only.
+"""
+
+from __future__ import annotations
+
+import argparse
+import contextlib
+import functools
+import io
+import linecache
+import os
+import shutil
+import subprocess
+import sys
+import tempfile
+import threading
+import time
+
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "gcp_dataengineering_spark"
+
+DATAFRAME_ACTIONS = (
+    "count", "collect", "take", "first", "head", "tail", "show", "toPandas",
+    "toLocalIterator", "isEmpty", "foreach", "foreachPartition",
+    "localCheckpoint", "checkpoint",
+)
+WRITER_ACTIONS = (
+    "save", "parquet", "json", "csv", "orc", "text", "saveAsTable", "insertInto",
+)
+RDD_ACTIONS = (
+    "collect", "count", "take", "first", "reduce", "fold", "aggregate", "sum",
+    "max", "min", "top", "takeOrdered", "isEmpty", "foreach", "foreachPartition",
+    "countByKey", "countByValue", "collectAsMap", "toLocalIterator",
+)
+
+_depth = threading.local()
+
+
+def _call_site(pkg_dir: str) -> str:
+    """``module.function:line  source`` of the innermost frame inside
+    the package, or ``(outside package)``. The materialize helpers
+    are skipped, so a pin is labelled with the line that asked for it."""
+    frame = sys._getframe(2)
+    skip = os.path.join(pkg_dir, "llm_ops", "materialize.py")
+    while frame is not None:
+        path = frame.f_code.co_filename
+        if path.startswith(pkg_dir) and path != skip:
+            mod = os.path.splitext(os.path.relpath(path, pkg_dir))[0].replace(os.sep, ".")
+            src = linecache.getline(path, frame.f_lineno).strip()
+            return f"{mod}.{frame.f_code.co_name}:{frame.f_lineno}  {src[:60]}"
+        frame = frame.f_back
+    return "(outside package)"
+
+
+def _labelled(fn, sc, pkg_dir: str):
+    """``fn`` with the outermost call labelling its Spark jobs."""
+
+    @functools.wraps(fn)
+    def wrapper(*args, **kwargs):
+        depth = getattr(_depth, "n", 0)
+        if depth == 0:
+            sc.setJobDescription(_call_site(pkg_dir))
+        _depth.n = depth + 1
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            _depth.n = depth
+            if depth == 0:
+                sc.setJobDescription(None)
+
+    return wrapper
+
+
+def label_actions(sc, pkg_dir: str) -> None:
+    from pyspark.core.rdd import RDD
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    for cls, names in ((DataFrame, DATAFRAME_ACTIONS),
+                       (DataFrameWriter, WRITER_ACTIONS), (RDD, RDD_ACTIONS)):
+        for name in names:
+            setattr(cls, name, _labelled(getattr(cls, name), sc, pkg_dir))
+
+
+def census(events: list[dict]) -> list[tuple[str, int, int, float]]:
+    """(label, jobs, tasks, job wall s) per label, in first-job order."""
+    label_of_job: dict[int, str] = {}
+    job_of_stage: dict[int, int] = {}
+    started: dict[int, int] = {}
+    rows: dict[str, list] = {}
+    for ev in events:
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart":
+            job = ev["Job ID"]
+            label = (ev.get("Properties") or {}).get("spark.job.description")
+            label_of_job[job] = label or "(unlabelled)"
+            started[job] = ev["Submission Time"]
+            for sid in ev.get("Stage IDs", []):
+                job_of_stage.setdefault(sid, job)
+            rows.setdefault(label_of_job[job], [0, 0, 0.0])[0] += 1
+        elif kind == "SparkListenerJobEnd":
+            job = ev["Job ID"]
+            rows[label_of_job[job]][2] += (ev["Completion Time"] - started[job]) / 1e3
+        elif kind == "SparkListenerStageCompleted":
+            info = ev["Stage Info"]
+            job = job_of_stage.get(info["Stage ID"])
+            if job is not None and "Completion Time" in info:
+                rows[label_of_job[job]][1] += info["Number of Tasks"]
+    return [(label, *vals) for label, vals in rows.items()]
+
+
+def main(argv: list[str] | None = None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--root", default=HERE, help="checkout to import the package from")
+    p.add_argument("--seed", type=int, default=1)
+    p.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
+    args = p.parse_args(argv)
+
+    root = os.path.abspath(args.root)
+    sys.path[:0] = [root, os.path.join(HERE, "perfbench")]
+    import gen
+    from spans import read_event_log
+    from workloads import CorpusBuild
+
+    from gcp_dataengineering_spark import llm_build
+    from gcp_dataengineering_spark.session import get_spark
+
+    pkg_dir = os.path.join(root, PACKAGE) + os.sep
+    if not llm_build.__file__.startswith(pkg_dir):
+        raise SystemExit(f"the package was imported from {llm_build.__file__}, not {root}")
+    commit = subprocess.run(["git", "-C", root, "describe", "--always", "--dirty"],
+                            capture_output=True, text=True).stdout.strip()
+    work = tempfile.mkdtemp(prefix="job_census-")
+    try:
+        table, _ = gen.corpus_docs(args.seed, CorpusBuild.n_docs)
+        gen.write_tables({"docs": table}, work)
+        log_dir = os.path.join(work, "events")
+        os.makedirs(log_dir)
+        spark = get_spark("job_census", cpus=args.cpus, extra_conf={
+            "spark.eventLog.enabled": "true", "spark.eventLog.compress": "false",
+            "spark.eventLog.dir": "file://" + log_dir})
+        try:
+            label_actions(spark.sparkContext, pkg_dir)
+            argv = ["--docs", os.path.join(work, "docs.parquet"),
+                    "--out", os.path.join(work, "out"), *CorpusBuild.args]
+            t0 = time.perf_counter()
+            with contextlib.redirect_stdout(io.StringIO()):
+                rc = llm_build.main(argv)
+            wall = time.perf_counter() - t0
+            if rc != 0:
+                raise RuntimeError(f"llm_build.main returned {rc}")
+        finally:
+            spark.stop()
+        rows = census(read_event_log(log_dir))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+    print(f"# job census: llm_build.main, corpus_build seed {args.seed}, "
+          f"commit {commit or '?'}, local[{args.cpus}]")
+    print(f"# main() wall {wall:.1f} s; job wall sums each job's submit-to-end time")
+    print(f"{'jobs':>5} {'tasks':>6} {'job_s':>7}  call site")
+    for label, jobs, tasks, secs in rows:
+        print(f"{jobs:>5} {tasks:>6} {secs:>7.2f}  {label}")
+    print(f"{sum(r[1] for r in rows):>5} {sum(r[2] for r in rows):>6} "
+          f"{sum(r[3] for r in rows):>7.2f}  total")
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())
