@@ -561,32 +561,24 @@ def resolve_dup_groups(
     id_col: str = "doc_id",
     max_iter: int = 25,
     materialize: str | MaterializeFn | bool | None = None,
-    algorithm: str = "twohop",
 ) -> DataFrame:
     """Connected components over near-dup pairs → one keeper per
     duplicate group: (doc_id, group_id) where group_id is the minimum
     doc id reachable through the pair graph (the canonical keeper).
 
-    Two algorithms, both iterating ROUNDS (one distributed join+agg
-    chain per round), never rows — the driver loop count is the only
-    sequential part, so each round parallelizes across the cluster:
+    Min-label propagation with pointer doubling, iterating ROUNDS
+    (one distributed join+agg chain per round), never rows — the
+    driver loop count is the only sequential part, so each round
+    parallelizes across the cluster. Each round every node takes the
+    min of (its label, its label's label, its neighbors' labels). The
+    ``L(L(v))`` lookup is the pointer-doubling step of the classic
+    Shiloach-Vishkin / large-star–small-star family: the hop distance
+    covered per round doubles, so a component of diameter d converges
+    in O(log d) rounds — a 1M-node pathological chain needs ~20
+    rounds, not 1M. This is the 100 TB insurance for adversarial dup
+    graphs.
 
-    - ``twohop`` (default): min-label propagation with pointer
-      doubling. Each round every node takes the min of (its label,
-      its label's label, its neighbors' labels). The ``L(L(v))``
-      self-join is the pointer-doubling step of the classic
-      Shiloach-Vishkin / large-star–small-star family: the hop
-      distance covered per round doubles, so a component of diameter
-      d converges in O(log d) rounds — a 1M-node pathological chain
-      needs ~20 rounds, not 1M. This is the 100 TB insurance for
-      adversarial dup graphs.
-    - ``propagate``: plain one-hop min-label propagation,
-      O(diameter) rounds. One fewer join per round; fine for the
-      documented near-dup contract (shallow components, diameter
-      ≲ 10), pathological on long chains.
-
-    Both produce identical (doc_id, group_id) output. Correctness of
-    the fixpoint: labels only decrease and only ever take values of
+    Correctness of the fixpoint: labels only decrease and only ever take values of
     in-component node ids; at the fixpoint every edge (u, v) has
     L(u) ≤ L(v) and (edges are symmetrized) L(v) ≤ L(u), so labels
     are constant per component, and the component's min node keeps
@@ -622,10 +614,6 @@ def resolve_dup_groups(
     can evaluate differently per consumer, silently dropping or
     duplicating doc_ids. Callers with nondeterministic upstreams must
     pin them (materialize/localCheckpoint) before calling in."""
-    if algorithm not in ("twohop", "propagate"):
-        raise ValueError(
-            f"unknown CC algorithm {algorithm!r}: expected 'twohop' or 'propagate'"
-        )
     # Materialize the edge list ONCE before iterating: `pairs` is
     # typically the most expensive subplan in the module (a full
     # shingle posting-list join), and every propagation round consumes
@@ -653,7 +641,7 @@ def resolve_dup_groups(
     for it in range(max_iter):
         # One message per edge: src asks for its neighbor's label.
         msgs = edges.select(F.col("dst").alias("key"), F.col("src").alias("tgt"))
-        if algorithm == "twohop" and it > 0:
+        if it > 0:
             # Pointer doubling as a MESSAGE, not a second join: v asks
             # for L(L(v)) via (key=L(v), tgt=v). Every label value is
             # itself a node id present in `labels` (labels start as

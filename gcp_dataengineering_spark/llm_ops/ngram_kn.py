@@ -2,13 +2,13 @@
 configuration (Wenzek et al. 2020 filter: a 5-gram KenLM) at any
 order 2..5, fully SQL-replayable.
 
-This is the order-generalized form of llm_ops/ngram_lm.py's
-``smoothing="kn"`` (r17): the same quantized Ney discount
-(``_kn_discount``, D/256 — the int64-exactness argument in the
-KN_DDEN note), the same backoff-form escape weights, and TRUE
-continuation counts at every lower order — each level's table is
-derived from the TYPE table one order up, so the corpus is touched
-exactly once no matter the order:
+This is the package's ONE Spark Kneser-Ney engine: llm_ops/ngram_lm.py's
+bigram/trigram ``smoothing="kn"`` front-ends route here with
+``order=2|3``. Quantized Ney discount (``_kn_discount``, D/256 — the
+int64-exactness argument in the KN_DDEN note), backoff-form escape
+weights, and TRUE continuation counts at every lower order — each
+level's table is derived from the TYPE table one order up, so the
+corpus is touched exactly once no matter the order:
 
     cK   (w | u_1..u_{K-1})       raw K-gram counts
     cc_k (w | u_{K-k+1}..u_{K-1}) = |{distinct next-higher context}|
@@ -24,9 +24,9 @@ is a hit (0 = the continuation-unigram base),
     esc_j  = llog2(N1+_j·D_j)      − llog2(ctx_j·256)
     base   = llog2(max(N1cw, 1))   − llog2(N1pp)
 
-(an unseen context contributes NO escape — identical to the pinned
-order-2/3 branch semantics, cross-validated exactly against
-ngram_lm's independent implementations in pytest).
+(an unseen context contributes NO escape — the order-2/3 semantics
+of ngram_lm's KN twins and DuckDB replays, against which this engine
+is cross-validated exactly in pytest).
 
 Every count table sits at n-gram-type altitude. Scoring joins
 (r18 shape): at each order k ≥ 3 the transitions join the CONTEXT
@@ -64,7 +64,7 @@ pinned by a Fraction-arithmetic pytest.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .materialize import MaterializeFn
@@ -73,9 +73,13 @@ from .ngram_lm import (
     BOS,
     KN_DDEN,
     UNK,
+    _doc_scores,
     _kn_discount,
     _KN_DNUM_SQL,
+    _lm_transitions,
     _tokens_py,
+    _trans_of,
+    _vocab_of,
     _word_rows,
     _WS_SQL,
 )
@@ -95,29 +99,6 @@ def _norm_prune(prune: dict[int, int] | None, order: int) -> dict[int, int]:
             raise ValueError(f"prune[{k}] must be >= 1, got {v}")
         out[k] = int(v)
     return out
-
-
-def _trans_of(words: DataFrame, vocab: DataFrame, pcols: list[str],
-              keep_doc: bool = True) -> DataFrame:
-    """(doc_id, token, p1..p{K-1}) — vocab-folded tokens with all
-    K−1 lag columns over ONE per-doc window."""
-    mapped = words.join(
-        F.broadcast(vocab.withColumnRenamed("word", "_v")),
-        F.col("word") == F.col("_v"),
-        "left",
-    ).select(
-        "doc_id",
-        "pos",
-        F.when(F.col("_v").isNotNull(), F.col("word"))
-        .otherwise(F.lit(UNK))
-        .alias("token"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    cols = (["doc_id"] if keep_doc else []) + ["token"] + [
-        F.lag("token", i, BOS).over(w).alias(p)
-        for i, p in enumerate(pcols, start=1)
-    ]
-    return mapped.select(*cols)
 
 
 def _build_tables(trans_train: DataFrame, order: int, frac_bits: int,
@@ -223,7 +204,6 @@ def _score_trans(docs: DataFrame, trans_score: DataFrame, tables: dict,
     """Join the scoring transitions against the model tables and
     aggregate to the (doc_id, n_trans, nll_fp, ppl_bits) shape."""
     pcols = [f"p{i}" for i in range(1, order)]
-    scale = 1 << frac_bits
     kept, ctxs = tables["kept"], tables["ctxs"]
     pr = tables.get("prune") or {k: 1 for k in range(2, order + 1)}
     dn, l_n1pp = tables["dn"], tables["l_n1pp"]
@@ -280,20 +260,7 @@ def _score_trans(docs: DataFrame, trans_score: DataFrame, tables: dict,
         esc_above = esc_above + esc_if_seen(k)
     lp = lp.otherwise(esc_above + base1)
 
-    scored = j.select("doc_id", lp.alias("lp"))
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_trans"), (-F.sum("lp")).alias("nll_fp")
-    )
-    base = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return base.join(agg, ["doc_id"], "left").select(
-        "doc_id",
-        F.coalesce(F.col("n_trans"), F.lit(0)).cast("long").alias("n_trans"),
-        F.coalesce(F.col("nll_fp"), F.lit(0)).cast("long").alias("nll_fp"),
-        F.when(
-            F.col("n_trans") > 0,
-            F.round(F.col("nll_fp") / (F.col("n_trans") * F.lit(float(scale))), 4),
-        ).alias("ppl_bits"),
-    )
+    return _doc_scores(docs, j.select("doc_id", lp.alias("lp")), id_col, frac_bits)
 
 
 def kn_perplexity(
@@ -315,23 +282,10 @@ def kn_perplexity(
     with exact escape-mass renormalization (module docstring)."""
     if not 2 <= order <= MAX_ORDER:
         raise ValueError(f"order must be 2..{MAX_ORDER}, got {order}")
-    train_words = _word_rows(ref if ref is not None else docs, text_col, id_col)
-    score_words = train_words if ref is None else _word_rows(docs, text_col, id_col)
-
-    wc = _materialize(
-        train_words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")),
-        materialize,
-    )
-    vocab = wc.filter(F.col("cnt") >= min_count).select("word")
     pcols = [f"p{i}" for i in range(1, order)]
-
-    trans_train = _trans_of(train_words, vocab, pcols)
-    if ref is None:
-        trans_train = _materialize(trans_train, materialize)
-        trans_score = trans_train
-    else:
-        trans_score = _trans_of(score_words, vocab, pcols)
-
+    _, _, trans_train, trans_score = _lm_transitions(
+        docs, ref, text_col, id_col, min_count, pcols, materialize
+    )
     tables = _build_tables(trans_train, order, frac_bits, materialize, prune)
     return _score_trans(docs, trans_score, tables, order, frac_bits, id_col)
 
@@ -359,10 +313,7 @@ def kn_lm_fit(
     if not 2 <= order <= MAX_ORDER:
         raise ValueError(f"order must be 2..{MAX_ORDER}, got {order}")
     words = _word_rows(ref, text_col, id_col)
-    wc = _materialize(
-        words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")), materialize
-    )
-    vocab = wc.filter(F.col("cnt") >= min_count).select("word")
+    _, vocab = _vocab_of(words, min_count, materialize)
     pcols = [f"p{i}" for i in range(1, order)]
     tables = _build_tables(
         _trans_of(words, vocab, pcols), order, frac_bits, materialize, prune

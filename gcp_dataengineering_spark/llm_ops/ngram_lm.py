@@ -3,9 +3,22 @@ quality signal (Wenzek et al. 2020, "CCNet: Extracting High Quality
 Monolingual Datasets from Web Crawl Data": documents are bucketed by
 the perplexity of a reference n-gram LM; gibberish and boilerplate
 score high, fluent prose low). CCNet uses a 5-gram KenLM; this is
-the distributed re-expression at bigram order with unigram backoff —
-the published filtering recipe's shape, sized to what a SQL oracle
-can replay exactly.
+the distributed re-expression at bigram and trigram order with
+backoff — the published filtering recipe's shape, sized to what a
+SQL oracle can replay exactly.
+
+One Spark engine per smoothing:
+- ``smoothing="laplace"`` (the default, below) is computed here:
+  one order-2/3 table fit (:func:`_laplace_fit`) and one scorer
+  (:func:`_laplace_score`), shared by the one-shot
+  ``*_perplexity``, ``*_lm_fit`` and ``*_lm_score`` forms.
+- ``smoothing="kn"`` (Kneser-Ney, the KenLM family) lives in
+  llm_ops/ngram_kn.py at every order 2..5; the bigram/trigram
+  front-ends here route to ``kn_perplexity`` / ``kn_lm_fit`` /
+  ``kn_lm_score`` with ``order=2|3``.
+The ``*_py`` twins and ``*_sql`` replays below keep BOTH smoothings
+written out independently: they are the references the two engines
+are checked against.
 
 Everything is INTEGER fixed-point log2 (the quality_model.py llog2
 discipline, FRAC_BITS=16): scores are exact BIGINTs in Spark, DuckDB
@@ -96,30 +109,6 @@ _KN_DNUM_SQL = (
 ).format(half=KN_DDEN // 2, dmax=KN_DDEN - 1, dden=KN_DDEN)
 
 
-def _kn_cc_stats(hi: DataFrame, hi_col: str, lo: DataFrame, lo_col: str):
-    """Both orders' count-of-count scalars (n1, n2 per order, plus
-    the lower order's type total ``n1pp2``) in ONE driver action — a
-    union of two bounded aggregates over the (checkpointed) type
-    tables, replacing two sequential collects."""
-    def cc(df: DataFrame, col: str, tag: int) -> DataFrame:
-        return df.agg(
-            F.lit(tag).alias("k"),
-            F.coalesce(
-                F.sum((F.col(col) == 1).cast("long")), F.lit(0)
-            ).alias("n1"),
-            F.coalesce(
-                F.sum((F.col(col) == 2).cast("long")), F.lit(0)
-            ).alias("n2"),
-            F.count(F.lit(1)).alias("n1pp2"),
-        )
-
-    rows = {
-        int(r["k"]): r
-        for r in cc(hi, hi_col, 3).unionByName(cc(lo, lo_col, 2)).collect()
-    }
-    return rows[3], rows[2]
-
-
 def _word_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(doc_id, pos, word) — 1-based position, lowercase nonempty
     whitespace tokens."""
@@ -127,6 +116,227 @@ def _word_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(
         F.col(id_col).alias("doc_id"), F.posexplode(words).alias("pos0", "word")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
+
+
+def _vocab_of(words: DataFrame, min_count: int, materialize):
+    """(wc, vocab): the distinct-word count table (pinned — it feeds
+    the vocab, the unigram fold and the totals collect) and the
+    words kept at ``min_count``."""
+    wc = _materialize(
+        words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")), materialize
+    )
+    return wc, wc.filter(F.col("cnt") >= min_count).select("word")
+
+
+def _fold(df: DataFrame, vocab: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns + ``token``: the ``word`` column folded to
+    <unk> outside ``vocab``. The vocab join is broadcast-hinted like
+    the unigram/bpe vocab joins; at an extreme vocabulary drop the
+    hint and let AQE decide — it stays a key-bucketed equi-join."""
+    return df.join(
+        F.broadcast(vocab.withColumnRenamed("word", "_v")),
+        F.col("word") == F.col("_v"),
+        "left",
+    ).select(
+        *keep,
+        F.when(F.col("_v").isNotNull(), F.col("word"))
+        .otherwise(F.lit(UNK))
+        .alias("token"),
+    )
+
+
+def _trans_of(words: DataFrame, vocab: DataFrame, lags: list[str]) -> DataFrame:
+    """(doc_id, token, *lags) — vocab-folded tokens with one lag
+    column per name in ``lags`` (nearest previous token first, <s>
+    before the document start), all over ONE per-doc window."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    return _fold(words, vocab, "doc_id", "pos").select(
+        "doc_id",
+        "token",
+        *[F.lag("token", i, BOS).over(w).alias(p) for i, p in enumerate(lags, start=1)],
+    )
+
+
+def _lm_transitions(docs: DataFrame, ref: DataFrame | None, text_col: str,
+                    id_col: str, min_count: int, lags: list[str], materialize):
+    """(wc, vocab, trans_train, trans_score) of a one-shot LM: the
+    vocabulary and training transitions come from ``ref`` (default:
+    ``docs`` itself), the scoring transitions from ``docs``.
+    Self-trained, ONE transition table feeds both the count build and
+    the scoring join — it is pinned so the explode+window runs once."""
+    train_words = _word_rows(ref if ref is not None else docs, text_col, id_col)
+    wc, vocab = _vocab_of(train_words, min_count, materialize)
+    trans_train = _trans_of(train_words, vocab, lags)
+    if ref is None:
+        trans_train = _materialize(trans_train, materialize)
+        return wc, vocab, trans_train, trans_train
+    return wc, vocab, trans_train, _trans_of(
+        _word_rows(docs, text_col, id_col), vocab, lags
+    )
+
+
+def _doc_scores(docs: DataFrame, scored: DataFrame, id_col: str,
+                frac_bits: int) -> DataFrame:
+    """Per-transition (doc_id, lp) → the (doc_id, n_trans, nll_fp,
+    ppl_bits) output shape, one row per distinct doc of ``docs``
+    (zero-token docs: n_trans 0, NULL ppl_bits)."""
+    scale = 1 << frac_bits
+    agg = scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_trans"), (-F.sum("lp")).alias("nll_fp")
+    )
+    base = docs.select(F.col(id_col).alias("doc_id")).distinct()
+    return base.join(agg, ["doc_id"], "left").select(
+        "doc_id",
+        F.coalesce(F.col("n_trans"), F.lit(0)).cast("long").alias("n_trans"),
+        F.coalesce(F.col("nll_fp"), F.lit(0)).cast("long").alias("nll_fp"),
+        F.when(
+            F.col("n_trans") > 0,
+            F.round(F.col("nll_fp") / (F.col("n_trans") * F.lit(float(scale))), 4),
+        ).alias("ppl_bits"),
+    )
+
+
+# lag-column names of the Laplace tables (saved models keep them)
+_LAGS = ["prev", "prev2"]
+
+
+def _check_smoothing(smoothing: str) -> None:
+    if smoothing not in ("laplace", "kn"):
+        raise ValueError(f"unknown smoothing {smoothing!r} (laplace|kn)")
+
+
+def _laplace_fit(wc: DataFrame, vocab: DataFrame, trans: DataFrame, order: int,
+                 min_count: int, frac_bits: int, materialize) -> dict:
+    """The order-2/3 Laplace backoff model from the training
+    transitions: the c3/c3ctx (order 3) and c2/c1 count tables at
+    n-gram-type altitude, the folded unigram table cu, and the
+    llog2(U+V) denominator. The top-order count table and c2 are
+    pinned: each feeds its context totals AND the scoring join."""
+    model: dict = {"order": order, "smoothing": "laplace",
+                   "frac_bits": frac_bits, "vocab": vocab}
+    if order == 3:
+        c3 = _materialize(
+            trans.groupBy("prev2", "prev", "token").agg(F.count(F.lit(1)).alias("c3")),
+            materialize,
+        )
+        model["c3"] = c3
+        model["c3ctx"] = c3.groupBy("prev2", "prev").agg(F.sum("c3").alias("c3ctx"))
+    c2 = _materialize(
+        trans.groupBy("prev", "token").agg(F.count(F.lit(1)).alias("c2")),
+        materialize,
+    )
+    model["c2"] = c2
+    model["c1"] = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
+    # unigram counts over MAPPED tokens, derived from the word-count
+    # table (no second corpus pass): vocab words keep their count,
+    # everything else folds into <unk>
+    model["cu"] = _fold(wc, vocab, "cnt").groupBy("token").agg(F.sum("cnt").alias("cu"))
+    # two bounded driver scalars (total tokens, vocab size) — the
+    # documented model-stats collect, never corpus data
+    totals = wc.agg(
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("u"),
+        F.coalesce(F.sum((F.col("cnt") >= min_count).cast("long")), F.lit(0)).alias("nv"),
+    ).collect()[0]
+    u_plus_v = int(totals["u"]) + int(totals["nv"]) + 1  # +1: <unk>
+    model["denom_fp"] = llog2_py(u_plus_v, frac_bits) if u_plus_v > 0 else 0
+    return model
+
+
+def _laplace_score(docs: DataFrame, trans: DataFrame, model: dict, order: int,
+                   id_col: str, backoff_bits_bi: int,
+                   backoff_bits_uni: int) -> DataFrame:
+    """Score transitions against a :func:`_laplace_fit` model: the
+    highest-order hit, else the next order down minus its escape
+    penalty (``backoff_bits_bi`` — order 3 only), else the Laplace
+    unigram minus ``backoff_bits_uni``."""
+    frac_bits = model["frac_bits"]
+    scale = 1 << frac_bits
+    j = trans
+    if order == 3:
+        j = j.join(model["c3"], ["prev2", "prev", "token"], "left").join(
+            model["c3ctx"], ["prev2", "prev"], "left"
+        )
+    j = (
+        j.join(model["c2"], ["prev", "token"], "left")
+        .join(F.broadcast(model["c1"]), ["prev"], "left")
+        .join(F.broadcast(model["cu"]), ["token"], "left")
+    )
+    hit2 = llog2(F.col("c2"), frac_bits) - llog2(F.col("c1"), frac_bits)
+    if order == 3:
+        lp = F.when(
+            F.col("c3").isNotNull(),
+            llog2(F.col("c3"), frac_bits) - llog2(F.col("c3ctx"), frac_bits),
+        ).when(F.col("c2").isNotNull(), hit2 - F.lit(backoff_bits_bi * scale))
+    else:
+        lp = F.when(F.col("c2").isNotNull(), hit2)
+    lp = lp.otherwise(
+        llog2(F.coalesce(F.col("cu"), F.lit(0)) + 1, frac_bits)
+        - F.lit(model["denom_fp"])
+        - F.lit(backoff_bits_uni * scale)
+    )
+    return _doc_scores(docs, j.select("doc_id", lp.alias("lp")), id_col, frac_bits)
+
+
+def _perplexity(docs: DataFrame, ref: DataFrame | None, order: int,
+                smoothing: str, text_col: str, id_col: str, min_count: int,
+                frac_bits: int, materialize, backoff_bits_bi: int,
+                backoff_bits_uni: int) -> DataFrame:
+    """One-shot order-2/3 LM: build the tables from the training
+    transitions (``ref``, default ``docs``), score the scoring
+    transitions. Kneser-Ney is ngram_kn's engine at this order."""
+    _check_smoothing(smoothing)
+    if smoothing == "kn":
+        from .ngram_kn import kn_perplexity
+
+        return kn_perplexity(docs, ref=ref, order=order, text_col=text_col,
+                             id_col=id_col, min_count=min_count,
+                             frac_bits=frac_bits, materialize=materialize)
+    wc, vocab, trans_train, trans_score = _lm_transitions(
+        docs, ref, text_col, id_col, min_count, _LAGS[: order - 1], materialize
+    )
+    model = _laplace_fit(wc, vocab, trans_train, order, min_count, frac_bits, materialize)
+    return _laplace_score(docs, trans_score, model, order, id_col,
+                          backoff_bits_bi, backoff_bits_uni)
+
+
+def _lm_fit(ref: DataFrame, order: int, smoothing: str, text_col: str,
+            id_col: str, min_count: int, frac_bits: int, materialize) -> dict:
+    _check_smoothing(smoothing)
+    if smoothing == "kn":
+        from .ngram_kn import kn_lm_fit
+
+        return kn_lm_fit(ref, order=order, text_col=text_col, id_col=id_col,
+                         min_count=min_count, frac_bits=frac_bits,
+                         materialize=materialize)
+    words = _word_rows(ref, text_col, id_col)
+    wc, vocab = _vocab_of(words, min_count, materialize)
+    return _laplace_fit(wc, vocab, _trans_of(words, vocab, _LAGS[: order - 1]),
+                        order, min_count, frac_bits, materialize)
+
+
+def _lm_score(docs: DataFrame, model: dict, order: int, text_col: str,
+              id_col: str, backoff_bits_bi: int, backoff_bits_uni: int) -> DataFrame:
+    if model.get("smoothing", "laplace") == "kn":
+        return _kn_lm_score(docs, model, text_col=text_col, id_col=id_col)
+    trans = _trans_of(_word_rows(docs, text_col, id_col), model["vocab"],
+                      _LAGS[: order - 1])
+    return _laplace_score(docs, trans, model, order, id_col,
+                          backoff_bits_bi, backoff_bits_uni)
+
+
+def _kn_lm_score(docs: DataFrame, model: dict, **kw) -> DataFrame:
+    """Every Kneser-Ney model scores through ngram_kn.kn_lm_score. A
+    KN model without ``impl="kn_generic"`` was written by the retired
+    order-2/3 KN tables (different keys) and cannot be scored."""
+    if model.get("impl") != "kn_generic":
+        raise ValueError(
+            "Kneser-Ney model has no impl='kn_generic': it was saved in the "
+            "retired order-2/3 KN table layout; refit it with "
+            "bigram_lm_fit/trigram_lm_fit(smoothing='kn') or ngram_kn.kn_lm_fit"
+        )
+    from .ngram_kn import kn_lm_score
+
+    return kn_lm_score(docs, model, **kw)
 
 
 def bigram_perplexity(
@@ -144,27 +354,22 @@ def bigram_perplexity(
     itself — the self-scored corpus form the oracle replays) and
     score every document: (doc_id, n_trans, nll_fp, ppl_bits).
 
-    ``smoothing`` (r17): ``"laplace"`` is the original fixed-escape
-    Laplace-unigram backoff above; ``"kn"`` is absolute-discount
-    Kneser-Ney (the CCNet/KenLM smoothing family) in backoff form:
+    ``smoothing``: ``"laplace"`` is the fixed-escape Laplace-unigram
+    backoff above; ``"kn"`` is absolute-discount Kneser-Ney (the
+    CCNet/KenLM smoothing family), computed by
+    ``ngram_kn.kn_perplexity(order=2)`` — ``backoff_bits`` is unused
+    there. In backoff form, with D the quantized Ney discount
+    (``_kn_discount``):
 
       c(v,w) > 0:       lp = llog2(c2·256 − D) − llog2(c1·256)
       c(v) > 0, miss:   lp = llog2(D·N1+(v,·)) − llog2(c1·256)
                              + llog2(N1+(·,w)) − llog2(N1pp)
       v unseen:         lp = llog2(N1+(·,w)) − llog2(N1pp)
 
-    with D the quantized Ney discount (``_kn_discount``; count-of-
-    counts n1, n2 over bigram TYPES), N1+(v,·) the distinct
-    continuations of context v, N1+(·,w) the distinct contexts of w
-    (the continuation-unigram distribution — KN's signature: a word
-    seen in many contexts is a plausible NOVEL continuation even
-    when the specific bigram is unseen), and N1pp the number of
-    bigram types. All integer llog2 fixed-point — the whole chain
-    replays in DuckDB (``bigram_perplexity_sql(smoothing="kn")``).
-    The escape weight is the interpolation λ(v) = D·N1+(v,·)/c(v)
-    applied in backoff form (sub-normalized: novel continuations
-    priced slightly high — the conservative, int64-exact choice;
-    see KN_DDEN note).
+    N1+(·,w) is the continuation-unigram count — KN's signature: a
+    word seen in many contexts is a plausible NOVEL continuation even
+    when the specific bigram is unseen. Both smoothings replay in
+    DuckDB (``bigram_perplexity_sql``).
 
     ``nll_fp`` is the exact fixed-point negative log2-likelihood
     (BIGINT — the hash-stable column); ``ppl_bits`` = bits/token,
@@ -179,154 +384,8 @@ def bigram_perplexity(
     explode+window lineage would re-run once per consumer (the
     r2 minhash lesson; the un-pinned plan showed 21 exchanges and
     3 duplicate window sorts)."""
-    scale = 1 << frac_bits
-    train_words = _word_rows(ref if ref is not None else docs, text_col, id_col)
-    score_words = train_words if ref is None else _word_rows(docs, text_col, id_col)
-
-    # distinct-word altitude from here down to the count tables;
-    # three consumers (vocab filter, unigram fold, totals collect)
-    wc = _materialize(
-        train_words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")),
-        materialize,
-    )
-    vocab = wc.filter(F.col("cnt") >= min_count).select("word")
-
-    def _mapped(words: DataFrame) -> DataFrame:
-        # vocab join is broadcast-hinted like the unigram/bpe vocab
-        # joins; at an extreme vocabulary drop the hint and let AQE
-        # decide — the join stays a key-bucketed equi-join either way
-        return words.join(F.broadcast(vocab.withColumnRenamed("word", "_v")),
-                          F.col("word") == F.col("_v"), "left").select(
-            "doc_id",
-            "pos",
-            F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-        )
-
-    def _trans(words: DataFrame) -> DataFrame:
-        return _mapped(words).select(
-            "doc_id",
-            "pos",
-            "token",
-            F.lag("token", 1, BOS).over(
-                Window.partitionBy("doc_id").orderBy("pos")
-            ).alias("prev"),
-        )
-
-    # self-trained: ONE transition table feeds both the count build
-    # and the scoring join — pin it so the explode+window runs once
-    trans_train = _trans(train_words)
-    if ref is None:
-        trans_train = _materialize(trans_train, materialize)
-        trans_score = trans_train
-    else:
-        trans_score = _trans(score_words)
-
-    # c2 feeds both c1's derivation and the scoring join — pin the
-    # bigram-vocabulary-sized table, not the corpus
-    c2 = _materialize(
-        trans_train.groupBy("prev", "token").agg(F.count(F.lit(1)).alias("c2")),
-        materialize,
-    )
-    if smoothing == "kn":
-        # context table (totals + distinct continuations) and the
-        # continuation-unigram table both derive from the c2 TYPE
-        # table — n-gram altitude, one extra COUNT per group-by
-        ctx = c2.groupBy("prev").agg(
-            F.sum("c2").alias("c1"), F.count(F.lit(1)).alias("n1v")
-        )
-        cont = c2.groupBy("token").agg(F.count(F.lit(1)).alias("n1cw"))
-        # three bounded driver scalars: count-of-counts n1/n2 (the
-        # Ney discount) and the bigram type count N1pp
-        d = c2.agg(
-            F.count(F.lit(1)).alias("n1pp"),
-            F.coalesce(F.sum((F.col("c2") == 1).cast("long")), F.lit(0)).alias("n1"),
-            F.coalesce(F.sum((F.col("c2") == 2).cast("long")), F.lit(0)).alias("n2"),
-        ).collect()[0]
-        dnum = _kn_discount(int(d["n1"]), int(d["n2"]))
-        l_n1pp = llog2_py(max(int(d["n1pp"]), 1), frac_bits)
-        cont_lp = (
-            llog2(F.greatest(F.coalesce(F.col("n1cw"), F.lit(0)), F.lit(1)), frac_bits)
-            - F.lit(l_n1pp)
-        )
-        scored = (
-            trans_score.join(c2, ["prev", "token"], "left")
-            .join(F.broadcast(ctx), ["prev"], "left")
-            .join(F.broadcast(cont), ["token"], "left")
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("c2").isNotNull(),
-                    llog2(F.col("c2") * KN_DDEN - F.lit(dnum), frac_bits)
-                    - llog2(F.col("c1") * KN_DDEN, frac_bits),
-                )
-                .when(
-                    F.col("c1").isNotNull(),
-                    llog2(F.col("n1v") * F.lit(dnum), frac_bits)
-                    - llog2(F.col("c1") * KN_DDEN, frac_bits)
-                    + cont_lp,
-                )
-                .otherwise(cont_lp)
-                .alias("lp"),
-            )
-        )
-    elif smoothing == "laplace":
-        c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
-        # unigram counts over MAPPED tokens, derived from the word-count
-        # table (no second corpus pass): vocab words keep their count,
-        # everything else folds into <unk>
-        cu = (
-            wc.join(F.broadcast(vocab.withColumnRenamed("word", "_v")),
-                    F.col("word") == F.col("_v"), "left")
-            .select(
-                F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-                "cnt",
-            )
-            .groupBy("token")
-            .agg(F.sum("cnt").alias("cu"))
-        )
-
-        # two bounded driver scalars (total tokens, vocab size) — the
-        # documented model-stats collect, never corpus data
-        totals = wc.agg(
-            F.coalesce(F.sum("cnt"), F.lit(0)).alias("u"),
-            F.coalesce(F.sum((F.col("cnt") >= min_count).cast("long")), F.lit(0)).alias("nv"),
-        ).collect()[0]
-        u_plus_v = int(totals["u"]) + int(totals["nv"]) + 1  # +1: <unk>
-        denom_fp = llog2_py(u_plus_v, frac_bits) if u_plus_v > 0 else 0
-
-        scored = (
-            trans_score.join(c2, ["prev", "token"], "left")
-            .join(F.broadcast(c1), ["prev"], "left")
-            .join(F.broadcast(cu), ["token"], "left")
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("c2").isNotNull(),
-                    llog2(F.col("c2"), frac_bits) - llog2(F.col("c1"), frac_bits),
-                )
-                .otherwise(
-                    llog2(F.coalesce(F.col("cu"), F.lit(0)) + 1, frac_bits)
-                    - F.lit(denom_fp)
-                    - F.lit(backoff_bits * scale)
-                )
-                .alias("lp"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown smoothing {smoothing!r} (laplace|kn)")
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_trans"), (-F.sum("lp")).alias("nll_fp")
-    )
-    base = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return base.join(agg, ["doc_id"], "left").select(
-        "doc_id",
-        F.coalesce(F.col("n_trans"), F.lit(0)).cast("long").alias("n_trans"),
-        F.coalesce(F.col("nll_fp"), F.lit(0)).cast("long").alias("nll_fp"),
-        F.when(
-            F.col("n_trans") > 0,
-            F.round(F.col("nll_fp") / (F.col("n_trans") * F.lit(float(scale))), 4),
-        ).alias("ppl_bits"),
-    )
+    return _perplexity(docs, ref, 2, smoothing, text_col, id_col, min_count,
+                       frac_bits, materialize, 0, backoff_bits)
 
 
 def perplexity_gate(max_bits: float, ppl_col: str = "ppl_bits") -> Column:
@@ -691,72 +750,13 @@ def bigram_lm_fit(
     number of corpora (incl. per micro-batch inside a foreachBatch
     hook) without re-counting the reference.
 
-    Returns exactly the tables :func:`bigram_perplexity` builds
-    internally for the chosen ``smoothing`` (laplace: c2/c1/cu +
-    denom_fp; kn: c2/ctx/cont + the quantized discount scalars);
+    laplace: exactly the tables :func:`bigram_perplexity` builds
+    (vocab, c2/c1/cu + denom_fp). kn: the flat
+    ``ngram_kn.kn_lm_fit(order=2)`` model (``impl="kn_generic"``).
     :func:`bigram_lm_score` over this model is pytest-pinned EQUAL
     to the one-shot form."""
-    if smoothing not in ("laplace", "kn"):
-        raise ValueError(f"unknown smoothing {smoothing!r} (laplace|kn)")
-    words = _word_rows(ref, text_col, id_col)
-    wc = _materialize(
-        words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")), materialize
-    )
-    vocab = wc.filter(F.col("cnt") >= min_count).select("word")
-    mapped = words.join(
-        F.broadcast(vocab.withColumnRenamed("word", "_v")),
-        F.col("word") == F.col("_v"),
-        "left",
-    ).select(
-        "doc_id",
-        "pos",
-        F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-    )
-    trans = mapped.select(
-        "token",
-        F.lag("token", 1, BOS).over(
-            Window.partitionBy("doc_id").orderBy("pos")
-        ).alias("prev"),
-    )
-    c2 = _materialize(
-        trans.groupBy("prev", "token").agg(F.count(F.lit(1)).alias("c2")),
-        materialize,
-    )
-    model: dict = {"order": 2, "smoothing": smoothing, "frac_bits": frac_bits,
-                   "vocab": vocab, "c2": c2}
-    if smoothing == "kn":
-        model["ctx"] = c2.groupBy("prev").agg(
-            F.sum("c2").alias("c1"), F.count(F.lit(1)).alias("n1v")
-        )
-        model["cont"] = c2.groupBy("token").agg(F.count(F.lit(1)).alias("n1cw"))
-        d = c2.agg(
-            F.count(F.lit(1)).alias("n1pp"),
-            F.coalesce(F.sum((F.col("c2") == 1).cast("long")), F.lit(0)).alias("n1"),
-            F.coalesce(F.sum((F.col("c2") == 2).cast("long")), F.lit(0)).alias("n2"),
-        ).collect()[0]
-        model["dnum"] = _kn_discount(int(d["n1"]), int(d["n2"]))
-        model["l_n1pp"] = llog2_py(max(int(d["n1pp"]), 1), frac_bits)
-        return model
-    c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
-    cu = (
-        wc.join(F.broadcast(vocab.withColumnRenamed("word", "_v")),
-                F.col("word") == F.col("_v"), "left")
-        .select(
-            F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-            "cnt",
-        )
-        .groupBy("token")
-        .agg(F.sum("cnt").alias("cu"))
-    )
-    totals = wc.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("u"),
-        F.coalesce(F.sum((F.col("cnt") >= min_count).cast("long")), F.lit(0)).alias("nv"),
-    ).collect()[0]
-    u_plus_v = int(totals["u"]) + int(totals["nv"]) + 1
-    model["c1"] = c1
-    model["cu"] = cu
-    model["denom_fp"] = llog2_py(u_plus_v, frac_bits) if u_plus_v > 0 else 0
-    return model
+    return _lm_fit(ref, 2, smoothing, text_col, id_col, min_count,
+                   frac_bits, materialize)
 
 
 def bigram_lm_score(
@@ -771,84 +771,9 @@ def bigram_lm_score(
     with the reference counts read instead of recomputed. Unknown
     context words fold to <unk> through the model's vocab; a context
     the reference never saw backs off to the unigram leg (laplace)
-    or the continuation-unigram distribution (kn)."""
-    scale = 1 << model["frac_bits"]
-    frac_bits = model["frac_bits"]
-    words = _word_rows(docs, text_col, id_col)
-    mapped = words.join(
-        F.broadcast(model["vocab"].withColumnRenamed("word", "_v")),
-        F.col("word") == F.col("_v"),
-        "left",
-    ).select(
-        "doc_id",
-        "pos",
-        F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-    )
-    trans = mapped.select(
-        "doc_id",
-        "token",
-        F.lag("token", 1, BOS).over(
-            Window.partitionBy("doc_id").orderBy("pos")
-        ).alias("prev"),
-    )
-    if model.get("smoothing", "laplace") == "kn":
-        cont_lp = (
-            llog2(F.greatest(F.coalesce(F.col("n1cw"), F.lit(0)), F.lit(1)), frac_bits)
-            - F.lit(model["l_n1pp"])
-        )
-        scored = (
-            trans.join(model["c2"], ["prev", "token"], "left")
-            .join(F.broadcast(model["ctx"]), ["prev"], "left")
-            .join(F.broadcast(model["cont"]), ["token"], "left")
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("c2").isNotNull(),
-                    llog2(F.col("c2") * KN_DDEN - F.lit(model["dnum"]), frac_bits)
-                    - llog2(F.col("c1") * KN_DDEN, frac_bits),
-                )
-                .when(
-                    F.col("c1").isNotNull(),
-                    llog2(F.col("n1v") * F.lit(model["dnum"]), frac_bits)
-                    - llog2(F.col("c1") * KN_DDEN, frac_bits)
-                    + cont_lp,
-                )
-                .otherwise(cont_lp)
-                .alias("lp"),
-            )
-        )
-    else:
-        scored = (
-            trans.join(model["c2"], ["prev", "token"], "left")
-            .join(F.broadcast(model["c1"]), ["prev"], "left")
-            .join(F.broadcast(model["cu"]), ["token"], "left")
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("c2").isNotNull(),
-                    llog2(F.col("c2"), frac_bits) - llog2(F.col("c1"), frac_bits),
-                )
-                .otherwise(
-                    llog2(F.coalesce(F.col("cu"), F.lit(0)) + 1, frac_bits)
-                    - F.lit(model["denom_fp"])
-                    - F.lit(backoff_bits * scale)
-                )
-                .alias("lp"),
-            )
-        )
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_trans"), (-F.sum("lp")).alias("nll_fp")
-    )
-    base = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return base.join(agg, ["doc_id"], "left").select(
-        "doc_id",
-        F.coalesce(F.col("n_trans"), F.lit(0)).cast("long").alias("n_trans"),
-        F.coalesce(F.col("nll_fp"), F.lit(0)).cast("long").alias("nll_fp"),
-        F.when(
-            F.col("n_trans") > 0,
-            F.round(F.col("nll_fp") / (F.col("n_trans") * F.lit(float(scale))), 4),
-        ).alias("ppl_bits"),
-    )
+    or the continuation-unigram distribution (kn, scored by
+    ``ngram_kn.kn_lm_score``; ``backoff_bits`` unused)."""
+    return _lm_score(docs, model, 2, text_col, id_col, 0, backoff_bits)
 
 
 # ---------------------------------------------------------------- trigram order
@@ -882,190 +807,13 @@ def trigram_perplexity(
     count tables at n-gram-vocabulary altitude, c3/c2 joins
     key-bucketed, contexts/unigrams broadcast, two driver scalars.
 
-    ``smoothing="kn"`` (r17): FULL Kneser-Ney at order 3 — absolute
-    discount (quantized Ney D per order, see ``_kn_discount``) with
-    CONTINUATION counts at every lower order, the published KN
-    structure: the middle-order distribution uses
-    cc2(v,w) = |{u : c3(u,v,w) > 0}| (how many distinct contexts the
-    bigram continues), not raw bigram counts, and the base is the
-    continuation-unigram N1+(·,w)/N1pp over cc2. Every lower-order
-    table derives from the c3 TYPE table — the corpus is still
-    touched exactly once. Escape chain (backoff form, λ weights):
-
-      c3 > 0:                 llog2(c3·256 − D3) − llog2(c3ctx·256)
-      (u,v) seen, c3 = 0:     esc3 + [bigram-KN level over cc2]
-      (u,v) unseen:           [bigram-KN level over cc2] directly
-    where esc3 = llog2(N1+(u,v,·)·D3) − llog2(c3ctx·256) and the
-    bigram-KN level is the bigram ``smoothing="kn"`` chain with
-    (cc2, cc2ctx, N1+ tables) in place of raw counts."""
-    scale = 1 << frac_bits
-    train_words = _word_rows(ref if ref is not None else docs, text_col, id_col)
-    score_words = train_words if ref is None else _word_rows(docs, text_col, id_col)
-
-    wc = _materialize(
-        train_words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")),
-        materialize,
-    )
-    vocab = wc.filter(F.col("cnt") >= min_count).select("word")
-
-    def _mapped(words: DataFrame) -> DataFrame:
-        return words.join(
-            F.broadcast(vocab.withColumnRenamed("word", "_v")),
-            F.col("word") == F.col("_v"),
-            "left",
-        ).select(
-            "doc_id",
-            "pos",
-            F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-        )
-
-    def _trans(words: DataFrame) -> DataFrame:
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        return _mapped(words).select(
-            "doc_id",
-            "token",
-            F.lag("token", 1, BOS).over(w).alias("prev"),
-            F.lag("token", 2, BOS).over(w).alias("prev2"),
-        )
-
-    trans_train = _trans(train_words)
-    if ref is None:
-        trans_train = _materialize(trans_train, materialize)
-        trans_score = trans_train
-    else:
-        trans_score = _trans(score_words)
-
-    c3 = _materialize(
-        trans_train.groupBy("prev2", "prev", "token").agg(
-            F.count(F.lit(1)).alias("c3")
-        ),
-        materialize,
-    )
-    if smoothing == "kn":
-        # every lower-order table derives from the c3 TYPE table
-        ctx3 = c3.groupBy("prev2", "prev").agg(
-            F.sum("c3").alias("c3ctx"), F.count(F.lit(1)).alias("n1uv")
-        )
-        cc2 = _materialize(
-            c3.groupBy("prev", "token").agg(F.count(F.lit(1)).alias("cc2")),
-            materialize,
-        )
-        ctx2 = cc2.groupBy("prev").agg(
-            F.sum("cc2").alias("cc2ctx"), F.count(F.lit(1)).alias("n1vcc")
-        )
-        cont1 = cc2.groupBy("token").agg(F.count(F.lit(1)).alias("n1cw"))
-        # five bounded driver scalars: per-order count-of-counts and
-        # the bigram-type total — ONE action (r18: was two sequential
-        # collects; both inputs are checkpointed type tables, so the
-        # union is a cheap scan of each)
-        d3, d2 = _kn_cc_stats(c3, "c3", cc2, "cc2")
-        dn3 = _kn_discount(int(d3["n1"]), int(d3["n2"]))
-        dn2 = _kn_discount(int(d2["n1"]), int(d2["n2"]))
-        l_n1pp2 = llog2_py(max(int(d2["n1pp2"]), 1), frac_bits)
-
-        base1 = (
-            llog2(F.greatest(F.coalesce(F.col("n1cw"), F.lit(0)), F.lit(1)), frac_bits)
-            - F.lit(l_n1pp2)
-        )
-        esc3 = (
-            llog2(F.col("n1uv") * F.lit(dn3), frac_bits)
-            - llog2(F.col("c3ctx") * KN_DDEN, frac_bits)
-        )
-        hit2 = (
-            llog2(F.col("cc2") * KN_DDEN - F.lit(dn2), frac_bits)
-            - llog2(F.col("cc2ctx") * KN_DDEN, frac_bits)
-        )
-        esc2 = (
-            llog2(F.col("n1vcc") * F.lit(dn2), frac_bits)
-            - llog2(F.col("cc2ctx") * KN_DDEN, frac_bits)
-        )
-        scored = (
-            trans_score.join(c3, ["prev2", "prev", "token"], "left")
-            .join(ctx3, ["prev2", "prev"], "left")
-            .join(cc2, ["prev", "token"], "left")
-            .join(F.broadcast(ctx2), ["prev"], "left")
-            .join(F.broadcast(cont1), ["token"], "left")
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("c3").isNotNull(),
-                    llog2(F.col("c3") * KN_DDEN - F.lit(dn3), frac_bits)
-                    - llog2(F.col("c3ctx") * KN_DDEN, frac_bits),
-                )
-                .when(F.col("c3ctx").isNotNull() & F.col("cc2").isNotNull(),
-                      esc3 + hit2)
-                .when(F.col("c3ctx").isNotNull(), esc3 + esc2 + base1)
-                .when(F.col("cc2").isNotNull(), hit2)
-                .when(F.col("cc2ctx").isNotNull(), esc2 + base1)
-                .otherwise(base1)
-                .alias("lp"),
-            )
-        )
-    elif smoothing == "laplace":
-        c3ctx = c3.groupBy("prev2", "prev").agg(F.sum("c3").alias("c3ctx"))
-        c2 = _materialize(
-            trans_train.groupBy("prev", "token").agg(F.count(F.lit(1)).alias("c2")),
-            materialize,
-        )
-        c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
-        cu = (
-            wc.join(F.broadcast(vocab.withColumnRenamed("word", "_v")),
-                    F.col("word") == F.col("_v"), "left")
-            .select(
-                F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-                "cnt",
-            )
-            .groupBy("token")
-            .agg(F.sum("cnt").alias("cu"))
-        )
-        totals = wc.agg(
-            F.coalesce(F.sum("cnt"), F.lit(0)).alias("u"),
-            F.coalesce(F.sum((F.col("cnt") >= min_count).cast("long")), F.lit(0)).alias("nv"),
-        ).collect()[0]
-        u_plus_v = int(totals["u"]) + int(totals["nv"]) + 1
-        denom_fp = llog2_py(u_plus_v, frac_bits) if u_plus_v > 0 else 0
-
-        scored = (
-            trans_score.join(c3, ["prev2", "prev", "token"], "left")
-            .join(c3ctx, ["prev2", "prev"], "left")
-            .join(c2, ["prev", "token"], "left")
-            .join(F.broadcast(c1), ["prev"], "left")
-            .join(F.broadcast(cu), ["token"], "left")
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("c3").isNotNull(),
-                    llog2(F.col("c3"), frac_bits) - llog2(F.col("c3ctx"), frac_bits),
-                )
-                .when(
-                    F.col("c2").isNotNull(),
-                    llog2(F.col("c2"), frac_bits)
-                    - llog2(F.col("c1"), frac_bits)
-                    - F.lit(backoff_bits_bi * scale),
-                )
-                .otherwise(
-                    llog2(F.coalesce(F.col("cu"), F.lit(0)) + 1, frac_bits)
-                    - F.lit(denom_fp)
-                    - F.lit(backoff_bits_uni * scale)
-                )
-                .alias("lp"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown smoothing {smoothing!r} (laplace|kn)")
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_trans"), (-F.sum("lp")).alias("nll_fp")
-    )
-    base = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return base.join(agg, ["doc_id"], "left").select(
-        "doc_id",
-        F.coalesce(F.col("n_trans"), F.lit(0)).cast("long").alias("n_trans"),
-        F.coalesce(F.col("nll_fp"), F.lit(0)).cast("long").alias("nll_fp"),
-        F.when(
-            F.col("n_trans") > 0,
-            F.round(F.col("nll_fp") / (F.col("n_trans") * F.lit(float(scale))), 4),
-        ).alias("ppl_bits"),
-    )
+    ``smoothing="kn"``: FULL Kneser-Ney at order 3, computed by
+    ``ngram_kn.kn_perplexity(order=3)`` — absolute discount per
+    order with CONTINUATION counts at every lower order (the
+    published KN structure; see that module's docstring).
+    ``backoff_bits_bi`` / ``backoff_bits_uni`` are unused there."""
+    return _perplexity(docs, ref, 3, smoothing, text_col, id_col, min_count,
+                       frac_bits, materialize, backoff_bits_bi, backoff_bits_uni)
 
 
 def trigram_perplexity_py(
@@ -1375,81 +1123,12 @@ def trigram_lm_fit(
     """Order-3 mirror of :func:`bigram_lm_fit` (r17 — the r16
     verdict's item 3: before this, the trigram LM existed only as
     the one-shot form, so a foreachBatch consumer couldn't use
-    order 3). Returns every table :func:`trigram_perplexity` builds
-    internally for the chosen ``smoothing``;
-    :func:`trigram_lm_score` over the model is pytest-pinned EQUAL
-    to the one-shot form."""
-    if smoothing not in ("laplace", "kn"):
-        raise ValueError(f"unknown smoothing {smoothing!r} (laplace|kn)")
-    words = _word_rows(ref, text_col, id_col)
-    wc = _materialize(
-        words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")), materialize
-    )
-    vocab = wc.filter(F.col("cnt") >= min_count).select("word")
-    mapped = words.join(
-        F.broadcast(vocab.withColumnRenamed("word", "_v")),
-        F.col("word") == F.col("_v"),
-        "left",
-    ).select(
-        "doc_id",
-        "pos",
-        F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    trans = mapped.select(
-        "token",
-        F.lag("token", 1, BOS).over(w).alias("prev"),
-        F.lag("token", 2, BOS).over(w).alias("prev2"),
-    )
-    c3 = _materialize(
-        trans.groupBy("prev2", "prev", "token").agg(F.count(F.lit(1)).alias("c3")),
-        materialize,
-    )
-    model: dict = {"order": 3, "smoothing": smoothing, "frac_bits": frac_bits,
-                   "vocab": vocab, "c3": c3}
-    if smoothing == "kn":
-        model["ctx3"] = c3.groupBy("prev2", "prev").agg(
-            F.sum("c3").alias("c3ctx"), F.count(F.lit(1)).alias("n1uv")
-        )
-        cc2 = _materialize(
-            c3.groupBy("prev", "token").agg(F.count(F.lit(1)).alias("cc2")),
-            materialize,
-        )
-        model["cc2"] = cc2
-        model["ctx2"] = cc2.groupBy("prev").agg(
-            F.sum("cc2").alias("cc2ctx"), F.count(F.lit(1)).alias("n1vcc")
-        )
-        model["cont1"] = cc2.groupBy("token").agg(F.count(F.lit(1)).alias("n1cw"))
-        # one driver action for both orders' count-of-counts (r18)
-        d3, d2 = _kn_cc_stats(c3, "c3", cc2, "cc2")
-        model["dn3"] = _kn_discount(int(d3["n1"]), int(d3["n2"]))
-        model["dn2"] = _kn_discount(int(d2["n1"]), int(d2["n2"]))
-        model["l_n1pp2"] = llog2_py(max(int(d2["n1pp2"]), 1), frac_bits)
-        return model
-    model["c3ctx"] = c3.groupBy("prev2", "prev").agg(F.sum("c3").alias("c3ctx"))
-    c2 = _materialize(
-        trans.groupBy("prev", "token").agg(F.count(F.lit(1)).alias("c2")),
-        materialize,
-    )
-    model["c2"] = c2
-    model["c1"] = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
-    model["cu"] = (
-        wc.join(F.broadcast(vocab.withColumnRenamed("word", "_v")),
-                F.col("word") == F.col("_v"), "left")
-        .select(
-            F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-            "cnt",
-        )
-        .groupBy("token")
-        .agg(F.sum("cnt").alias("cu"))
-    )
-    totals = wc.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("u"),
-        F.coalesce(F.sum((F.col("cnt") >= min_count).cast("long")), F.lit(0)).alias("nv"),
-    ).collect()[0]
-    u_plus_v = int(totals["u"]) + int(totals["nv"]) + 1
-    model["denom_fp"] = llog2_py(u_plus_v, frac_bits) if u_plus_v > 0 else 0
-    return model
+    order 3). laplace: every table :func:`trigram_perplexity` builds
+    (vocab, c3/c3ctx/c2/c1/cu + denom_fp); kn: the flat
+    ``ngram_kn.kn_lm_fit(order=3)`` model. :func:`trigram_lm_score`
+    over the model is pytest-pinned EQUAL to the one-shot form."""
+    return _lm_fit(ref, 3, smoothing, text_col, id_col, min_count,
+                   frac_bits, materialize)
 
 
 def trigram_lm_score(
@@ -1463,120 +1142,22 @@ def trigram_lm_score(
     """Score a corpus against a :func:`trigram_lm_fit` model — the
     one-shot :func:`trigram_perplexity` math with the reference
     counts read instead of recomputed (pytest-pinned equal)."""
-    scale = 1 << model["frac_bits"]
-    frac_bits = model["frac_bits"]
-    words = _word_rows(docs, text_col, id_col)
-    mapped = words.join(
-        F.broadcast(model["vocab"].withColumnRenamed("word", "_v")),
-        F.col("word") == F.col("_v"),
-        "left",
-    ).select(
-        "doc_id",
-        "pos",
-        F.when(F.col("_v").isNotNull(), F.col("word")).otherwise(F.lit(UNK)).alias("token"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    trans = mapped.select(
-        "doc_id",
-        "token",
-        F.lag("token", 1, BOS).over(w).alias("prev"),
-        F.lag("token", 2, BOS).over(w).alias("prev2"),
-    )
-    if model.get("smoothing", "laplace") == "kn":
-        base1 = (
-            llog2(F.greatest(F.coalesce(F.col("n1cw"), F.lit(0)), F.lit(1)), frac_bits)
-            - F.lit(model["l_n1pp2"])
-        )
-        esc3 = (
-            llog2(F.col("n1uv") * F.lit(model["dn3"]), frac_bits)
-            - llog2(F.col("c3ctx") * KN_DDEN, frac_bits)
-        )
-        hit2 = (
-            llog2(F.col("cc2") * KN_DDEN - F.lit(model["dn2"]), frac_bits)
-            - llog2(F.col("cc2ctx") * KN_DDEN, frac_bits)
-        )
-        esc2 = (
-            llog2(F.col("n1vcc") * F.lit(model["dn2"]), frac_bits)
-            - llog2(F.col("cc2ctx") * KN_DDEN, frac_bits)
-        )
-        scored = (
-            trans.join(model["c3"], ["prev2", "prev", "token"], "left")
-            .join(model["ctx3"], ["prev2", "prev"], "left")
-            .join(model["cc2"], ["prev", "token"], "left")
-            .join(F.broadcast(model["ctx2"]), ["prev"], "left")
-            .join(F.broadcast(model["cont1"]), ["token"], "left")
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("c3").isNotNull(),
-                    llog2(F.col("c3") * KN_DDEN - F.lit(model["dn3"]), frac_bits)
-                    - llog2(F.col("c3ctx") * KN_DDEN, frac_bits),
-                )
-                .when(F.col("c3ctx").isNotNull() & F.col("cc2").isNotNull(),
-                      esc3 + hit2)
-                .when(F.col("c3ctx").isNotNull(), esc3 + esc2 + base1)
-                .when(F.col("cc2").isNotNull(), hit2)
-                .when(F.col("cc2ctx").isNotNull(), esc2 + base1)
-                .otherwise(base1)
-                .alias("lp"),
-            )
-        )
-    else:
-        scored = (
-            trans.join(model["c3"], ["prev2", "prev", "token"], "left")
-            .join(model["c3ctx"], ["prev2", "prev"], "left")
-            .join(model["c2"], ["prev", "token"], "left")
-            .join(F.broadcast(model["c1"]), ["prev"], "left")
-            .join(F.broadcast(model["cu"]), ["token"], "left")
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("c3").isNotNull(),
-                    llog2(F.col("c3"), frac_bits) - llog2(F.col("c3ctx"), frac_bits),
-                )
-                .when(
-                    F.col("c2").isNotNull(),
-                    llog2(F.col("c2"), frac_bits)
-                    - llog2(F.col("c1"), frac_bits)
-                    - F.lit(backoff_bits_bi * scale),
-                )
-                .otherwise(
-                    llog2(F.coalesce(F.col("cu"), F.lit(0)) + 1, frac_bits)
-                    - F.lit(model["denom_fp"])
-                    - F.lit(backoff_bits_uni * scale)
-                )
-                .alias("lp"),
-            )
-        )
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_trans"), (-F.sum("lp")).alias("nll_fp")
-    )
-    base = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return base.join(agg, ["doc_id"], "left").select(
-        "doc_id",
-        F.coalesce(F.col("n_trans"), F.lit(0)).cast("long").alias("n_trans"),
-        F.coalesce(F.col("nll_fp"), F.lit(0)).cast("long").alias("nll_fp"),
-        F.when(
-            F.col("n_trans") > 0,
-            F.round(F.col("nll_fp") / (F.col("n_trans") * F.lit(float(scale))), 4),
-        ).alias("ppl_bits"),
-    )
+    return _lm_score(docs, model, 3, text_col, id_col,
+                     backoff_bits_bi, backoff_bits_uni)
 
 
 # ---------------------------------------------------------------- model persistence
 def lm_score(docs: DataFrame, model: dict, **kw) -> DataFrame:
-    """Order-dispatching score: routes to :func:`bigram_lm_score`,
-    :func:`trigram_lm_score`, or the generalized-order KN scorer
-    (``impl="kn_generic"`` — ngram_kn.kn_lm_fit models at any order
-    up to the published 5) by the model's recorded keys (models
-    saved before r17 lack them and are bigram by construction)."""
-    if model.get("impl") == "kn_generic":
-        from .ngram_kn import kn_lm_score
-
-        kw.pop("backoff_bits", None)
-        kw.pop("backoff_bits_bi", None)
-        kw.pop("backoff_bits_uni", None)
-        return kn_lm_score(docs, model, **kw)
+    """Model-dispatching score: every Kneser-Ney model (any order,
+    ``impl="kn_generic"``) goes to ``ngram_kn.kn_lm_score``, with
+    the Laplace-only ``backoff_bits*`` keywords dropped; Laplace
+    models go to :func:`trigram_lm_score` or :func:`bigram_lm_score`
+    by their recorded order (models saved before r17 lack it and are
+    bigram by construction)."""
+    if model.get("smoothing", "laplace") == "kn":
+        for k in ("backoff_bits", "backoff_bits_bi", "backoff_bits_uni"):
+            kw.pop(k, None)
+        return _kn_lm_score(docs, model, **kw)
     if model.get("order", 2) == 3:
         return trigram_lm_score(docs, model, **kw)
     return bigram_lm_score(docs, model, **kw)

@@ -258,20 +258,21 @@ class PipelineConfig:
     perplexity_ref: object | None = None
     perplexity_min_count: int = 2
     perplexity_backoff_bits: int = 4
-    # n-gram order of the LM: 2 (bigram, the oracle-keyed default)
-    # or 3 (trigram — one order closer to CCNet's 5-gram; the
+    # n-gram order of the LM: 2 (bigram, the oracle-keyed default),
+    # 3 (trigram — one order closer to CCNet's 5-gram), or 4/5 (the
+    # published CCNet depth). Laplace exists at orders 2 and 3 only
+    # (ngram_lm.bigram_perplexity / trigram_perplexity; the
     # tri→bi→uni escape chain uses perplexity_backoff_bits for the
-    # first escape and 2× it for the second). Orders 4 and 5 (the
-    # published CCNet depth) route through the generalized-order KN
-    # (ngram_kn.kn_perplexity) and require
-    # perplexity_smoothing="kn" — there is no laplace-escape form at
-    # those depths.
+    # first escape and 2× it for the second), so orders 4 and 5
+    # require perplexity_smoothing="kn".
     perplexity_order: int = 2
     # smoothing family (r17): "laplace" (fixed-escape Laplace-unigram
     # backoff, the oracle-keyed default) or "kn" (absolute-discount
     # Kneser-Ney with continuation counts — the family CCNet's KenLM
     # uses; changes which borderline docs the gate keeps, notably
-    # novel-but-fluent word combinations)
+    # novel-but-fluent word combinations). "kn" runs
+    # ngram_kn.kn_perplexity at perplexity_order, whatever the order;
+    # perplexity_backoff_bits does not apply to it.
     perplexity_smoothing: str = "laplace"
     # KenLM-style count-threshold pruning for orders 4/5 (r17 wave
     # 3): {order: min count to keep}. Shrinks the model tables by
@@ -524,8 +525,9 @@ def build_training_corpus(
     perplexity_scores: DataFrame | None = None
     perplexity_bucketed: DataFrame | None = None
     if cfg.perplexity_max_bits is not None or cfg.perplexity_bucket_keep is not None:
-        # 2d. CCNet-style perplexity gate (r16): bigram backoff LM in
-        # integer fixed-point log2, trained on the reference corpus
+        # 2d. CCNet-style perplexity gate (r16): n-gram backoff LM in
+        # integer fixed-point log2 (Laplace: ngram_lm at order 2/3;
+        # Kneser-Ney: ngram_kn at any order), trained on the reference corpus
         # (or self-trained). Self-trained, the scorer references its
         # input for BOTH training counts and scoring transitions —
         # pin the branch point first per the documented rule.
@@ -551,7 +553,7 @@ def build_training_corpus(
             )
         if materialize is not False and cfg.perplexity_ref is None:
             reputable = _materialize(reputable, materialize)
-        if cfg.perplexity_order in (4, 5):
+        if cfg.perplexity_smoothing == "kn":
             from .ngram_kn import kn_perplexity
 
             perplexity_scores = kn_perplexity(

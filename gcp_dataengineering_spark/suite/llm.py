@@ -1691,7 +1691,8 @@ def q_ngram_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     CCNet's KenLM actually uses): quantized Ney absolute discount
     from count-of-counts, context escape weights, continuation-
     unigram base distribution, all integer fixed-point llog2
-    (llm_ops/ngram_lm.py smoothing="kn"). Trained on the 80% doc_id
+    (ngram_lm.bigram_perplexity(smoothing="kn"), which runs
+    llm_ops/ngram_kn.py at order 2). Trained on the 80% doc_id
     split, scoring all docs; the oracle replays vocab fold, counts,
     BOTH discount computations (integer half-up //), every escape
     branch and the exact bit arithmetic. PERMANENT_EXTERNAL."""
@@ -1709,9 +1710,9 @@ def q_pentagram_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuation-unigram base, per-order quantized Ney discounts,
     escape-accumulating backoff. Ref-split 80/20 like the other KN
     pairs so the SQL replay (kn_perplexity_sql(order=5)) drives the
-    full escape chain, not just the top-order hit leg. The
-    implementation is cross-validated at orders 2/3 against the
-    independently-written ngram_lm KN forms (pytest).
+    full escape chain, not just the top-order hit leg. The same
+    engine serves the order-2/3 KN pairs, whose oracles are the
+    independently-written ngram_lm KN replays.
     PERMANENT_EXTERNAL."""
     docs = _t(spark, sf_dir, "documents", fan_out=False)
     return NK.kn_perplexity(docs, ref=docs.filter(KN_REF_FILTER), order=5)

@@ -87,9 +87,8 @@ def test_resolve_dup_groups(spark):
 
 def test_resolve_dup_groups_long_chain_twohop_vs_propagate(spark):
     """100 TB insurance: a pathological chain component (diameter 120,
-    far beyond max_iter=25) converges under the default pointer-
-    doubling algorithm in O(log d) rounds, while plain one-hop
-    propagation provably cannot within the same budget."""
+    far beyond max_iter=25) converges under pointer doubling in
+    O(log d) rounds — one-hop propagation would need 120."""
     from gcp_dataengineering_spark.llm_ops.dedup import resolve_dup_groups
 
     n = 121  # path 0-1-2-...-120: diameter 120 >> 25
@@ -102,13 +101,11 @@ def test_resolve_dup_groups_long_chain_twohop_vs_propagate(spark):
         for r in resolve_dup_groups(ids, pairs, max_iter=25).collect()
     }
     assert got == {i: 0 for i in range(n)}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        resolve_dup_groups(ids, pairs, max_iter=25, algorithm="propagate").collect()
 
 
 def test_resolve_dup_groups_algorithms_agree(spark):
-    """Both CC algorithms produce identical labels on a mixed graph
-    (small components where one-hop CAN converge)."""
+    """Min-id labels on a mixed graph: a 4-chain, a 3-chain with a
+    gap in its ids, a pair, and untouched isolates."""
     from gcp_dataengineering_spark.llm_ops.dedup import resolve_dup_groups
 
     ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
@@ -116,12 +113,10 @@ def test_resolve_dup_groups_algorithms_agree(spark):
         [(0, 1), (1, 2), (2, 3), (5, 7), (7, 9), (10, 11)],
         "id_a long, id_b long",
     )
-    a = {r["doc_id"]: r["group_id"]
-         for r in resolve_dup_groups(ids, pairs, algorithm="twohop").collect()}
-    b = {r["doc_id"]: r["group_id"]
-         for r in resolve_dup_groups(ids, pairs, algorithm="propagate").collect()}
-    assert a == b
-    assert a[3] == 0 and a[9] == 5 and a[11] == 10 and a[4] == 4
+    got = {r["doc_id"]: r["group_id"]
+           for r in resolve_dup_groups(ids, pairs).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 6, 7: 5,
+                   8: 8, 9: 5, 10: 10, 11: 10}
 
 
 def test_resolve_dup_groups_untouched_and_stray_endpoints(spark):
@@ -6494,9 +6489,13 @@ def test_video_neardup_groups_planted_duplicates(spark):
 def test_lm_fit_score_matrix_equals_one_shot(spark, tmp_path):
     """r17: the deployable fit-once/score-many split covers the full
     matrix — order 2 and 3, laplace and kn — and each combination is
-    EXACTLY equal to its one-shot ref-trained form. A trigram-KN
-    model survives an lm_save/lm_load parquet round trip bit-exact,
-    and lm_score dispatches by the model's order."""
+    EXACTLY equal to its one-shot ref-trained form. Laplace fit and
+    one-shot share ngram_lm's _laplace_fit and _laplace_score; KN fit and
+    one-shot are ngram_kn's kn_lm_fit/kn_lm_score and kn_perplexity
+    (the independent references are the twins and DuckDB replays,
+    test_ngram_kn.py). A trigram-KN model survives an
+    lm_save/lm_load parquet round trip bit-exact, and lm_score
+    dispatches by the model's smoothing and order."""
     from gcp_dataengineering_spark.llm_ops.ngram_lm import (
         bigram_lm_fit,
         bigram_perplexity,
@@ -6548,6 +6547,36 @@ def test_lm_fit_score_matrix_equals_one_shot(spark, tmp_path):
     assert rows(lm_score(docs, reloaded)) == rows(
         trigram_perplexity(docs, ref=ref, smoothing="kn")
     )
+
+
+def test_lm_score_rejects_stale_kn_models(spark):
+    """A KN model in the retired order-2/3 table layout (smoothing
+    "kn", no impl — what bigram_lm_fit/trigram_lm_fit(smoothing="kn")
+    saved before KN moved to ngram_kn) fails with a ValueError that
+    says to refit, from lm_score and from both order-specific
+    scorers — never a bare KeyError mid-plan."""
+    from gcp_dataengineering_spark.llm_ops.ngram_lm import (
+        bigram_lm_score,
+        lm_score,
+        trigram_lm_score,
+    )
+
+    docs = spark.createDataFrame([(1, "the cat sat")], "doc_id long, text string")
+    vocab = spark.createDataFrame([("the",), ("cat",)], "word string")
+    c2 = spark.createDataFrame([("<s>", "the", 1)], "prev string, token string, c2 long")
+    stale2 = {"order": 2, "smoothing": "kn", "frac_bits": 16, "vocab": vocab,
+              "c2": c2, "ctx": c2, "cont": c2, "dnum": 128, "l_n1pp": 65536}
+    c3 = spark.createDataFrame(
+        [("<s>", "<s>", "the", 1)], "prev2 string, prev string, token string, c3 long"
+    )
+    stale3 = {"order": 3, "smoothing": "kn", "frac_bits": 16, "vocab": vocab,
+              "c3": c3, "ctx3": c3, "cc2": c2, "ctx2": c2, "cont1": c2,
+              "dn3": 128, "dn2": 128, "l_n1pp2": 65536}
+    for model, scorer in ((stale2, bigram_lm_score), (stale3, trigram_lm_score)):
+        with pytest.raises(ValueError, match="refit"):
+            lm_score(docs, model)
+        with pytest.raises(ValueError, match="refit"):
+            scorer(docs, model)
 
 
 def test_perplexity_buckets_terciles_ties_and_nulls(spark):
