@@ -677,6 +677,8 @@ def bpe_apply_words_cached(
     import json
     import os
 
+    from ..sources.io import write_json_atomic
+
     spark = words.sparkSession
     rules = merges.select(
         F.col("left").cast("string"),
@@ -722,12 +724,7 @@ def bpe_apply_words_cached(
         # atomic publish (same discipline as the upsert manifest): a
         # crash mid-write must not leave truncated JSON that bricks
         # the cache with a raw JSONDecodeError
-        tmp_meta = meta_path + ".tmp"
-        with open(tmp_meta, "w") as fh:
-            json.dump({"merges_fp": merges_fp}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp_meta, meta_path)
+        write_json_atomic(meta_path, {"merges_fp": merges_fp})
 
     distinct_words = words.select(F.col(word_col).alias("word")).distinct()
     if os.path.isdir(data_dir) and any(

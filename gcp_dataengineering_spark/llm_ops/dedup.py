@@ -536,22 +536,32 @@ def ingest_batch(
     groups = resolve_dup_groups(
         exact.select(id_col), internal, id_col, materialize=materialize
     )
-    tainted = (
-        groups.join(crossed, id_col, "left_semi")
-        .select("group_id")
-        .distinct()
-    )
-    keeper_ids = (
-        groups.filter(F.col(id_col) == F.col("group_id"))
-        .join(tainted, "group_id", "left_anti")
-        .select(id_col)
-    )
+    keeper_ids = _admitted_keepers(groups, crossed, id_col)
     appendable = _materialize(
         exact.join(keeper_ids, id_col, "left_semi"), materialize
     )
     new_fps = appendable.select(fingerprint(text_col).alias("fp"))
     new_bands = minhash_band_rows(appendable, text_col, id_col, num_hashes, bands, n)
     return appendable, new_fps, new_bands
+
+
+def _admitted_keepers(
+    groups: DataFrame, matched: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """The admission rule of every store-backed ingest gate
+    (:func:`ingest_batch`, streaming/semantic.py): given a batch's
+    component ``groups`` (id_col, group_id) and the batch ids that
+    ``matched`` stored state, drop every component with a matched
+    member WHOLE (it is a near-dup of content already admitted) and
+    return (id_col) of the remaining components' min-id keepers."""
+    anchored = (
+        groups.join(matched, id_col, "left_semi").select("group_id").distinct()
+    )
+    return (
+        groups.filter(F.col(id_col) == F.col("group_id"))
+        .join(anchored, "group_id", "left_anti")
+        .select(id_col)
+    )
 
 
 # ------------------------------------------------------------ dup-group resolution

@@ -277,18 +277,16 @@ def dsir_save(
     in meta.json. The deployable artifact a streaming ingest gate
     reloads once (:func:`dsir_load`) and scores every micro-batch
     against — the lm_save/lm_load discipline."""
-    import json
     import os
+
+    from ..sources.io import write_json_atomic
 
     os.makedirs(path, exist_ok=True)
     model.write.mode("overwrite").parquet(os.path.join(path, "weights"))
-    tmp = os.path.join(path, "meta.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"salt": salt, "ngrams": ngrams, "word_pattern": word_pattern},
-            fh,
-        )
-    os.replace(tmp, os.path.join(path, "meta.json"))
+    write_json_atomic(
+        os.path.join(path, "meta.json"),
+        {"salt": salt, "ngrams": ngrams, "word_pattern": word_pattern},
+    )
 
 
 def dsir_load(spark, path: str) -> tuple[DataFrame, dict]:

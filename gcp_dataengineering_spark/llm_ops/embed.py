@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .materialize import MaterializeFn
+from .materialize import materialize as _materialize
 from .text import _bind1, md5_60bit
 
 __all__ = [
@@ -278,9 +279,7 @@ def doc_embed(
     raw_name = keep_raw or f"_{out_col}_raw"
     out = doc_embed_raw(df, text_col, raw_name, dim, ngram, salt, max_chars)
     r = F.col(raw_name)
-    n2 = F.aggregate(
-        r, F.lit(0).cast("long"), lambda acc, x: acc + x * x
-    ).cast("double")
+    n2 = _int_sq_norm(r).cast("double")
     # bind sqrt(n2) ONCE — referencing it inside the per-element
     # lambda would re-run the whole squared-sum aggregate per
     # component (the measured r12 CSE trap)
@@ -343,6 +342,46 @@ def int_cosine_pairs_guard(
         )
 
 
+def _int_sq_norm(v: Column) -> Column:
+    """``|v|²`` of an integer vector column, exact int64."""
+    return F.aggregate(v, F.lit(0).cast("long"), lambda a, x: a + x * x)
+
+
+def _int_cosine_filter(pairs: DataFrame, cos_num: int, cos_den: int) -> DataFrame:
+    """THE integer-cosine pair decision, shared by every integer pair
+    builder (batch buckets, streaming cross-batch and compaction, the
+    all-pairs reference): rows carrying both vectors (``_va``, ``_vb``)
+    and their squared norms (``_na2``, ``_nb2``) gain the exact int64
+    dot ``_dot`` and are kept iff
+
+        cos(a,b) ≥ n/d  ⟺  a·b > 0  ∧  (a·b)²·d² ≥ n²·|a|²·|b|²
+
+    (valid for 0 < n/d ≤ 1) — bit-identical across Spark / DuckDB /
+    Python, so a decision near the threshold never flips on float
+    reduction order. Overflow is the caller's static guard
+    (:func:`int_cosine_pairs_guard`)."""
+    dot = F.col("_dot")
+    return pairs.withColumn(
+        "_dot",
+        F.aggregate(
+            F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ),
+    ).filter(
+        (dot > 0)
+        & (
+            dot * dot * F.lit(cos_den * cos_den)
+            >= F.lit(cos_num * cos_num) * F.col("_na2") * F.col("_nb2")
+        )
+    )
+
+
+def _pair_out(pairs: DataFrame) -> DataFrame:
+    return pairs.select("id_a", "id_b", F.col("_dot").alias("dot"),
+                        F.col("_na2").alias("na2"), F.col("_nb2").alias("nb2"))
+
+
 def near_dup_pairs_int(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -355,13 +394,9 @@ def near_dup_pairs_int(
     dim: int | None = None,
 ) -> DataFrame:
     """All (a < b) pairs with cosine ≥ ``cos_num/cos_den`` over an
-    INTEGER vector column, decided in exact int64 arithmetic:
-
-        cos(a,b) ≥ n/d  ⟺  a·b ≥ 0  ∧  (a·b)²·d² ≥ n²·|a|²·|b|²
-
-    (valid for 0 ≤ n/d ≤ 1) — bit-identical across Spark / DuckDB /
-    Python, so a dedup DECISION near the threshold can never flip on
-    float reduction order. Pass ``max_component`` (the largest
+    INTEGER vector column, decided by :func:`_int_cosine_filter` —
+    the all-pairs (or caller-blocked) reference form of the bucketed
+    :func:`semantic_dedup_pairs`. Pass ``max_component`` (the largest
     possible |v[d]|) for the static int64 overflow guard; for
     :func:`doc_embed_raw` vectors that is ``max_chars − ngram + 1``.
     Without it, oversized integer vectors can silently overflow the
@@ -395,30 +430,79 @@ def near_dup_pairs_int(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"), *blk
     )
     joined = a.join(b, blk) if block_col else a.crossJoin(b)
-    idot = F.aggregate(
-        F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    n2 = lambda c: F.aggregate(  # noqa: E731
-        F.col(c), F.lit(0).cast("long"), lambda acc, x: acc + x * x
-    )
-    out = (
+    out = _pair_out(_int_cosine_filter(
         joined.filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("_dot", idot)
-        .withColumn("_na2", n2("_va"))
-        .withColumn("_nb2", n2("_vb"))
-        .filter(
-            (F.col("_dot") > 0)
-            & (
-                F.col("_dot") * F.col("_dot") * F.lit(cos_den * cos_den)
-                >= F.lit(cos_num * cos_num) * F.col("_na2") * F.col("_nb2")
-            )
-        )
-        .select("id_a", "id_b", F.col("_dot").alias("dot"),
-                F.col("_na2").alias("na2"), F.col("_nb2").alias("nb2"))
-    )
+        .withColumn("_na2", _int_sq_norm(F.col("_va")))
+        .withColumn("_nb2", _int_sq_norm(F.col("_vb"))),
+        cos_num, cos_den,
+    ))
     return out.distinct() if block_col else out
+
+
+def _embed_nonzero(
+    docs: DataFrame, id_col: str, text_col: str, dim: int, ngram: int,
+    salt: str, max_chars: int, materialize,
+) -> DataFrame:
+    """(id_col, _eq, _n2): the integer embedding and its squared norm
+    for every doc with a NONZERO vector, pinned once. Zero vectors
+    (tokenless docs) carry no semantic evidence, and at crawl scale
+    the empty-doc bucket would be the one pathological hot bucket.
+    The pin matters: the frame feeds the bucketing and every later
+    vector consumer — without a cut Catalyst inlines the embed
+    aggregate into each and vectorization runs 3-4× (measured 22 s →
+    3 s on the sf0.01 fixture); the squared norm rides along so no
+    pair test recomputes it."""
+    emb = doc_embed_table(
+        docs.select(F.col(id_col), F.col(text_col)),
+        id_col, text_col, "_eq", dim, ngram, salt, max_chars,
+    )
+    return _materialize(
+        emb.withColumn("_n2", _int_sq_norm(F.col("_eq"))).filter(F.col("_n2") > 0),
+        materialize,
+    )
+
+
+def _bucket_rows(
+    nonzero: DataFrame, id_col: str, dim: int, n_planes: int,
+    n_tables: int, seed: int,
+) -> DataFrame:
+    """(_id, _v, _n2, tbl, bucket): seeded multi-table gaussian
+    sign-LSH over the integer vectors (quantize=False — buckets are
+    exact), with the vector and its squared norm CARRIED through the
+    ×n_tables explode for :func:`_bucket_pairs`. Project to (_id, tbl,
+    bucket) for an ids-only bucket index."""
+    from .similarity import gaussian_planes_q, with_gaussian_buckets
+
+    flat = gaussian_planes_q(n_tables * n_planes, dim, seed)
+    tables = [flat[t * n_planes : (t + 1) * n_planes] for t in range(n_tables)]
+    return with_gaussian_buckets(
+        nonzero, tables, "_id", id_col, "_eq",
+        vec_out="_v", quantize=False, carry_cols=("_n2",),
+    )
+
+
+def _bucket_pairs(bx: DataFrame, cos_num: int, cos_den: int) -> DataFrame:
+    """(id_a, id_b, dot, na2, nb2), id_a < id_b: the ONE bucket
+    self-join of :func:`_bucket_rows` frames, with the integer-cosine
+    decision (:func:`_int_cosine_filter`) applied INSIDE the join's
+    output pipeline (r19), so the only exchange after bucketing
+    carries the SURVIVORS (sf0.1: 1 577 of 5.0 M raw candidates)
+    instead of the candidate table and two vector re-joins. The dot
+    runs per RAW same-bucket pair (+28% dot work for −2 candidate
+    exchanges); dot/na2/nb2 are deterministic per pair, so the final
+    distinct returns the exact set the dedup-then-join shape did."""
+    a = bx.select(
+        F.col("_id").alias("id_a"), "tbl", "bucket",
+        F.col("_v").alias("_va"), F.col("_n2").alias("_na2"),
+    )
+    b = bx.select(
+        F.col("_id").alias("id_b"), "tbl", "bucket",
+        F.col("_v").alias("_vb"), F.col("_n2").alias("_nb2"),
+    )
+    return _pair_out(_int_cosine_filter(
+        a.join(b, ["tbl", "bucket"]).filter(F.col("id_a") < F.col("id_b")),
+        cos_num, cos_den,
+    )).distinct()
 
 
 def semantic_dedup_pairs(
@@ -438,108 +522,29 @@ def semantic_dedup_pairs(
 ) -> DataFrame:
     """SemDeDup-style near-SEMANTIC-duplicate pairs straight from a
     TEXT column — no pre-computed vectors needed (the r12 verdict's
-    composition gap): embed in-engine (:func:`doc_embed_raw`), block
-    with multi-table gaussian sign-LSH over the integer vectors, and
-    keep same-bucket pairs whose INTEGER-EXACT cosine clears
-    ``cos_num/cos_den``. Every stage is deterministic integer math,
-    so a DuckDB oracle replays embedding, buckets, candidates, and
-    the threshold decision bit-for-bit — threshold ties can never
-    flip on float reduction order.
+    composition gap): embed in-engine (:func:`_embed_nonzero`), block
+    with multi-table gaussian sign-LSH over the integer vectors
+    (:func:`_bucket_rows`), and keep same-bucket pairs whose
+    INTEGER-EXACT cosine clears ``cos_num/cos_den``
+    (:func:`_bucket_pairs`). Every stage is deterministic integer
+    math, so a DuckDB oracle replays embedding, buckets, candidates,
+    and the threshold decision bit-for-bit. The streaming gate
+    (streaming/semantic.py) runs these same three steps.
 
     Scale shape: embedding is a zero-shuffle row map; candidate
-    generation is an equi-join on (tbl, bucket) — never all-pairs;
-    the vector (dim bounded integers) and its norm ride through the
-    ×n_tables explode so the threshold is decided inside the bucket
-    join's pipeline and only SURVIVING pairs ever reach an exchange
-    (r19 — the candidate table itself, the operator's largest, is
-    never shuffled; the round-3 ids-only rule applies to fat payloads
-    re-joined later, not to a ~dim·8-byte signature that removes two
-    candidate-sized exchanges). Zero vectors (tokenless
-    docs) are dropped BEFORE bucketing: they carry no semantic
-    evidence, and at crawl scale the empty-doc bucket would be the
-    one pathological hot bucket. Recall for cosine ≥ t is
-    ``1 − (1 − p^b)^L`` with ``p = 1 − arccos(t)/π`` — defaults
+    generation is an equi-join on (tbl, bucket) — never all-pairs —
+    and only surviving pairs reach an exchange. Recall for cosine ≥ t
+    is ``1 − (1 − p^b)^L`` with ``p = 1 − arccos(t)/π`` — defaults
     (b=8, L=8) give ≈0.96 at t=0.92; tune per corpus.
 
     Returns (id_a, id_b, dot, na2, nb2) with id_a < id_b."""
     int_cosine_pairs_guard(dim, max(max_chars - ngram + 1, 1), cos_den)
-    from .materialize import materialize as _materialize
-    from .similarity import gaussian_planes_q, with_gaussian_buckets
-
-    emb = doc_embed_table(
-        docs.select(F.col(id_col), F.col(text_col)),
-        id_col, text_col, "_eq", dim, ngram, salt, max_chars,
+    nonzero = _embed_nonzero(
+        docs, id_col, text_col, dim, ngram, salt, max_chars, materialize
     )
-    # Materialize the embedded corpus ONCE: the frame feeds the
-    # bucketing AND both sides of the candidate-pair vector re-join —
-    # without a cut, Catalyst inlines the embed aggregate into every
-    # consumer and vectorization runs 3-4× (measured 22 s → 3 s on
-    # the sf0.01 fixture). At cluster scale this is where you'd
-    # persist the embedding table anyway. The squared norm rides
-    # along so the threshold test below never recomputes it per
-    # PAIR — only the dot is per-pair work.
-    nonzero = _materialize(
-        emb.withColumn(
-            "_n2",
-            F.aggregate(
-                F.col("_eq"), F.lit(0).cast("long"), lambda a, x: a + x * x
-            ),
-        ).filter(F.col("_n2") > 0),
-        materialize,
-    )
-    flat = gaussian_planes_q(n_tables * n_planes, dim, seed)
-    tables = [flat[t * n_planes : (t + 1) * n_planes] for t in range(n_tables)]
-    # bucket ONCE, self-join on (tbl, bucket) — the two sides share
-    # the same planes, so a second bucketing pass would be pure waste.
-    #
-    # r19 restructure (guide §2.3/§2.4 — shuffle decisions, not
-    # payloads... inverted): the vector and its squared norm RIDE
-    # THROUGH the bucket explode, and the integer-cosine threshold is
-    # decided INSIDE the bucket join's output pipeline. The old shape
-    # deduplicated the candidate-pair ids (a full exchange of the
-    # candidate table — the largest table in the whole operator) and
-    # re-joined both sides' vectors (two more candidate-sized
-    # shuffles); now the only exchange after bucketing carries the
-    # SURVIVORS (pairs actually over the threshold — orders of
-    # magnitude fewer at dedup thresholds; sf0.1: 1 577 of 5.0 M raw
-    # candidates). Cost: the explode carries dim bounded integers ×
-    # n_tables per doc (~n_tables·dim·8 B — bytes, not payloads), and
-    # the dot runs per RAW same-bucket pair instead of per distinct
-    # pair (sf0.1: 5.0 M vs 3.9 M, +28% dot work for −2 candidate
-    # exchanges). dot/na2/nb2 are deterministic per pair, so the
-    # final distinct over computed rows returns the exact same set
-    # the dedup-then-join shape did (oracle-verified both parities).
-    bx = with_gaussian_buckets(
-        nonzero, tables, "_id", id_col, "_eq",
-        vec_out="_v", quantize=False, carry_cols=("_n2",),
-    )
-    a = bx.select(
-        F.col("_id").alias("id_a"), "tbl", "bucket",
-        F.col("_v").alias("_va"), F.col("_n2").alias("_na2"),
-    )
-    b = bx.select(
-        F.col("_id").alias("id_b"), "tbl", "bucket",
-        F.col("_v").alias("_vb"), F.col("_n2").alias("_nb2"),
-    )
-    idot = F.aggregate(
-        F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("_dot", idot)
-        .filter(
-            (F.col("_dot") > 0)
-            & (
-                F.col("_dot") * F.col("_dot") * F.lit(cos_den * cos_den)
-                >= F.lit(cos_num * cos_num) * F.col("_na2") * F.col("_nb2")
-            )
-        )
-        .select("id_a", "id_b", F.col("_dot").alias("dot"),
-                F.col("_na2").alias("na2"), F.col("_nb2").alias("nb2"))
-        .distinct()
+    return _bucket_pairs(
+        _bucket_rows(nonzero, id_col, dim, n_planes, n_tables, seed),
+        cos_num, cos_den,
     )
 
 

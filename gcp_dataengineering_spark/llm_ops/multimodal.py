@@ -1081,36 +1081,14 @@ def audio_neardup(
     Returns (media_id, group_id); quarantined clips are absent.
     Catches re-encoded (amplitude-scaled) and resampled duplicate
     audio that byte-level dedup cannot see."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming ({max_hamming}) must be < bands ({bands}): the "
-            "pigeonhole banding only guarantees completeness up to "
-            "bands − 1 differing bits — raise bands instead"
-        )
-    from .dedup import resolve_dup_groups
-    from .materialize import materialize as _materialize
-    from .phash import phash_candidate_pairs
+    from .phash import _hamming_neardup_groups
 
-    # pin the (id, fingerprint) projection ONCE: it feeds the band
-    # self-join AND the component id list, and its lineage is the
-    # full decode UDF — unpinned, the id leg re-decoded every payload
-    # a second time (r18)
-    fps = _materialize(
-        audio_perceptual_fp(media, batch_rows=batch_rows, containers=containers)
-        .filter(F.col("afp").isNotNull())
-        .select("media_id", "afp"),
-        materialize,
+    return _hamming_neardup_groups(
+        lambda: audio_perceptual_fp(
+            media, batch_rows=batch_rows, containers=containers
+        ),
+        "afp", max_hamming, bands, materialize,
     )
-    cands = phash_candidate_pairs(
-        fps, hash_col="afp", bands=bands, id_col="media_id",
-        materialize=False,
-    )
-    pairs = cands.filter(F.col("hamming") <= max_hamming).select(
-        F.col("id_a"), F.col("id_b")
-    )
-    ids = fps.select(F.col("media_id").alias("doc_id"))
-    groups = resolve_dup_groups(ids, pairs, id_col="doc_id", materialize=materialize)
-    return groups.select(F.col("doc_id").alias("media_id"), "group_id")
 
 
 def synth_pcm_mp4(frames, sr: int, fourcc: str = "sowt", n_chunks: int = 3) -> bytes:
@@ -1399,50 +1377,29 @@ def video_neardup(
     components. Returns (media_id, group_id); quarantined clips are
     absent. Scope statement: see video_fingerprint_py — remux-level
     dups yes, re-encodes no."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming ({max_hamming}) must be < bands ({bands}): the "
-            "pigeonhole banding only guarantees completeness up to "
-            "bands − 1 differing bits — raise bands instead"
-        )
-    from .dedup import resolve_dup_groups
-    from .materialize import materialize as _materialize
-    from .phash import phash_candidate_pairs
+    from .phash import _hamming_neardup_groups
 
-    # pin the (id, fingerprint, duration) projection ONCE: it feeds
-    # the band self-join, BOTH duration-guard joins, and the
-    # component id list — four consumers whose shared lineage is the
-    # full container-walk UDF; unpinned, every consumer re-decoded
-    # every payload (r18). Filtering to non-null vfp up front is
-    # value-neutral for the duration joins: they only ever see ids
-    # that came out of the band join, which all carry a fingerprint.
-    fps = _materialize(
-        video_container_fp(media, batch_rows=batch_rows)
-        .filter(F.col("vfp").isNotNull())
-        .select("media_id", "vfp", "duration_ms"),
-        materialize,
-    )
-    cands = phash_candidate_pairs(
-        fps, hash_col="vfp", bands=bands, id_col="media_id",
-        materialize=False,
-    )
-    durs = fps.select(F.col("media_id"), F.col("duration_ms"))
-    pairs = (
-        cands.filter(F.col("hamming") <= max_hamming)
-        .join(durs.select(F.col("media_id").alias("id_a"),
-                          F.col("duration_ms").alias("dur_a")), "id_a")
-        .join(durs.select(F.col("media_id").alias("id_b"),
-                          F.col("duration_ms").alias("dur_b")), "id_b")
-        .filter(
-            F.col("dur_a").isNull()
-            | F.col("dur_b").isNull()
-            | (F.abs(F.col("dur_a") - F.col("dur_b")) <= F.lit(dur_tol_ms))
+    def duration_guard(pairs: DataFrame, fps: DataFrame) -> DataFrame:
+        # fps holds only non-null-vfp ids: value-neutral here, since
+        # every id out of the band join carries a fingerprint
+        durs = fps.select(F.col("media_id"), F.col("duration_ms"))
+        return (
+            pairs.join(durs.select(F.col("media_id").alias("id_a"),
+                                   F.col("duration_ms").alias("dur_a")), "id_a")
+            .join(durs.select(F.col("media_id").alias("id_b"),
+                              F.col("duration_ms").alias("dur_b")), "id_b")
+            .filter(
+                F.col("dur_a").isNull()
+                | F.col("dur_b").isNull()
+                | (F.abs(F.col("dur_a") - F.col("dur_b")) <= F.lit(dur_tol_ms))
+            )
         )
-        .select(F.col("id_a"), F.col("id_b"))
+
+    return _hamming_neardup_groups(
+        lambda: video_container_fp(media, batch_rows=batch_rows),
+        "vfp", max_hamming, bands, materialize,
+        extra_cols=("duration_ms",), pair_filter=duration_guard,
     )
-    ids = fps.select(F.col("media_id").alias("doc_id"))
-    groups = resolve_dup_groups(ids, pairs, id_col="doc_id", materialize=materialize)
-    return groups.select(F.col("doc_id").alias("media_id"), "group_id")
 
 
 def synth_video_payload(doc_id: int) -> bytes:

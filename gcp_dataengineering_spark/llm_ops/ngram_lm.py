@@ -1168,8 +1168,9 @@ def lm_save(model: dict, path: str) -> None:
     ``path``/<name>, scalars + order + smoothing in meta.json — the
     deployable artifact a foreachBatch consumer reloads once
     (``lm_load``) and scores every micro-batch against."""
-    import json
     import os
+
+    from ..sources.io import write_json_atomic
 
     os.makedirs(path, exist_ok=True)
     meta = {}
@@ -1178,10 +1179,7 @@ def lm_save(model: dict, path: str) -> None:
             v.write.mode("overwrite").parquet(os.path.join(path, k))
         else:
             meta[k] = v
-    tmp = os.path.join(path, "meta.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "meta.json"))
+    write_json_atomic(os.path.join(path, "meta.json"), meta)
 
 
 def lm_load(spark, path: str) -> dict:

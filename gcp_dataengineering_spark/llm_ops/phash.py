@@ -289,12 +289,33 @@ def image_neardup(
 
     Completeness bound: ``max_hamming`` must be < ``bands`` for the
     pigeonhole guarantee to hold — a larger radius would silently
-    miss pairs, so it raises instead.
+    miss pairs, so it raises instead."""
+    return _hamming_neardup_groups(
+        lambda: image_perceptual_hash(media, batch_rows=batch_rows),
+        hash_col, max_hamming, bands, materialize,
+    )
 
-    The (id, hash) projection is pinned ONCE here and feeds BOTH the
-    band self-join and the component id list — the hash lineage is
-    the full decode UDF, and the unpinned id leg used to re-run
-    every payload decode a second time just to list the ids."""
+
+def _hamming_neardup_groups(
+    fingerprints,
+    hash_col: str,
+    max_hamming: int,
+    bands: int,
+    materialize,
+    extra_cols: tuple[str, ...] = (),
+    pair_filter=None,
+) -> DataFrame:
+    """The shared tail of image/audio/video near-dup: radius guard →
+    pinned (media_id, hash, *extra_cols) → banded candidates → exact
+    hamming filter → optional ``pair_filter(pairs, fps)`` →
+    connected components. Returns (media_id, group_id).
+
+    ``fingerprints`` is a zero-argument callable returning the
+    fingerprint frame, so the guard raises before any payload is
+    decoded. The projection is pinned ONCE: it feeds the band
+    self-join, the component id list and any pair filter, and its
+    lineage is the full decode UDF — unpinned, each consumer re-ran
+    every payload decode (r18)."""
     if max_hamming >= bands:
         raise ValueError(
             f"max_hamming ({max_hamming}) must be < bands ({bands}): the "
@@ -303,20 +324,22 @@ def image_neardup(
         )
     from .dedup import resolve_dup_groups
 
-    hs = _materialize(
-        image_perceptual_hash(media, batch_rows=batch_rows)
+    fps = _materialize(
+        fingerprints()
         .filter(F.col(hash_col).isNotNull())
-        .select("media_id", hash_col),
+        .select("media_id", hash_col, *extra_cols),
         materialize,
     )
-    cands = phash_candidate_pairs(
-        hs, hash_col=hash_col, bands=bands, materialize=False
+    pairs = phash_candidate_pairs(
+        fps, hash_col=hash_col, bands=bands, materialize=False
+    ).filter(F.col("hamming") <= max_hamming)
+    if pair_filter is not None:
+        pairs = pair_filter(pairs, fps)
+    ids = fps.select(F.col("media_id").alias("doc_id"))
+    groups = resolve_dup_groups(
+        ids, pairs.select(F.col("id_a"), F.col("id_b")),
+        id_col="doc_id", materialize=materialize,
     )
-    pairs = cands.filter(F.col("hamming") <= max_hamming).select(
-        F.col("id_a"), F.col("id_b")
-    )
-    ids = hs.select(F.col("media_id").alias("doc_id"))
-    groups = resolve_dup_groups(ids, pairs, id_col="doc_id", materialize=materialize)
     return groups.select(F.col("doc_id").alias("media_id"), "group_id")
 
 

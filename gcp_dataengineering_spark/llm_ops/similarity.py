@@ -166,18 +166,18 @@ def with_gaussian_buckets(
     candidate generation downstream is an equi-join on (tbl, bucket),
     and a pair is a candidate if ANY table agrees.
 
-    IDS-ONLY by default: the explode multiplies rows ×n_tables, so
-    carrying the vector through it would duplicate every embedding 8×
-    through the candidate join (the round-3 shape — ~8× the shuffle
-    bytes at corpus-×-corpus scale). Callers re-join vectors AFTER
-    candidate dedup instead; pass ``vec_out`` to opt back into
-    carrying the vector (single-table / tiny-side uses — and the
-    fused candidate-filter shape, where the pair DECISION is computed
-    inside the bucket join's output pipeline so the much larger
-    candidate-pair table never reaches an exchange at all; see
-    embed.semantic_dedup_pairs). ``carry_cols`` rides additional
-    per-row columns (e.g. a precomputed squared norm) through the
-    explode unchanged.
+    IDS-ONLY by default — the shape the float cosine and top-k paths
+    in this module use: the explode multiplies rows ×n_tables, so
+    carrying a float vector through it would duplicate every
+    embedding 8× through the candidate join (the round-3 shape), and
+    those callers re-join vectors AFTER candidate dedup instead. Pass
+    ``vec_out`` to carry the vector (with ``carry_cols`` for extra
+    per-row columns such as a precomputed squared norm): every
+    integer semantic pair builder uses that shape
+    (embed._bucket_rows — the batch twin, the streaming gate and its
+    compaction), deciding the pair inside the bucket join's output
+    pipeline so the much larger candidate-pair table never reaches
+    an exchange.
 
     The bucket arithmetic is tables×planes×dim multiply-adds per row
     through higher-order-function lambdas (interpreted, not codegen),

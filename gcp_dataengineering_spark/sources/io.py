@@ -23,6 +23,7 @@ parquet partition directories (a metadata-only listing on the
 
 from __future__ import annotations
 
+import json
 import os
 from datetime import datetime, timezone
 
@@ -204,6 +205,27 @@ def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> N
     if compression:
         w = w.option("compression", compression)
     w.json(path)
+
+
+def read_json(path: str):
+    """The JSON document at ``path``, or None when there is none."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Publish ``obj`` as JSON at ``path`` so readers see the old file
+    or the new one, never a torn write: write-aside to ``path.tmp``,
+    flush + fsync, then ``os.replace`` (atomic on POSIX). Every
+    manifest and model meta in the package publishes through here."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
 
 
 def compact_small_files(

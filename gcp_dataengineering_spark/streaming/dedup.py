@@ -9,11 +9,20 @@ window is dropped, and state older than the watermark is evicted —
 state is O(keys per window), not O(all keys ever). The key should be
 the content fingerprint (llm_ops.text.fingerprint), not the raw
 text, so the state store holds 32-byte hashes.
+
+The fuzzy (MinHash) gate below is the batch decision applied online:
+:func:`fuzzy_dedup_batch` calls ``llm_ops.dedup.ingest_batch`` (and
+through it ``dedup._admitted_keepers``, the admission rule the
+semantic gate shares) against state kept in the shared segment
+store of streaming/segments.py; :func:`fuzzy_dedup_stream` runs it
+through that module's ``gate_stream`` foreachBatch wrapper.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from . import segments as S
 
 
 def dedup_stream(
@@ -75,46 +84,6 @@ def dedup_stream_against_corpus(
 _FUZZY_META = "meta.json"
 
 
-def _fuzzy_read_meta(store_dir: str) -> dict:
-    import json
-    import os
-
-    p = os.path.join(store_dir, _FUZZY_META)
-    if os.path.exists(p):
-        with open(p) as fh:
-            return json.load(fh)
-    return {}
-
-
-def _fuzzy_write_meta(store_dir: str, meta: dict) -> None:
-    """Atomic manifest publish (the semantic store's discipline):
-    write-aside + fsync + os.replace, so a torn write leaves the
-    previous generation readable."""
-    import json
-    import os
-
-    tmp = os.path.join(store_dir, _FUZZY_META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(store_dir, _FUZZY_META))
-
-
-def _fuzzy_gc_orphans(store_dir: str, meta: dict) -> None:
-    """Remove segment dirs a crashed earlier batch wrote but never
-    published (they are invisible to readers; names are uuid-suffixed
-    so they can never collide with a future segment)."""
-    import os
-    import shutil
-
-    live = {s["dir"] for s in meta.get("segments", [])}
-    for name in os.listdir(store_dir):
-        sub = os.path.join(store_dir, name)
-        if os.path.isdir(sub) and name.startswith("seg-") and name not in live:
-            shutil.rmtree(sub, ignore_errors=True)
-
-
 def fuzzy_dedup_batch(
     batch: DataFrame,
     store_dir: str,
@@ -130,21 +99,22 @@ def fuzzy_dedup_batch(
     """One micro-batch through the ONLINE MinHash near-dup gate —
     the fuzzy sibling of the exact corpus gate above and of the
     semantic store (streaming/semantic.py), completing the streaming
-    dedup matrix (exact / fuzzy / semantic). Batch semantics are
-    EXACTLY :func:`llm_ops.dedup.ingest_batch` against the store's
+    dedup matrix (exact / fuzzy / semantic). The decision IS
+    :func:`llm_ops.dedup.ingest_batch`, called against the store's
     accumulated fingerprint + band tables (pytest pins a multi-batch
     stream equal to the sequential ingest_batch twin): exact-dup
     drop first, then near-dup candidates of the existing corpus or
     of an earlier-id surviving batch doc (corpus wins, min-id within
     the batch), connected components over the batch-only pair graph.
 
-    Store shape: append-only immutable segments (one per admitting
-    batch: ``fps`` + ``bands`` parquet) under an atomically-published
-    JSON manifest — O(batch) write amplification; a crash before
-    publish leaves the previous generation live and an orphan dir
-    the next batch GCs. The LSH params are pinned in the manifest:
-    reusing a store under a different hash family would make the
-    band index silently meaningless, so a mismatch raises.
+    Store shape: the shared segment store (streaming/segments.py) —
+    one immutable segment per admitting batch (``fps`` + ``bands``
+    parquet) under an atomically-published ``meta.json`` manifest;
+    a crash before publish leaves the previous generation live and
+    an orphan dir the next batch GCs. The LSH params are pinned in
+    the manifest: reusing a store under a different hash family
+    would make the band index silently meaningless, so a mismatch
+    raises.
 
     At-least-once replay is idempotent on STATE: a replayed batch's
     docs are already in the fp table, so the exact anti-join drops
@@ -154,17 +124,12 @@ def fuzzy_dedup_batch(
 
     Scale shape: the corpus contributes only 32-byte fingerprints
     and (doc_id, band) keys — never text — each read by exactly one
-    equi-join; per-batch cost is O(batch) + the batch-sized CC loop,
-    independent of corpus size beyond those index scans.
+    equi-join; per-batch cost is O(batch) + the batch-sized CC loop.
 
-    ``auto_compact_segments=K`` (the semantic store's policy shape):
-    persisted in the store meta — set once, applies to every future
-    writer; 0 clears. After a publish leaves more than K live
-    segments, the history folds physically into one
-    (:func:`compact_fuzzy_store`) in the same turn; retired dirs
-    keep one-merge reader grace (swept by the NEXT batch's orphan
-    GC). Admission semantics are byte-unchanged — the fold writes
-    the reader's exact union view.
+    ``auto_compact_segments=K``: the semantic store's persisted
+    policy (set once, 0 clears) — a publish leaving more than K live
+    segments folds the history into one (:func:`compact_fuzzy_store`)
+    in the same turn; admission semantics are byte-unchanged.
 
     Returns the admitted (appendable) rows as a batch DataFrame.
     """
@@ -174,7 +139,7 @@ def fuzzy_dedup_batch(
     from ..llm_ops.text import fingerprint
 
     os.makedirs(store_dir, exist_ok=True)
-    meta = _fuzzy_read_meta(store_dir)
+    meta = S.read_meta(store_dir, _FUZZY_META)
     params = {"num_hashes": num_hashes, "bands": bands, "n": n}
     if meta.get("params") not in (None, params):
         raise ValueError(
@@ -182,17 +147,13 @@ def fuzzy_dedup_batch(
             f"called with {params} — a band index under a different "
             "hash family is meaningless; use a fresh store_dir"
         )
-    _fuzzy_gc_orphans(store_dir, meta)
+    S.gc_segments(store_dir, meta)
 
     spark = batch.sparkSession
     segs = meta.get("segments", [])
     if segs:
-        corpus_fps = spark.read.parquet(
-            *[os.path.join(store_dir, s["dir"], "fps") for s in segs]
-        )
-        corpus_bands = spark.read.parquet(
-            *[os.path.join(store_dir, s["dir"], "bands") for s in segs]
-        )
+        corpus_fps = S.read_part(spark, store_dir, segs, "fps")
+        corpus_bands = S.read_part(spark, store_dir, segs, "bands")
     else:
         corpus_fps = batch.limit(0).select(fingerprint(text_col).alias("fp"))
         corpus_bands = minhash_band_rows(
@@ -220,40 +181,25 @@ def fuzzy_dedup_batch(
     if sink is not None:
         sink(appendable)
 
-    # the compaction policy persists in the meta (set once, applies
-    # to every future writer; 0 clears — the semantic store's shape)
-    if auto_compact_segments is not None:
-        if auto_compact_segments > 0:
-            meta["auto_compact_segments"] = int(auto_compact_segments)
-        else:
-            meta.pop("auto_compact_segments", None)
-    policy = meta.get("auto_compact_segments")
-
+    fresh = meta.get("params") is None
+    meta = dict(meta, params=params)
+    S.set_compact_policy(meta, auto_compact_segments)
     if appendable.limit(1).count() > 0:
-        import uuid
-
-        name = f"seg-{int(meta.get('generation', 0)) + 1:06d}-{uuid.uuid4().hex[:8]}"
-        seg_dir = os.path.join(store_dir, name)
-        new_fps.write.mode("errorifexists").parquet(os.path.join(seg_dir, "fps"))
-        new_bands.write.mode("errorifexists").parquet(os.path.join(seg_dir, "bands"))
-        n_rows = appendable.count()
-        meta = dict(
-            meta,
-            generation=int(meta.get("generation", 0)) + 1,
-            params=params,
-            segments=segs + [{"dir": name, "rows": int(n_rows)}],
+        seg = S.write_segment(
+            store_dir, meta, {"fps": new_fps, "bands": new_bands},
+            {"rows": int(appendable.count())},
         )
-        _fuzzy_write_meta(store_dir, meta)
-        if policy and len(meta["segments"]) > policy:
+        meta = dict(meta, generation=int(meta.get("generation", 0)) + 1,
+                    segments=segs + [seg])
+        S.publish_meta(store_dir, _FUZZY_META, meta)
+        if S.compaction_due(meta):
             # same-turn physical fold; retired dirs keep one-merge
             # reader grace (the NEXT batch's orphan GC sweeps them)
             compact_fuzzy_store(spark, store_dir)
-    elif meta.get("params") is None or auto_compact_segments is not None:
-        _fuzzy_write_meta(
-            store_dir,
-            dict(meta, generation=int(meta.get("generation", 0)),
-                 params=params, segments=segs),
-        )
+    elif fresh or auto_compact_segments is not None:
+        S.publish_meta(store_dir, _FUZZY_META, dict(
+            meta, generation=int(meta.get("generation", 0)), segments=segs
+        ))
     return appendable
 
 
@@ -271,25 +217,10 @@ def fuzzy_dedup_stream(
     stops it). Keyword args are :func:`fuzzy_dedup_batch`'s.
     ``pre_gate`` mirrors the semantic stream's hook: a batch→batch
     callable applied before admission (e.g. the perplexity gate)."""
-
-    def _process(batch: DataFrame, _epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if pre_gate is not None:
-            batch = pre_gate(batch)
-            if batch.isEmpty():
-                return
-        fuzzy_dedup_batch(
-            batch,
-            store_dir,
-            sink=lambda admitted: admitted.write.mode("append").parquet(out_dir),
-            **kwargs,
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return S.gate_stream(
+        stream, fuzzy_dedup_batch, store_dir, out_dir, checkpoint_dir,
+        pre_gate, kwargs,
+    )
 
 
 def compact_fuzzy_store(spark, store_dir: str) -> None:
@@ -301,26 +232,13 @@ def compact_fuzzy_store(spark, store_dir: str) -> None:
     distinct against at-least-once artifacts). The retired segment
     dirs stay on disk until the next batch's orphan GC — one-merge
     reader grace, the semantic store's discipline."""
-    import os
-    import uuid
-
-    meta = _fuzzy_read_meta(store_dir)
+    meta = S.read_meta(store_dir, _FUZZY_META)
     segs = meta.get("segments", [])
     if len(segs) <= 1:
         return
-    fps = spark.read.parquet(
-        *[os.path.join(store_dir, s["dir"], "fps") for s in segs]
-    ).distinct()
-    bands = spark.read.parquet(
-        *[os.path.join(store_dir, s["dir"], "bands") for s in segs]
-    ).distinct()
-    name = f"seg-{int(meta.get('generation', 0)) + 1:06d}-{uuid.uuid4().hex[:8]}"
-    seg_dir = os.path.join(store_dir, name)
-    fps.write.mode("errorifexists").parquet(os.path.join(seg_dir, "fps"))
-    bands.write.mode("errorifexists").parquet(os.path.join(seg_dir, "bands"))
-    meta = dict(meta)
-    meta["generation"] = int(meta.get("generation", 0)) + 1
-    meta["segments"] = [
-        {"dir": name, "rows": int(sum(s.get("rows", 0) for s in segs))}
-    ]
-    _fuzzy_write_meta(store_dir, meta)
+    S.fold_segments(
+        store_dir, _FUZZY_META, meta,
+        {part: S.read_part(spark, store_dir, segs, part).distinct()
+         for part in ("fps", "bands")},
+        {"rows": int(sum(s.get("rows", 0) for s in segs))},
+    )

@@ -11,23 +11,23 @@ stateful shapes the engine won't compose in one query. So the
 operator follows this repo's other mutable-state streaming sink
 (streaming/upsert.py) and runs as ``foreachBatch``: each micro-batch
 is a small BATCH DataFrame, decided against an explicit on-disk
-bucket store with exactly the batch module's machinery —
+bucket store by CALLING the batch twin's steps, not restating them —
 
-1. embed the batch in-engine (``embed.doc_embed_table`` — the same
-   integer char-n-gram + sign-random-projection vectors the batch
-   twin produces, bit-for-bit);
-2. bucket with the SAME seeded gaussian sign-LSH tables
-   (``similarity.with_gaussian_buckets``, quantize=False);
+1. ``embed._embed_nonzero``: the integer embedding + squared norm of
+   every nonzero-vector doc (bit-for-bit the batch twin's vectors);
+2. ``embed._bucket_rows``: the SAME seeded gaussian sign-LSH tables,
+   vector and norm carried; its ids-only projection is the bucket
+   index that is matched and stored;
 3. cross-batch candidates: equi-join the batch's (tbl, bucket) rows
-   against the store's — never all-pairs — then the integer-exact
-   cosine threshold (``cos² test in int64``, the batch twin's rule);
-4. within-batch candidates: the batch's own (tbl, bucket) self-join
-   + the same threshold, resolved to connected components
-   (``dedup.resolve_dup_groups``, pointer-doubling);
-5. admit each un-anchored component's min-id keeper (a component any
-   member of which matched an earlier stored doc is ANCHORED — the
-   whole component is a re-phrasing of something already admitted
-   and is dropped);
+   against the store's — never all-pairs — then the batch twin's
+   integer-cosine decision ``embed._int_cosine_filter``;
+4. within-batch pairs: ``embed._bucket_pairs`` (the batch twin's
+   bucket self-join with the decision inside), resolved to connected
+   components (``dedup.resolve_dup_groups``, pointer-doubling);
+5. ``dedup._admitted_keepers`` — ``ingest_batch``'s admission rule:
+   a component any member of which matched an earlier stored doc is
+   ANCHORED (a re-phrasing of something already admitted) and is
+   dropped whole; each other component admits its min-id keeper;
 6. append ALL seen nonzero-vector batch docs (admitted or not) to
    the store and evict rows older than the event-time watermark —
    state is O(docs per watermark window), the
@@ -52,27 +52,22 @@ whose min id arrives late keeps the earliest arrival instead. The
 batch rebuild remains the authority; the stream/batch parity pytest
 pins the clique + id-ordered case exactly.
 
-Store layout & crash safety (r15 — the manifest-isolation protocol
-of streaming/upsert.py, specialized to this store's append-only +
-time-evicted access pattern): the store is a list of IMMUTABLE
-SEGMENTS, one per micro-batch, each a ``<store>/seg-<gen>-<hex>/``
-directory holding ``docs`` (one row per doc: _sid, _sv, _sn2,
-_sepoch) and ``buckets`` (ids-only ×L explode — vectors never ride
-the explode, the round-3 lesson; _sepoch denormalized on so the
-eviction filter needs no join). ``_semantic_store_meta.json`` is
-the manifest: published LAST by atomic rename, it lists the live
-segments with their event-epoch ranges plus the monotonic high
-water mark. A batch therefore writes O(batch) — its own new segment
-— never O(window): eviction is LOGICAL first (readers filter
-``_sepoch >= hwm − watermark``, exact, same rows as the old
-physical rewrite produced) and physical at segment granularity (a
-segment whose max epoch has aged past the cutoff leaves the
-manifest; its directory is garbage-collected at the START of the
-next batch, giving any in-flight reader a full merge cycle of
-grace, upsert.py's rule). Crash at any point leaves the previous
-manifest as the live store; unpublished segment dirs are swept as
-orphans. Long-running streams compact segments (and reconcile
-greedy-vs-batch drift) with :func:`compact_semantic_store`.
+Store layout & crash safety (r15): the shared segment store of
+streaming/segments.py (the fuzzy gate's too) — one IMMUTABLE
+``seg-<gen>-<hex>/`` segment per micro-batch holding ``docs`` (one
+row per doc: _sid, _sv, _sn2, _sepoch) and ``buckets`` (ids-only ×L
+explode, _sepoch denormalized on so the eviction filter needs no
+join), under the ``_semantic_store_meta.json`` manifest, published
+LAST by atomic rename, which lists the live segments with their
+event-epoch ranges plus the monotonic high water mark. Eviction is
+LOGICAL first (readers filter ``_sepoch >= hwm − watermark``, exact)
+and physical at segment granularity (a segment whose max epoch has
+aged past the cutoff leaves the manifest; its directory is GC'd at
+the START of the next batch — one merge of reader grace). Crash at
+any point leaves the previous manifest as the live store; unpublished
+segment dirs are swept as orphans. Long-running streams compact
+segments (and reconcile greedy-vs-batch drift) with
+:func:`compact_semantic_store`.
 
 foreachBatch is at-least-once: the sink callback runs BEFORE the
 store update, so a replayed batch can duplicate admitted rows
@@ -97,23 +92,24 @@ point of sharing the batch machinery.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..llm_ops.dedup import resolve_dup_groups
+from ..llm_ops.dedup import _admitted_keepers, resolve_dup_groups
 from ..llm_ops.embed import (
     EMBED_SALT,
-    doc_embed_table,
+    _bucket_pairs,
+    _bucket_rows,
+    _embed_nonzero,
+    _int_cosine_filter,
     int_cosine_pairs_guard,
 )
 from ..llm_ops.materialize import materialize as _materialize
-from ..llm_ops.similarity import gaussian_planes_q, with_gaussian_buckets
+from . import segments as S
 
 __all__ = [
     "compact_semantic_store",
@@ -145,24 +141,7 @@ def parse_watermark_seconds(watermark: str) -> int:
 
 
 def _read_meta(store_dir: str) -> dict:
-    p = os.path.join(store_dir, _META_FILE)
-    if os.path.exists(p):
-        with open(p) as fh:
-            return json.load(fh)
-    return {}
-
-
-def _write_meta(store_dir: str, meta: dict) -> None:
-    """Atomic manifest publish (upsert.py's discipline): write-aside
-    + fsync + os.replace — the meta is the store's manifest now, so
-    a torn write must leave the previous generation readable, never
-    truncated JSON."""
-    tmp = os.path.join(store_dir, _META_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(store_dir, _META_FILE))
+    return S.read_meta(store_dir, _META_FILE)
 
 
 def _segment_expired(seg: dict, cutoff: float) -> bool:
@@ -174,18 +153,13 @@ def _segment_expired(seg: dict, cutoff: float) -> bool:
     return seg["max_epoch"] is None or seg["max_epoch"] < cutoff
 
 
-def _gc_unreferenced_segments(store_dir: str, meta: dict) -> None:
-    """Delete every seg-* directory the manifest does not list as
-    live: the previous generation's retirees (their one-merge reader
-    grace has expired — this runs at the START of the next batch,
-    upsert.py's rule) plus orphans from batches that crashed before
-    publishing."""
-    if not os.path.isdir(store_dir):
-        return
-    live = {s["dir"] for s in meta.get("segments", [])}
-    for name in os.listdir(store_dir):
-        if name.startswith("seg-") and name not in live:
-            shutil.rmtree(os.path.join(store_dir, name))
+def _segment_entry(docs: DataFrame) -> dict | None:
+    """Manifest fields of a segment holding ``docs`` (row count and
+    event-epoch range), or None when it would be empty."""
+    n, lo, hi = docs.agg(
+        F.count(F.lit(1)), F.min("_sepoch"), F.max("_sepoch")
+    ).collect()[0]
+    return {"rows": int(n), "min_epoch": lo, "max_epoch": hi} if n else None
 
 
 def _is_legacy_store(store_dir: str) -> bool:
@@ -238,32 +212,14 @@ def _migrate_legacy_store(spark, store_dir: str) -> None:
     docs, buckets = _legacy_frames(spark, store_dir)
     new_meta = dict(meta)
     new_meta.update({"layout": 2, "generation": 0, "segments": [], "retired": []})
-    seg = _write_segment(store_dir, new_meta, docs, buckets)
-    if seg is not None:
-        new_meta["segments"] = [seg]
-    _write_meta(store_dir, new_meta)
+    entry = _segment_entry(docs)
+    if entry is not None:
+        new_meta["segments"] = [S.write_segment(
+            store_dir, new_meta, {"docs": docs, "buckets": buckets}, entry
+        )]
+    S.publish_meta(store_dir, _META_FILE, new_meta)
     shutil.rmtree(os.path.join(store_dir, "docs"))
     shutil.rmtree(os.path.join(store_dir, "buckets"))
-
-
-def _write_segment(
-    store_dir: str, meta: dict, docs: DataFrame, buckets: DataFrame
-) -> dict | None:
-    """Write one immutable segment directory (docs + buckets parquet)
-    and return its manifest entry — or None for an empty frame. NOT
-    published: the caller adds the entry to the meta it writes last;
-    a crash before that publish leaves an orphan dir for the next
-    batch's GC."""
-    n, lo, hi = docs.agg(
-        F.count(F.lit(1)), F.min("_sepoch"), F.max("_sepoch")
-    ).collect()[0]
-    if n == 0:
-        return None
-    name = f"seg-{int(meta.get('generation', 0)) + 1:06d}-{uuid.uuid4().hex[:8]}"
-    seg_dir = os.path.join(store_dir, name)
-    docs.write.mode("errorifexists").parquet(os.path.join(seg_dir, "docs"))
-    buckets.write.mode("errorifexists").parquet(os.path.join(seg_dir, "buckets"))
-    return {"dir": name, "rows": int(n), "min_epoch": lo, "max_epoch": hi}
 
 
 def read_semantic_store(
@@ -288,12 +244,8 @@ def read_semantic_store(
     segs = meta["segments"]
     if not segs:
         return None, None, meta
-    docs = spark.read.parquet(
-        *[os.path.join(store_dir, s["dir"], "docs") for s in segs]
-    )
-    buckets = spark.read.parquet(
-        *[os.path.join(store_dir, s["dir"], "buckets") for s in segs]
-    )
+    docs = S.read_part(spark, store_dir, segs, "docs")
+    buckets = S.read_part(spark, store_dir, segs, "buckets")
     hwm, wm = meta.get("max_event_epoch"), meta.get("watermark_seconds")
     if hwm is not None and wm is not None:
         cutoff = F.lit(hwm - wm)
@@ -341,21 +293,13 @@ def semantic_dedup_batch(
     before ANY event time existed, which age out as soon as a high
     water mark appears.
 
-    ``auto_compact_segments`` (r16 — the r15 verdict's item 4): a
-    long-running stream otherwise accumulates one segment per
-    micro-batch until someone runs :func:`compact_semantic_store` by
-    hand. Pass K to record the policy in the store meta — whenever a
-    publish leaves MORE than K live segments, this batch hook folds
-    the layout to one segment (physical-only compaction,
-    ``resolve=False``: pure _sid-dedup rewrite, so stream admission
-    semantics and the single/multi-batch parity contracts are
-    byte-unchanged; greedy-vs-batch reconciliation stays the
-    explicit maintenance job it was). The policy PERSISTS in the
-    meta, so later batches — from any writer — keep honoring it
-    without re-passing the parameter; pass 0 to clear it. Runs
-    inside the foreachBatch turn, preserving the single-writer
-    contract; retired segments keep the usual one-merge reader
-    grace."""
+    ``auto_compact_segments=K`` (r16) records a policy in the store
+    meta, honored by every later writer until 0 clears it: whenever a
+    publish leaves MORE than K live segments, the same foreachBatch
+    turn folds the layout to one segment
+    (:func:`compact_semantic_store` with ``resolve=False`` — a pure
+    _sid-dedup rewrite, so admission semantics are byte-unchanged);
+    retired segments keep the usual one-merge reader grace."""
     int_cosine_pairs_guard(dim, max(max_chars - ngram + 1, 1), cos_den)
     spark = batch.sparkSession
     if batch.isEmpty():
@@ -365,103 +309,64 @@ def semantic_dedup_batch(
     # reader grace expired) along with any crash orphans
     if _is_legacy_store(store_dir):
         _migrate_legacy_store(spark, store_dir)
-    _gc_unreferenced_segments(store_dir, _read_meta(store_dir))
+    S.gc_segments(store_dir, _read_meta(store_dir))
 
-    # 1-2. embed + squared norm, bucket the nonzero vectors
-    emb = doc_embed_table(
-        batch.select(F.col(id_col), F.col(text_col)),
-        id_col, text_col, "_eq", dim, ngram, salt, max_chars,
-    ).withColumn(
-        "_n2",
-        F.aggregate(
-            F.col("_eq"), F.lit(0).cast("long"), lambda a, x: a + x * x
-        ),
+    # 1-2. the batch twin's embed + bucketing steps; the vector-carrying
+    # bucket rows are pinned once and their ids-only projection is the
+    # bucket index for cross-batch matching and the store append
+    nonzero = _embed_nonzero(
+        batch, id_col, text_col, dim, ngram, salt, max_chars, None
     )
-    # the embedded batch feeds bucketing, both pair joins, and the
-    # store append — pin it once (the measured Catalyst-inlines-the-
-    # aggregate trap from the batch twin)
-    nonzero = _materialize(emb.filter(F.col("_n2") > 0), None)
-    flat = gaussian_planes_q(n_tables * n_planes, dim, seed)
-    tables = [flat[t * n_planes:(t + 1) * n_planes] for t in range(n_tables)]
     bx = _materialize(
-        with_gaussian_buckets(nonzero, tables, "_id", id_col, "_eq", quantize=False),
-        None,
+        _bucket_rows(nonzero, id_col, dim, n_planes, n_tables, seed), None
     )
-
-    va = nonzero.select(
-        F.col(id_col).alias("id_a"), F.col("_eq").alias("_va"),
-        F.col("_n2").alias("_na2"),
-    )
-    vb = nonzero.select(
-        F.col(id_col).alias("id_b"), F.col("_eq").alias("_vb"),
-        F.col("_n2").alias("_nb2"),
-    )
-    idot = F.aggregate(
-        F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    thresh = (F.col("_dot") > 0) & (
-        F.col("_dot") * F.col("_dot") * F.lit(cos_den * cos_den)
-        >= F.lit(cos_num * cos_num) * F.col("_na2") * F.col("_nb2")
-    )
+    bucket_ids = bx.select("_id", "tbl", "bucket")
 
     # 3. cross-batch: batch buckets ⋈ store buckets (ids-only), then
-    # vectors re-joined AFTER candidate dedup
+    # vectors joined onto the distinct candidates for the threshold
     store_docs, store_buckets, meta = read_semantic_store(spark, store_dir)
     if store_docs is not None:
         cross = (
-            bx.select(F.col("_id").alias("id_a"), "tbl", "bucket")
+            bucket_ids.withColumnRenamed("_id", "id_a")
             .join(store_buckets.select("_sid", "tbl", "bucket"), ["tbl", "bucket"])
             .select("id_a", "_sid")
             .distinct()
-        )
-        matched = (
-            cross.join(va, "id_a")
+            .join(
+                nonzero.select(
+                    F.col(id_col).alias("id_a"), F.col("_eq").alias("_va"),
+                    F.col("_n2").alias("_na2"),
+                ),
+                "id_a",
+            )
             .join(
                 store_docs.select(
                     "_sid", F.col("_sv").alias("_vb"), F.col("_sn2").alias("_nb2")
                 ),
                 "_sid",
             )
-            .withColumn("_dot", idot)
-            .filter(thresh)
+        )
+        matched = (
+            _int_cosine_filter(cross, cos_num, cos_den)
             .select(F.col("id_a").alias(id_col))
             .distinct()
         )
     else:
         matched = nonzero.select(F.col(id_col)).limit(0)
 
-    # 4. within-batch pairs → connected components over ALL batch ids
-    # (zero-vector docs pair with nothing → their own keepers)
-    pairs = (
-        bx.select(F.col("_id").alias("id_a"), "tbl", "bucket")
-        .join(bx.select(F.col("_id").alias("id_b"), "tbl", "bucket"), ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("_dot", idot)
-        .filter(thresh)
-        .select("id_a", "id_b")
-    )
+    # 4. within-batch pairs (the batch twin's bucket-pair step) →
+    # connected components over ALL batch ids (zero-vector docs pair
+    # with nothing → their own keepers)
     groups = resolve_dup_groups(
-        batch.select(F.col(id_col)), pairs, id_col=id_col, materialize=None
+        batch.select(F.col(id_col)),
+        _bucket_pairs(bx, cos_num, cos_den).select("id_a", "id_b"),
+        id_col=id_col, materialize=None,
     )
 
-    # 5. drop anchored components whole; admit min-id keepers of the rest
-    anchored = (
-        groups.join(matched, id_col, "left_semi").select("group_id").distinct()
-    )
-    keeper_ids = (
-        groups.filter(F.col(id_col) == F.col("group_id"))
-        .join(anchored, "group_id", "left_anti")
-        .select(F.col(id_col))
-    )
-    # pinned eagerly and UNCONDITIONALLY (True, not the global
+    # 5. drop anchored components whole; admit min-id keepers of the
+    # rest — pinned eagerly and UNCONDITIONALLY (True, not the global
     # default): the caller's handle must survive the next batch's
     # segment GC — see the docstring (ADVICE r14)
+    keeper_ids = _admitted_keepers(groups, matched, id_col)
     admitted = _materialize(batch.join(keeper_ids, id_col, "left_semi"), True)
     if sink is not None:
         sink(admitted)
@@ -473,11 +378,7 @@ def semantic_dedup_batch(
     new_meta = dict(meta)
     new_meta.setdefault("layout", 2)
     new_meta["cos_num"], new_meta["cos_den"] = cos_num, cos_den
-    if auto_compact_segments is not None:
-        if auto_compact_segments <= 0:
-            new_meta.pop("auto_compact_segments", None)
-        else:
-            new_meta["auto_compact_segments"] = int(auto_compact_segments)
+    S.set_compact_policy(new_meta, auto_compact_segments)
     hwm = None
     if event_time_col is not None:
         epoch = F.col(event_time_col).cast("timestamp").cast("double")
@@ -500,11 +401,11 @@ def semantic_dedup_batch(
         F.col(id_col).alias("_sid"), F.col("_eq").alias("_sv"),
         F.col("_n2").alias("_sn2"), "_sepoch",
     )
-    new_buckets = bx.select(F.col("_id").alias("_sid"), "tbl", "bucket").join(
+    new_buckets = bucket_ids.withColumnRenamed("_id", "_sid").join(
         new_docs.select("_sid", "_sepoch"), "_sid"
     )
     os.makedirs(store_dir, exist_ok=True)
-    seg = _write_segment(store_dir, new_meta, new_docs, new_buckets)
+    entry = _segment_entry(new_docs)
     live = list(meta.get("segments", []))
     retired: list[str] = []
     if hwm is not None:
@@ -513,19 +414,20 @@ def semantic_dedup_batch(
         cutoff = hwm - new_meta["watermark_seconds"]
         retired = [s["dir"] for s in live if _segment_expired(s, cutoff)]
         live = [s for s in live if not _segment_expired(s, cutoff)]
-    if seg is not None:
-        live.append(seg)
+    if entry is not None:
+        live.append(S.write_segment(
+            store_dir, new_meta, {"docs": new_docs, "buckets": new_buckets}, entry
+        ))
     new_meta["generation"] = int(meta.get("generation", 0)) + 1
     new_meta["segments"] = live
     new_meta["retired"] = retired
     # publish LAST: a crash above leaves the previous manifest live
     # and the new segment as an orphan for the next batch's GC
-    _write_meta(store_dir, new_meta)
+    S.publish_meta(store_dir, _META_FILE, new_meta)
     # auto-compaction AFTER the publish (a crash between the two
     # leaves a correct uncompacted store — the next batch retries):
     # physical-only fold, admission semantics untouched
-    policy = new_meta.get("auto_compact_segments")
-    if policy and len(live) > int(policy):
+    if S.compaction_due(new_meta):
         # gc=False: this publish just retired segments via watermark
         # expiry — deleting them here would cut short the one-merge
         # reader grace (GC belongs to the START of the next batch)
@@ -554,56 +456,40 @@ def compact_semantic_store(
     Two jobs in one pass, both needed by a long-lived stream:
 
     - **Reconciliation.** Cross-batch streaming resolution is greedy
-      first-arrival: a chain whose links arrive in separate batches
-      can keep one extra member per chain break, and a cluster whose
-      min id arrives late keeps the earliest arrival instead (module
-      docstring). The store holds every seen doc's vector and
-      buckets, so the batch twin's answer is fully reconstructible:
-      same-bucket candidate pairs (equi-join, never all-pairs), the
-      integer-exact cosine threshold the batches used (recorded in
-      the store meta; override via ``cos_num``/``cos_den``),
-      connected components by pointer-doubling, min-id keeper.
-      Returns (id_col, group_id, keep) over every live stored doc —
-      ``keep == False`` rows a downstream corpus admitted but the
-      batch rebuild would drop (the revocation list), exactly
+      first-arrival (module docstring), but the store holds every
+      seen doc's vector and buckets, so the batch twin's answer is
+      reconstructible: the stored vectors are joined onto the stored
+      buckets and run through the batch twin's bucket-pair step
+      (``embed._bucket_pairs``) at the threshold the batches used
+      (recorded in the meta; override via ``cos_num``/``cos_den``),
+      then connected components, min-id keeper. Returns (id_col,
+      group_id, keep) over every live stored doc — ``keep == False``
+      rows are the revocation list, exactly
       ``embed.semantic_dedup``'s group frame with keep flagged.
-    - **Physical compaction.** With ``rewrite=True`` the store's
-      one-segment-per-batch history (plus any at-least-once replay
-      duplicates, which fold away by _sid here) is rewritten as a
-      single segment under the same manifest protocol: old segments
-      retire with the usual one-merge reader grace and the next
-      write GCs them. Watermark semantics are untouched — rows keep
-      their epochs and the manifest keeps the high water mark.
+    - **Physical compaction.** With ``rewrite=True`` the history
+      (plus at-least-once replay duplicates, folded away by _sid) is
+      rewritten as ONE segment (``segments.fold_segments``): old
+      segments retire with one-merge reader grace. Rows keep their
+      epochs and the manifest keeps the high water mark.
 
-    Run it from a maintenance job while the stream is between
-    batches (writers are single at a time, foreachBatch's contract).
-
-    ``resolve=False`` (r16) skips the reconciliation pass entirely —
-    physical fold only (the _sid/bucket dedup and segment rewrite;
-    store CONTENT is unchanged, so stream admission decisions are
-    too) and the returned frame is empty. This is the cheap form the
-    ``auto_compact_segments`` batch hook triggers: layout upkeep on
-    every threshold crossing, the full pair-graph reconciliation
-    stays an explicit (and more expensive) maintenance decision.
-
-    ``gc=False`` (r17, ADVICE r16): skip the orphan/retiree sweep.
-    The batch hook passes this because its own publish JUST retired
-    segments — sweeping them in the same turn would cut short the
-    one-merge reader grace that defers GC to the next batch's start.
+    Run it while the stream is between batches (single writer,
+    foreachBatch's contract). ``resolve=False`` (r16) is the physical
+    fold alone — store content and so admission unchanged, empty
+    result — the cheap form the ``auto_compact_segments`` hook runs.
+    ``gc=False`` (r17) skips the start-of-call sweep: the hook passes
+    it because its own publish JUST retired segments, and sweeping
+    them in the same turn would cut short their reader grace.
     """
     if _is_legacy_store(store_dir):
         _migrate_legacy_store(spark, store_dir)
-    meta = _read_meta(store_dir)
-    # gc=False when called from the same foreachBatch turn that just
-    # published a retirement: those dirs keep their reader grace and
-    # the next batch's start-of-batch GC collects them (ADVICE r16)
     if gc:
-        _gc_unreferenced_segments(store_dir, meta)
+        S.gc_segments(store_dir, _read_meta(store_dir))
     docs, buckets, meta = read_semantic_store(spark, store_dir)
+    result = spark.createDataFrame(
+        [], f"{id_col} long, group_id long, keep boolean"
+    )
     if docs is None:
-        return spark.createDataFrame(
-            [], f"{id_col} long, group_id long, keep boolean"
-        )
+        return result
     num = cos_num if cos_num is not None else meta.get("cos_num")
     den = cos_den if cos_den is not None else meta.get("cos_den")
     if resolve and (num is None or den is None):
@@ -621,80 +507,29 @@ def compact_semantic_store(
     buckets = _materialize(
         buckets.dropDuplicates(["_sid", "tbl", "bucket"]), True
     )
-    if not resolve:
-        # physical fold only: rewrite the deduped frames as one
-        # segment, return an empty reconciliation frame
-        result = spark.createDataFrame(
-            [], f"{id_col} long, group_id long, keep boolean"
-        )
-        if rewrite:
-            new_meta = dict(meta)
-            seg = _write_segment(
-                store_dir, new_meta, docs,
-                buckets.select("_sid", "tbl", "bucket", "_sepoch"),
-            )
-            new_meta["generation"] = int(meta.get("generation", 0)) + 1
-            new_meta["retired"] = [s["dir"] for s in meta.get("segments", [])]
-            new_meta["segments"] = [seg] if seg is not None else []
-            _write_meta(store_dir, new_meta)
-        return result
-    cands = (
-        buckets.select(F.col("_sid").alias("id_a"), "tbl", "bucket")
-        .join(
-            buckets.select(F.col("_sid").alias("id_b"), "tbl", "bucket"),
-            ["tbl", "bucket"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    idot = F.aggregate(
-        F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        cands.join(
+    if resolve:
+        bx = buckets.select(F.col("_sid").alias("_id"), "tbl", "bucket").join(
             docs.select(
-                F.col("_sid").alias("id_a"), F.col("_sv").alias("_va"),
-                F.col("_sn2").alias("_na2"),
+                F.col("_sid").alias("_id"), F.col("_sv").alias("_v"),
+                F.col("_sn2").alias("_n2"),
             ),
-            "id_a",
+            "_id",
         )
-        .join(
-            docs.select(
-                F.col("_sid").alias("id_b"), F.col("_sv").alias("_vb"),
-                F.col("_sn2").alias("_nb2"),
-            ),
-            "id_b",
+        groups = resolve_dup_groups(
+            docs.select(F.col("_sid").alias(id_col)),
+            _bucket_pairs(bx, num, den).select("id_a", "id_b"),
+            id_col=id_col, materialize=None,
         )
-        .withColumn("_dot", idot)
-        .filter(
-            (F.col("_dot") > 0)
-            & (
-                F.col("_dot") * F.col("_dot") * F.lit(den * den)
-                >= F.lit(num * num) * F.col("_na2") * F.col("_nb2")
-            )
+        result = _materialize(
+            groups.withColumn("keep", F.col(id_col) == F.col("group_id")), True
         )
-        .select("id_a", "id_b")
-    )
-    groups = resolve_dup_groups(
-        docs.select(F.col("_sid").alias(id_col)), pairs,
-        id_col=id_col, materialize=None,
-    )
-    result = _materialize(
-        groups.withColumn("keep", F.col(id_col) == F.col("group_id")), True
-    )
     if rewrite:
-        new_meta = dict(meta)
-        seg = _write_segment(
-            store_dir, new_meta, docs,
-            buckets.select("_sid", "tbl", "bucket", "_sepoch"),
+        S.fold_segments(
+            store_dir, _META_FILE, meta,
+            {"docs": docs,
+             "buckets": buckets.select("_sid", "tbl", "bucket", "_sepoch")},
+            _segment_entry(docs),
         )
-        new_meta["generation"] = int(meta.get("generation", 0)) + 1
-        new_meta["retired"] = [s["dir"] for s in meta.get("segments", [])]
-        new_meta["segments"] = [seg] if seg is not None else []
-        _write_meta(store_dir, new_meta)
     return result
 
 
@@ -717,22 +552,7 @@ def semantic_dedup_stream(
     window is unsupported on streaming DataFrames). Rows the gate
     drops never reach the semantic store, exactly as if the batch
     pipeline had dropped them before its semantic stage."""
-
-    def _process(batch: DataFrame, _epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if pre_gate is not None:
-            batch = pre_gate(batch)
-            if batch.isEmpty():
-                return
-        semantic_dedup_batch(
-            batch,
-            store_dir,
-            sink=lambda admitted: admitted.write.mode("append").parquet(out_dir),
-            **kwargs,
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return S.gate_stream(
+        stream, semantic_dedup_batch, store_dir, out_dir, checkpoint_dir,
+        pre_gate, kwargs,
+    )

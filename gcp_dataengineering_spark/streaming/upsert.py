@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..ops.compaction import latest_by_key_agg
+from ..sources.io import read_json, write_json_atomic
 
 
 def upsert_batch_into_snapshot(
@@ -121,30 +122,17 @@ def _bucket_expr(keys: list[str], n_buckets: int):
 
 
 def _read_meta(snapshot_dir: str) -> dict | None:
-    p = os.path.join(snapshot_dir, _META_FILE)
-    if os.path.exists(p):
-        with open(p) as fh:
-            return json.load(fh)
-    return None
+    return read_json(os.path.join(snapshot_dir, _META_FILE))
 
 
 def _read_manifest(snapshot_dir: str) -> dict | None:
-    p = os.path.join(snapshot_dir, _MANIFEST_FILE)
-    if os.path.exists(p):
-        with open(p) as fh:
-            return json.load(fh)
-    return None
+    return read_json(os.path.join(snapshot_dir, _MANIFEST_FILE))
 
 
 def _write_manifest(snapshot_dir: str, manifest: dict) -> None:
     """Atomic publish: readers see the old manifest or the new one,
     never a partial write (os.replace is atomic on POSIX)."""
-    tmp = os.path.join(snapshot_dir, _MANIFEST_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(snapshot_dir, _MANIFEST_FILE))
+    write_json_atomic(os.path.join(snapshot_dir, _MANIFEST_FILE), manifest)
 
 
 def _bucket_dirs(snapshot_dir: str) -> list[str]:
@@ -328,19 +316,14 @@ def _merge_touched_buckets(
         # rewriting it) — a crash mid-write must leave either the old
         # meta or the new one, never truncated JSON that turns every
         # later merge/read into a raw JSONDecodeError
-        meta_tmp = os.path.join(snapshot_dir, _META_FILE + ".tmp")
-        with open(meta_tmp, "w") as fh:
-            json.dump(
-                {
-                    "n_buckets": n_buckets,
-                    "keys": keys,
-                    "schema": merged.drop(BUCKET_COL).schema.json(),
-                },
-                fh,
-            )
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(meta_tmp, os.path.join(snapshot_dir, _META_FILE))
+        write_json_atomic(
+            os.path.join(snapshot_dir, _META_FILE),
+            {
+                "n_buckets": n_buckets,
+                "keys": keys,
+                "schema": merged.drop(BUCKET_COL).schema.json(),
+            },
+        )
     if manifest is None:
         # first manifest-era merge on a fresh directory: pin the empty
         # generation 0 BEFORE any data lands, so a crash mid-staging

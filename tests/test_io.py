@@ -352,3 +352,29 @@ def test_profile_table_one_pass(spark):
     )
     p2 = {r.column: r for r in profile_table(with_nulls).collect()}
     assert p2["maybe"].n_nulls == with_nulls.filter(F.col("maybe").isNull()).count()
+
+
+def test_model_meta_publish_fsyncs(spark, tmp_path, monkeypatch):
+    """lm_save and dsir_save publish meta.json through the atomic JSON
+    helper: the meta is fsync'd before the rename, so a crash right
+    after the rename cannot leave an empty or truncated meta. The
+    fsync'd descriptor must be the published file (same inode —
+    os.replace keeps it)."""
+    from gcp_dataengineering_spark.llm_ops.dsir import dsir_save
+    from gcp_dataengineering_spark.llm_ops.ngram_lm import lm_save
+
+    synced: list[int] = []
+    real_fsync = os.fsync
+
+    def spy(fd):
+        synced.append(os.fstat(fd).st_ino)
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", spy)
+    lm_dir, dsir_dir = str(tmp_path / "lm"), str(tmp_path / "dsir")
+    lm_save({"order": 2, "smoothing": "laplace", "frac_bits": 16}, lm_dir)
+    dsir_save(
+        spark.createDataFrame([(0, 1)], "bucket long, weight long"), dsir_dir
+    )
+    for d in (lm_dir, dsir_dir):
+        assert os.stat(os.path.join(d, "meta.json")).st_ino in synced

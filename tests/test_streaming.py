@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from gcp_dataengineering_spark.streaming.windowed import batch_hourly, stream_hourly
@@ -2214,3 +2215,86 @@ def test_ingest_stream_gopher_gates_match_batch_stages(spark, tmp_path):
     assert {r.doc_id for r in got.collect()} == batch_admitted == {1}
     # the structural feature columns are working columns, not payload
     assert not [c for c in got.columns if c.startswith("g_")]
+
+
+@pytest.mark.parametrize("kind", ["fuzzy", "semantic"])
+def test_segment_store_crash_before_publish(spark, tmp_path, monkeypatch, kind):
+    """Both near-dup stores publish their manifest LAST. A crash after
+    the batch's segment dir is written but before the publish must
+    leave readers on exactly the pre-crash store; re-running the batch
+    must admit the same rows the crashed run handed its sink; and that
+    next batch's start-of-batch GC must remove the orphan seg-* dir."""
+    import os
+
+    from gcp_dataengineering_spark.streaming import segments as S
+    from gcp_dataengineering_spark.streaming.dedup import fuzzy_dedup_batch
+    from gcp_dataengineering_spark.streaming.semantic import (
+        read_semantic_store,
+        semantic_dedup_batch,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    b1 = docs.filter(F.col("doc_id") < 20)
+    # batch 2: novel docs plus a near-copy of a stored doc, so its
+    # admission has to consult the store
+    b2 = docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 40)).unionByName(
+        b1.filter(F.col("doc_id") == 3).select(
+            (F.col("doc_id") + 1000).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" zq tail")).alias("text"),
+        )
+    )
+    store = str(tmp_path / "store")
+    if kind == "fuzzy":
+        gate, meta_file = fuzzy_dedup_batch, "meta.json"
+
+        def view():
+            meta = S.read_meta(store, meta_file)
+            return {
+                part: sorted(map(tuple, S.read_part(
+                    spark, store, meta["segments"], part).collect()))
+                for part in ("fps", "bands")
+            }
+    else:
+        gate, meta_file = semantic_dedup_batch, "_semantic_store_meta.json"
+
+        def view():
+            d, b, _ = read_semantic_store(spark, store)
+            return {
+                "docs": sorted((r._sid, tuple(r._sv), r._sn2) for r in d.collect()),
+                "buckets": sorted(map(tuple, b.collect())),
+            }
+
+    def seg_dirs():
+        return {n for n in os.listdir(store) if n.startswith("seg-")}
+
+    gate(b1, store)
+    before, meta_before, dirs_before = view(), S.read_meta(store, meta_file), seg_dirs()
+
+    real_publish = S.write_json_atomic
+    written = []
+
+    def dying_publish(path, obj):
+        written.append(seg_dirs() - dirs_before)
+        raise RuntimeError("simulated crash before manifest publish")
+
+    crashed_sink: list[set[int]] = []
+    monkeypatch.setattr(S, "write_json_atomic", dying_publish)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        gate(b2, store, sink=lambda a: crashed_sink.append(
+            {r.doc_id for r in a.select("doc_id").collect()}))
+    monkeypatch.setattr(S, "write_json_atomic", real_publish)
+
+    orphans = written[0]
+    assert len(orphans) == 1  # the segment dir was written, then the publish died
+    assert seg_dirs() == dirs_before | orphans
+    assert S.read_meta(store, meta_file) == meta_before
+    assert view() == before  # readers see exactly the pre-crash store
+
+    rerun = {r.doc_id for r in gate(b2, store).select("doc_id").collect()}
+    assert crashed_sink == [rerun]
+    assert 1003 not in rerun  # the near-copy matched stored state
+    assert not (seg_dirs() & orphans)  # the next batch's GC swept the orphan
+    live = {s["dir"] for s in S.read_meta(store, meta_file)["segments"]}
+    assert len(live) == 2 and seg_dirs() == live
