@@ -447,7 +447,7 @@ def build_training_corpus(
             reputable = _materialize(reputable, materialize)
         gopher_rep = gopher_repetition_features(
             reputable, text_col, id_col,
-            materialize=materialize if materialize is not False else False,
+            materialize=materialize,
         )
         keep = gopher_rep.filter(F.col("rep_pass")).select(
             F.col("doc_id").alias(id_col)
@@ -652,7 +652,7 @@ def build_training_corpus(
             *cfg.dsir_keep,
             id_col=id_col,
             gumbel=cfg.dsir_gumbel,
-            materialize=materialize if materialize is not False else False,
+            materialize=materialize,
         )
         dsir_scored = sel.select(
             F.col(id_col).alias("doc_id"), "dsir_logw", "dsir_key", "selected"
@@ -704,7 +704,7 @@ def build_training_corpus(
             cos_den=100,
             n_planes=cfg.semantic_dedup_planes,
             n_tables=cfg.semantic_dedup_tables,
-            materialize=materialize if materialize is not False else False,
+            materialize=materialize,
         )
         semantic_deduped = apply_dedup_keepers(near_deduped, sgroups, id_col)
 
@@ -734,7 +734,7 @@ def build_training_corpus(
             emb.select(F.col(id_col).alias("vec_id"), "embedding"),
             per_cluster_cap=cfg.cluster_balance_cap,
             n_clusters=cfg.cluster_balance_k,
-            materialize=materialize if materialize is not False else False,
+            materialize=materialize,
         )
         cluster_balance = verdicts.select(
             F.col("vec_id").alias("doc_id"), "cluster", "selected"
@@ -793,7 +793,7 @@ def build_training_corpus(
                 decontaminated, eval_df, text_col, id_col,
                 num_hashes=cfg.minhash_hashes, bands=cfg.lsh_bands,
                 min_est_jaccard=cfg.decontam_fuzzy_min_est_jaccard,
-                materialize=materialize if materialize is not False else False,
+                materialize=materialize,
             )
     else:
         if cfg.decontam_fuzzy_min_est_jaccard is not None:

@@ -24,14 +24,6 @@ def typed_null(dtype: str) -> Column:
     return F.lit(None).cast(dtype)
 
 
-def const_cols(df: DataFrame, **consts) -> DataFrame:
-    """P2 — constant-literal enrichment (``'XOLAIR' as brand``,
-    ``'US' as country``; ``stage_1:120, 147-148, 252-254``)."""
-    for name, value in consts.items():
-        df = df.withColumn(name, F.lit(value))
-    return df
-
-
 def parse_money(col: Column | str) -> Column:
     """F3+F2 — de-comma money strings then cast to double
     (``replace(dtc_display_, ',', '')`` + cast, ``stage_1:287, 383,
@@ -106,16 +98,6 @@ def week_to_month(week_col: Column | str) -> Column:
     w = F.col(week_col) if isinstance(week_col, str) else week_col
     offset = F.floor((w.cast("int") - F.lit(1)) / F.lit(4)).cast("int")
     return (offset % 12 + F.lit(1)).cast("int")
-
-
-def yrwk_to_year(yrwk_col: Column | str) -> Column:
-    """Year part of a YYYYWW key. NOTE: the reference keeps the
-    original year string even when the week>=49 month-arithmetic
-    wraps into January of the next year (``stage_1:852-853`` selects
-    ``year`` unchanged next to the wrapped month) — so no carry here;
-    quirk preserved for output parity."""
-    c = F.col(yrwk_col) if isinstance(yrwk_col, str) else yrwk_col
-    return F.substring(c.cast("string"), 1, 4)
 
 
 def conform_schema(df: DataFrame, schema: str | "StructType") -> DataFrame:

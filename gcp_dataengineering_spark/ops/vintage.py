@@ -48,6 +48,22 @@ def union_vintages(
     return out
 
 
+def union_vintage_ranges(
+    tables: dict[str, DataFrame],
+    ranges: Sequence[tuple[str, int, int | None]],
+    cols: Sequence[str],
+    key: str,
+) -> DataFrame:
+    """The reference's vintage spelling: each ``(table, lo, hi)``
+    branch is ``SELECT cols FROM table WHERE key BETWEEN lo AND hi``,
+    or ``key >= lo`` when ``hi`` is None (the open newest vintage)."""
+    k = F.col(key)
+    return union_vintages([
+        (tables[name].select(*cols), k >= lo if hi is None else k.between(lo, hi))
+        for name, lo, hi in ranges
+    ])
+
+
 def assert_disjoint(
     branches: Sequence[tuple[DataFrame, Column]], key: Column | str
 ) -> None:

@@ -1,6 +1,20 @@
 """nvs_digital reconstruction — the six channel pipelines and their
 6-way union (``stage_1_hcp_channel_all_hardcode.py:227-1128``),
-DataFrame-native.
+composed from the ``ops`` operators.
+
+Each channel is the reference's core pattern: union vintages
+(``ops/vintage.union_vintage_ranges``) → conform (``ops/conform``
+YYYYMM splits, recodes, typed nulls) → join the deduped DMA dim
+(``_join_dma``; J8 cast-key variant for the bigint-coded monthly
+feeds) → allocate a cost pot by reach share:
+- the four DTC channels are rows of one spec table (``_DTC``, the
+  twin of ``suite/e2e._dtc_sql``) and allocate with the W2 window
+  (``ops/allocate.allocate_window``);
+- hcp_paid_search allocates with the J9 grouped-total join
+  (``allocate_join``); hcp_all_channels pivots its weekly feed
+  (``ops/pivot.conditional_pivot``), takes its J9 share from
+  ``reach_share`` and finds unallocated 2024 pots with
+  ``missing_cost_redistribution``.
 
 Preserved quirks (SURVEY.md §4; they affect output bits):
 - CASE recodes with no ELSE → unmatched channels become NULL and
@@ -10,7 +24,8 @@ Preserved quirks (SURVEY.md §4; they affect output bits):
   feed casts to string; their union coerces to string) — the final
   6-way union therefore coerces month to STRING overall, exactly
   like Spark SQL's positional-union coercion in the reference;
-- the degenerate full-join condition coalesce(d.k, ca.k) = ca.k;
+- the degenerate full-join condition coalesce(d.k, ca.k) = ca.k,
+  run as the equivalent equi-join (see missing_cost_redistribution);
 - missing-2024 cost redistributed into Custom (/11) and Paid Social
   (/9) months;
 - dtc_poc groups by 9 keys incl. literal columns; redundant
@@ -25,12 +40,30 @@ kilobytes and broadcast everywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..ops.conform import parse_money, recode, typed_null, week_to_month
-from ..ops.vintage import union_vintages
+from ..ops.allocate import (
+    allocate_join,
+    allocate_window,
+    grouped_totals,
+    missing_cost_redistribution,
+    reach_share,
+)
+from ..ops.conform import (
+    daily_to_yrmo,
+    parse_money,
+    recode,
+    typed_null,
+    week_to_month,
+    yrmo_month,
+    yrmo_year,
+)
+from ..ops.pivot import conditional_pivot
+from ..ops.vintage import union_vintage_ranges
 
 BRAND = "XOLAIR"
 
@@ -77,6 +110,7 @@ LEGACY_CHANNEL_FRACTIONS = [
     ("EHR/EMR", 0.01),
 ]
 
+
 def cleaned_dmas(demographics: DataFrame) -> DataFrame:
     """P11 dim dedup (``stage_1:244-248``) — the demographics table
     carries duplicate (dma_code, dma_name) rows."""
@@ -92,14 +126,13 @@ def _conform_feed(
     """nvs_cleaned shape (``stage_1:251-264`` et al.): constant
     enrichment + yrmo split + per-(year, month, dma) aggregation.
     POC has no clicks → engage is a typed null (``stage_1:448``)."""
-    ym = F.col("year_mth").cast("string")
-    grouped = (
+    return (
         unioned.select(
             F.lit(BRAND).alias("brand"),
             F.lit(channel).alias("channel"),
             F.lit(audience).alias("audience"),
-            F.substring(ym, 1, 4).alias("year"),
-            F.substring(ym, 5, 2).alias("month"),
+            yrmo_year("year_mth").alias("year"),
+            yrmo_month("year_mth").alias("month"),
             F.col("dma_code"),
             typed_null("string").alias("zip_code"),
             typed_null("string").alias("state"),
@@ -116,7 +149,6 @@ def _conform_feed(
             ).alias("engage"),
         )
     )
-    return grouped
 
 
 def _join_dma(conformed: DataFrame, dma_dim: DataFrame, cast_code: bool = False) -> DataFrame:
@@ -162,12 +194,11 @@ def unpivot_costs(costs_unpivot: DataFrame, audience: str, channel_upper: str,
     """costs_cleaned new branch (``stage_1:290-296``): tall cost rows
     filtered by audience + upper(channel); HCP search sums per month
     (``stage_1:640-648``)."""
-    ym = F.col("year_month").cast("string")
     base = costs_unpivot.filter(
         (F.col("audience") == audience) & (F.upper(F.col("channel")) == channel_upper)
     ).select(
-        F.substring(ym, 1, 4).alias("year"),
-        F.substring(ym, 5, 2).alias("month"),
+        yrmo_year("year_month").alias("year"),
+        yrmo_month("year_month").alias("month"),
         F.col("cost"),
     )
     if grouped:
@@ -177,183 +208,146 @@ def unpivot_costs(costs_unpivot: DataFrame, audience: str, channel_upper: str,
 
 def _allocate(dma_joined: DataFrame, costs: DataFrame, how: str) -> DataFrame:
     """final_agg (``stage_1:298-320``): attach the month's cost pot
-    (J4/J5) and allocate by reach share within (brand, month, year)
-    via the unbounded window (W2)."""
+    (J4/J5) and allocate it by reach share within (brand, month,
+    year) — the W2 window. The window partitions on the string month;
+    it is cast to INT after, as the reference's select does."""
     dj = dma_joined.alias("dj")
     cc = costs.alias("cc")
-    w = Window.partitionBy("dj.brand", "dj.month", "dj.year")
-    return (
-        dj.join(
-            cc,
-            (F.col("dj.year") == F.col("cc.year")) & (F.col("dj.month") == F.col("cc.month")),
-            how,
-        )
-        .select(
-            F.col("dj.brand").alias("brand"),
-            F.col("dj.channel").alias("channel"),
-            F.col("dj.audience").alias("audience"),
-            F.col("dj.year").alias("year"),
-            F.col("dj.month").cast("integer").alias("month"),
-            F.col("dj.zip_code").alias("zip_code"),
-            F.col("dj.dma").alias("dma"),
-            F.col("dj.state").alias("state"),
-            F.col("dj.country").alias("country"),
-            F.col("dj.reach").alias("reach"),
-            F.col("dj.engage").alias("engage"),
-            (
-                F.col("cc.cost").cast("double")
-                * F.col("dj.reach")
-                / F.sum("dj.reach").over(w)
-            ).alias("cost"),
-        )
+    joined = dj.join(
+        cc,
+        (F.col("dj.year") == F.col("cc.year")) & (F.col("dj.month") == F.col("cc.month")),
+        how,
+    ).select(
+        "dj.brand", "dj.channel", "dj.audience", "dj.year", "dj.month", "dj.zip_code",
+        "dj.dma", "dj.state", "dj.country", "dj.reach", "dj.engage",
+        F.col("cc.cost").cast("double").alias("cost"),
+    )
+    return allocate_window(joined, "cost", "reach", ["brand", "month", "year"]).withColumn(
+        "month", F.col("month").cast("integer")
     )
 
 
-def _vintage_branches(t: dict[str, DataFrame], keys: list[str], cols: list[str],
-                      preds: list[Column | None]) -> list[tuple[DataFrame, Column | None]]:
-    return [(t[k].select(*cols), p) for k, p in zip(keys, preds)]
+class _Dtc(NamedTuple):
+    vintages: list[tuple[str, int, int | None]]
+    channel: str
+    with_engage: bool
+    legacy_col: str
+    legacy_cutoff: str | None
+    unpivot_channel: str | None
+    how: str
+
+
+# The four DTC channels (stage_1:228-578), one row each, with the
+# parameters of their oracle twin suite/e2e._dtc_sql: year_mth vintage
+# ranges, channel, whether the feed has clicks, legacy cost column and
+# date cutoff, the unpivot cost channel (None: legacy costs only) and
+# the cost join.
+_DTC = {
+    "display": _Dtc(
+        [("display_v1", 202201, 202212), ("display_v2", 202301, 202312),
+         ("display_v3", 202401, None)],
+        "Display", True, "dtc_display_", "2023-12", "DIGITAL DISPLAY", "inner",
+    ),
+    "paid_search": _Dtc(
+        [("search_v1", 202201, 202212), ("search_v2", 202301, 202312),
+         ("search_v3", 202401, None)],
+        "Paid Search", True, "dtc_search", "2023-12", "PAID SEARCH", "inner",
+    ),
+    "poc": _Dtc(
+        [("poc_v1", 202201, 202212), ("poc_v2", 202301, 202312), ("poc_v3", 202401, None)],
+        "Point of Care", False, "dtc_poc", "2023-12", None, "left",
+    ),
+    # legacy costs with NO date cutoff (stage_1:550-556)
+    "paid_social": _Dtc(
+        [("social_v1", 202201, 202212), ("social_v2", 202301, None)],
+        "Paid Social", True, "dtc_social", None, None, "left",
+    ),
+}
+
+
+def _dtc_channel(t: dict[str, DataFrame], spec: _Dtc) -> DataFrame:
+    feed = ["year_mth", "dma_code", "impressions", *(["clicks"] if spec.with_engage else [])]
+    unioned = union_vintage_ranges(t, spec.vintages, feed, "year_mth")
+    conformed = _conform_feed(unioned, spec.channel, "DTC", with_engage=spec.with_engage)
+    dj = _join_dma(conformed, cleaned_dmas(t["demographics"]))
+    costs = legacy_costs(t["costs_wide"], spec.legacy_col, cutoff=spec.legacy_cutoff)
+    if spec.unpivot_channel is not None:
+        costs = costs.unionByName(unpivot_costs(t["costs_unpivot"], "DTC", spec.unpivot_channel))
+    return _allocate(dj, costs, spec.how)
 
 
 def dtc_display(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     """``stage_1:228-321``."""
-    ymr = F.col("year_mth")
-    unioned = union_vintages(_vintage_branches(
-        t, ["display_v1", "display_v2", "display_v3"],
-        ["year_mth", "dma_region", "dma_code", "impressions", "clicks"],
-        [ymr.between(202201, 202212), ymr.between(202301, 202312), ymr >= 202401],
-    ))
-    conformed = _conform_feed(unioned, "Display", "DTC")
-    dj = _join_dma(conformed, cleaned_dmas(t["demographics"]))
-    costs = legacy_costs(t["costs_wide"], "dtc_display_").unionByName(
-        unpivot_costs(t["costs_unpivot"], "DTC", "DIGITAL DISPLAY")
-    )
-    return _allocate(dj, costs, "inner")
+    return _dtc_channel(t, _DTC["display"])
 
 
 def dtc_paid_search(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     """``stage_1:323-416``."""
-    ymr = F.col("year_mth")
-    unioned = union_vintages(_vintage_branches(
-        t, ["search_v1", "search_v2", "search_v3"],
-        ["year_mth", "dma_name", "dma_code", "impressions", "clicks"],
-        [ymr.between(202201, 202212), ymr.between(202301, 202312), ymr >= 202401],
-    ))
-    conformed = _conform_feed(unioned, "Paid Search", "DTC")
-    dj = _join_dma(conformed, cleaned_dmas(t["demographics"]))
-    costs = legacy_costs(t["costs_wide"], "dtc_search").unionByName(
-        unpivot_costs(t["costs_unpivot"], "DTC", "PAID SEARCH")
-    )
-    return _allocate(dj, costs, "inner")
+    return _dtc_channel(t, _DTC["paid_search"])
 
 
 def dtc_poc(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     """``stage_1:419-499`` — impressions only; LEFT cost join."""
-    ymr = F.col("year_mth")
-    unioned = union_vintages(_vintage_branches(
-        t, ["poc_v1", "poc_v2", "poc_v3"],
-        ["year_mth", "dma", "dma_code", "impressions"],
-        [ymr.between(202201, 202212), ymr.between(202301, 202312), ymr >= 202401],
-    ))
-    conformed = _conform_feed(unioned, "Point of Care", "DTC", with_engage=False)
-    dj = _join_dma(conformed, cleaned_dmas(t["demographics"]))
-    costs = legacy_costs(t["costs_wide"], "dtc_poc")
-    return _allocate(dj, costs, "left")
+    return _dtc_channel(t, _DTC["poc"])
 
 
 def dtc_paid_social(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
-    """``stage_1:502-578`` — 2 vintages; legacy costs with NO date
-    cutoff (``stage_1:550-556``); LEFT cost join."""
-    ymr = F.col("year_mth")
-    unioned = union_vintages(_vintage_branches(
-        t, ["social_v1", "social_v2"],
-        ["dma_code", "dma_name", "year_mth", "impressions", "clicks"],
-        [ymr.between(202201, 202212), ymr >= 202301],
-    ))
-    conformed = _conform_feed(unioned, "Paid Social", "DTC")
-    dj = _join_dma(conformed, cleaned_dmas(t["demographics"]))
-    costs = legacy_costs(t["costs_wide"], "dtc_social", cutoff=None)
-    return _allocate(dj, costs, "left")
+    """``stage_1:502-578`` — 2 vintages; LEFT cost join."""
+    return _dtc_channel(t, _DTC["paid_social"])
+
+
+# stage_1:587-593 — the monthly vintages after the daily one
+HCP_SEARCH_VINTAGES = [("hcp_search_m1", 202301, 202312), ("hcp_search_m2", 202401, None)]
 
 
 def hcp_paid_search(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     """``stage_1:580-679`` — daily→monthly first vintage (F7/F8);
     cost pot = legacy npp*0.16 ∪ grouped unpivot; allocation via the
-    explicit grouped-total join (J9), not a window."""
+    J9 grouped-total join, not a window."""
     daily = t["hcp_search_daily"].filter(F.col("activity_date") <= "2022-12-31").select(
-        "dma_code",
-        F.date_format(F.col("activity_date").cast("date"), "yyyyMM").alias("year_mth"),
-        "impressions",
-        "clicks",
+        "dma_code", daily_to_yrmo("activity_date").alias("year_mth"), "impressions", "clicks"
     )
-    ymr = F.col("year_mth")
-    m1 = t["hcp_search_m1"].filter(ymr.between(202301, 202312)).select(
-        "dma_code", ymr.cast("string").alias("year_mth"), "impressions", "clicks"
+    monthly = union_vintage_ranges(
+        t, HCP_SEARCH_VINTAGES, ["dma_code", "year_mth", "impressions", "clicks"], "year_mth"
     )
-    m2 = t["hcp_search_m2"].filter(ymr >= 202401).select(
-        "dma_code", ymr.cast("string").alias("year_mth"), "impressions", "clicks"
-    )
-    unioned = daily.unionByName(m1).unionByName(m2)
+    unioned = daily.unionByName(monthly.withColumn("year_mth", F.col("year_mth").cast("string")))
     conformed = _conform_feed(unioned, "Paid Search", "HCP")
     dj = _join_dma(conformed, cleaned_dmas(t["demographics"]))
 
     costs = legacy_costs(t["costs_wide"], "npp", factor=0.16).unionByName(
         unpivot_costs(t["costs_unpivot"], "HCP", "PAID SEARCH", grouped=True)
-    ).withColumnRenamed("cost", "paid_search_cost")
-
-    monthly_reach = dj.groupBy("year", "month").agg(
-        F.sum("reach").alias("total_monthly_reach")
     )
-    d = dj.alias("d")
-    mr = monthly_reach.alias("mr")
-    ca = costs.alias("ca")
-    return (
-        d.join(mr, (F.col("d.year") == F.col("mr.year")) & (F.col("d.month") == F.col("mr.month")))
-        .join(ca, (F.col("d.year") == F.col("ca.year")) & (F.col("d.month") == F.col("ca.month")))
-        .select(
-            F.col("d.brand").alias("brand"),
-            F.col("d.channel").alias("channel"),
-            F.col("d.audience").alias("audience"),
-            F.col("d.year").alias("year"),
-            F.col("d.month").cast("integer").alias("month"),
-            F.col("d.zip_code").alias("zip_code"),
-            F.col("d.dma").alias("dma"),
-            F.col("d.state").alias("state"),
-            F.col("d.country").alias("country"),
-            F.col("d.reach").alias("reach"),
-            F.col("d.engage").alias("engage"),
-            ((F.col("d.reach") / F.col("mr.total_monthly_reach")) * F.col("ca.paid_search_cost")).alias("cost"),
-        )
+    return allocate_join(dj, costs, "cost", "reach", ["year", "month"]).select(
+        "brand", "channel", "audience", "year", F.col("month").cast("integer").alias("month"),
+        "zip_code", "dma", "state", "country", "reach", "engage", "cost",
     )
 
 
 def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     """``stage_1:817-1066`` — the monster: weekly pivoted feed +
     monthly feeds, channel recodes, legacy fraction pots ∪ new pots,
-    per-channel monthly reach, degenerate full-join discovery of
-    unallocated 2024 cost, and its /11 (Custom) & /9 (Paid Social)
+    per-channel monthly reach, full-join discovery of unallocated
+    2024 cost, and its /11 (Custom) & /9 (Paid Social)
     redistribution."""
     null_str = typed_null("string")
 
-    # pivoted_hcp_all (stage_1:823-838): conditional-agg pivot A3
+    # pivoted_hcp_all (stage_1:823-838): conditional-agg pivot A3; the
+    # YYYYWW key splits like a YYYYMM one
     weekly = t["hcp_all_weekly"]
-    yrwk = F.col("yrwk").cast("string")
-    pivoted = (
-        weekly.filter(F.col("zip_cd").isNotNull() & (F.col("yrwk") <= 202352))
-        .groupBy(
+    pivoted = conditional_pivot(
+        weekly.filter(F.col("zip_cd").isNotNull() & (F.col("yrwk") <= 202352)),
+        [
             F.lit(BRAND).alias("brand"),
             F.col("channel"),
             F.lit("HCP").alias("audience"),
-            F.substring(yrwk, 1, 4).alias("year"),
-            F.substring(yrwk, 5, 2).alias("week"),
+            yrmo_year("yrwk").alias("year"),
+            yrmo_month("yrwk").alias("week"),
             F.col("zip_cd").alias("zip_code"),
             null_str.alias("dma"),
             null_str.alias("state"),
             F.lit("US").alias("country"),
-        )
-        .agg(
-            F.sum(F.when(F.col("metric") == "REACH", F.col("value").cast("double"))).alias("reach"),
-            F.sum(F.when(F.col("metric") == "ENGAGEMENT", F.col("value").cast("double"))).alias("engage"),
-        )
+        ],
+        "metric", "value", {"REACH": "reach", "ENGAGEMENT": "engage"},
     )
 
     # weekly_to_monthly (stage_1:840-859): recode + F11 week→month
@@ -373,8 +367,6 @@ def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
                     "dma", "state", "country")
         .agg(F.sum("reach").alias("reach"), F.sum("engage").alias("engage"))
     )
-
-    dma_dim = cleaned_dmas(t["demographics"])
 
     # hcp_channels_combined (stage_1:884-901): 3 monthly feeds
     ymr = F.col("year_mth")
@@ -397,15 +389,14 @@ def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     combined = comb1.unionByName(comb2).unionByName(comb3)
 
     # hcp_raw_data (stage_1:903-918)
-    ym = F.col("year_mth").cast("string")
     raw = (
         combined.groupBy(
             F.lit(BRAND).alias("brand"),
             F.col("ipmm_channel").alias("channel"),
             F.lit("HCP").alias("audience"),
             F.col("dma_code"),
-            F.substring(ym, 1, 4).alias("year"),
-            F.substring(ym, 5, 2).alias("month"),
+            yrmo_year("year_mth").alias("year"),
+            yrmo_month("year_mth").alias("month"),
             null_str.alias("zip_code"),
             null_str.alias("state"),
             F.lit("US").alias("country"),
@@ -413,19 +404,9 @@ def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
         .agg(F.sum("impressions").alias("reach"), F.sum("clicks").alias("engage"))
     )
 
-    # hcp_channels_new (stage_1:920-942): recode + J8 cast-key dim join
-    new = (
-        raw.join(F.broadcast(dma_dim), raw.dma_code.cast("string") == dma_dim.dma_code, "inner")
-        .select(
-            "brand",
-            recode("channel", NEW_CHANNEL_RECODE, default=null_str).alias("channel"),
-            "audience",
-            "year",
-            F.col("month").cast("string").alias("month"),
-            "zip_code",
-            F.col("dma_name").alias("dma"),
-            "state", "country", "reach", "engage",
-        )
+    # hcp_channels_new (stage_1:920-942): J8 cast-key dim join + recode
+    new = _join_dma(raw, cleaned_dmas(t["demographics"]), cast_code=True).withColumn(
+        "channel", recode("channel", NEW_CHANNEL_RECODE, default=null_str)
     )
 
     # all_hcp_unioned (stage_1:943-947): old month INT ∪ new month
@@ -448,13 +429,12 @@ def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
         F.lit(BRAND).alias("brand"), "year", "month", "channel",
         (F.col("total_cost") * F.col("frac")).alias("cost"),
     )
-    ymc = F.col("year_month").cast("string")
     alloc_new = (
         t["costs_unpivot"].filter(F.col("audience") == "HCP")
         .groupBy(
             F.lit(BRAND).alias("brand"),
-            F.substring(ymc, 1, 4).alias("year"),
-            F.substring(ymc, 5, 2).alias("month"),
+            yrmo_year("year_month").alias("year"),
+            yrmo_month("year_month").alias("month"),
             recode("channel", COST_CHANNEL_RECODE, default=null_str).alias("channel"),
         )
         .agg(F.sum("cost").alias("cost"))
@@ -463,92 +443,40 @@ def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     # allocation (2 consumers each).
     allocations = alloc_old.unionByName(alloc_new).persist(StorageLevel.MEMORY_AND_DISK)
 
-    # monthly_reach (stage_1:993-1002)
-    monthly_reach = (
-        all_hcp.groupBy("brand", "year", "month", "channel")
-        .agg(F.sum("reach").alias("total_monthly_reach"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # monthly_reach (stage_1:993-1002), persisted for its two
+    # consumers; d ⋈ mr carries share = reach / total_monthly_reach,
+    # and rows with a NULL channel drop at that equi-join. The
+    # reference also groups by brand, a single literal here.
+    keys = ["year", "month", "channel"]
+    monthly_reach = grouped_totals(all_hcp, "reach", keys).persist(StorageLevel.MEMORY_AND_DISK)
+    d_mr = reach_share(all_hcp, "reach", keys, totals=monthly_reach)
 
-    d = all_hcp.alias("d")
-    mr = monthly_reach.alias("mr")
-    ca = allocations.alias("ca")
-
-    # final_allocation_including_missing_cost (stage_1:1004-1028):
-    # (d ⋈ mr) FULL JOIN ca on the degenerate coalesce condition,
-    # keep 2024 rows with NULL reach → unmatched cost pots
-    d_mr = d.join(
-        mr,
-        (F.col("d.year") == F.col("mr.year"))
-        & (F.col("d.month") == F.col("mr.month"))
-        & (F.col("d.channel") == F.col("mr.channel")),
-        "inner",
-    )
-    # The reference writes coalesce(d.k, ca.k) = ca.k (stage_1:1024-1025).
-    # On the (d ⋈ mr) side every key is non-null (it just inner-joined on
-    # exactly those keys), so the degenerate condition reduces to plain
-    # equality — expressed that way here so Catalyst plans a scalable
-    # SortMergeJoin FullOuter instead of a fact-sized nested loop; the
-    # parity test runs the reference's own form in DuckDB and matches.
-    full_cond = (
-        (F.col("d.year") == F.col("ca.year"))
-        & (F.col("d.month") == F.col("ca.month"))
-        & (F.col("d.channel") == F.col("ca.channel"))
-    )
-    incl_missing = (
-        d_mr.join(ca, full_cond, "full")
-        .filter(
-            (F.coalesce(F.col("d.year"), F.col("ca.year"), F.col("mr.year")) == "2024")
-            & F.col("d.reach").isNull()
-        )
-        .select(
-            F.coalesce(F.col("d.brand"), F.col("ca.brand"), F.col("mr.brand")).alias("brand"),
-            F.coalesce(F.col("d.channel"), F.col("ca.channel"), F.col("mr.channel")).alias("channel"),
-            F.coalesce(F.col("d.audience"), F.lit("HCP")).alias("audience"),
-            F.coalesce(F.col("d.year"), F.col("ca.year"), F.col("mr.year")).alias("year"),
-            F.col("d.reach").alias("reach"),
-            F.col("d.engage").alias("engage"),
-            F.when(
-                F.col("d.reach").isNotNull() & F.col("mr.total_monthly_reach").isNotNull(),
-                (F.col("d.reach") / F.col("mr.total_monthly_reach")) * F.col("ca.cost"),
-            ).otherwise(F.col("ca.cost")).alias("cost"),
-        )
-    )
-
-    # missing_cost_channel_year (stage_1:1029-1035)
-    missing = (
-        incl_missing.filter(F.col("channel").isin("Paid Social", "Custom"))
-        .groupBy("brand", "channel", "audience", "year")
-        .agg(F.sum("cost").alias("missing_cost"))
+    # final_allocation_including_missing_cost + missing_cost_channel_year
+    # (stage_1:1004-1035): 2024 Custom / Paid Social pots with no reach
+    missing = missing_cost_redistribution(d_mr, allocations, keys).filter(
+        (F.col("year") == "2024") & F.col("channel").isin("Paid Social", "Custom")
     )
 
     # final_allocation (stage_1:1037-1064): base allocation + the
-    # /11 (Custom) and /9 (Paid Social) 2024 redistribution
+    # /11 (Custom) and /9 (Paid Social) 2024 redistribution. The
+    # reference also matches mc on audience, which is 'HCP' on every
+    # row of both sides.
+    d = d_mr.alias("d")
+    ca = allocations.alias("ca")
     mc = missing.alias("mc")
-    base = (
-        d.join(
-            mr,
-            (F.col("d.year") == F.col("mr.year"))
-            & (F.col("d.month") == F.col("mr.month"))
-            & (F.col("d.channel") == F.col("mr.channel")),
-            "inner",
-        )
-        .join(
-            ca,
-            (F.col("d.year") == F.col("ca.year"))
-            & (F.col("d.month") == F.col("ca.month"))
-            & (F.col("d.channel") == F.col("ca.channel")),
-            "inner",
-        )
-        .join(
-            mc,
-            (F.col("d.year") == F.col("mc.year"))
-            & (F.col("d.channel") == F.col("mc.channel"))
-            & (F.col("d.audience") == F.col("mc.audience")),
-            "left",
-        )
+    base = d.join(
+        ca,
+        (F.col("d.year") == F.col("ca.year"))
+        & (F.col("d.month") == F.col("ca.month"))
+        & (F.col("d.channel") == F.col("ca.channel")),
+        "inner",
+    ).join(
+        mc,
+        (F.col("d.year") == F.col("mc.year")) & (F.col("d.channel") == F.col("mc.channel")),
+        "left",
     )
-    share = F.col("d.reach") / F.col("mr.total_monthly_reach")
+    share = F.col("d.share")
+    hcp_2024 = (F.col("d.year") == "2024") & (F.col("d.audience") == "HCP")
     return base.select(
         F.col("d.brand").alias("brand"),
         F.col("d.channel").alias("channel"),
@@ -562,11 +490,11 @@ def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
         F.col("d.reach").alias("reach"),
         F.col("d.engage").alias("engage"),
         F.when(
-            (F.col("d.channel") == "Custom") & (F.col("d.year") == "2024") & (F.col("d.audience") == "HCP"),
+            (F.col("d.channel") == "Custom") & hcp_2024,
             share * F.col("ca.cost") + share * (F.col("mc.missing_cost") / 11),
         )
         .when(
-            (F.col("d.channel") == "Paid Social") & (F.col("d.year") == "2024") & (F.col("d.audience") == "HCP"),
+            (F.col("d.channel") == "Paid Social") & hcp_2024,
             share * F.col("ca.cost") + share * (F.col("mc.missing_cost") / 9),
         )
         .otherwise(share * F.col("ca.cost"))

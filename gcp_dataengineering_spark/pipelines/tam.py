@@ -1,10 +1,13 @@
 """nvs_tam reconstruction — the reference's flagship query
-(``stage_1_hcp_channel_all_hardcode.py:93-225``), DataFrame-native.
+(``stage_1_hcp_channel_all_hardcode.py:93-225``), composed from the
+``ops`` operators.
 
-Shape: 4-way vintage union of call snapshots → MDM join on npi →
-HCP-org join with array_contains brand guard → display-order CASE →
-inline year-cost pots → expression-key join → window allocation over
-(brand, year) → final typed aggregation.
+Shape: 4-way vintage union of call snapshots
+(``ops/vintage.union_vintage_ranges``) → MDM join on npi → HCP-org
+join with array_contains brand guard → display-order CASE → inline
+year-cost pots → expression-key join on the ``yrmo_year`` split →
+W1 window allocation over (brand, year)
+(``ops/allocate.allocate_window``) → final typed aggregation.
 
 Scale notes: the two dimension joins broadcast (MDM/org maps are
 small next to the call feeds); the window shuffle key (brand, year)
@@ -15,11 +18,12 @@ they push into the vintage scans.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ops.conform import typed_null
-from ..ops.vintage import union_vintages
+from ..ops.allocate import allocate_window
+from ..ops.conform import typed_null, yrmo_year
+from ..ops.vintage import union_vintage_ranges
 
 CALL_COLS = [
     "npi_num", "zip_cd", "city", "state", "brand", "yrmo",
@@ -44,12 +48,7 @@ TAM_COSTS = [
 
 def nvs_tam(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     """t: table registry with keys calls_v1..v4, mdm, hcp_org."""
-    branches = []
-    for key, lo, hi in CALL_VINTAGES:
-        yrmo = F.col("yrmo")
-        pred = yrmo.between(lo, hi) if hi is not None else (yrmo >= lo)
-        branches.append((t[key].select(*CALL_COLS), pred))
-    raw_calls = union_vintages(branches)
+    raw_calls = union_vintage_ranges(t, CALL_VINTAGES, CALL_COLS, "yrmo")
 
     mdm = t["mdm"]
     hcp = t["hcp_org"]
@@ -80,7 +79,7 @@ def nvs_tam(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     hcp_costs = normalized.join(
         F.broadcast(costs),
         (normalized.product_brand_name == costs.brand)
-        & (F.substring(normalized.year_month.cast("string"), 1, 4) == costs.year),
+        & (yrmo_year(normalized.year_month) == costs.year),
         "inner",
     ).select(
         "product_brand_name",
@@ -93,31 +92,20 @@ def nvs_tam(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     )
 
     # stage_1:154-166 — window allocation over (brand, year)
-    w = Window.partitionBy(
-        "product_brand_name", F.substring(F.col("year_month").cast("string"), 1, 4)
-    )
-    final_agg = hcp_costs.select(
-        "product_brand_name",
-        F.lit("NVS").alias("source"),
-        "year_month",
-        "zip",
-        "audience",
-        "channel",
-        "reach",
-        typed_null("double").alias("engage"),
-        (F.col("cost") * F.col("reach") / F.sum("reach").over(w)).alias("cost"),
+    final_agg = allocate_window(
+        hcp_costs, "cost", "reach", ["product_brand_name", yrmo_year("year_month")]
     )
 
     # stage_1:167-180 — final typed aggregation
     return final_agg.groupBy(
         "product_brand_name",
-        "source",
+        F.lit("NVS").alias("source"),
         "year_month",
         F.col("zip").cast("string").alias("zip"),
         "audience",
         "channel",
     ).agg(
         F.sum(F.col("reach").cast("double")).alias("reach"),
-        F.sum(F.col("engage").cast("double")).alias("engage"),
+        F.sum(typed_null("double")).alias("engage"),
         F.sum(F.col("cost").cast("double")).alias("cost"),
     )

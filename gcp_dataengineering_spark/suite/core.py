@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..ops.allocate import allocate_join, allocate_window
+from ..ops.allocate import allocate_window, grouped_totals, reach_share
 from ..ops.conform import parse_money, recode, typed_null, week_to_month
 from ..ops.pivot import conditional_pivot
 from ..ops.vintage import union_vintages
@@ -368,15 +368,16 @@ FROM alloc GROUP BY l_returnflag, year, month
 def q_grouped_total_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9 — the explicit groupBy+join form of the same allocation
     (``stage_1:650-674``): monthly totals joined back as the
-    denominator. Must equal q_window_allocation's result."""
+    denominator, share first: ``(w / total) * pot``. Must equal
+    q_window_allocation's result."""
     li = _t(spark, sf_dir, "lineitem")
-    base = (
-        li.withColumn("year", F.year("l_shipdate").cast("int"))
-        .withColumn("month", F.month("l_shipdate").cast("int"))
-        .withColumn("pot", F.lit(1000000.0))
+    base = li.withColumn("year", F.year("l_shipdate").cast("int")).withColumn(
+        "month", F.month("l_shipdate").cast("int")
     )
-    alloc = allocate_join(
-        base, "pot", "l_extendedprice", ["l_returnflag", "year", "month"], out_col="alloc_cost"
+    keys = ["l_returnflag", "year", "month"]
+    totals = F.broadcast(grouped_totals(base, "l_extendedprice", keys))
+    alloc = reach_share(base, "l_extendedprice", keys, totals=totals).withColumn(
+        "alloc_cost", F.col("share") * F.lit(1000000.0)
     )
     return alloc.groupBy("l_returnflag", "year", "month").agg(
         r4(F.sum("l_extendedprice")).alias("reach"),

@@ -89,7 +89,8 @@ def test_allocation_window_equals_join(spark):
         "g string, m int, w double",
     ).withColumn("pot", F.lit(100.0))
     a = allocate_window(df, "pot", "w", ["g", "m"], out_col="c")
-    b = allocate_join(df, "pot", "w", ["g", "m"], out_col="c")
+    pots = df.select("g", "m", "pot").distinct()
+    b = allocate_join(df.drop("pot"), pots, "pot", "w", ["g", "m"], out_col="c")
     key = lambda r: (r["g"], r["m"], r["w"])
     ra = sorted([(key(r), round(r["c"], 9)) for r in a.collect()])
     rb = sorted([(key(r), round(r["c"], 9)) for r in b.collect()])
@@ -99,15 +100,45 @@ def test_allocation_window_equals_join(spark):
     assert all(r["s"] == 100.0 for r in total)
 
 
+def test_allocate_join_is_share_first_over_reach_only_totals(spark):
+    """J9 is ``(w / total) * pot`` bit for bit (stage_1:664-674), and
+    the total sums the reach rows alone: a partition with two pots
+    gets one allocation per pot, each over the same total."""
+    df = spark.createDataFrame(
+        [("a", 1, 1.0), ("a", 1, 2.0), ("b", 1, 2.0), ("b", 1, 5.0)],
+        "g string, m int, w double",
+    )
+    pots = spark.createDataFrame(
+        [("a", 1, 100.0), ("a", 1, 10.0), ("b", 1, 1000000.0)],
+        "g string, m int, pot double",
+    )
+    got = sorted(
+        (r["g"], r["w"], r["pot"], r["c"])
+        for r in allocate_join(df, pots, "pot", "w", ["g", "m"], out_col="c").collect()
+    )
+    totals = {"a": 3.0, "b": 7.0}
+    want = sorted(
+        (g, w, pot, (w / totals[g]) * pot)
+        for g, w in [("a", 1.0), ("a", 2.0), ("b", 2.0), ("b", 5.0)]
+        for pg, pot in [("a", 100.0), ("a", 10.0), ("b", 1000000.0)]
+        if pg == g
+    )
+    assert got == want
+    # the two orders round differently on these inputs
+    assert any(c != pot * w / totals[g] for g, w, pot, c in want)
+
+
 def test_missing_cost_redistribution(spark):
     reach = spark.createDataFrame(
-        [("2024", "01", "Display", 10.0)], "year string, month string, channel string, reach double"
+        [("2024", "01", "Display", 10.0), ("2024", "03", "Display", None)],
+        "year string, month string, channel string, reach double",
     )
     pots = spark.createDataFrame(
         [
             ("2024", "01", "Display", 100.0),
             ("2024", "01", "Custom", 50.0),
             ("2024", "02", "Display", 70.0),
+            ("2024", "03", "Display", 30.0),
         ],
         "year string, month string, channel string, cost double",
     )
@@ -115,8 +146,10 @@ def test_missing_cost_redistribution(spark):
         (r["channel"], r["year"]): r["missing_cost"]
         for r in missing_cost_redistribution(reach, pots).collect()
     }
-    # Custom 2024-01 has no reach; Display 2024-02 has no reach either
-    assert out == {("Custom", "2024"): 50.0, ("Display", "2024"): 70.0}
+    # Custom 2024-01 has no reach; Display 2024-02 has no reach either;
+    # Display 2024-03 matches a reach row whose reach is NULL, which
+    # counts as missing too (hcp_all_channels relies on it)
+    assert out == {("Custom", "2024"): 50.0, ("Display", "2024"): 100.0}
 
 
 def test_pivot_forms_agree(spark):

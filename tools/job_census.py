@@ -1,17 +1,24 @@
-"""Spark job census of one corpus build, grouped by call site.
+"""Spark job census of one benchmark workload, grouped by call site.
 
-Runs ``llm_build.main`` in-process with the Spark event log on, over
-the benchmark's seeded ``corpus_build`` input (generated by importing
-``perfbench/gen.py``) and with its flags (``perfbench/workloads.py``).
+Runs a perfbench workload's job in-process with the Spark event log
+on, over its seeded input (generated by importing
+``perfbench/gen.py``):
+
+- ``corpus_build`` (the default): ``llm_build.main`` with the
+  workload's flags (``perfbench/workloads.py``);
+- ``mars_etl``: the reference job, ``pipelines.jobs.run_all``, over
+  the reference-shaped tables.
+
 Around every classic action (DataFrame, DataFrameWriter and RDD) it
 sets the job description to the innermost call site inside the
 package, so each Spark job the action submits carries that label.
 After the session stops it parses the uncompressed event log and
 prints jobs, tasks and summed job wall time per call site, in the
-order the build first reached each site.
+order the job first reached each site.
 
 Usage:
-  python tools/job_census.py [--root CHECKOUT] [--seed 1] [--cpus N]
+  python tools/job_census.py [--workload corpus_build|mars_etl]
+                             [--root CHECKOUT] [--seed 1] [--cpus N]
 
 ``--root`` imports the package from another checkout (for example a
 clone of an older commit) for a before/after census; the inputs, the
@@ -127,8 +134,50 @@ def census(events: list[dict]) -> list[tuple[str, int, int, float]]:
     return [(label, *vals) for label, vals in rows.items()]
 
 
+def _corpus_build(work: str, seed: int):
+    """Write the corpus_build input; return the job and its name."""
+    import gen
+    from workloads import CorpusBuild
+
+    from gcp_dataengineering_spark import llm_build
+
+    table, _ = gen.corpus_docs(seed, CorpusBuild.n_docs)
+    gen.write_tables({"docs": table}, work)
+
+    def job(spark) -> None:
+        argv = ["--docs", os.path.join(work, "docs.parquet"),
+                "--out", os.path.join(work, "out"), *CorpusBuild.args]
+        with contextlib.redirect_stdout(io.StringIO()):
+            rc = llm_build.main(argv)
+        if rc != 0:
+            raise RuntimeError(f"llm_build.main returned {rc}")
+
+    return job, "llm_build.main"
+
+
+def _mars_etl(work: str, seed: int):
+    """Write the mars_etl input; return the job and its name."""
+    import gen
+
+    from gcp_dataengineering_spark.pipelines.jobs import run_all
+
+    in_dir = os.path.join(work, "in")
+    gen.write_tables(gen.etl_tables(seed), in_dir)
+
+    def job(spark) -> None:
+        tables = {f[:-len(".parquet")]: spark.read.parquet(os.path.join(in_dir, f))
+                  for f in sorted(os.listdir(in_dir))}
+        run_all(spark, tables, os.path.join(work, "out"))
+
+    return job, "pipelines.jobs.run_all"
+
+
+WORKLOADS = {"corpus_build": _corpus_build, "mars_etl": _mars_etl}
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--workload", choices=sorted(WORKLOADS), default="corpus_build")
     p.add_argument("--root", default=HERE, help="checkout to import the package from")
     p.add_argument("--seed", type=int, default=1)
     p.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
@@ -136,22 +185,20 @@ def main(argv: list[str] | None = None) -> int:
 
     root = os.path.abspath(args.root)
     sys.path[:0] = [root, os.path.join(HERE, "perfbench")]
-    import gen
     from spans import read_event_log
-    from workloads import CorpusBuild
 
-    from gcp_dataengineering_spark import llm_build
+    import gcp_dataengineering_spark
     from gcp_dataengineering_spark.session import get_spark
 
     pkg_dir = os.path.join(root, PACKAGE) + os.sep
-    if not llm_build.__file__.startswith(pkg_dir):
-        raise SystemExit(f"the package was imported from {llm_build.__file__}, not {root}")
+    if not gcp_dataengineering_spark.__file__.startswith(pkg_dir):
+        raise SystemExit(f"the package was imported from "
+                         f"{gcp_dataengineering_spark.__file__}, not {root}")
     commit = subprocess.run(["git", "-C", root, "describe", "--always", "--dirty"],
                             capture_output=True, text=True).stdout.strip()
     work = tempfile.mkdtemp(prefix="job_census-")
     try:
-        table, _ = gen.corpus_docs(args.seed, CorpusBuild.n_docs)
-        gen.write_tables({"docs": table}, work)
+        job, job_name = WORKLOADS[args.workload](work, args.seed)
         log_dir = os.path.join(work, "events")
         os.makedirs(log_dir)
         spark = get_spark("job_census", cpus=args.cpus, extra_conf={
@@ -159,23 +206,18 @@ def main(argv: list[str] | None = None) -> int:
             "spark.eventLog.dir": "file://" + log_dir})
         try:
             label_actions(spark.sparkContext, pkg_dir)
-            argv = ["--docs", os.path.join(work, "docs.parquet"),
-                    "--out", os.path.join(work, "out"), *CorpusBuild.args]
             t0 = time.perf_counter()
-            with contextlib.redirect_stdout(io.StringIO()):
-                rc = llm_build.main(argv)
+            job(spark)
             wall = time.perf_counter() - t0
-            if rc != 0:
-                raise RuntimeError(f"llm_build.main returned {rc}")
         finally:
             spark.stop()
         rows = census(read_event_log(log_dir))
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
-    print(f"# job census: llm_build.main, corpus_build seed {args.seed}, "
+    print(f"# job census: {job_name}, {args.workload} seed {args.seed}, "
           f"commit {commit or '?'}, local[{args.cpus}]")
-    print(f"# main() wall {wall:.1f} s; job wall sums each job's submit-to-end time")
+    print(f"# {job_name}() wall {wall:.1f} s; job wall sums each job's submit-to-end time")
     print(f"{'jobs':>5} {'tasks':>6} {'job_s':>7}  call site")
     for label, jobs, tasks, secs in rows:
         print(f"{jobs:>5} {tasks:>6} {secs:>7.2f}  {label}")
