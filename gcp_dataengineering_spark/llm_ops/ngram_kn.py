@@ -2,13 +2,15 @@
 configuration (Wenzek et al. 2020 filter: a 5-gram KenLM) at any
 order 2..5, fully SQL-replayable.
 
-This is the package's ONE Spark Kneser-Ney engine: llm_ops/ngram_lm.py's
-bigram/trigram ``smoothing="kn"`` front-ends route here with
-``order=2|3``. Quantized Ney discount (``_kn_discount``, D/256 — the
-int64-exactness argument in the KN_DDEN note), backoff-form escape
-weights, and TRUE continuation counts at every lower order — each
-level's table is derived from the TYPE table one order up, so the
-corpus is touched exactly once no matter the order:
+This is the package's ONE home of Kneser-Ney arithmetic: the Spark
+engine (llm_ops/ngram_lm.py's bigram/trigram ``smoothing="kn"``
+front-ends route here with ``order=2|3``) and its two references,
+the pure-Python twin ``kn_perplexity_py`` and the DuckDB replay
+``kn_perplexity_sql``. Quantized Ney discount (``_kn_discount``,
+D/256 — the int64-exactness argument in the KN_DDEN note),
+backoff-form escape weights, and TRUE continuation counts at every
+lower order — each level's table is derived from the TYPE table one
+order up, so the corpus is touched exactly once no matter the order:
 
     cK   (w | u_1..u_{K-1})       raw K-gram counts
     cc_k (w | u_{K-k+1}..u_{K-1}) = |{distinct next-higher context}|
@@ -24,9 +26,17 @@ is a hit (0 = the continuation-unigram base),
     esc_j  = llog2(N1+_j·D_j)      − llog2(ctx_j·256)
     base   = llog2(max(N1cw, 1))   − llog2(N1pp)
 
-(an unseen context contributes NO escape — the order-2/3 semantics
-of ngram_lm's KN twins and DuckDB replays, against which this engine
-is cross-validated exactly in pytest).
+(an unseen context contributes NO escape). At order 2 that reads,
+with c1 = c(v) the context total:
+
+    c(v,w) > 0:       lp = llog2(c2·256 − D) − llog2(c1·256)
+    c(v) > 0, miss:   lp = llog2(D·N1+(v,·)) − llog2(c1·256)
+                           + llog2(N1+(·,w)) − llog2(N1pp)
+    v unseen:         lp = llog2(N1+(·,w)) − llog2(N1pp)
+
+N1+(·,w) is the continuation-unigram count — KN's signature: a word
+seen in many contexts is a plausible NOVEL continuation even when
+the specific bigram is unseen.
 
 Every count table sits at n-gram-type altitude. Scoring joins
 (r18 shape): at each order k ≥ 3 the transitions join the CONTEXT
@@ -70,22 +80,47 @@ from pyspark.sql import functions as F
 from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 from .ngram_lm import (
-    BOS,
-    KN_DDEN,
-    UNK,
     _doc_scores,
-    _kn_discount,
-    _KN_DNUM_SQL,
+    _hist_py,
     _lm_transitions,
-    _tokens_py,
+    _sql_head,
+    _sql_tail,
     _trans_of,
+    _twin_scores,
+    _twin_vocab,
     _vocab_of,
     _word_rows,
-    _WS_SQL,
 )
 from .quality_model import FRAC_BITS, llog2, llog2_py, llog2_sql
 
 MAX_ORDER = 5
+
+# Kneser-Ney discount quantization (r17). The Ney absolute discount
+# D = n1/(n1 + 2·n2) (n_k = number of n-gram TYPES with count k) is
+# quantized to Dnum/256 so every llog2 input stays in int64 at
+# 100 TB magnitudes: count·256 ≤ U·256 ≈ 3e15 and Dnum·N1+ ≤ 255·V.
+# (The exact-rational D — Dden = n1+2n2 ~ 1e10 — would push
+# count·Dden past 2^63; the interpolated-sum formulation is worse,
+# needing count·Dden·N1pp ~ 1e25. 128-bit arithmetic has no llog2
+# leg in Spark, so backoff-form + quantized D is the int64-exact
+# design.) Integer half-up division keeps all three engines
+# bit-identical; clamped to [1, 255] so discounted hit counts stay
+# positive (c·256 − Dnum ≥ 1) and escapes keep mass (Dnum ≥ 1).
+KN_DDEN = 256
+
+
+def _kn_discount(n1: int, n2: int) -> int:
+    den = n1 + 2 * n2
+    if n1 <= 0 or den <= 0:
+        return KN_DDEN // 2  # degenerate count-of-counts: D = 1/2
+    return max(1, min(KN_DDEN - 1, (2 * KN_DDEN * n1 + den) // (2 * den)))
+
+
+_KN_DNUM_SQL = (
+    "CASE WHEN n1 <= 0 OR (n1 + 2*n2) <= 0 THEN {half} "
+    "ELSE GREATEST(1, LEAST({dmax}, "
+    "(2*{dden}*n1 + (n1 + 2*n2)) // (2*(n1 + 2*n2)))) END"
+).format(half=KN_DDEN // 2, dmax=KN_DDEN - 1, dden=KN_DDEN)
 
 
 def _norm_prune(prune: dict[int, int] | None, order: int) -> dict[int, int]:
@@ -374,43 +409,19 @@ def kn_perplexity_py(
     ref_texts: dict[int, str] | None = None,
     prune: dict[int, int] | None = None,
 ) -> dict[int, tuple[int, int, float | None]]:
-    """Independent pure-python twin of :func:`kn_perplexity`
-    (shortest-repr half-up rounding, the r17 rule)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
+    """Independent pure-python twin of :func:`kn_perplexity` — the
+    Kneser-Ney reference at every order, self-scored or trained on
+    ``ref_texts``."""
     if not 2 <= order <= MAX_ORDER:
         raise ValueError(f"order must be 2..{MAX_ORDER}, got {order}")
     pr = _norm_prune(prune, order)
-
-    def _r4(v: float) -> float:
-        return float(
-            Decimal(repr(v)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
-        )
-
-    scale = 1 << frac_bits
-    toks = {d: _tokens_py(t) for d, t in texts.items()}
-    ref_toks = (
-        toks if ref_texts is None
-        else {d: _tokens_py(t) for d, t in ref_texts.items()}
-    )
-    wc: dict[str, int] = {}
-    for ws in ref_toks.values():
-        for w in ws:
-            wc[w] = wc.get(w, 0) + 1
-    vocab = {w for w, c in wc.items() if c >= min_count}
-
-    def m(w: str) -> str:
-        return w if w in vocab else UNK
+    toks, ref_toks, _, fold = _twin_vocab(texts, ref_texts, min_count)
 
     # counts[k]: key = (context tuple p1..p{k-1} nearest-first, token)
     counts: dict[int, dict] = {order: {}}
     for ws in ref_toks.values():
-        hist = [BOS] * (order - 1)  # hist[0] = nearest previous
-        for w in ws:
-            t = m(w)
-            key = (tuple(hist), t)
+        for key in _hist_py(ws, fold, order):
             counts[order][key] = counts[order].get(key, 0) + 1
-            hist = [t] + hist[: order - 2]
     for k in range(order - 1, 1, -1):
         nxt: dict = {}
         for (ctx, t) in counts[k + 1]:
@@ -444,10 +455,10 @@ def kn_perplexity_py(
         dn[k] = _kn_discount(n1, n2)
     l_n1pp = llog2_py(max(len(counts[2]), 1), frac_bits)
 
-    def lp_fn(hist: list[str], t: str) -> int:
+    def lp_fn(hist: tuple[str, ...], t: str) -> int:
         acc = 0
         for k in range(order, 1, -1):
-            ctx = tuple(hist[: k - 1])
+            ctx = hist[: k - 1]
             c = counts[k].get((ctx, t))
             if c is not None and c >= pr[k]:
                 return acc + (
@@ -466,18 +477,7 @@ def kn_perplexity_py(
                 )
         return acc + llog2_py(max(n1cw.get(t, 0), 1), frac_bits) - l_n1pp
 
-    out: dict[int, tuple[int, int, float | None]] = {}
-    for d, ws in toks.items():
-        nll = 0
-        n = 0
-        hist = [BOS] * (order - 1)
-        for w in ws:
-            t = m(w)
-            nll -= lp_fn(hist, t)
-            n += 1
-            hist = [t] + hist[: order - 2]
-        out[d] = (n, nll, _r4(nll / (n * float(scale))) if n else None)
-    return out
+    return _twin_scores(toks, fold, order, lp_fn, frac_bits)
 
 
 # ---------------------------------------------------------------- SQL replay
@@ -498,39 +498,8 @@ def kn_perplexity_sql(
     if not 2 <= order <= MAX_ORDER:
         raise ValueError(f"order must be 2..{MAX_ORDER}, got {order}")
     pr = _norm_prune(prune, order)
-    scale = 1 << frac_bits
-    ref_where = f"WHERE {ref_filter}" if ref_filter else ""
     pcols = [f"p{i}" for i in range(1, order)]
-
-    def trans_cte(src: str) -> str:
-        tok = f"CASE WHEN v.word IS NOT NULL THEN w.word ELSE '{UNK}' END"
-        lags = ",\n           ".join(
-            f"COALESCE(lag({tok}, {i}) OVER "
-            f"(PARTITION BY w.doc_id ORDER BY w.pos), '{BOS}') AS p{i}"
-            for i in range(1, order)
-        )
-        return (
-            f"\n    SELECT w.doc_id, w.pos, {tok} AS token,\n           {lags}"
-            f"\n    FROM {src} w LEFT JOIN vocab v ON w.word = v.word"
-        )
-
-    parts = [f"""
-WITH words_all AS (
-    SELECT t.doc_id, r.i + 1 AS pos, t.w[r.i + 1] AS word
-    FROM (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '{_WS_SQL}'), x -> x <> '') AS w
-        FROM {table}
-    ) t, unnest(range(len(t.w))) AS r(i)
-), ref_words AS (
-    SELECT * FROM words_all {ref_where}
-), wc AS (
-    SELECT word, COUNT(*) AS cnt FROM ref_words GROUP BY 1
-), vocab AS (
-    SELECT word FROM wc WHERE cnt >= {min_count}
-), rtrans AS ({trans_cte('ref_words')}
-), trans AS ({trans_cte('words_all')}
-), cnt{order} AS (
+    parts = [_sql_head(table, min_count, ref_filter, pcols), f""", cnt{order} AS (
     SELECT {', '.join(pcols[:order - 1])}, token, COUNT(*) AS c{order}
     FROM rtrans GROUP BY {', '.join(str(i) for i in range(1, order + 1))}
 )"""]
@@ -631,16 +600,5 @@ WITH words_all AS (
            {case} AS lp
     FROM trans t
 {chr(10).join(joins)}
-), agg AS (
-    SELECT doc_id, COUNT(*) AS n_trans, -SUM(lp) AS nll_fp FROM scored GROUP BY 1
-)
-SELECT d2.doc_id,
-       CAST(COALESCE(a.n_trans, 0) AS BIGINT) AS n_trans,
-       CAST(COALESCE(a.nll_fp, 0) AS BIGINT) AS nll_fp,
-       CASE WHEN a.n_trans > 0
-            THEN ROUND(a.nll_fp / (a.n_trans * {float(scale)}), 4)
-       END AS ppl_bits
-FROM (SELECT DISTINCT doc_id FROM {table}) d2
-LEFT JOIN agg a ON d2.doc_id = a.doc_id
-""")
-    return "".join(parts)
+)""")
+    return "".join(parts) + _sql_tail(table, frac_bits)

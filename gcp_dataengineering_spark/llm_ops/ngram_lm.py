@@ -16,9 +16,12 @@ One Spark engine per smoothing:
   llm_ops/ngram_kn.py at every order 2..5; the bigram/trigram
   front-ends here route to ``kn_perplexity`` / ``kn_lm_fit`` /
   ``kn_lm_score`` with ``order=2|3``.
-The ``*_py`` twins and ``*_sql`` replays below keep BOTH smoothings
-written out independently: they are the references the two engines
-are checked against.
+The ``*_py`` twins and ``*_sql`` replays below are the Laplace
+references only: one order-2/3 twin body (``_laplace_py``) and one
+DuckDB generator (``_laplace_sql``) behind the bigram and trigram
+names, on the same tokenizer, history and rounding scaffolding the
+Kneser-Ney references in ngram_kn.py (``kn_perplexity_py`` /
+``kn_perplexity_sql``, every order 2..5) are built on.
 
 Everything is INTEGER fixed-point log2 (the quality_model.py llog2
 discipline, FRAC_BITS=16): scores are exact BIGINTs in Spark, DuckDB
@@ -58,6 +61,7 @@ the documented bounded-collect pattern (model weights / dim stats).
 from __future__ import annotations
 
 import re
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -79,34 +83,6 @@ _WS_PY = re.compile("[ \t\n\x0b\f\r]+")
 
 def _tokens_py(t: str) -> list[str]:
     return [w for w in _WS_PY.split(t.lower()) if w != ""]
-
-
-# Kneser-Ney discount quantization (r17). The Ney absolute discount
-# D = n1/(n1 + 2·n2) (n_k = number of n-gram TYPES with count k) is
-# quantized to Dnum/256 so every llog2 input stays in int64 at
-# 100 TB magnitudes: count·256 ≤ U·256 ≈ 3e15 and Dnum·N1+ ≤ 255·V.
-# (The exact-rational D — Dden = n1+2n2 ~ 1e10 — would push
-# count·Dden past 2^63; the interpolated-sum formulation is worse,
-# needing count·Dden·N1pp ~ 1e25. 128-bit arithmetic has no llog2
-# leg in Spark, so backoff-form + quantized D is the int64-exact
-# design.) Integer half-up division keeps all three engines
-# bit-identical; clamped to [1, 255] so discounted hit counts stay
-# positive (c·256 − Dnum ≥ 1) and escapes keep mass (Dnum ≥ 1).
-KN_DDEN = 256
-
-
-def _kn_discount(n1: int, n2: int) -> int:
-    den = n1 + 2 * n2
-    if n1 <= 0 or den <= 0:
-        return KN_DDEN // 2  # degenerate count-of-counts: D = 1/2
-    return max(1, min(KN_DDEN - 1, (2 * KN_DDEN * n1 + den) // (2 * den)))
-
-
-_KN_DNUM_SQL = (
-    "CASE WHEN n1 <= 0 OR (n1 + 2*n2) <= 0 THEN {half} "
-    "ELSE GREATEST(1, LEAST({dmax}, "
-    "(2*{dden}*n1 + (n1 + 2*n2)) // (2*(n1 + 2*n2)))) END"
-).format(half=KN_DDEN // 2, dmax=KN_DDEN - 1, dden=KN_DDEN)
 
 
 def _word_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -357,19 +333,10 @@ def bigram_perplexity(
     ``smoothing``: ``"laplace"`` is the fixed-escape Laplace-unigram
     backoff above; ``"kn"`` is absolute-discount Kneser-Ney (the
     CCNet/KenLM smoothing family), computed by
-    ``ngram_kn.kn_perplexity(order=2)`` — ``backoff_bits`` is unused
-    there. In backoff form, with D the quantized Ney discount
-    (``_kn_discount``):
-
-      c(v,w) > 0:       lp = llog2(c2·256 − D) − llog2(c1·256)
-      c(v) > 0, miss:   lp = llog2(D·N1+(v,·)) − llog2(c1·256)
-                             + llog2(N1+(·,w)) − llog2(N1pp)
-      v unseen:         lp = llog2(N1+(·,w)) − llog2(N1pp)
-
-    N1+(·,w) is the continuation-unigram count — KN's signature: a
-    word seen in many contexts is a plausible NOVEL continuation even
-    when the specific bigram is unseen. Both smoothings replay in
-    DuckDB (``bigram_perplexity_sql``).
+    ``ngram_kn.kn_perplexity(order=2)`` (its module docstring has the
+    formulas) — ``backoff_bits`` is unused there. Laplace replays in
+    DuckDB as ``bigram_perplexity_sql``, Kneser-Ney as
+    ``ngram_kn.kn_perplexity_sql(order=2)``.
 
     ``nll_fp`` is the exact fixed-point negative log2-likelihood
     (BIGINT — the hash-stable column); ``ppl_bits`` = bits/token,
@@ -493,38 +460,27 @@ LEFT JOIN labeled b ON {on_parts} AND {key.replace(ppl_col, 's.' + ppl_col)} = b
 
 
 # ---------------------------------------------------------------- python twin
-def bigram_perplexity_py(
-    texts: dict[int, str],
-    min_count: int = 2,
-    backoff_bits: int = 4,
-    frac_bits: int = FRAC_BITS,
-    smoothing: str = "laplace",
-    ref_texts: dict[int, str] | None = None,
-) -> dict[int, tuple[int, int, float | None]]:
-    """Independent pure-Python twin of :func:`bigram_perplexity`
-    (self-scored form): {doc_id: (n_trans, nll_fp, ppl_bits)} — the
-    parity reference the pytest checks Spark and DuckDB against.
+def _r4(v: float) -> float:
+    """``ppl_bits`` rounding of the pure-Python twins: HALF-UP to 4
+    places, matching Spark's BigDecimal round and DuckDB's ROUND.
+    Python's built-in round() is banker's and diverges at exact ties
+    like 598016/(4·65536) = 2.28125 (found by the r16 fuzz session,
+    not by the fixture tests: nll/2^F quotients hit .xxxx5 exactly).
+    Decimal(repr(v)), not Decimal(v): Spark's Round on DOUBLE goes
+    through BigDecimal.valueOf (Double.toString — the SHORTEST
+    round-trip representation), so a non-dyadic tie like
+    366592/(5·2^16) = 1.11875 (stored as 1.11874999...) rounds from
+    "1.11875" → 1.1188 in both engines; the exact binary value would
+    round down (the r17 ref-split find)."""
+    return float(Decimal(repr(v)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP))
 
-    Rounding: HALF-UP on the double's exact value (Decimal), matching
-    Spark's BigDecimal round and DuckDB's ROUND — python's built-in
-    round() is banker's and diverges at exact ties like
-    598016/(4·65536) = 2.28125 (found by the r16 fuzz session, not by
-    the fixture tests: nll/2^F quotients hit .xxxx5 exactly)."""
-    from decimal import ROUND_HALF_UP, Decimal
 
-    def _r4(v: float) -> float:
-        # Decimal(repr(v)), not Decimal(v): Spark's Round on DOUBLE
-        # goes through BigDecimal.valueOf (Double.toString — the
-        # SHORTEST round-trip representation), so a non-dyadic tie
-        # like 366592/(5*2^16) = 1.11875 (stored as 1.11874999...)
-        # rounds from "1.11875" -> 1.1188 in both engines; the exact
-        # binary value would round down (r17 ref-split KN find, the
-        # sibling of the r16 banker's-rounding find)
-        return float(
-            Decimal(repr(v)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
-        )
-
-    scale = 1 << frac_bits
+def _twin_vocab(texts: dict[int, str], ref_texts: dict[int, str] | None,
+                min_count: int):
+    """(toks, ref_toks, wc, fold) of a pure-Python twin: the tokens of
+    the scored docs and of the training docs (default: the scored
+    docs), the training word counts, and the <unk> fold of words
+    below ``min_count``."""
     toks = {d: _tokens_py(t) for d, t in texts.items()}
     ref_toks = (
         toks if ref_texts is None
@@ -536,115 +492,127 @@ def bigram_perplexity_py(
             wc[w] = wc.get(w, 0) + 1
     vocab = {w for w, c in wc.items() if c >= min_count}
 
-    def m(w: str) -> str:
+    def fold(w: str) -> str:
         return w if w in vocab else UNK
 
-    c2: dict[tuple[str, str], int] = {}
-    c1: dict[str, int] = {}
-    cu: dict[str, int] = {}
-    for w, c in wc.items():
-        cu[m(w)] = cu.get(m(w), 0) + c
-    for ws in ref_toks.values():
-        prev = BOS
-        for w in ws:
-            t = m(w)
-            c2[(prev, t)] = c2.get((prev, t), 0) + 1
-            c1[prev] = c1.get(prev, 0) + 1
-            prev = t
-    u_plus_v = sum(wc.values()) + len(vocab) + 1
-    denom = llog2_py(u_plus_v, frac_bits) if u_plus_v > 0 else 0
+    return toks, ref_toks, wc, fold
 
-    if smoothing == "kn":
-        n1v: dict[str, int] = {}
-        n1cw: dict[str, int] = {}
-        n1 = n2 = 0
-        for (v, t), c in c2.items():
-            n1v[v] = n1v.get(v, 0) + 1
-            n1cw[t] = n1cw.get(t, 0) + 1
-            n1 += c == 1
-            n2 += c == 2
-        dnum = _kn_discount(n1, n2)
-        l_n1pp = llog2_py(max(len(c2), 1), frac_bits)
 
-        def lp_kn(prev: str, t: str) -> int:
-            cont = llog2_py(max(n1cw.get(t, 0), 1), frac_bits) - l_n1pp
-            if (prev, t) in c2:
-                return llog2_py(
-                    c2[(prev, t)] * KN_DDEN - dnum, frac_bits
-                ) - llog2_py(c1[prev] * KN_DDEN, frac_bits)
-            if prev in c1:
-                return (
-                    llog2_py(n1v[prev] * dnum, frac_bits)
-                    - llog2_py(c1[prev] * KN_DDEN, frac_bits)
-                    + cont
-                )
-            return cont
+def _hist_py(ws: list[str], fold, order: int):
+    """(history, token) per position of one document: the history is
+    the ``order − 1`` previous folded tokens, nearest first, <s>
+    before the document start — the twin side of :func:`_trans_of`."""
+    hist = (BOS,) * (order - 1)
+    for w in ws:
+        t = fold(w)
+        yield hist, t
+        hist = (t,) + hist[:-1]
 
-        lp_fn = lp_kn
-    elif smoothing == "laplace":
-        def lp_laplace(prev: str, t: str) -> int:
-            if (prev, t) in c2:
-                return llog2_py(c2[(prev, t)], frac_bits) - llog2_py(
-                    c1[prev], frac_bits
-                )
-            return (
-                llog2_py(cu.get(t, 0) + 1, frac_bits)
-                - denom
-                - backoff_bits * scale
-            )
 
-        lp_fn = lp_laplace
-    else:
-        raise ValueError(f"unknown smoothing {smoothing!r} (laplace|kn)")
-
+def _twin_scores(toks: dict[int, list[str]], fold, order: int, lp,
+                 frac_bits: int) -> dict[int, tuple[int, int, float | None]]:
+    """{doc_id: (n_trans, nll_fp, ppl_bits)} from a per-transition
+    ``lp(history, token)`` — the twin side of :func:`_doc_scores`."""
+    scale = float(1 << frac_bits)
     out: dict[int, tuple[int, int, float | None]] = {}
     for d, ws in toks.items():
-        nll = 0
-        n = 0
-        prev = BOS
-        for w in ws:
-            t = m(w)
-            nll -= lp_fn(prev, t)
-            n += 1
-            prev = t
-        out[d] = (n, nll, _r4(nll / (n * float(scale))) if n else None)
+        nll = -sum(lp(h, t) for h, t in _hist_py(ws, fold, order))
+        n = len(ws)
+        out[d] = (n, nll, _r4(nll / (n * scale)) if n else None)
     return out
 
 
-# ---------------------------------------------------------------- SQL replay
-def bigram_perplexity_sql(
+def _laplace_py(texts: dict[int, str], order: int, min_count: int,
+                backoff_bits_bi: int, backoff_bits_uni: int, frac_bits: int,
+                ref_texts: dict[int, str] | None):
+    """The pure-Python Laplace reference at order 2 or 3, written
+    independently of :func:`_laplace_fit`/:func:`_laplace_score`:
+    the highest-order hit (an order-2 hit under an order-3 model pays
+    ``backoff_bits_bi``), else the Laplace unigram minus
+    ``backoff_bits_uni``."""
+    scale = 1 << frac_bits
+    toks, ref_toks, wc, fold = _twin_vocab(texts, ref_texts, min_count)
+    # cnt[k]: (context of k−1 tokens, token) → count; ctx[k]: context totals
+    cnt: dict[int, dict] = {k: {} for k in range(2, order + 1)}
+    ctx: dict[int, dict] = {k: {} for k in range(2, order + 1)}
+    for ws in ref_toks.values():
+        for h, t in _hist_py(ws, fold, order):
+            for k in cnt:
+                c = h[: k - 1]
+                cnt[k][(c, t)] = cnt[k].get((c, t), 0) + 1
+                ctx[k][c] = ctx[k].get(c, 0) + 1
+    cu: dict[str, int] = {}
+    for w, c in wc.items():
+        cu[fold(w)] = cu.get(fold(w), 0) + c
+    n_vocab = sum(1 for c in wc.values() if c >= min_count)
+    denom = llog2_py(sum(wc.values()) + n_vocab + 1, frac_bits)
+
+    def lp(h: tuple[str, ...], t: str) -> int:
+        for k in range(order, 1, -1):
+            c = cnt[k].get((h[: k - 1], t))
+            if c is not None:
+                pen = 0 if k == order else backoff_bits_bi * scale
+                return (llog2_py(c, frac_bits)
+                        - llog2_py(ctx[k][h[: k - 1]], frac_bits) - pen)
+        return (llog2_py(cu.get(t, 0) + 1, frac_bits) - denom
+                - backoff_bits_uni * scale)
+
+    return _twin_scores(toks, fold, order, lp, frac_bits)
+
+
+def bigram_perplexity_py(
+    texts: dict[int, str],
     min_count: int = 2,
     backoff_bits: int = 4,
     frac_bits: int = FRAC_BITS,
-    table: str = "documents",
-    smoothing: str = "laplace",
-    ref_filter: str | None = None,
-) -> str:
-    """DuckDB replay of :func:`bigram_perplexity` — the suite oracle
-    text. Same vocab fold, same transition window, same llog2
-    fixed-point arithmetic (llog2_sql), same rounding.
+    ref_texts: dict[int, str] | None = None,
+) -> dict[int, tuple[int, int, float | None]]:
+    """Independent pure-Python twin of the Laplace
+    :func:`bigram_perplexity` (trained on ``ref_texts``, default the
+    scored ``texts``): {doc_id: (n_trans, nll_fp, ppl_bits)} — the
+    parity reference the pytest checks Spark and DuckDB against."""
+    return _laplace_py(texts, 2, min_count, 0, backoff_bits, frac_bits, ref_texts)
 
-    ``ref_filter`` (r17): a doc-level predicate selecting the
-    TRAINING subset (the ref-scored form — counts from the filtered
-    docs, every doc scored), so the oracle exercises the unseen-
-    bigram/unseen-context branches the self-scored form never hits.
-    ``smoothing="kn"`` replays the Kneser-Ney chain: quantized Ney
-    discount from count-of-counts (integer half-up //), context
-    escapes, continuation-unigram base — all BIGINT-exact."""
-    scale = 1 << frac_bits
+
+def trigram_perplexity_py(
+    texts: dict[int, str],
+    min_count: int = 2,
+    backoff_bits_bi: int = 4,
+    backoff_bits_uni: int = 8,
+    frac_bits: int = FRAC_BITS,
+    ref_texts: dict[int, str] | None = None,
+) -> dict[int, tuple[int, int, float | None]]:
+    """Pure-Python twin of the Laplace :func:`trigram_perplexity`."""
+    return _laplace_py(texts, 3, min_count, backoff_bits_bi, backoff_bits_uni,
+                       frac_bits, ref_texts)
+
+
+# ---------------------------------------------------------------- SQL replay
+def _sql_head(table: str, min_count: int, ref_filter: str | None,
+              lags: list[str]) -> str:
+    """The DuckDB replays' CTE head: ``words_all`` (1-based positions
+    of the lowercase whitespace tokens of ``table``) → ``ref_words``
+    (the training docs, ``ref_filter``) → ``wc`` → ``vocab`` →
+    ``rtrans``/``trans``, the vocab-folded training/scoring
+    transitions with one lag column per name in ``lags`` (nearest
+    first, <s> before the document start) — the SQL side of
+    :func:`_trans_of`. Returns an open ``WITH`` list; callers append
+    ``, name AS (...)`` CTEs and end with :func:`_sql_tail`."""
     ref_where = f"WHERE {ref_filter}" if ref_filter else ""
+    tok = f"CASE WHEN v.word IS NOT NULL THEN w.word ELSE '{UNK}' END"
+    lag_cols = "".join(
+        f",\n           COALESCE(lag({tok}, {i}) OVER "
+        f"(PARTITION BY w.doc_id ORDER BY w.pos), '{BOS}') AS {p}"
+        for i, p in enumerate(lags, start=1)
+    )
 
-    def trans_cte(src: str) -> str:
-        return f"""
-    SELECT w.doc_id, w.pos,
-           CASE WHEN v.word IS NOT NULL THEN w.word ELSE '{UNK}' END AS token,
-           COALESCE(
-               lag(CASE WHEN v.word IS NOT NULL THEN w.word ELSE '{UNK}' END)
-                   OVER (PARTITION BY w.doc_id ORDER BY w.pos),
-               '{BOS}') AS prev
-    FROM {src} w LEFT JOIN vocab v ON w.word = v.word"""
+    def trans(src: str) -> str:
+        return (
+            f"\n    SELECT w.doc_id, w.pos, {tok} AS token{lag_cols}"
+            f"\n    FROM {src} w LEFT JOIN vocab v ON w.word = v.word"
+        )
 
-    head = f"""
+    return f"""
 WITH words_all AS (
     SELECT t.doc_id, r.i + 1 AS pos, t.w[r.i + 1] AS word
     FROM (
@@ -658,59 +626,61 @@ WITH words_all AS (
     SELECT word, COUNT(*) AS cnt FROM ref_words GROUP BY 1
 ), vocab AS (
     SELECT word FROM wc WHERE cnt >= {min_count}
-), rtrans AS ({trans_cte('ref_words')}
-), trans AS ({trans_cte('words_all')}
-), c2 AS (
-    SELECT prev, token, COUNT(*) AS c2 FROM rtrans GROUP BY 1, 2
+), rtrans AS ({trans('ref_words')}
+), trans AS ({trans('words_all')}
 )"""
-    tail = f""", agg AS (
+
+
+def _sql_tail(table: str, frac_bits: int) -> str:
+    """The DuckDB replays' tail over a ``scored (doc_id, lp)`` CTE:
+    (doc_id, n_trans, nll_fp, ppl_bits), one row per distinct doc of
+    ``table`` — the SQL side of :func:`_doc_scores`."""
+    return f""", agg AS (
     SELECT doc_id, COUNT(*) AS n_trans, -SUM(lp) AS nll_fp FROM scored GROUP BY 1
 )
 SELECT d.doc_id,
        CAST(COALESCE(a.n_trans, 0) AS BIGINT) AS n_trans,
        CAST(COALESCE(a.nll_fp, 0) AS BIGINT) AS nll_fp,
        CASE WHEN a.n_trans > 0
-            THEN ROUND(a.nll_fp / (a.n_trans * {float(scale)}), 4)
+            THEN ROUND(a.nll_fp / (a.n_trans * {float(1 << frac_bits)}), 4)
        END AS ppl_bits
 FROM (SELECT DISTINCT doc_id FROM {table}) d
 LEFT JOIN agg a ON d.doc_id = a.doc_id
 """
-    if smoothing == "kn":
-        cont = f"({llog2_sql('GREATEST(COALESCE(u.n1cw, 0), 1)', frac_bits)} - {llog2_sql('GREATEST(d.n1pp, 1)', frac_bits)})"
-        return f"""{head}, ctx AS (
-    SELECT prev, CAST(SUM(c2) AS BIGINT) AS c1, COUNT(*) AS n1v
-    FROM c2 GROUP BY 1
-), cont AS (
-    SELECT token, COUNT(*) AS n1cw FROM c2 GROUP BY 1
-), disc AS (
-    SELECT COUNT(*) AS n1pp,
-           COUNT(*) FILTER (WHERE c2 = 1) AS n1,
-           COUNT(*) FILTER (WHERE c2 = 2) AS n2
-    FROM c2
-), dnum AS (
-    SELECT n1pp, {_KN_DNUM_SQL} AS dn FROM disc
-), scored AS (
-    SELECT t.doc_id,
-           CASE WHEN b.c2 IS NOT NULL
-                THEN {llog2_sql(f'(b.c2 * {KN_DDEN} - d.dn)', frac_bits)}
-                     - {llog2_sql(f'(x.c1 * {KN_DDEN})', frac_bits)}
-                WHEN x.c1 IS NOT NULL
-                THEN {llog2_sql('(x.n1v * d.dn)', frac_bits)}
-                     - {llog2_sql(f'(x.c1 * {KN_DDEN})', frac_bits)}
-                     + {cont}
-                ELSE {cont}
-           END AS lp
-    FROM trans t
-    LEFT JOIN c2 b ON t.prev = b.prev AND t.token = b.token
-    LEFT JOIN ctx x ON t.prev = x.prev
-    LEFT JOIN cont u ON t.token = u.token
-    CROSS JOIN dnum d
-){tail}"""
-    if smoothing != "laplace":
-        raise ValueError(f"unknown smoothing {smoothing!r} (laplace|kn)")
-    return f"""{head}, c1 AS (
-    SELECT prev, SUM(c2) AS c1 FROM c2 GROUP BY 1
-), cu AS (
+
+
+def _laplace_sql(order: int, min_count: int, backoff_bits_bi: int,
+                 backoff_bits_uni: int, frac_bits: int, table: str,
+                 ref_filter: str | None) -> str:
+    """DuckDB replay of the Laplace model at order 2 or 3: per order
+    k the (context, token) count CTE ``cnt{k}`` and its context
+    totals ``ctx{k}``, the folded unigram table ``cu``, the U+V
+    total, and the escape CASE of :func:`_laplace_py`."""
+    scale = 1 << frac_bits
+    lags = _LAGS[: order - 1]
+    parts = [_sql_head(table, min_count, ref_filter, lags)]
+    cases, joins = [], []
+    for k in range(order, 1, -1):
+        cols = lags[: k - 1]
+        parts.append(f""", cnt{k} AS (
+    SELECT {', '.join(cols)}, token, COUNT(*) AS c{k}
+    FROM rtrans GROUP BY {', '.join(str(i) for i in range(1, k + 1))}
+), ctx{k} AS (
+    SELECT {', '.join(cols)}, SUM(c{k}) AS ctx{k}
+    FROM cnt{k} GROUP BY {', '.join(str(i) for i in range(1, k))}
+)""")
+        pen = "" if k == order else f" - {backoff_bits_bi * scale}"
+        cases.append(
+            f"WHEN b{k}.c{k} IS NOT NULL THEN {llog2_sql(f'b{k}.c{k}', frac_bits)}"
+            f" - {llog2_sql(f'x{k}.ctx{k}', frac_bits)}{pen}"
+        )
+        on_x = [f"t.{c} = x{k}.{c}" for c in cols]
+        on_b = [f"t.{c} = b{k}.{c}" for c in cols] + [f"t.token = b{k}.token"]
+        joins.append(f"    LEFT JOIN cnt{k} b{k} ON {' AND '.join(on_b)}")
+        joins.append(f"    LEFT JOIN ctx{k} x{k} ON {' AND '.join(on_x)}")
+    case = "\n                ".join(cases)
+    join_sql = "\n".join(joins)
+    parts.append(f""", cu AS (
     SELECT CASE WHEN v.word IS NOT NULL THEN wc.word ELSE '{UNK}' END AS token,
            SUM(cnt) AS cu
     FROM wc LEFT JOIN vocab v ON wc.word = v.word GROUP BY 1
@@ -718,18 +688,51 @@ LEFT JOIN agg a ON d.doc_id = a.doc_id
     SELECT COALESCE(SUM(cnt), 0) + (SELECT COUNT(*) FROM vocab) + 1 AS upv FROM wc
 ), scored AS (
     SELECT t.doc_id,
-           CASE WHEN b.c2 IS NOT NULL
-                THEN {llog2_sql('b.c2', frac_bits)} - {llog2_sql('x.c1', frac_bits)}
+           CASE {case}
                 ELSE {llog2_sql('(COALESCE(u.cu, 0) + 1)', frac_bits)}
                      - {llog2_sql('tot.upv', frac_bits)}
-                     - {backoff_bits * scale}
+                     - {backoff_bits_uni * scale}
            END AS lp
     FROM trans t
-    LEFT JOIN c2 b ON t.prev = b.prev AND t.token = b.token
-    LEFT JOIN c1 x ON t.prev = x.prev
+{join_sql}
     LEFT JOIN cu u ON t.token = u.token
     CROSS JOIN tot
-){tail}"""
+)""")
+    return "".join(parts) + _sql_tail(table, frac_bits)
+
+
+def bigram_perplexity_sql(
+    min_count: int = 2,
+    backoff_bits: int = 4,
+    frac_bits: int = FRAC_BITS,
+    table: str = "documents",
+    ref_filter: str | None = None,
+) -> str:
+    """DuckDB replay of the Laplace :func:`bigram_perplexity` — the
+    suite oracle text. Same vocab fold, same transition window, same
+    llog2 fixed-point arithmetic (llog2_sql), same rounding.
+
+    ``ref_filter`` (r17): a doc-level predicate selecting the
+    TRAINING subset (the ref-scored form — counts from the filtered
+    docs, every doc scored), so the replay exercises the unseen-
+    bigram/unseen-context branches the self-scored form never hits."""
+    return _laplace_sql(2, min_count, 0, backoff_bits, frac_bits, table, ref_filter)
+
+
+def trigram_perplexity_sql(
+    min_count: int = 2,
+    backoff_bits_bi: int = 4,
+    backoff_bits_uni: int = 8,
+    frac_bits: int = FRAC_BITS,
+    table: str = "documents",
+    ref_filter: str | None = None,
+) -> str:
+    """DuckDB replay of the Laplace :func:`trigram_perplexity` — two
+    lag windows, three count tables, the tri→bi→uni escape chain in
+    llog2 arithmetic; ``ref_filter`` as in
+    :func:`bigram_perplexity_sql`."""
+    return _laplace_sql(3, min_count, backoff_bits_bi, backoff_bits_uni,
+                        frac_bits, table, ref_filter)
 
 
 # ---------------------------------------------------------------- fit / score
@@ -814,300 +817,6 @@ def trigram_perplexity(
     ``backoff_bits_bi`` / ``backoff_bits_uni`` are unused there."""
     return _perplexity(docs, ref, 3, smoothing, text_col, id_col, min_count,
                        frac_bits, materialize, backoff_bits_bi, backoff_bits_uni)
-
-
-def trigram_perplexity_py(
-    texts: dict[int, str],
-    min_count: int = 2,
-    backoff_bits_bi: int = 4,
-    backoff_bits_uni: int = 8,
-    frac_bits: int = FRAC_BITS,
-    smoothing: str = "laplace",
-    ref_texts: dict[int, str] | None = None,
-) -> dict[int, tuple[int, int, float | None]]:
-    """Pure-Python twin of :func:`trigram_perplexity` (half-up
-    rounding, like the bigram twin after the r16 fuzz find); r17
-    adds ``smoothing="kn"`` and the ref-trained form."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def _r4(v: float) -> float:
-        # Decimal(repr(v)), not Decimal(v): Spark's Round on DOUBLE
-        # goes through BigDecimal.valueOf (Double.toString — the
-        # SHORTEST round-trip representation), so a non-dyadic tie
-        # like 366592/(5*2^16) = 1.11875 (stored as 1.11874999...)
-        # rounds from "1.11875" -> 1.1188 in both engines; the exact
-        # binary value would round down (r17 ref-split KN find, the
-        # sibling of the r16 banker's-rounding find)
-        return float(
-            Decimal(repr(v)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
-        )
-
-    scale = 1 << frac_bits
-    toks = {d: _tokens_py(t) for d, t in texts.items()}
-    ref_toks = (
-        toks if ref_texts is None
-        else {d: _tokens_py(t) for d, t in ref_texts.items()}
-    )
-    wc: dict[str, int] = {}
-    for ws in ref_toks.values():
-        for w in ws:
-            wc[w] = wc.get(w, 0) + 1
-    vocab = {w for w, c in wc.items() if c >= min_count}
-
-    def m(w: str) -> str:
-        return w if w in vocab else UNK
-
-    c3: dict[tuple[str, str, str], int] = {}
-    c3ctx: dict[tuple[str, str], int] = {}
-    c2: dict[tuple[str, str], int] = {}
-    c1: dict[str, int] = {}
-    cu: dict[str, int] = {}
-    for w, c in wc.items():
-        cu[m(w)] = cu.get(m(w), 0) + c
-    for ws in ref_toks.values():
-        u, v = BOS, BOS
-        for w in ws:
-            t = m(w)
-            c3[(u, v, t)] = c3.get((u, v, t), 0) + 1
-            c3ctx[(u, v)] = c3ctx.get((u, v), 0) + 1
-            c2[(v, t)] = c2.get((v, t), 0) + 1
-            c1[v] = c1.get(v, 0) + 1
-            u, v = v, t
-    u_plus_v = sum(wc.values()) + len(vocab) + 1
-    denom = llog2_py(u_plus_v, frac_bits) if u_plus_v > 0 else 0
-
-    if smoothing == "kn":
-        n1uv: dict[tuple[str, str], int] = {}
-        cc2: dict[tuple[str, str], int] = {}
-        n1_3 = n2_3 = 0
-        for (u, v, t), c in c3.items():
-            n1uv[(u, v)] = n1uv.get((u, v), 0) + 1
-            cc2[(v, t)] = cc2.get((v, t), 0) + 1
-            n1_3 += c == 1
-            n2_3 += c == 2
-        cc2ctx: dict[str, int] = {}
-        n1vcc: dict[str, int] = {}
-        n1cw: dict[str, int] = {}
-        n1_2 = n2_2 = 0
-        for (v, t), c in cc2.items():
-            cc2ctx[v] = cc2ctx.get(v, 0) + c
-            n1vcc[v] = n1vcc.get(v, 0) + 1
-            n1cw[t] = n1cw.get(t, 0) + 1
-            n1_2 += c == 1
-            n2_2 += c == 2
-        dn3 = _kn_discount(n1_3, n2_3)
-        dn2 = _kn_discount(n1_2, n2_2)
-        l_n1pp2 = llog2_py(max(len(cc2), 1), frac_bits)
-
-        def lp_kn(u: str, v: str, t: str) -> int:
-            base1 = llog2_py(max(n1cw.get(t, 0), 1), frac_bits) - l_n1pp2
-            if (u, v, t) in c3:
-                return llog2_py(
-                    c3[(u, v, t)] * KN_DDEN - dn3, frac_bits
-                ) - llog2_py(c3ctx[(u, v)] * KN_DDEN, frac_bits)
-            lvl2 = None
-            if (v, t) in cc2:
-                lvl2 = llog2_py(
-                    cc2[(v, t)] * KN_DDEN - dn2, frac_bits
-                ) - llog2_py(cc2ctx[v] * KN_DDEN, frac_bits)
-            elif v in cc2ctx:
-                lvl2 = (
-                    llog2_py(n1vcc[v] * dn2, frac_bits)
-                    - llog2_py(cc2ctx[v] * KN_DDEN, frac_bits)
-                    + base1
-                )
-            if (u, v) in c3ctx:
-                esc3 = llog2_py(n1uv[(u, v)] * dn3, frac_bits) - llog2_py(
-                    c3ctx[(u, v)] * KN_DDEN, frac_bits
-                )
-                # (u,v) seen guarantees v seen at the middle order
-                return esc3 + lvl2
-            return lvl2 if lvl2 is not None else base1
-
-        lp_fn = lp_kn
-    elif smoothing == "laplace":
-        def lp_laplace(u: str, v: str, t: str) -> int:
-            if (u, v, t) in c3:
-                return llog2_py(c3[(u, v, t)], frac_bits) - llog2_py(
-                    c3ctx[(u, v)], frac_bits
-                )
-            if (v, t) in c2:
-                return (
-                    llog2_py(c2[(v, t)], frac_bits)
-                    - llog2_py(c1[v], frac_bits)
-                    - backoff_bits_bi * scale
-                )
-            return (
-                llog2_py(cu.get(t, 0) + 1, frac_bits)
-                - denom
-                - backoff_bits_uni * scale
-            )
-
-        lp_fn = lp_laplace
-    else:
-        raise ValueError(f"unknown smoothing {smoothing!r} (laplace|kn)")
-
-    out: dict[int, tuple[int, int, float | None]] = {}
-    for d, ws in toks.items():
-        nll = 0
-        n = 0
-        u, v = BOS, BOS
-        for w in ws:
-            t = m(w)
-            nll -= lp_fn(u, v, t)
-            n += 1
-            u, v = v, t
-        out[d] = (n, nll, _r4(nll / (n * float(scale))) if n else None)
-    return out
-
-
-def trigram_perplexity_sql(
-    min_count: int = 2,
-    backoff_bits_bi: int = 4,
-    backoff_bits_uni: int = 8,
-    frac_bits: int = FRAC_BITS,
-    table: str = "documents",
-    smoothing: str = "laplace",
-    ref_filter: str | None = None,
-) -> str:
-    """DuckDB replay of :func:`trigram_perplexity` — two lag windows,
-    three count tables, the tri→bi→uni escape chain in llog2
-    arithmetic. ``smoothing="kn"``/``ref_filter`` as in
-    :func:`bigram_perplexity_sql` (the KN replay derives every
-    lower-order table from the c3 TYPE CTE, continuation counts
-    included, and recomputes both quantized discounts in SQL)."""
-    scale = 1 << frac_bits
-    ref_where = f"WHERE {ref_filter}" if ref_filter else ""
-
-    def trans_cte(src: str) -> str:
-        return f"""
-    SELECT w.doc_id, w.pos,
-           CASE WHEN v.word IS NOT NULL THEN w.word ELSE '{UNK}' END AS token,
-           COALESCE(
-               lag(CASE WHEN v.word IS NOT NULL THEN w.word ELSE '{UNK}' END)
-                   OVER (PARTITION BY w.doc_id ORDER BY w.pos),
-               '{BOS}') AS prev,
-           COALESCE(
-               lag(CASE WHEN v.word IS NOT NULL THEN w.word ELSE '{UNK}' END, 2)
-                   OVER (PARTITION BY w.doc_id ORDER BY w.pos),
-               '{BOS}') AS prev2
-    FROM {src} w LEFT JOIN vocab v ON w.word = v.word"""
-
-    head = f"""
-WITH words_all AS (
-    SELECT t.doc_id, r.i + 1 AS pos, t.w[r.i + 1] AS word
-    FROM (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '{_WS_SQL}'), x -> x <> '') AS w
-        FROM {table}
-    ) t, unnest(range(len(t.w))) AS r(i)
-), ref_words AS (
-    SELECT * FROM words_all {ref_where}
-), wc AS (
-    SELECT word, COUNT(*) AS cnt FROM ref_words GROUP BY 1
-), vocab AS (
-    SELECT word FROM wc WHERE cnt >= {min_count}
-), rtrans AS ({trans_cte('ref_words')}
-), trans AS ({trans_cte('words_all')}
-), c3 AS (
-    SELECT prev2, prev, token, COUNT(*) AS c3 FROM rtrans GROUP BY 1, 2, 3
-)"""
-    tail = f""", agg AS (
-    SELECT doc_id, COUNT(*) AS n_trans, -SUM(lp) AS nll_fp FROM scored GROUP BY 1
-)
-SELECT d.doc_id,
-       CAST(COALESCE(a.n_trans, 0) AS BIGINT) AS n_trans,
-       CAST(COALESCE(a.nll_fp, 0) AS BIGINT) AS nll_fp,
-       CASE WHEN a.n_trans > 0
-            THEN ROUND(a.nll_fp / (a.n_trans * {float(scale)}), 4)
-       END AS ppl_bits
-FROM (SELECT DISTINCT doc_id FROM {table}) d
-LEFT JOIN agg a ON d.doc_id = a.doc_id
-"""
-    if smoothing == "kn":
-        base1 = f"({llog2_sql('GREATEST(COALESCE(u1.n1cw, 0), 1)', frac_bits)} - {llog2_sql('d.n1pp2', frac_bits)})"
-        esc3 = f"({llog2_sql('(x3.n1uv * d.dn3)', frac_bits)} - {llog2_sql(f'(x3.c3ctx * {KN_DDEN})', frac_bits)})"
-        hit2 = f"({llog2_sql(f'(b2.cc2 * {KN_DDEN} - d.dn2)', frac_bits)} - {llog2_sql(f'(x2.cc2ctx * {KN_DDEN})', frac_bits)})"
-        esc2 = f"({llog2_sql('(x2.n1vcc * d.dn2)', frac_bits)} - {llog2_sql(f'(x2.cc2ctx * {KN_DDEN})', frac_bits)})"
-        return f"""{head}, ctx3 AS (
-    SELECT prev2, prev, CAST(SUM(c3) AS BIGINT) AS c3ctx, COUNT(*) AS n1uv
-    FROM c3 GROUP BY 1, 2
-), cc2 AS (
-    SELECT prev, token, COUNT(*) AS cc2 FROM c3 GROUP BY 1, 2
-), ctx2 AS (
-    SELECT prev, CAST(SUM(cc2) AS BIGINT) AS cc2ctx, COUNT(*) AS n1vcc
-    FROM cc2 GROUP BY 1
-), cont1 AS (
-    SELECT token, COUNT(*) AS n1cw FROM cc2 GROUP BY 1
-), disc3 AS (
-    SELECT COUNT(*) FILTER (WHERE c3 = 1) AS n1,
-           COUNT(*) FILTER (WHERE c3 = 2) AS n2
-    FROM c3
-), disc2 AS (
-    SELECT GREATEST(COUNT(*), 1) AS n1pp2,
-           COUNT(*) FILTER (WHERE cc2 = 1) AS n1,
-           COUNT(*) FILTER (WHERE cc2 = 2) AS n2
-    FROM cc2
-), dnum AS (
-    SELECT (SELECT {_KN_DNUM_SQL} FROM disc3) AS dn3,
-           (SELECT {_KN_DNUM_SQL} FROM disc2) AS dn2,
-           (SELECT n1pp2 FROM disc2) AS n1pp2
-), scored AS (
-    SELECT t.doc_id,
-           CASE WHEN t3.c3 IS NOT NULL
-                THEN {llog2_sql(f'(t3.c3 * {KN_DDEN} - d.dn3)', frac_bits)}
-                     - {llog2_sql(f'(x3.c3ctx * {KN_DDEN})', frac_bits)}
-                WHEN x3.c3ctx IS NOT NULL AND b2.cc2 IS NOT NULL
-                THEN {esc3} + {hit2}
-                WHEN x3.c3ctx IS NOT NULL
-                THEN {esc3} + {esc2} + {base1}
-                WHEN b2.cc2 IS NOT NULL
-                THEN {hit2}
-                WHEN x2.cc2ctx IS NOT NULL
-                THEN {esc2} + {base1}
-                ELSE {base1}
-           END AS lp
-    FROM trans t
-    LEFT JOIN c3 t3 ON t.prev2 = t3.prev2 AND t.prev = t3.prev AND t.token = t3.token
-    LEFT JOIN ctx3 x3 ON t.prev2 = x3.prev2 AND t.prev = x3.prev
-    LEFT JOIN cc2 b2 ON t.prev = b2.prev AND t.token = b2.token
-    LEFT JOIN ctx2 x2 ON t.prev = x2.prev
-    LEFT JOIN cont1 u1 ON t.token = u1.token
-    CROSS JOIN dnum d
-){tail}"""
-    if smoothing != "laplace":
-        raise ValueError(f"unknown smoothing {smoothing!r} (laplace|kn)")
-    return f"""{head}, c3ctx AS (
-    SELECT prev2, prev, SUM(c3) AS c3ctx FROM c3 GROUP BY 1, 2
-), c2 AS (
-    SELECT prev, token, COUNT(*) AS c2 FROM rtrans GROUP BY 1, 2
-), c1 AS (
-    SELECT prev, SUM(c2) AS c1 FROM c2 GROUP BY 1
-), cu AS (
-    SELECT CASE WHEN v.word IS NOT NULL THEN wc.word ELSE '{UNK}' END AS token,
-           SUM(cnt) AS cu
-    FROM wc LEFT JOIN vocab v ON wc.word = v.word GROUP BY 1
-), tot AS (
-    SELECT COALESCE(SUM(cnt), 0) + (SELECT COUNT(*) FROM vocab) + 1 AS upv FROM wc
-), scored AS (
-    SELECT t.doc_id,
-           CASE WHEN t3.c3 IS NOT NULL
-                THEN {llog2_sql('t3.c3', frac_bits)} - {llog2_sql('x3.c3ctx', frac_bits)}
-                WHEN b.c2 IS NOT NULL
-                THEN {llog2_sql('b.c2', frac_bits)} - {llog2_sql('x.c1', frac_bits)}
-                     - {backoff_bits_bi * scale}
-                ELSE {llog2_sql('(COALESCE(u.cu, 0) + 1)', frac_bits)}
-                     - {llog2_sql('tot.upv', frac_bits)}
-                     - {backoff_bits_uni * scale}
-           END AS lp
-    FROM trans t
-    LEFT JOIN c3 t3 ON t.prev2 = t3.prev2 AND t.prev = t3.prev AND t.token = t3.token
-    LEFT JOIN c3ctx x3 ON t.prev2 = x3.prev2 AND t.prev = x3.prev
-    LEFT JOIN c2 b ON t.prev = b.prev AND t.token = b.token
-    LEFT JOIN c1 x ON t.prev = x.prev
-    LEFT JOIN cu u ON t.token = u.token
-    CROSS JOIN tot
-){tail}"""
 
 
 # ---------------------------------------------------------------- trigram fit / score

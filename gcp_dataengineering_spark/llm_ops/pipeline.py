@@ -274,10 +274,12 @@ class PipelineConfig:
     # ngram_kn.kn_perplexity at perplexity_order, whatever the order;
     # perplexity_backoff_bits does not apply to it.
     perplexity_smoothing: str = "laplace"
-    # KenLM-style count-threshold pruning for orders 4/5 (r17 wave
-    # 3): {order: min count to keep}. Shrinks the model tables by
-    # the singleton mass with exact escape renormalization — at
-    # 100 TB an unpruned 5-gram type table is itself crawl-sized.
+    # KenLM-style count-threshold pruning (r17 wave 3): {order: min
+    # count to keep}, any order 2..perplexity_order; requires
+    # perplexity_smoothing="kn" (ngram_kn.kn_perplexity prunes at
+    # every order). Shrinks the model tables by the singleton mass
+    # with exact escape renormalization — at 100 TB an unpruned
+    # 5-gram type table is itself crawl-sized.
     perplexity_prune: dict | None = None
     # CCNet's head/middle/tail gate (r17 wave 3): keep only docs in
     # these buckets (e.g. ("head", "middle") — the published
@@ -421,8 +423,7 @@ def build_training_corpus(
         # frequency, kept segments, final join) — pin the gated
         # corpus first or the quality/reputation gates re-run 4x
         # per downstream execution (the documented branch-point rule)
-        if materialize is not False:
-            reputable = _materialize(reputable, materialize)
+        reputable = _materialize(reputable, materialize)
         reputable = remove_boilerplate(
             reputable,
             text_col,
@@ -443,8 +444,7 @@ def build_training_corpus(
         # (stages["gopher_repetition"]).
         from .text import gopher_repetition_features
 
-        if materialize is not False:
-            reputable = _materialize(reputable, materialize)
+        reputable = _materialize(reputable, materialize)
         gopher_rep = gopher_repetition_features(
             reputable, text_col, id_col,
             materialize=materialize,
@@ -483,8 +483,7 @@ def build_training_corpus(
                 num_buckets=cfg.quality_model_buckets,
                 ngrams=cfg.quality_model_ngrams,
             )
-            if materialize is not False:
-                quality_model = _materialize(quality_model, materialize)
+            quality_model = _materialize(quality_model, materialize)
             quality_calibration = nb_calibrate_threshold(
                 holdout,
                 quality_model,
@@ -508,11 +507,10 @@ def build_training_corpus(
                 num_buckets=cfg.quality_model_buckets,
                 ngrams=cfg.quality_model_ngrams,
             )
-            if materialize is not False:
-                # the trained weights feed every downstream row: pin
-                # the B-row model so training aggregations run once,
-                # not per consumer of the corpus lineage
-                quality_model = _materialize(quality_model, materialize)
+            # the trained weights feed every downstream row: pin
+            # the B-row model so training aggregations run once,
+            # not per consumer of the corpus lineage
+            quality_model = _materialize(quality_model, materialize)
         model_gated = nb_quality_gate(
             reputable,
             quality_model,
@@ -546,12 +544,12 @@ def build_training_corpus(
                 "perplexity_order 4/5 requires perplexity_smoothing='kn' "
                 "(the generalized-order LM has no laplace-escape form)"
             )
-        if cfg.perplexity_prune and cfg.perplexity_order not in (4, 5):
+        if cfg.perplexity_prune and cfg.perplexity_smoothing != "kn":
             raise ValueError(
-                "perplexity_prune requires the generalized-order LM "
-                "(perplexity_order 4 or 5)"
+                "perplexity_prune requires perplexity_smoothing='kn' "
+                "(count-threshold pruning is a Kneser-Ney model knob)"
             )
-        if materialize is not False and cfg.perplexity_ref is None:
+        if cfg.perplexity_ref is None:
             reputable = _materialize(reputable, materialize)
         if cfg.perplexity_smoothing == "kn":
             from .ngram_kn import kn_perplexity
@@ -586,11 +584,10 @@ def build_training_corpus(
                 backoff_bits=cfg.perplexity_backoff_bits,
                 smoothing=cfg.perplexity_smoothing,
             )
-        if materialize is not False:
-            # three consumers (the bucket cut, the fluent-id semi-join
-            # and the `perplexity` report stage): pin the scores so
-            # the LM trains and scores once, not once per consumer
-            perplexity_scores = _materialize(perplexity_scores, materialize)
+        # three consumers (the bucket cut, the fluent-id semi-join
+        # and the `perplexity` report stage): pin the scores so
+        # the LM trains and scores once, not once per consumer
+        perplexity_scores = _materialize(perplexity_scores, materialize)
         if cfg.perplexity_bucket_keep is not None:
             # 2e. CCNet's head/middle/tail cut (r17 wave 3): bucket
             # the SCORES per language and keep only the configured
@@ -631,8 +628,7 @@ def build_training_corpus(
         # point first per the documented rule.
         from .dsir import dsir_fit, dsir_resample, dsir_score
 
-        if materialize is not False:
-            reputable = _materialize(reputable, materialize)
+        reputable = _materialize(reputable, materialize)
         dsir_model = dsir_fit(
             cfg.dsir_target,
             reputable.select(F.col(text_col)),
@@ -640,10 +636,9 @@ def build_training_corpus(
             num_buckets=cfg.dsir_buckets,
             ngrams=cfg.dsir_ngrams,
         )
-        if materialize is not False:
-            # the B-row model feeds every scored row: pin it so the
-            # fit aggregations run once, not per corpus consumer
-            dsir_model = _materialize(dsir_model, materialize)
+        # the B-row model feeds every scored row: pin it so the
+        # fit aggregations run once, not per corpus consumer
+        dsir_model = _materialize(dsir_model, materialize)
         sel = dsir_resample(
             dsir_score(
                 reputable, dsir_model, text_col=text_col,
@@ -666,15 +661,13 @@ def build_training_corpus(
         .withColumn(text_col, F.col("_scrubbed"))
         .drop("_scrubbed")
     )
-    if materialize is not False:
-        scrubbed = _materialize(scrubbed, materialize)
+    scrubbed = _materialize(scrubbed, materialize)
 
     fps = dedup_exact(scrubbed, text_col, id_col)
     exact_deduped = scrubbed.join(
         fps.select(F.col("keep_id").alias(id_col)), id_col, "left_semi"
     )
-    if materialize is not False:
-        exact_deduped = _materialize(exact_deduped, materialize)
+    exact_deduped = _materialize(exact_deduped, materialize)
 
     sigs = minhash_signatures(
         exact_deduped, text_col, id_col, num_hashes=cfg.minhash_hashes
@@ -692,8 +685,7 @@ def build_training_corpus(
         # branch point first per the documented rule.
         from .embed import semantic_dedup as _semantic_dedup
 
-        if materialize is not False:
-            near_deduped = _materialize(near_deduped, materialize)
+        near_deduped = _materialize(near_deduped, materialize)
         sgroups = _semantic_dedup(
             near_deduped,
             id_col,
@@ -723,8 +715,7 @@ def build_training_corpus(
         from .embed import doc_embed_table
         from .similarity import cluster_balanced_sample
 
-        if materialize is not False:
-            deduped = _materialize(deduped, materialize)
+        deduped = _materialize(deduped, materialize)
         emb = doc_embed_table(
             deduped.select(id_col, text_col), id_col, text_col,
             "embedding", dim=cfg.cluster_balance_dim,
@@ -753,14 +744,12 @@ def build_training_corpus(
         # consumer
         from .dedup import duplicate_spans, strip_duplicate_spans
 
-        if materialize is not False:
-            deduped = _materialize(deduped, materialize)
+        deduped = _materialize(deduped, materialize)
         spans = duplicate_spans(
             deduped, text_col, id_col,
             k=cfg.span_dedup_k, min_docs=cfg.span_dedup_min_docs,
         )
-        if materialize is not False:
-            spans = _materialize(spans, materialize)
+        spans = _materialize(spans, materialize)
         span_stripped = (
             strip_duplicate_spans(
                 deduped, text_col, id_col,
@@ -812,8 +801,7 @@ def build_training_corpus(
         # point first per the documented rule.
         from .bpe import bpe_encode
 
-        if materialize is not False:
-            decontaminated = _materialize(decontaminated, materialize)
+        decontaminated = _materialize(decontaminated, materialize)
         tok = bpe_encode(
             decontaminated.select(id_col, text_col),
             cfg.bpe_merges,
@@ -837,8 +825,7 @@ def build_training_corpus(
         # first per the documented rule.
         from .unigram import unigram_encode_docs, unigram_sample_docs
 
-        if materialize is not False:
-            decontaminated = _materialize(decontaminated, materialize)
+        decontaminated = _materialize(decontaminated, materialize)
         if cfg.unigram_sample_alpha is not None:
             # subword regularization: budgets count the pieces this
             # epoch's SAMPLED corpus consumes (salt picks the epoch)
@@ -881,12 +868,11 @@ def build_training_corpus(
         if cfg.max_tokens_per_source is not None
         else with_tokens
     )
-    if materialize is not False:
-        # the tokenized corpus fans out to the mixture plan, the
-        # split/shard steps, and every write and count of them: pin
-        # it so the encoder (BPE, unigram, or the whitespace count)
-        # runs once per build
-        capped = _materialize(capped, materialize)
+    # the tokenized corpus fans out to the mixture plan, the
+    # split/shard steps, and every write and count of them: pin
+    # it so the encoder (BPE, unigram, or the whitespace count)
+    # runs once per build
+    capped = _materialize(capped, materialize)
 
     mixture: DataFrame | None = None
     mixed = capped

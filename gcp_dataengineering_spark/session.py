@@ -7,6 +7,8 @@ plain local session with scale-aware defaults:
 - AQE on (runtime coalescing, skew-join splitting) — at 100 TB the
   static shuffle-partition count is always wrong somewhere; AQE
   re-plans per stage.
+- cores from ``SPARK_GRAFT_CPUS``, else the host's usable cores
+  (the process's CPU affinity set).
 - shuffle partitions sized to the local core count for tests; on a
   real cluster this should be ~2-3x total cores (or left to AQE with
   a high initial value).
@@ -28,7 +30,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
     )

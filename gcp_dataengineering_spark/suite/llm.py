@@ -1694,9 +1694,10 @@ def q_ngram_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram base distribution, all integer fixed-point llog2
     (ngram_lm.bigram_perplexity(smoothing="kn"), which runs
     llm_ops/ngram_kn.py at order 2). Trained on the 80% doc_id
-    split, scoring all docs; the oracle replays vocab fold, counts,
-    BOTH discount computations (integer half-up //), every escape
-    branch and the exact bit arithmetic. PERMANENT_EXTERNAL."""
+    split, scoring all docs; the oracle (ngram_kn.kn_perplexity_sql
+    at order 2) replays vocab fold, counts, the discount computation
+    (integer half-up //), every escape branch and the exact bit
+    arithmetic. PERMANENT_EXTERNAL."""
     docs = _t(spark, sf_dir, "documents", fan_out=False)
     return NL.bigram_perplexity(
         docs, ref=docs.filter(KN_REF_FILTER), smoothing="kn"
@@ -1712,8 +1713,7 @@ def q_pentagram_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     escape-accumulating backoff. Ref-split 80/20 like the other KN
     pairs so the SQL replay (kn_perplexity_sql(order=5)) drives the
     full escape chain, not just the top-order hit leg. The same
-    engine serves the order-2/3 KN pairs, whose oracles are the
-    independently-written ngram_lm KN replays.
+    engine and the same replay serve the order-2/3 KN pairs.
     PERMANENT_EXTERNAL."""
     docs = _t(spark, sf_dir, "documents", fan_out=False)
     return NK.kn_perplexity(docs, ref=docs.filter(KN_REF_FILTER), order=5)
@@ -1766,8 +1766,10 @@ def q_trigram_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     order with CONTINUATION counts at the middle and base orders
     (cc2(v,w) = distinct trigram contexts, the published KN
     structure), every lower-order table derived from the c3 TYPE
-    table. Ref-split like the bigram KN pair so all six escape
-    branches score real rows. PERMANENT_EXTERNAL."""
+    table (ngram_lm.trigram_perplexity(smoothing="kn"), which runs
+    ngram_kn at order 3; oracle: kn_perplexity_sql(order=3)).
+    Ref-split like the bigram KN pair so all six escape branches
+    score real rows. PERMANENT_EXTERNAL."""
     docs = _t(spark, sf_dir, "documents", fan_out=False)
     return NL.trigram_perplexity(
         docs, ref=docs.filter(KN_REF_FILTER), smoothing="kn"
@@ -4089,16 +4091,16 @@ ORACLES = {
     # trigram_perplexity (r16): the tri→bi→uni escape chain replayed
     # with two lag windows + three count tables, llog2 throughout
     "trigram_perplexity": NL.trigram_perplexity_sql(),
-    # ngram/trigram _kn (r17): the Kneser-Ney chains replayed — the
-    # quantized Ney discounts recomputed from count-of-counts with
-    # integer half-up division, continuation-count tables derived
-    # from the n-gram TYPE CTEs, 80/20 ref split driving the escape
-    # branches
-    "ngram_perplexity_kn": NL.bigram_perplexity_sql(
-        smoothing="kn", ref_filter=KN_REF_FILTER
+    # ngram/trigram _kn (r17): the Kneser-Ney chains replayed by
+    # ngram_kn's one generated replay at order 2/3 — the quantized
+    # Ney discounts recomputed from count-of-counts with integer
+    # half-up division, continuation-count tables derived from the
+    # n-gram TYPE CTEs, 80/20 ref split driving the escape branches
+    "ngram_perplexity_kn": NK.kn_perplexity_sql(
+        order=2, ref_filter=KN_REF_FILTER
     ),
-    "trigram_perplexity_kn": NL.trigram_perplexity_sql(
-        smoothing="kn", ref_filter=KN_REF_FILTER
+    "trigram_perplexity_kn": NK.kn_perplexity_sql(
+        order=3, ref_filter=KN_REF_FILTER
     ),
     # pentagram (r17 wave 2): the generated order-5 CTE chain — four
     # lag windows, per-order continuation/context/discount tables,

@@ -18,7 +18,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -5810,7 +5810,7 @@ def test_trigram_perplexity_and_fit_score(spark):
     assert "perplexity" in stages
     assert stages["perplexity"].count() == 6
     # order 5 without KN smoothing is rejected (no laplace form at
-    # that depth); order 6 is out of range; pruning needs orders 4/5
+    # that depth); order 6 is out of range; pruning needs KN smoothing
     with _pytest.raises(ValueError, match="perplexity_order"):
         build_training_corpus(
             docs, config=PipelineConfig(perplexity_max_bits=1.0, perplexity_order=5)
@@ -5847,6 +5847,22 @@ def test_trigram_perplexity_and_fit_score(spark):
         ).collect()
     }
     assert got5 == exp5
+
+    # KN prunes at any order: order 3 with {3: 2} is the same engine
+    stages3 = build_training_corpus(
+        docs,
+        config=PipelineConfig(
+            perplexity_max_bits=50.0, perplexity_ref=ref, perplexity_order=3,
+            perplexity_smoothing="kn", perplexity_prune={3: 2},
+            shard_budget_tokens=500, minhash_hashes=16, lsh_bands=4,
+        ),
+    )
+    got3 = {r["doc_id"]: tuple(r) for r in stages3["perplexity"].collect()}
+    exp3 = {
+        r["doc_id"]: tuple(r)
+        for r in kn_perplexity(docs, ref=ref, order=3, prune={3: 2}).collect()
+    }
+    assert got3 == exp3
 
 
 def test_vp8l_simple_code_one_bit_first_symbol():
@@ -6052,14 +6068,18 @@ def test_vp8l_predictor_spec_semantics_and_packed_width():
 
 
 def test_kn_perplexity_three_way_parity(spark):
-    """r17: Kneser-Ney smoothing — Spark == python twin == DuckDB
+    """r17: Kneser-Ney smoothing — the bigram/trigram
+    ``smoothing="kn"`` front-ends == ngram_kn's python twin == its
+    DuckDB replay (``kn_perplexity_py``/``_sql`` at order 2/3)
     EXACTLY (n_trans, BIGINT nll_fp, rounded ppl_bits) across the
     full matrix: order 2 and 3, self-scored and ref-split (the
     ref-split drives every unseen-bigram/unseen-context escape
-    branch — a self-scored corpus has no unseen n-grams)."""
+    branch — a self-scored corpus has no unseen n-grams). The
+    Laplace twins and replays are checked ref-split too."""
     import duckdb
     import pandas as pd
 
+    from gcp_dataengineering_spark.llm_ops import ngram_kn as NK
     from gcp_dataengineering_spark.llm_ops import ngram_lm as NL
 
     texts = {
@@ -6087,31 +6107,28 @@ def test_kn_perplexity_three_way_parity(spark):
         "documents",
         pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())}),
     )
-    for fn, fnpy, fnsql in (
-        (NL.bigram_perplexity, NL.bigram_perplexity_py, NL.bigram_perplexity_sql),
-        (NL.trigram_perplexity, NL.trigram_perplexity_py, NL.trigram_perplexity_sql),
-    ):
+    for order, fn in ((2, NL.bigram_perplexity), (3, NL.trigram_perplexity)):
         got_self = {
             r["doc_id"]: (r["n_trans"], r["nll_fp"], r["ppl_bits"])
             for r in fn(df, smoothing="kn").collect()
         }
-        exp_self = fnpy(texts, smoothing="kn")
+        exp_self = NK.kn_perplexity_py(texts, order=order)
         assert got_self == exp_self
         duck_self = {
             r[0]: (r[1], r[2], r[3])
-            for r in con.execute(fnsql(smoothing="kn")).fetchall()
+            for r in con.execute(NK.kn_perplexity_sql(order=order)).fetchall()
         }
         assert duck_self == exp_self
         got_ref = {
             r["doc_id"]: (r["n_trans"], r["nll_fp"], r["ppl_bits"])
             for r in fn(df, ref=ref, smoothing="kn").collect()
         }
-        exp_ref = fnpy(texts, smoothing="kn", ref_texts=rt)
+        exp_ref = NK.kn_perplexity_py(texts, order=order, ref_texts=rt)
         assert got_ref == exp_ref
         duck_ref = {
             r[0]: (r[1], r[2], r[3])
             for r in con.execute(
-                fnsql(smoothing="kn", ref_filter="doc_id <= 8")
+                NK.kn_perplexity_sql(order=order, ref_filter="doc_id <= 8")
             ).fetchall()
         }
         assert duck_ref == exp_ref
@@ -6142,7 +6159,7 @@ def test_kn_discount_quantization_properties():
     clamped to [1, 255], D=1/2 on degenerate count-of-counts."""
     from fractions import Fraction
 
-    from gcp_dataengineering_spark.llm_ops.ngram_lm import KN_DDEN, _kn_discount
+    from gcp_dataengineering_spark.llm_ops.ngram_kn import KN_DDEN, _kn_discount
 
     assert KN_DDEN == 256
     assert _kn_discount(0, 5) == 128      # no singletons -> 1/2
@@ -6168,6 +6185,7 @@ def test_kn_beats_laplace_on_rare_context_fixture(spark):
     welded to one context ("francisco", only ever after "san") is
     not. Laplace-escape scores both probes identically (same corpus
     unigram count); KN separates them at both orders."""
+    from gcp_dataengineering_spark.llm_ops import ngram_kn as NK
     from gcp_dataengineering_spark.llm_ops import ngram_lm as NL
 
     ref_texts = {
@@ -6202,7 +6220,7 @@ def test_kn_beats_laplace_on_rare_context_fixture(spark):
     # continuation counts can: N1+(.,day)=3 contexts, N1+(.,francisco)=1
     assert kn[101] < kn[102]
     # twins agree on the discrimination
-    kn_py = NL.bigram_perplexity_py(texts, min_count=1, smoothing="kn", ref_texts=rt)
+    kn_py = NK.kn_perplexity_py(texts, order=2, min_count=1, ref_texts=rt)
     assert kn_py[101][2] == kn[101] and kn_py[102][2] == kn[102]
     # trigram KN inherits the separation through its continuation base
     kn3 = {

@@ -1,13 +1,11 @@
 """Generalized-order Kneser-Ney (llm_ops/ngram_kn.py, r17): the
-CCNet-published 5-gram configuration, cross-validated at the orders
-where an INDEPENDENT implementation exists and three-engine-exact at
-the new orders."""
+CCNet-published 5-gram configuration, three-engine-exact (Spark,
+pure-Python twin, DuckDB replay) at every order 2..5."""
 import duckdb
 import pandas as pd
 import pytest
 
 from gcp_dataengineering_spark.llm_ops import ngram_kn as NK
-from gcp_dataengineering_spark.llm_ops import ngram_lm as NL
 
 TEXTS = {
     1: "the cat sat on the mat",
@@ -32,13 +30,10 @@ def _rows(df):
 
 
 def test_kn_generic_cross_validates_and_extends_to_order5(spark):
-    """(a) At orders 2 and 3 the Spark engine (which ngram_lm's
-    smoothing="kn" front-ends route to) EXACTLY matches ngram_lm's
-    independently-written KN references — the pure-Python twins and
-    the DuckDB replays — self-scored and ref-split; (b) at every
-    order 2..5, Spark == generic twin == generic DuckDB replay
-    exactly, self-scored and ref-split; (c) the order guard rejects
-    1 and 6."""
+    """(a) At every order 2..5 — 2 and 3 included, the orders
+    ngram_lm's smoothing="kn" front-ends route here with — the Spark
+    engine == the pure-Python twin == the DuckDB replay exactly,
+    self-scored and ref-split; (b) the order guard rejects 1 and 6."""
     df = spark.createDataFrame(list(TEXTS.items()), "doc_id long, text string")
     ref = df.filter("doc_id <= 8")
     rt = {k: v for k, v in TEXTS.items() if k <= 8}
@@ -47,23 +42,15 @@ def test_kn_generic_cross_validates_and_extends_to_order5(spark):
         "documents",
         pd.DataFrame({"doc_id": list(TEXTS), "text": list(TEXTS.values())}),
     )
-    lm_twin = {2: NL.bigram_perplexity_py, 3: NL.trigram_perplexity_py}
-    lm_sql = {2: NL.bigram_perplexity_sql, 3: NL.trigram_perplexity_sql}
 
     for o in (2, 3, 4, 5):
         for ref_, rt_, rf in ((None, None, None), (ref, rt, "doc_id <= 8")):
             exp = NK.kn_perplexity_py(TEXTS, order=o, ref_texts=rt_)
             got = _rows(NK.kn_perplexity(df, ref=ref_, order=o))
             assert got == exp, (o, rf)
-            sqls = [NK.kn_perplexity_sql(order=o, ref_filter=rf)]
-            if o in lm_twin:
-                assert lm_twin[o](TEXTS, smoothing="kn", ref_texts=rt_) == exp, (o, rf)
-                sqls.append(lm_sql[o](smoothing="kn", ref_filter=rf))
-            for sql in sqls:
-                duck = {
-                    r[0]: (r[1], r[2], r[3]) for r in con.execute(sql).fetchall()
-                }
-                assert duck == exp, (o, rf)
+            sql = NK.kn_perplexity_sql(order=o, ref_filter=rf)
+            duck = {r[0]: (r[1], r[2], r[3]) for r in con.execute(sql).fetchall()}
+            assert duck == exp, (o, rf)
 
     with pytest.raises(ValueError, match="order"):
         NK.kn_perplexity(df, order=1)
@@ -204,13 +191,8 @@ def test_kn_prune_mass_conservation_exact():
     a context with nothing kept)."""
     from fractions import Fraction
 
-    from gcp_dataengineering_spark.llm_ops.ngram_lm import (
-        BOS,
-        KN_DDEN,
-        UNK,
-        _kn_discount,
-        _tokens_py,
-    )
+    from gcp_dataengineering_spark.llm_ops.ngram_kn import KN_DDEN, _kn_discount
+    from gcp_dataengineering_spark.llm_ops.ngram_lm import BOS, UNK, _tokens_py
 
     rt = {k: v for k, v in TEXTS.items() if k <= 8}
     order, prune = 3, {2: 2, 3: 2}

@@ -1,6 +1,9 @@
 """Extended falsification session, round 16 — adversarial fuzz over the
 round's new surfaces. Run at the current HEAD; output is the receipt."""
-import sys, time
+import os, sys, time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 import numpy as np
 
 t0 = time.time()

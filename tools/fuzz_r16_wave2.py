@@ -3,7 +3,10 @@ corpora + fit/score-vs-one-shot equality over random ref/score splits
 + a joint bigram-vs-trigram sanity sweep (trigram nll >= cannot be
 asserted in general, but both must agree on n_trans and on empty/
 1-token docs)."""
-import sys, time
+import os, sys, time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 import numpy as np
 import duckdb
 

@@ -14,9 +14,11 @@ t0 = time.time()
 rng = np.random.default_rng(20260817)
 checks = 0
 
-# ---------- 1. KN + laplace twin-vs-DuckDB over random corpora
+# ---------- 1. laplace twin-vs-DuckDB over random corpora
 # (both orders, self-scored AND ref-split, random min_count /
-# backoff_bits — the duckdb leg replays the whole train+score chain)
+# backoff_bits — the duckdb leg replays the whole train+score chain;
+# the Kneser-Ney half of this sweep is fuzz_r17_wave3.py leg 1,
+# ngram_kn's twin vs its replay at random orders 2..5)
 import duckdb
 import pandas as pd
 
@@ -25,7 +27,7 @@ from gcp_dataengineering_spark.llm_ops import ngram_lm as NL
 WORDS = ["the", "cat", "dog", "sat", "ran", "on", "mat", "a", "nice",
          "day", "san", "francisco", "of", "to", "zq1", "vx2", "qp3"]
 
-kn_fail = 0
+lm_fail = 0
 for trial in range(120):
     n_docs = int(rng.integers(3, 12))
     texts = {}
@@ -50,30 +52,29 @@ for trial in range(120):
     if ref_ids is not None:
         rf = "doc_id IN (" + ",".join(str(i) for i in sorted(ref_ids)) + ")"
         rt = {k: v for k, v in texts.items() if k in ref_ids}
-    for sm in ("laplace", "kn"):
-        exp2 = NL.bigram_perplexity_py(
-            texts, min_count=mc, backoff_bits=bb, smoothing=sm, ref_texts=rt)
-        got2 = {r[0]: (r[1], r[2], r[3]) for r in con.execute(
-            NL.bigram_perplexity_sql(min_count=mc, backoff_bits=bb,
-                                     smoothing=sm, ref_filter=rf)).fetchall()}
-        if got2 != exp2:
-            kn_fail += 1
-            print("MISMATCH bigram", sm, trial, file=sys.stderr)
-        exp3 = NL.trigram_perplexity_py(
-            texts, min_count=mc, backoff_bits_bi=bb, backoff_bits_uni=2 * bb,
-            smoothing=sm, ref_texts=rt)
-        got3 = {r[0]: (r[1], r[2], r[3]) for r in con.execute(
-            NL.trigram_perplexity_sql(min_count=mc, backoff_bits_bi=bb,
-                                      backoff_bits_uni=2 * bb, smoothing=sm,
-                                      ref_filter=rf)).fetchall()}
-        if got3 != exp3:
-            kn_fail += 1
-            print("MISMATCH trigram", sm, trial, file=sys.stderr)
-        checks += 2
+    exp2 = NL.bigram_perplexity_py(
+        texts, min_count=mc, backoff_bits=bb, ref_texts=rt)
+    got2 = {r[0]: (r[1], r[2], r[3]) for r in con.execute(
+        NL.bigram_perplexity_sql(min_count=mc, backoff_bits=bb,
+                                 ref_filter=rf)).fetchall()}
+    if got2 != exp2:
+        lm_fail += 1
+        print("MISMATCH bigram", trial, file=sys.stderr)
+    exp3 = NL.trigram_perplexity_py(
+        texts, min_count=mc, backoff_bits_bi=bb, backoff_bits_uni=2 * bb,
+        ref_texts=rt)
+    got3 = {r[0]: (r[1], r[2], r[3]) for r in con.execute(
+        NL.trigram_perplexity_sql(min_count=mc, backoff_bits_bi=bb,
+                                  backoff_bits_uni=2 * bb,
+                                  ref_filter=rf)).fetchall()}
+    if got3 != exp3:
+        lm_fail += 1
+        print("MISMATCH trigram", trial, file=sys.stderr)
+    checks += 2
     con.close()
-print(f"ngram twin-vs-duckdb: 120 corpora x 2 orders x 2 smoothings "
-      f"(half ref-split), {kn_fail} mismatches")
-assert kn_fail == 0
+print(f"laplace ngram twin-vs-duckdb: 120 corpora x 2 orders "
+      f"(half ref-split), {lm_fail} mismatches")
+assert lm_fail == 0
 
 # ---------- 2. audio fingerprint vs an INDEPENDENT implementation
 # (stdlib-only reparse: different chunk walk, different energy loop)
@@ -374,7 +375,7 @@ assert stsd_fail == 0
 
 # ---------- 5. fit/score vs one-shot on random corpora is covered by
 # pytest (Spark); here: lm discount edge grid
-from gcp_dataengineering_spark.llm_ops.ngram_lm import KN_DDEN, _kn_discount
+from gcp_dataengineering_spark.llm_ops.ngram_kn import KN_DDEN, _kn_discount
 from fractions import Fraction
 
 for n1 in range(0, 40):

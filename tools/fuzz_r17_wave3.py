@@ -73,7 +73,7 @@ assert fails == 0
 # the renormalized escape numerator closes each context exactly
 from fractions import Fraction
 
-from gcp_dataengineering_spark.llm_ops.ngram_lm import KN_DDEN, _kn_discount
+from gcp_dataengineering_spark.llm_ops.ngram_kn import KN_DDEN, _kn_discount
 
 mc_checks = 0
 for trial in range(2000):
