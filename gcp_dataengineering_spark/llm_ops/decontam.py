@@ -16,12 +16,16 @@ Three published "dirty" definitions, all here:
 - **fuzzy rule** (near-duplicate overlap that exact n-grams miss —
   light paraphrases, re-tokenized copies; the StarCoder/Dolma-style
   MinHash decontamination): :func:`contamination_minhash` /
-  :func:`decontaminate_fuzzy`, reusing the dedup family's MinHash
-  signatures and LSH banding with the EVAL side broadcast.
+  :func:`decontaminate_fuzzy`, on the dedup family's MinHash
+  signatures, its one band builder (``dedup._band_rows``, the stored
+  band-index format) and its signature match count
+  (``dedup._sig_matches``), with the EVAL side broadcast.
 
 Shape at scale: a posting-list equi-join on the n-gram — the train
 side explodes to (doc_id, gram) rows, the (much smaller) eval side to
-(gram, eval_id) rows, and candidates are gram-key join hits. Never
+(gram, eval_id) rows (one capped posting list, ``_eval_postings``,
+for both the train-side and the eval-side census), and candidates are
+gram-key join hits. Never
 all-pairs; the eval side usually broadcasts outright. Ultra-common
 grams can be capped exactly like dedup's stop-shingles
 (``max_gram_freq``) so a boilerplate phrase can't explode the join.
@@ -35,9 +39,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import minhash_signatures, shingle_rows
+from .dedup import _band_rows, _sig_matches, minhash_signatures, shingle_rows
 from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
+
+
+def _eval_postings(
+    eval_df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    max_gram_freq: int | None,
+) -> DataFrame:
+    """(shingle, eval_id) posting list of the eval set; with
+    ``max_gram_freq``, grams in more than that many eval documents are
+    dropped (the stop-shingle guard)."""
+    ev = shingle_rows(eval_df, text_col, id_col, n).select(
+        "shingle", F.col("doc_id").alias("eval_id")
+    )
+    if max_gram_freq is None:
+        return ev
+    freq = ev.groupBy("shingle").agg(F.count_distinct("eval_id").alias("ev_df"))
+    return ev.join(freq.filter(F.col("ev_df") <= max_gram_freq), "shingle").drop("ev_df")
 
 
 def contamination_hits(
@@ -84,16 +107,7 @@ def contamination_hits(
         totals = tr.groupBy("doc_id").agg(
             F.count_distinct("shingle").cast("long").alias("n_grams_total")
         )
-    ev = shingle_rows(eval_df, text_col, id_col, n).select(
-        "shingle", F.col("doc_id").alias("eval_id")
-    )
-    if max_gram_freq is not None:
-        freq = ev.groupBy("shingle").agg(
-            F.count_distinct("eval_id").alias("ev_df")
-        )
-        ev = ev.join(
-            freq.filter(F.col("ev_df") <= max_gram_freq), "shingle"
-        ).drop("ev_df")
+    ev = _eval_postings(eval_df, text_col, id_col, n, max_gram_freq)
     # The eval posting list is consumed once; the join output feeds a
     # single aggregation, so no self-join re-evaluation hazard — only
     # materialize when the caller asks (e.g. reusing ev across many
@@ -158,16 +172,7 @@ def contamination_by_eval(
     scores are untrustworthy against a corpus you cannot re-cut.
     Same posting-list join shape (the eval side broadcasts)."""
     tr = shingle_rows(train, text_col, id_col, n)
-    ev = shingle_rows(eval_df, text_col, id_col, n).select(
-        "shingle", F.col("doc_id").alias("eval_id")
-    )
-    if max_gram_freq is not None:
-        freq = ev.groupBy("shingle").agg(
-            F.count_distinct("eval_id").alias("ev_df")
-        )
-        ev = ev.join(
-            freq.filter(F.col("ev_df") <= max_gram_freq), "shingle"
-        ).drop("ev_df")
+    ev = _eval_postings(eval_df, text_col, id_col, n, max_gram_freq)
     return (
         tr.join(ev, "shingle")
         .groupBy("eval_id")
@@ -203,53 +208,28 @@ def contamination_minhash(
     signature aggregation and (doc_id, band) rows; the eval index
     (bands + signatures) broadcasts — no corpus self-join, no
     all-pairs, candidate fan-out bounded by eval-side bucket sizes."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
-            "a remainder would silently drop trailing signature components"
-        )
     if not (0.0 <= min_est_jaccard <= 1.0):
         raise ValueError(
             f"min_est_jaccard must be in [0, 1], got {min_est_jaccard}"
         )
-    rows_per_band = num_hashes // bands
 
-    def _sig_bands(df: DataFrame, out_id: str):
+    def _sig_bands(df: DataFrame) -> DataFrame:
         sigs = minhash_signatures(df, text_col, id_col, num_hashes, n)
-        sig_arr = F.array(*[F.col(f"m{i}") for i in range(num_hashes)])
-        band_cols = [
-            F.concat_ws(
-                "|",
-                F.lit(f"{b}:"),
-                *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)],
-            )
-            for b in range(bands)
-        ]
-        return sigs.select(
-            F.col("doc_id").alias(out_id),
-            sig_arr.alias(f"_sig_{out_id}"),
-            F.explode(F.array(*band_cols)).alias("band"),
-        )
+        return _band_rows(sigs, num_hashes, bands, keep_sig=True)
 
     # the train side feeds exactly one join; the eval side is tiny —
-    # materialize only applies to the train signatures (they carry
+    # materialize only applies to the train band rows (they carry
     # the shingle aggregation, the expensive leg)
-    tr = _sig_bands(train, "doc_id")
+    tr = _sig_bands(train)
     if materialize is not None and materialize is not False:
         tr = _materialize(tr, materialize)
-    ev = _sig_bands(eval_df, "eval_id")
-    n_match = F.size(
-        F.filter(
-            F.zip_with(
-                F.col("_sig_doc_id"), F.col("_sig_eval_id"), lambda x, y: x == y
-            ),
-            lambda v: v,
-        )
+    ev = _sig_bands(eval_df).select(
+        F.col("doc_id").alias("eval_id"), F.col("sig").alias("eval_sig"), "band"
     )
     cand = (
         tr.join(F.broadcast(ev), "band")
         .groupBy("doc_id", "eval_id")
-        .agg(F.first(n_match).alias("_n_match"))
+        .agg(F.first(_sig_matches(F.col("sig"), F.col("eval_sig"))).alias("_n_match"))
         .withColumn(
             "est_jaccard",
             F.col("_n_match").cast("double") / F.lit(float(num_hashes)),

@@ -10,7 +10,11 @@ Scale design notes (the whole point of these shapes at 100 TB):
   all-pairs cross join;
 - ultra-frequent shingles (stop-shingles) explode posting lists
   quadratically; `max_shingle_freq` caps them, mirroring the
-  stop-word dropping used by production near-dup pipelines.
+  stop-word dropping used by production near-dup pipelines;
+- every banded blocker is one engine: `_band_rows` is the only MinHash
+  band builder (batch and incremental dedup, the persisted index,
+  fuzzy decontamination) and `_band_pairs` the only band self-join
+  (those plus the dHash/audio/video pigeonhole bands in phash.py).
 """
 
 from __future__ import annotations
@@ -223,6 +227,75 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+def _band_rows(
+    sigs: DataFrame,
+    num_hashes: int,
+    bands: int,
+    keep_sig: bool = False,
+    materialize: str | MaterializeFn | bool | None = False,
+) -> DataFrame:
+    """The one MinHash band builder: (doc_id, [sig,] band) rows of a
+    signature frame (doc_id, m0..m{k-1}), one row per band. ``band``
+    folds the band index into the key — ``'<b>:|m…|m…'`` — so every
+    band join is a single-column equi-join; this is also the stored
+    format of a persisted band index (:func:`minhash_band_rows`), so
+    changing it invalidates every index on disk. ``keep_sig`` carries
+    the signature array along for a per-pair :func:`_sig_matches`.
+    ``materialize`` pins the signature frame first — after the
+    divisibility check, so a bad call raises before any Spark job."""
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
+            "a remainder would silently drop trailing signature components"
+        )
+    sigs = _materialize(sigs, materialize)
+    rows_per_band = num_hashes // bands
+    band_cols = [
+        F.concat_ws(
+            "|",
+            F.lit(f"{b}:"),
+            *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)],
+        )
+        for b in range(bands)
+    ]
+    sig = [F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig")] if keep_sig else []
+    return sigs.select("doc_id", *sig, F.explode(F.array(*band_cols)).alias("band"))
+
+
+def _sig_matches(sig_a: Column, sig_b: Column) -> Column:
+    """Matching components of two MinHash signature arrays — over
+    num_hashes, the unbiased Jaccard estimate."""
+    return F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v))
+
+
+def _band_pairs(
+    rows: DataFrame,
+    id_col: str,
+    key_cols: list[str],
+    per_pair: dict[str, Column] | None = None,
+) -> DataFrame:
+    """The one band self-join: rows sharing every ``key_cols`` value
+    pair up (``a.id < b.id`` inside the join condition — an equi-join
+    on the band key, never a cross join) and group to
+    (id_a, id_b, shared_bands, *per_pair). ``per_pair`` maps output
+    names to expressions over the joined ``a.*``/``b.*`` columns that
+    are constant per pair (a signature match count, the two hashes);
+    each is kept with ``first()``, so every aggregation buffer is
+    fixed-width and the grouping stays a HashAggregate."""
+    a, b = rows.alias("a"), rows.alias("b")
+    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for k in key_cols:
+        cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
+    return (
+        a.join(b, cond)
+        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("shared_bands"),
+            *[F.first(e).alias(name) for name, e in (per_pair or {}).items()],
+        )
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     num_hashes: int = 8,
@@ -231,38 +304,13 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """LSH banding: split the signature into `bands` bands of
     num_hashes/bands rows; docs sharing ANY band signature are
-    candidates. Implemented as explode(bands) → self-join on
-    (band_idx, band_key) → distinct pairs with shared-band count.
-    The join key is a band hash — never a cross join. The signatures
+    candidates. Band rows from :func:`_band_rows`, paired by
+    :func:`_band_pairs` → (id_a, id_b, shared_bands). The signatures
     are eagerly materialized first: both sides of the self-join
     consume them, and an unmaterialized input would re-run whatever
     lineage produced it twice (see minhash_dedup_pairs)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
-            "a remainder would silently drop trailing signature components"
-        )
-    signatures = _materialize(signatures, materialize)
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(F.struct(F.lit(b).alias("band_idx"), F.concat_ws("|", *parts).alias("band_key")))
-    exploded = signatures.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc_id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_key").alias("band_key"))
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("shared_bands"))
-    )
+    rows = _band_rows(signatures, num_hashes, bands, materialize=materialize)
+    return _band_pairs(rows, "doc_id", ["band"])
 
 
 def minhash_dedup_pairs(
@@ -276,7 +324,9 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """MinHash+LSH near-dup candidates with estimated similarity:
     (id_a, id_b, shared_bands, est_jaccard) where est_jaccard is the
-    fraction of matching minhash components.
+    fraction of matching minhash components — :func:`lsh_candidate_pairs`
+    with the signature array carried through :func:`_band_rows` and
+    :func:`_sig_matches` as the per-pair value of :func:`_band_pairs`.
 
     The signatures DataFrame is eagerly materialized
     (localCheckpoint) before the band self-join. Without that, BOTH
@@ -290,46 +340,14 @@ def minhash_dedup_pairs(
     cluster, `checkpoint()` to a durable store or a parquet
     write/read of the signatures does the same job with fault
     tolerance; localCheckpoint is the single-JVM equivalent.)"""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
-            "a remainder would silently drop trailing signature components"
-        )
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, n)
-    sigs = _materialize(sigs, materialize)
-    sig_arr = F.array(*[F.col(f"m{i}") for i in range(num_hashes)])
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band_idx"), F.concat_ws("|", *parts).alias("band_key"))
-        )
-    exploded = (
-        sigs.select("doc_id", sig_arr.alias("sig"), F.explode(F.array(*band_cols)).alias("band"))
-        .select("doc_id", "sig",
-                F.col("band.band_idx").alias("band_idx"),
-                F.col("band.band_key").alias("band_key"))
-    )
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    n_match = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-            lambda v: v,
-        )
+    rows = _band_rows(
+        minhash_signatures(df, text_col, id_col, num_hashes, n),
+        num_hashes, bands, keep_sig=True, materialize=materialize,
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("shared_bands"),
-            F.first(n_match).alias("n_match"),
+        _band_pairs(
+            rows, "doc_id", ["band"],
+            {"n_match": _sig_matches(F.col("a.sig"), F.col("b.sig"))},
         )
         .withColumn("est_jaccard", F.col("n_match").cast("double") / F.lit(float(num_hashes)))
         .select("id_a", "id_b", "shared_bands", "est_jaccard")
@@ -345,30 +363,16 @@ def minhash_band_rows(
     bands: int = 4,
     n: int = 3,
 ) -> DataFrame:
-    """(doc_id, band) rows — the PERSISTABLE LSH index of a corpus.
-    ``band`` folds the band index into the key ('<idx>:<key>') so
+    """(doc_id, band) rows — the PERSISTABLE LSH index of a corpus,
+    built by :func:`_band_rows` (``band`` = '<idx>:|m…|m…', so
     candidate generation downstream is a single-column equi-join,
-    which a single-column bucketed sink can co-locate. Write it with
+    which a single-column bucketed sink can co-locate). Write it with
     ``sources.io.write_bucketed(bands_df, table, 'band')`` once per
     corpus; every future ingest batch then joins against the stored
     index with NO corpus-side shuffle (the bucket metadata already
     satisfies the join's clustering)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
-            "a remainder would silently drop trailing signature components"
-        )
-    rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, n)
-    band_cols = [
-        F.concat_ws(
-            "|",
-            F.lit(f"{b}:"),
-            *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)],
-        )
-        for b in range(bands)
-    ]
-    return sigs.select("doc_id", F.explode(F.array(*band_cols)).alias("band"))
+    return _band_rows(sigs, num_hashes, bands)
 
 
 def dedup_exact_incremental(
@@ -412,7 +416,6 @@ def lsh_incremental_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     n: int = 3,
-    include_batch_internal: bool = True,
     materialize: str | MaterializeFn | bool | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs of a NEW batch against an EXISTING
@@ -424,42 +427,33 @@ def lsh_incremental_pairs(
     full union would emit for every pair touching a batch document
     (same hash family, same banding).
 
-    Scale shape: batch bands are computed once and materialized (both
-    the cross join and the self join consume them); the corpus index
-    is consumed by ONE equi-join on the band key — when the index
-    table is bucketed on ``band`` the join reuses the bucket
-    partitioning and only the (small) batch side shuffles."""
+    The batch's band rows are built once and materialized (the cross
+    join and the :func:`_band_pairs` self join both consume them);
+    the pairing itself is :func:`_band_index_pairs`."""
     batch_bands = _materialize(
         minhash_band_rows(batch, text_col, id_col, num_hashes, bands, n),
         materialize,
     )
-    b = batch_bands.alias("b")
-    c = corpus_bands.alias("c")
+    return _band_index_pairs(batch_bands, corpus_bands)
+
+
+def _band_index_pairs(batch_bands: DataFrame, corpus_bands: DataFrame) -> DataFrame:
+    """(id_a, id_b, shared_bands) of pinned batch band rows against a
+    corpus band index, plus the batch-internal pairs. The corpus index
+    is consumed by ONE equi-join on the band key — when the index
+    table is bucketed on ``band`` the join reuses the bucket
+    partitioning and only the (small) batch side shuffles."""
     cross = (
-        b.join(c, F.col("b.band") == F.col("c.band"))
-        .filter(F.col("b.doc_id") != F.col("c.doc_id"))
+        batch_bands.alias("batch")
+        .join(corpus_bands.alias("corpus"), F.col("batch.band") == F.col("corpus.band"))
+        .filter(F.col("batch.doc_id") != F.col("corpus.doc_id"))
         .groupBy(
-            F.least(F.col("b.doc_id"), F.col("c.doc_id")).alias("id_a"),
-            F.greatest(F.col("b.doc_id"), F.col("c.doc_id")).alias("id_b"),
+            F.least(F.col("batch.doc_id"), F.col("corpus.doc_id")).alias("id_a"),
+            F.greatest(F.col("batch.doc_id"), F.col("corpus.doc_id")).alias("id_b"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("shared_bands"))
     )
-    if not include_batch_internal:
-        return cross
-    b2 = batch_bands.alias("b2")
-    internal = (
-        batch_bands.alias("b1")
-        .join(
-            b2,
-            (F.col("b1.band") == F.col("b2.band"))
-            & (F.col("b1.doc_id") < F.col("b2.doc_id")),
-        )
-        .groupBy(
-            F.col("b1.doc_id").alias("id_a"), F.col("b2.doc_id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("shared_bands"))
-    )
-    return cross.unionByName(internal)
+    return cross.unionByName(_band_pairs(batch_bands, "doc_id", ["band"]))
 
 
 def ingest_batch(
@@ -486,7 +480,9 @@ def ingest_batch(
     - ``new_fps``     — their (fp) rows, to be unioned into the
       maintained fingerprint table;
     - ``new_bands``   — their (doc_id, band) rows for the band index
-      (None when no index was supplied).
+      (None when no index was supplied): the batch band rows, built
+      and pinned once for the candidate join, restricted to the
+      admitted ids.
 
     The corpus is never re-paired against itself; each maintained
     index is read by exactly one equi-join (anti on fp, band join on
@@ -511,11 +507,13 @@ def ingest_batch(
     if corpus_bands is None:
         new_fps = exact.select(fingerprint(text_col).alias("fp"))
         return exact, new_fps, None
+    batch_bands = _materialize(
+        minhash_band_rows(exact, text_col, id_col, num_hashes, bands, n), materialize
+    )
     pairs = _materialize(
-        lsh_incremental_pairs(
-            exact, corpus_bands, text_col, id_col, num_hashes, bands, n,
-            include_batch_internal=True, materialize=materialize,
-        ).filter(F.col("shared_bands") >= min_shared_bands),
+        _band_index_pairs(batch_bands, corpus_bands).filter(
+            F.col("shared_bands") >= min_shared_bands
+        ),
         materialize,
     )
     batch_ids = exact.select(F.col(id_col).alias("_bid"))
@@ -541,7 +539,11 @@ def ingest_batch(
         exact.join(keeper_ids, id_col, "left_semi"), materialize
     )
     new_fps = appendable.select(fingerprint(text_col).alias("fp"))
-    new_bands = minhash_band_rows(appendable, text_col, id_col, num_hashes, bands, n)
+    # appendable ⊆ exact and band rows depend only on a doc's own
+    # text, so the pinned batch rows of the admitted ids ARE its bands
+    new_bands = batch_bands.join(
+        appendable.select(F.col(id_col).alias("doc_id")), "doc_id", "left_semi"
+    )
     return appendable, new_fps, new_bands
 
 

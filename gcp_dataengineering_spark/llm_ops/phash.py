@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _band_pairs, resolve_dup_groups
 from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 from .multimodal import (
@@ -207,61 +208,47 @@ def phash_candidate_pairs(
     ``bands`` equal-width segments; any pair within hamming distance
     ``bands − 1`` agrees on ≥ 1 whole segment, so the band equi-join
     is a complete candidate generator for that radius (the standard
-    multi-index hamming trick — same shape as LSH banding in
-    dedup.lsh_candidate_pairs, and the same scale story: bucketed
-    equi-join, never a cross join). Returns
-    (id_a, id_b, hash_a, hash_b, hamming) for candidates only —
-    callers filter ``hamming <= r``.
+    multi-index hamming trick). The pairing is the MinHash family's
+    band self-join, ``dedup._band_pairs``, keyed on
+    (band_idx, band_val) with the two hashes as per-pair values — the
+    same scale story: bucketed equi-join, never a cross join. Returns
+    (id_a, id_b, hash_a, hash_b, shared_bands, hamming) for candidates
+    only — callers filter ``hamming <= r``.
 
+    Segments are read as unsigned (shiftrightunsigned + mask); at
+    ``bands=1`` the one 64-bit segment is the hash itself, unmasked.
     The hash frame is eagerly materialized first: both self-join
     sides consume it, and its lineage is the full decode UDF."""
     if 64 % bands != 0:
         raise ValueError(f"bands ({bands}) must divide 64")
     seg = 64 // bands
-    mask = (1 << seg) - 1
     hs = _materialize(
         hashes.filter(F.col(hash_col).isNotNull()).select(
             F.col(id_col).alias("doc"), F.col(hash_col).alias("h")
         ),
         materialize,
     )
+
+    def segment(b: int):
+        if seg == 64:
+            return F.col("h")
+        shifted = F.call_function("shiftrightunsigned", F.col("h"), F.lit(b * seg).cast("int"))
+        return shifted.bitwiseAND(F.lit((1 << seg) - 1))
+
     band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.call_function(
-                "shiftrightunsigned", F.col("h"), F.lit(b * seg).cast("int")
-            ).bitwiseAND(F.lit(mask)).alias("band_val"),
-        )
+        F.struct(F.lit(b).alias("band_idx"), segment(b).alias("band_val"))
         for b in range(bands)
     ]
     exploded = hs.select(
         "doc", "h", F.explode(F.array(*band_structs)).alias("band")
-    ).select(
-        "doc",
-        "h",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_val").alias("band_val"),
+    ).select("doc", "h", "band.band_idx", "band.band_val")
+    pairs = _band_pairs(
+        exploded, "doc", ["band_idx", "band_val"],
+        {"hash_a": F.col("a.h"), "hash_b": F.col("b.h")},
     )
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .groupBy(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.col("a.h").alias("hash_a"),
-            F.col("b.h").alias("hash_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("shared_bands"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("hash_a").bitwiseXOR(F.col("hash_b"))).cast("int"),
-        )
+    return pairs.select(
+        "id_a", "id_b", "hash_a", "hash_b", "shared_bands",
+        F.bit_count(F.col("hash_a").bitwiseXOR(F.col("hash_b"))).cast("int").alias("hamming"),
     )
 
 
@@ -313,8 +300,6 @@ def _hamming_neardup_groups(
             "pigeonhole banding only guarantees completeness up to "
             "bands − 1 differing bits — raise bands instead"
         )
-    from .dedup import resolve_dup_groups
-
     fps = _materialize(
         fingerprints()
         .filter(F.col(hash_col).isNotNull())

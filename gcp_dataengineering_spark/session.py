@@ -9,6 +9,9 @@ plain local session with scale-aware defaults:
   re-plans per stage.
 - cores from ``SPARK_GRAFT_CPUS``, else the host's usable cores
   (the process's CPU affinity set).
+- driver heap from ``SPARK_GRAFT_DRIVER_MEM``, else half the host's
+  physical memory in whole GiB (at least ``1g``) — a fixed large
+  heap lets one long-lived local JVM outgrow a small host.
 - shuffle partitions sized to the local core count for tests; on a
   real cluster this should be ~2-3x total cores (or left to AQE with
   a high initial value).
@@ -22,6 +25,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of physical memory in
+    whole GiB, at least ``1g``."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2**31)}g"
 
 
 def get_spark(
@@ -43,7 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events.parquet uses TIMESTAMP(NANOS); read as long nanos

@@ -13,6 +13,22 @@ from gcp_dataengineering_spark.config import (
 from gcp_dataengineering_spark.pipelines.jobs import run_all
 
 
+def test_driver_memory_sized_to_host(monkeypatch):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is half the
+    host's physical memory in whole GiB (at least 1g); the variable
+    overrides it. No Spark session is started."""
+    from gcp_dataengineering_spark import session
+
+    host = {"SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(session.os, "sysconf", host.__getitem__)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    for gib, want in ((15.7, "7g"), (64, "32g"), (3, "1g"), (1, "1g")):
+        host["SC_PHYS_PAGES"] = int(gib * 2**30) // 4096
+        assert session._driver_memory() == want, gib
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert session._driver_memory() == "6g"
+
+
 def test_config_roundtrip(tmp_path, spark):
     ini = tmp_path / "configuration.ini"
     ini.write_text(

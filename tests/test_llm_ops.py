@@ -1904,12 +1904,37 @@ def test_lsh_incremental_pairs_equal_full_recompute(spark):
     assert (0, 1000, 4) in inc and (1, 1001, 4) in inc and (400, 2400, 4) in inc
 
 
+def test_minhash_band_rows_stored_format(spark):
+    """The persisted band-index format is pinned literally: a stored
+    fuzzy-dedup index holds these '<b>:|m…|m…' strings, so a change
+    to the hash family or the band key must fail here instead of
+    silently matching nothing against every index already on disk."""
+    from gcp_dataengineering_spark.llm_ops.dedup import minhash_band_rows
+
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "a stitch in time saves nine")],
+        "doc_id long, text string",
+    )
+    assert sorted((r["doc_id"], r["band"]) for r in minhash_band_rows(df).collect()) == [
+        (1, "0:|462396972075844051|48330871754406781"),
+        (1, "1:|42762693337511181|12117859528345174"),
+        (1, "2:|48546796728955568|69842020109924769"),
+        (1, "3:|245387614786998582|84828313633556018"),
+        (2, "0:|17881057932258896|207829265827806723"),
+        (2, "1:|471679383716653537|601941332375668675"),
+        (2, "2:|47402714132719780|346160696341791110"),
+        (2, "3:|124029956824066621|387569480279853788"),
+    ]
+
+
 def test_lsh_incremental_bucketed_index_no_corpus_reshuffle(spark):
     """The 100 TB ingest shape: with the corpus band index stored
     band-bucketed (write_bucketed), candidate generation reuses the
-    bucket partitioning — the executed plan shuffles ONLY the batch
-    side (one Exchange on the band key); a plain-parquet index is the
-    control and shuffles both sides."""
+    bucket partitioning — the executed plan shuffles ONLY batch band
+    rows (the cross join's batch side and both sides of the
+    batch-internal self-join); a plain-parquet index is the control
+    and adds the one corpus-side Exchange on the band key."""
     from gcp_dataengineering_spark.llm_ops.dedup import (
         lsh_incremental_pairs,
         minhash_band_rows,
@@ -1924,18 +1949,18 @@ def test_lsh_incremental_bucketed_index_no_corpus_reshuffle(spark):
         write_bucketed(bands, "corpus_band_index", "band", num_buckets=8, sort_col="band")
         indexed = spark.table("corpus_band_index")
         plan_idx = (
-            lsh_incremental_pairs(batch, indexed, include_batch_internal=False)
+            lsh_incremental_pairs(batch, indexed)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "Bucketed: true" in plan_idx
-        assert plan_idx.count("Exchange hashpartitioning(band#") == 1, plan_idx
+        assert plan_idx.count("Exchange hashpartitioning(band#") == 3, plan_idx
         # control: the same index as plain parquet shuffles both sides
         plain = bands  # unbucketed lineage stands in for a plain reload
         plan_plain = (
-            lsh_incremental_pairs(batch, plain, include_batch_internal=False)
+            lsh_incremental_pairs(batch, plain)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        assert plan_plain.count("Exchange hashpartitioning(band#") == 2, plan_plain
+        assert plan_plain.count("Exchange hashpartitioning(band#") == 4, plan_plain
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.sql("DROP TABLE IF EXISTS corpus_band_index")
@@ -4957,6 +4982,13 @@ def test_phash_signed_band_extraction_and_guards(spark):
     assert pairs[(1, 3)]["hamming"] == 0 and pairs[(1, 3)]["shared_bands"] == 4
     # -1 vs -2 differ only in bit 0: bands 1..3 agree, hamming 1
     assert pairs[(1, 2)]["hamming"] == 1 and pairs[(1, 2)]["shared_bands"] == 3
+
+    # bands=1: the one 64-bit segment is the whole hash (no mask —
+    # 2^64 - 1 is no long literal), so only equal hashes pair
+    assert {
+        (r["id_a"], r["id_b"], r["shared_bands"], r["hamming"])
+        for r in phash_candidate_pairs(hashes, bands=1).collect()
+    } == {(1, 3, 1, 0)}
 
     media = spark.createDataFrame([(1, bytearray(b""))], "media_id long, payload binary")
     with _pytest.raises(ValueError, match="pigeonhole"):
