@@ -2,8 +2,8 @@
 (``stage_1_hcp_channel_all_hardcode.py:1261-1304``): parse (config
 path, environment, batch id) → read the INI and fail fast on a
 missing section → build the Spark session → audit INITIATED → TAM
-job → digital job → audit COMPLETED, then print one JSON summary
-line per output table.
+and digital jobs at once (``pipelines.jobs.run_all``) → audit
+COMPLETED, then print one JSON summary line per output table.
 
 The INI section (one per environment, mirroring the reference's
 ``[dev]``/``[prod]`` table bindings at stage_1:52-91) maps each

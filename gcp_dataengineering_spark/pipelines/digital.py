@@ -64,6 +64,7 @@ from ..ops.conform import (
 )
 from ..ops.pivot import conditional_pivot
 from ..ops.vintage import union_vintage_ranges
+from ..sources.io import local_frame
 
 BRAND = "XOLAIR"
 
@@ -323,12 +324,17 @@ def hcp_paid_search(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
+def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame],
+                     pins: list[DataFrame] | None = None) -> DataFrame:
     """``stage_1:817-1066`` — the monster: weekly pivoted feed +
     monthly feeds, channel recodes, legacy fraction pots ∪ new pots,
     per-channel monthly reach, full-join discovery of unallocated
     2024 cost, and its /11 (Custom) & /9 (Paid Social)
-    redistribution."""
+    redistribution.
+
+    Three intermediates are persisted; they are appended to ``pins``
+    when given, so the caller can ``unpersist`` them once the result
+    is computed (``jobs.run_digital_job`` does)."""
     null_str = typed_null("string")
 
     # pivoted_hcp_all (stage_1:823-838): conditional-agg pivot A3; the
@@ -424,7 +430,7 @@ def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
 
     # spend_data + channel_allocations (stage_1:949-991)
     spend = legacy_costs(t["costs_wide"], "npp").withColumnRenamed("cost", "total_cost")
-    fractions = spark.createDataFrame(LEGACY_CHANNEL_FRACTIONS, "channel string, frac double")
+    fractions = local_frame(spark, LEGACY_CHANNEL_FRACTIONS, "channel string, frac double")
     alloc_old = spend.crossJoin(F.broadcast(fractions)).select(
         F.lit(BRAND).alias("brand"), "year", "month", "channel",
         (F.col("total_cost") * F.col("frac")).alias("cost"),
@@ -449,6 +455,8 @@ def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     # reference also groups by brand, a single literal here.
     keys = ["year", "month", "channel"]
     monthly_reach = grouped_totals(all_hcp, "reach", keys).persist(StorageLevel.MEMORY_AND_DISK)
+    if pins is not None:
+        pins += [monthly_reach, allocations, all_hcp]
     d_mr = reach_share(all_hcp, "reach", keys, totals=monthly_reach)
 
     # final_allocation_including_missing_cost + missing_cost_channel_year
@@ -502,18 +510,20 @@ def hcp_all_channels(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def nvs_digital(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
+def nvs_digital(spark: SparkSession, t: dict[str, DataFrame],
+                pins: list[DataFrame] | None = None) -> DataFrame:
     """6-way union (``stage_1:1069-1084``). The five simple channels
     emit month INT, hcp_all_channels emits month STRING — the union
     coerces month to STRING (SQL positional-union behavior, made
-    explicit here; SURVEY §4 quirk 4)."""
+    explicit here; SURVEY §4 quirk 4). ``pins`` collects
+    hcp_all_channels' persisted intermediates."""
     parts = [
         dtc_display(spark, t),
         dtc_paid_search(spark, t),
         dtc_poc(spark, t),
         dtc_paid_social(spark, t),
         hcp_paid_search(spark, t),
-        hcp_all_channels(spark, t),
+        hcp_all_channels(spark, t, pins),
     ]
     out = None
     for p in parts:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..ops.allocate import allocate_window
 from ..ops.conform import typed_null, yrmo_year
 from ..ops.vintage import union_vintage_ranges
+from ..sources.io import local_frame
 
 CALL_COLS = [
     "npi_num", "zip_cd", "city", "state", "brand", "yrmo",
@@ -73,7 +74,7 @@ def nvs_tam(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
         )
     )
 
-    costs = spark.createDataFrame(TAM_COSTS, "brand string, cost double, year string")
+    costs = local_frame(spark, TAM_COSTS, "brand string, cost double, year string")
 
     # stage_1:141-153 — reach = 1/display_order; join on brand + substr(ym,1,4)=year
     hcp_costs = normalized.join(

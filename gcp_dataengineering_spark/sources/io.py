@@ -7,8 +7,8 @@ Reimplements the reference's write protocol on plain Spark:
 - versioned history: probe max(version), stamp version = last+1,
   ``write.partitionBy('version').mode('append')``
   (``stage_1:208-222, 1110-1125``)
-- audit rows: list-of-dicts → createDataFrame → append parquet
-  (``stage_1:1240-1258``)
+- audit rows: one bound-parameter ``VALUES`` row (``local_frame``)
+  → append parquet, one file in one task (``stage_1:1240-1258``)
 - CSV directory → Parquet (corrected version of
   ``Python_Scripts/csv_to_parquet.py`` — the original is misnamed
   and passes directories to single-file pandas APIs; this one is a
@@ -27,8 +27,9 @@ import json
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def write_snapshot(df: DataFrame, path: str, num_files: int = 8) -> None:
@@ -76,6 +77,39 @@ def write_versioned_history(
     return version
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small constant frame built on the JVM: a ``VALUES`` inline
+    table whose cells are bound parameters cast to the DDL ``schema``
+    types. It plans as a ``LocalTableScan``, so a broadcast of it
+    needs no Spark job, a write of it runs one task per row (at most
+    the default parallelism) and no Python worker starts — unlike
+    ``createDataFrame`` over a list, whose ``ExistingRDD`` scan ships
+    pickled rows through a parallelized RDD. Parameters keep Python
+    values typed (a float stays ``double``, never a SQL ``decimal``
+    literal; a tz-aware datetime keeps its instant to the microsecond;
+    ``None`` is a typed NULL)."""
+    fields = StructType.fromDDL(schema).fields
+    args = {}
+    tuples = []
+    for i, row in enumerate(rows):
+        cells = []
+        for j, (field, value) in enumerate(zip(fields, row, strict=True)):
+            args[f"v{i}_{j}"] = value
+            cells.append(f"CAST(:v{i}_{j} AS {field.dataType.simpleString()})")
+        tuples.append(f"({', '.join(cells)})")
+    names = ", ".join(f"`{f.name}`" for f in fields)
+    return spark.sql(f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})", args=args)
+
+
+AUDIT_SCHEMA = (
+    # rows_updated is bigint: at the target scale table counts exceed
+    # 2^31 and an int audit column would overflow the audit path
+    "table_name string, rows_updated bigint, log_id_status string, "
+    "script_exe_start_time timestamp, script_exe_end_time timestamp, "
+    "etl_script string, etl_layer string, batch_id string"
+)
+
+
 def audit_rows(
     spark: SparkSession,
     table_name: str,
@@ -87,27 +121,12 @@ def audit_rows(
     start_time: datetime | None = None,
     end_time: datetime | None = None,
 ) -> DataFrame:
-    """S5+S6 — audit-log rows (schema at ``stage_1:1240-1257``,
-    FIXTURES.md §B.15): local collection → createDataFrame."""
-    now = datetime.now(timezone.utc)
-    row = Row(
-        table_name=table_name,
-        rows_updated=rows_updated,
-        log_id_status=status,
-        script_exe_start_time=start_time or now,
-        script_exe_end_time=end_time,
-        etl_script=etl_script,
-        etl_layer=etl_layer,
-        batch_id=batch_id,
-    )
-    # rows_updated is bigint: at the target scale table counts exceed
-    # 2^31 and an int audit column would overflow the audit path
-    schema = (
-        "table_name string, rows_updated bigint, log_id_status string, "
-        "script_exe_start_time timestamp, script_exe_end_time timestamp, "
-        "etl_script string, etl_layer string, batch_id string"
-    )
-    return spark.createDataFrame([row], schema=schema)
+    """S5+S6 — one audit-log row (schema at ``stage_1:1240-1257``,
+    FIXTURES.md §B.15) as a ``local_frame``; the start time defaults
+    to now."""
+    row = (table_name, rows_updated, status, start_time or datetime.now(timezone.utc),
+           end_time, etl_script, etl_layer, batch_id)
+    return local_frame(spark, [row], AUDIT_SCHEMA)
 
 
 def append_audit(df: DataFrame, path: str) -> None:

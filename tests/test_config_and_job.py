@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import glob
+
 import pytest
 
 from gcp_dataengineering_spark.config import (
@@ -103,6 +105,81 @@ def test_run_all_jobs(spark, ref_tables, tmp_path):
     statuses = [r["log_id_status"] for r in audit.collect()]
     assert statuses.count("INITIATED") == 1
     assert statuses.count("COMPLETED") >= 5  # 2 per table job + final
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_run_all_releases_its_caches(spark, ref_tables, tmp_path, monkeypatch):
+    """run_all leaves no frame it persisted cached (the two outputs and
+    hcp_all_channels' three intermediates) and no new RDD blocks."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.storagelevel import StorageLevel
+
+    persisted = []
+    persist = DataFrame.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", recording_persist)
+    before = _persistent_rdd_ids(spark)
+    run_all(spark, ref_tables, str(tmp_path / "out"))
+    assert len(persisted) == 5
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    assert _persistent_rdd_ids(spark) <= before
+
+
+def test_run_all_table_job_failure(spark, ref_tables, tmp_path):
+    """When one table job raises, run_all waits for the other,
+    re-raises the error and writes no job-COMPLETED audit row; every
+    audit file stays readable."""
+    import duckdb
+
+    out = str(tmp_path / "out")
+    broken = {k: v for k, v in ref_tables.items() if k != "hcp_org"}
+    with pytest.raises(KeyError, match="hcp_org"):
+        run_all(spark, broken, out, batch_id="b-fail")
+    files = sorted(glob.glob(f"{out}/audit_job_info/*.parquet"))
+    con = duckdb.connect()
+    rows = [
+        row for f in files
+        for row in con.execute(
+            f"SELECT table_name, log_id_status FROM read_parquet('{f}')").fetchall()
+    ]
+    # the digital table job ran to the end while the TAM one failed
+    assert sorted(rows) == [
+        ("job", "INITIATED"),
+        ("mars_combined_nvs_data_historical", "COMPLETED"),
+        ("mars_combined_nvs_data_staging", "COMPLETED"),
+    ]
+
+
+def test_concurrent_audit_appends_all_land(spark, tmp_path):
+    """Audit appends from more threads than cores, with a short switch
+    interval, each leave exactly their one row (the audit lock keeps
+    their parquet commits apart)."""
+    import sys
+
+    import duckdb
+
+    from gcp_dataengineering_spark.pipelines.jobs import _audit, _run_concurrently
+
+    path = str(tmp_path / "audit")
+    n = 8
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        _run_concurrently(spark, [
+            lambda i=i: _audit(spark, path, f"t{i}", i, "COMPLETED", "b") for i in range(n)
+        ])
+    finally:
+        sys.setswitchinterval(interval)
+    rows = duckdb.connect().execute(
+        f"SELECT table_name, rows_updated FROM read_parquet('{path}/*.parquet')").fetchall()
+    assert sorted(rows) == sorted((f"t{i}", i) for i in range(n))
 
 
 def test_fixture_table_constant_in_sync():

@@ -46,19 +46,58 @@ def test_versioned_history_protocol(spark, tmp_path):
 
 
 def test_audit_rows(spark, tmp_path):
+    from datetime import datetime, timedelta, timezone
+
+    from gcp_dataengineering_spark.fixtures import FIXTURE_TABLES, ensure_parquet, fixture_path
+    from gcp_dataengineering_spark.pipelines.digital import nvs_digital
+    from gcp_dataengineering_spark.pipelines.tam import nvs_tam
+
     path = str(tmp_path / "audit")
-    append_audit(
-        audit_rows(spark, "t1", 42, "COMPLETED", "script", "normalized", "b1"), path
-    )
-    append_audit(
-        audit_rows(spark, "t1", 0, "INITIATED", "script", "normalized", "b2"), path
-    )
+    start = datetime(2024, 2, 29, 23, 59, 58, 123456, tzinfo=timezone(timedelta(hours=-5)))
+    end = datetime(2024, 3, 1, 5, 0, 1, 7, tzinfo=timezone.utc)
+    big = 2**31 + 7
+    appends = [
+        audit_rows(spark, "t1", 42, "COMPLETED", "script", "normalized", "b1"),
+        audit_rows(spark, "t1", 0, "INITIATED", "script", "normalized", "b2"),
+        audit_rows(spark, "t2", big, "COMPLETED", "script", "normalized", "b3", start, end),
+    ]
+    for i, rows in enumerate(appends, 1):
+        append_audit(rows, path)
+        # one data file per one-row append
+        assert len(glob.glob(os.path.join(path, "part-*.parquet"))) == i
     df = spark.read.parquet(path)
-    assert df.count() == 2
-    assert set(df.columns) == {
-        "table_name", "rows_updated", "log_id_status", "script_exe_start_time",
-        "script_exe_end_time", "etl_script", "etl_layer", "batch_id",
+    assert df.dtypes == [
+        ("table_name", "string"), ("rows_updated", "bigint"), ("log_id_status", "string"),
+        ("script_exe_start_time", "timestamp"), ("script_exe_end_time", "timestamp"),
+        ("etl_script", "string"), ("etl_layer", "string"), ("batch_id", "string"),
+    ]
+    got = {
+        r["batch_id"]: r for r in df.select(
+            "batch_id", "rows_updated", "script_exe_end_time",
+            F.unix_micros("script_exe_start_time").alias("start_us"),
+            F.unix_micros("script_exe_end_time").alias("end_us"),
+        ).collect()
     }
+    assert {b: r["rows_updated"] for b, r in got.items()} == {"b1": 42, "b2": 0, "b3": big}
+    # tz-aware instants survive to the microsecond; no end time is NULL
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    assert got["b3"]["start_us"] == (start - epoch) // timedelta(microseconds=1)
+    assert got["b3"]["end_us"] == (end - epoch) // timedelta(microseconds=1)
+    assert got["b1"]["script_exe_end_time"] is None
+
+    # the constant frames plan on the JVM, not as a parallelized
+    # Python collection
+    ensure_parquet()
+    tables = {name: spark.read.parquet(fixture_path(name)) for name in FIXTURE_TABLES}
+    pins = []
+    frames = [appends[0], nvs_tam(spark, tables), nvs_digital(spark, tables, pins)]
+    try:
+        for frame in frames:
+            plans = frame._jdf.queryExecution().toString()
+            assert "ExistingRDD" not in plans and "LogicalRDD" not in plans
+    finally:
+        for pin in pins:
+            pin.unpersist()
 
 
 def test_csv_dir_to_parquet(spark, tmp_path):

@@ -11,6 +11,9 @@ the same strings against parquet-materialized fixtures).
 
 from __future__ import annotations
 
+import functools
+
+import pytest
 from pyspark.sql import functions as F
 
 from gcp_dataengineering_spark.pipelines.digital import (
@@ -97,12 +100,24 @@ def test_hcp_paid_search_parity(spark, ref_tables, duck):
 
 
 
-def test_hcp_all_channels_parity(spark, ref_tables, duck):
-    assert_matches_sql(hcp_all_channels(spark, ref_tables), duck, HCP_ALL_SQL)
+@pytest.fixture
+def pins():
+    """hcp_all_channels' persisted intermediates, unpersisted after the
+    test. Its constant frames are local relations, so an intermediate
+    left cached over the same inputs would be reused by a later test's
+    call, and show in that call's plan as a cached subplan."""
+    held = []
+    yield held
+    for df in held:
+        df.unpersist()
 
 
-def test_digital_union_schema_and_rows(spark, ref_tables):
-    df = nvs_digital(spark, ref_tables)
+def test_hcp_all_channels_parity(spark, ref_tables, duck, pins):
+    assert_matches_sql(hcp_all_channels(spark, ref_tables, pins), duck, HCP_ALL_SQL)
+
+
+def test_digital_union_schema_and_rows(spark, ref_tables, pins):
+    df = nvs_digital(spark, ref_tables, pins)
     assert df.columns == [
         "brand", "channel", "audience", "year", "month", "zip_code", "dma",
         "state", "country", "reach", "engage", "cost",
@@ -113,7 +128,7 @@ def test_digital_union_schema_and_rows(spark, ref_tables):
     parts = sum(
         fn(spark, ref_tables).count()
         for fn in (dtc_display, dtc_paid_search, dtc_poc, dtc_paid_social,
-                   hcp_paid_search, hcp_all_channels)
+                   hcp_paid_search, functools.partial(hcp_all_channels, pins=pins))
     )
     assert n == parts > 0
 
@@ -134,7 +149,7 @@ def test_tam_job_protocol(spark, ref_tables, tmp_path):
     assert audit.count() == 4
 
 
-def test_hcp_all_shared_intermediates_persisted(spark, ref_tables):
+def test_hcp_all_shared_intermediates_persisted(spark, ref_tables, pins):
     """all_hcp_unioned / monthly_reach / channel_allocations are
     multiply-consumed; the pipeline persists them explicitly so a
     non-AQE (or AQE-cache-miss) deployment still computes each once.
@@ -146,19 +161,19 @@ def test_hcp_all_shared_intermediates_persisted(spark, ref_tables):
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        out = hcp_all_channels(spark, ref_tables)
+        out = hcp_all_channels(spark, ref_tables, pins)
         n_off = out.count()
         plan = out._jdf.queryExecution().executedPlan().toString()
         # every reuse site reads the cache, not the raw lineage
         assert plan.count("InMemoryTableScan") >= 6
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-        n_on = hcp_all_channels(spark, ref_tables).count()
+        n_on = hcp_all_channels(spark, ref_tables, pins).count()
         assert n_off == n_on
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
-def test_digital_plan_shape_at_scale(spark, ref_tables):
+def test_digital_plan_shape_at_scale(spark, ref_tables, pins):
     """Scale insurance for the e2e gate: the parity fixtures are tiny,
     so a plan that only breaks when the fact side is big (e.g. a
     literal-join broadcast degenerating into a cartesian product, or a
@@ -190,7 +205,7 @@ def test_digital_plan_shape_at_scale(spark, ref_tables):
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        out = nvs_digital(spark, scaled)
+        out = nvs_digital(spark, scaled, pins)
         assert out.count() > 0
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("CartesianProduct") == 0, "cartesian product at scale"
@@ -198,7 +213,7 @@ def test_digital_plan_shape_at_scale(spark, ref_tables):
         assert n_bnlj <= 2, f"{n_bnlj} BroadcastNestedLoopJoins (2 intended)"
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-    out_aqe = nvs_digital(spark, scaled)
+    out_aqe = nvs_digital(spark, scaled, pins)
     assert out_aqe.count() > 0
     assert "CartesianProduct" not in out_aqe._jdf.queryExecution().executedPlan().toString()
 

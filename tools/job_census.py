@@ -9,9 +9,11 @@ on, over its seeded input (generated by importing
 - ``mars_etl``: the reference job, ``pipelines.jobs.run_all``, over
   the reference-shaped tables.
 
-Around every classic action (DataFrame, DataFrameWriter and RDD) it
-sets the job description to the innermost call site inside the
-package, so each Spark job the action submits carries that label.
+Around every classic action (DataFrame, DataFrameWriter and RDD) and
+around ``DataFrameReader.parquet`` (whose schema inference runs a
+Spark job per read) it sets the job description to the innermost
+call site inside the package, or else to the caller outside it, so
+each Spark job the call submits carries that label.
 After the session stops it parses the uncompressed event log and
 prints jobs, tasks and summed job wall time per call site, in the
 order the job first reached each site.
@@ -52,6 +54,8 @@ DATAFRAME_ACTIONS = (
 WRITER_ACTIONS = (
     "save", "parquet", "json", "csv", "orc", "text", "saveAsTable", "insertInto",
 )
+# reads that run a Spark job to infer the schema
+READER_CALLS = ("parquet",)
 RDD_ACTIONS = (
     "collect", "count", "take", "first", "reduce", "fold", "aggregate", "sum",
     "max", "min", "top", "takeOrdered", "isEmpty", "foreach", "foreachPartition",
@@ -61,20 +65,26 @@ RDD_ACTIONS = (
 _depth = threading.local()
 
 
+def _site(frame, base: str, prefix: str = "") -> str:
+    path = frame.f_code.co_filename
+    mod = os.path.splitext(os.path.relpath(path, base))[0].replace(os.sep, ".")
+    src = linecache.getline(path, frame.f_lineno).strip()
+    return f"{prefix}{mod}.{frame.f_code.co_name}:{frame.f_lineno}  {src[:60]}"
+
+
 def _call_site(pkg_dir: str) -> str:
     """``module.function:line  source`` of the innermost frame inside
-    the package, or ``(outside package)``. The materialize helpers
-    are skipped, so a pin is labelled with the line that asked for it."""
-    frame = sys._getframe(2)
+    the package, else ``(outside package) ...`` with the direct
+    caller. The materialize helpers are skipped, so a pin is labelled
+    with the line that asked for it."""
+    caller = frame = sys._getframe(2)
     skip = os.path.join(pkg_dir, "llm_ops", "materialize.py")
     while frame is not None:
         path = frame.f_code.co_filename
         if path.startswith(pkg_dir) and path != skip:
-            mod = os.path.splitext(os.path.relpath(path, pkg_dir))[0].replace(os.sep, ".")
-            src = linecache.getline(path, frame.f_lineno).strip()
-            return f"{mod}.{frame.f_code.co_name}:{frame.f_lineno}  {src[:60]}"
+            return _site(frame, pkg_dir)
         frame = frame.f_back
-    return "(outside package)"
+    return _site(caller, HERE, "(outside package) ")
 
 
 def _labelled(fn, sc, pkg_dir: str):
@@ -99,10 +109,10 @@ def _labelled(fn, sc, pkg_dir: str):
 def label_actions(sc, pkg_dir: str) -> None:
     from pyspark.core.rdd import RDD
     from pyspark.sql.classic.dataframe import DataFrame
-    from pyspark.sql.readwriter import DataFrameWriter
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
 
-    for cls, names in ((DataFrame, DATAFRAME_ACTIONS),
-                       (DataFrameWriter, WRITER_ACTIONS), (RDD, RDD_ACTIONS)):
+    for cls, names in ((DataFrame, DATAFRAME_ACTIONS), (DataFrameWriter, WRITER_ACTIONS),
+                       (DataFrameReader, READER_CALLS), (RDD, RDD_ACTIONS)):
         for name in names:
             setattr(cls, name, _labelled(getattr(cls, name), sc, pkg_dir))
 
