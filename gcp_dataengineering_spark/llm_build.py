@@ -358,7 +358,10 @@ def released_pins(spark):
     """Unpersist, on exit, every RDD pinned inside the block — the
     build's localCheckpoint / persist blocks — whether the block
     returned or raised. RDDs persistent before the block (frames the
-    caller cached) keep their storage."""
+    caller cached) keep their storage. Reliable-checkpoint files
+    (pins made under a session checkpoint directory) are not
+    persistent RDDs: they stay under that directory, which the
+    deployment owns."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
     try:

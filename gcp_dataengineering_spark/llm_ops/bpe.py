@@ -174,7 +174,7 @@ def bpe_apply_words(
     # char explode: one row per character occurrence (the split
     # pattern matches between every pair of chars AND at the end —
     # drop the trailing empty string). Rounds use the module's
-    # lineage-TRUNCATING materializer, not persist: each round adds
+    # lineage-TRUNCATING pin, not persist: each round adds
     # a join + several window operators to the logical plan and
     # Catalyst re-analyzes the whole cumulative plan per action —
     # quadratic in rounds (bpe_train measured 10+ min vs seconds);

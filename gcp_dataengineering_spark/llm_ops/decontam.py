@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _band_rows, _sig_matches, minhash_signatures, shingle_rows
-from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 
 
@@ -71,7 +70,7 @@ def contamination_hits(
     n: int = 13,
     min_shared: int = 1,
     max_gram_freq: int | None = None,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
     min_shared_frac: tuple[int, int] | None = None,
 ) -> DataFrame:
     """(doc_id, n_shared_grams, n_eval_docs) for every train document
@@ -192,7 +191,7 @@ def contamination_minhash(
     bands: int = 4,
     n: int = 3,
     min_est_jaccard: float = 0.5,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """FUZZY eval overlap — near-duplicate contamination that exact
     n-gram collision misses (light paraphrases, re-punctuated or
@@ -251,7 +250,7 @@ def decontaminate_fuzzy(
     bands: int = 4,
     n: int = 3,
     min_est_jaccard: float = 0.5,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """The train corpus minus FUZZY-contaminated documents (LEFT ANTI
     against :func:`contamination_minhash` ids) — the near-duplicate

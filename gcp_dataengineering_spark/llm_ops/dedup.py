@@ -22,15 +22,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 from .text import fingerprint, md5_60bit
 
 # Every operator below that materializes an intermediate takes a
-# ``materialize=`` parameter (strategy name | callable | False) and
-# defaults to the module-wide strategy in llm_ops.materialize —
-# localCheckpoint locally; switch to 'checkpoint' / 'parquet:<dir>'
-# on a cluster so a multi-hour job survives executor loss.
+# ``materialize=`` parameter (None/True pin, False skips) and pins
+# per llm_ops.materialize — localCheckpoint locally; a session
+# checkpoint directory makes the pins reliable checkpoints, so a
+# multi-hour job on a cluster survives executor loss.
 
 
 # ------------------------------------------------------------ exact
@@ -111,7 +110,7 @@ def ngram_jaccard_pairs(
     n: int = 3,
     min_jaccard: float = 0.0,
     max_shingle_freq: int | None = None,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
     _keep_sizes: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by n-gram Jaccard similarity via posting-list
@@ -127,10 +126,10 @@ def ngram_jaccard_pairs(
     (when capped) the document-frequency aggregation — without a
     checkpoint the scan→shingle lineage executes up to 8× (verified:
     the round-2 executed plan showed 8 parquet scans, 0
-    ReusedExchange). HOW it materializes is the ``materialize``
-    strategy (see llm_ops.materialize): localCheckpoint by default,
-    'checkpoint'/'parquet:<dir>' for fault tolerance on a cluster,
-    False to skip (caller owns caching + pushdown)."""
+    ReusedExchange). ``materialize`` follows llm_ops.materialize:
+    localCheckpoint, or a reliable checkpoint when the session has a
+    checkpoint directory (fault tolerance on a cluster); False skips
+    (caller owns caching + pushdown)."""
     sh = _materialize(shingle_rows(df, text_col, id_col, n), materialize)
     if max_shingle_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
@@ -173,7 +172,7 @@ def ngram_containment_pairs(
     n: int = 3,
     min_containment: float = 0.8,
     max_shingle_freq: int | None = None,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Near-dup pairs by n-gram CONTAINMENT: |A∩B| / min(|A|, |B|) —
     the one-sided overlap measure that catches subset duplication
@@ -232,7 +231,7 @@ def _band_rows(
     num_hashes: int,
     bands: int,
     keep_sig: bool = False,
-    materialize: str | MaterializeFn | bool | None = False,
+    materialize: bool | None = False,
 ) -> DataFrame:
     """The one MinHash band builder: (doc_id, [sig,] band) rows of a
     signature frame (doc_id, m0..m{k-1}), one row per band. ``band``
@@ -300,7 +299,7 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     num_hashes: int = 8,
     bands: int = 4,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """LSH banding: split the signature into `bands` bands of
     num_hashes/bands rows; docs sharing ANY band signature are
@@ -320,7 +319,7 @@ def minhash_dedup_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     n: int = 3,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup candidates with estimated similarity:
     (id_a, id_b, shared_bands, est_jaccard) where est_jaccard is the
@@ -337,9 +336,9 @@ def minhash_dedup_pairs(
     runs once and the self-join reads the materialized blocks; the
     signature array rides along through the band explode so the
     similarity estimate needs no third pass either. (On a real
-    cluster, `checkpoint()` to a durable store or a parquet
-    write/read of the signatures does the same job with fault
-    tolerance; localCheckpoint is the single-JVM equivalent.)"""
+    cluster, a session checkpoint directory turns the pin into a
+    reliable `checkpoint()` to a durable store, the same job with
+    fault tolerance; localCheckpoint is the single-JVM equivalent.)"""
     rows = _band_rows(
         minhash_signatures(df, text_col, id_col, num_hashes, n),
         num_hashes, bands, keep_sig=True, materialize=materialize,
@@ -416,7 +415,7 @@ def lsh_incremental_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     n: int = 3,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs of a NEW batch against an EXISTING
     corpus LSH index (``corpus_bands`` = ``minhash_band_rows`` of the
@@ -466,7 +465,7 @@ def ingest_batch(
     bands: int = 4,
     n: int = 3,
     min_shared_bands: int = 1,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
     """The composed incremental-ingest flow a real pipeline runs per
     arriving batch: exact-dedup the batch against the corpus
@@ -572,7 +571,7 @@ def resolve_dup_groups(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 25,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs → one keeper per
     duplicate group: (doc_id, group_id) where group_id is the minimum
@@ -684,9 +683,9 @@ def resolve_dup_groups(
         # new-vs-old join + action the round-3 version paid per
         # iteration. Materialize FIRST (truncates the growing
         # lineage — without it the plan doubles per round); with a
-        # durable strategy ('checkpoint' / 'parquet:<dir>') an
-        # executor loss mid-loop resumes from the last round's
-        # labels instead of killing the job.
+        # session checkpoint directory the pin is a reliable
+        # checkpoint, so an executor loss mid-loop resumes from the
+        # last round's labels instead of killing the job.
         new_labels = _materialize(
             stepped.select(
                 "node",

@@ -61,7 +61,6 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 from .quality_model import (
     FRAC_BITS,
@@ -315,7 +314,7 @@ def dsir_resample(
     flag_col: str = "selected",
     key_shift: int = DSIR_KEY_SHIFT,
     frac_bits: int = FRAC_BITS,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
     part_cols: list[str] | tuple[str, ...] = (),
 ) -> DataFrame:
     """Gumbel-top-k importance resampling: keep ≈ ``keep_num /

@@ -48,7 +48,6 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 from .text import _bind1, md5_60bit
 
@@ -518,7 +517,7 @@ def semantic_dedup_pairs(
     n_planes: int = 8,
     n_tables: int = 8,
     seed: int = 7,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """SemDeDup-style near-SEMANTIC-duplicate pairs straight from a
     TEXT column — no pre-computed vectors needed (the r12 verdict's
@@ -561,7 +560,7 @@ def semantic_dedup(
     n_planes: int = 8,
     n_tables: int = 8,
     seed: int = 7,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Full semantic-dedup resolution: (doc_id, group_id) where
     group_id is the minimum doc id reachable through the

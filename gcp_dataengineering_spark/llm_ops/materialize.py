@@ -1,236 +1,40 @@
-"""Pluggable materialization for iterative / self-join operators.
+"""One pin rule for iterative / self-join operators.
 
-The dedup / LSH / connected-components family must eagerly
-materialize expensive intermediates (shingle tables, minhash
-signatures, CC edge lists and per-round labels): both sides of a
-self-join re-run the producing lineage otherwise (ReuseExchange does
-not fire across a BroadcastExchange), and an iterative loop's plan
-doubles per round without truncation. HOW they materialize is a
-deployment decision, not an algorithmic one:
+The dedup / LSH / connected-components family must eagerly pin
+expensive intermediates (shingle tables, minhash signatures, CC edge
+lists and per-round labels): both sides of a self-join re-run the
+producing lineage otherwise (ReuseExchange does not fire across a
+BroadcastExchange), and an iterative loop's plan doubles per round
+without truncation.
 
-- ``localCheckpoint`` (default): fastest on a single JVM — blocks
-  live in executor storage, NOT fault-tolerant. The right choice for
-  local[*] and for clusters where re-running the job on executor
-  loss is acceptable.
-- ``checkpoint``: Spark's reliable checkpoint to
-  ``spark.sparkContext.setCheckpointDir(...)`` (HDFS/S3/GCS on a
-  cluster) — survives executor loss; the right choice for a
-  multi-hour 100 TB dedup where losing one executor must not kill
-  the whole job.
-- ``parquet:<dir>``: explicit write-then-read spill. Same durability
-  as ``checkpoint`` plus the intermediate is a plain parquet table —
-  inspectable, reusable across jobs, and columnar-compressed (often
-  smaller than checkpoint block files for wide rows).
-- ``none``: no materialization. The caller owns caching; downstream
-  filter/projection pushdown reaches the producing plan. Correct but
-  pathological for the iterative CC loop (lineage grows per round) —
-  intended for callers who persist() themselves.
+``materialize(df, pin)``:
 
-Select globally with :func:`set_materializer` / the
-:func:`materializer` context manager, or per call via each
-operator's ``materialize=`` parameter (a strategy name, a callable
-``DataFrame -> DataFrame``, or ``False`` for none).
+- ``False`` returns ``df`` unchanged (the caller owns caching);
+- ``None`` or ``True`` pins eagerly: a reliable ``checkpoint`` when
+  the session has a checkpoint directory, else ``localCheckpoint``.
+
+Durability is the deployment's statement, not an option here: a job
+whose pins must survive executor loss sets
+``spark.sparkContext.setCheckpointDir(<HDFS/S3/GCS path>)``; without
+one, pins are executor-storage blocks, the fastest form on a single
+JVM.
 """
 
 from __future__ import annotations
 
-import uuid
-from collections.abc import Callable
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 
-MaterializeFn = Callable[[DataFrame], DataFrame]
 
-
-def local_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint: executor-storage blocks, single-JVM
-    durability (lost on executor failure)."""
-    return df.localCheckpoint(eager=True)
-
-
-def reliable_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager reliable checkpoint to the session's checkpoint dir;
-    raises with a clear message if none is configured."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        raise RuntimeError(
-            "materialize strategy 'checkpoint' requires a checkpoint dir: "
-            "call spark.sparkContext.setCheckpointDir('<durable path>') first "
-            "(HDFS/S3/GCS on a cluster)"
+def materialize(df: DataFrame, pin: bool | None = None) -> DataFrame:
+    """Pin ``df`` per the module rule; any other ``pin`` value
+    raises ``TypeError``."""
+    if pin is False:
+        return df
+    if pin is not None and pin is not True:
+        raise TypeError(
+            f"materialize= takes None, True or False, not {pin!r}; pins "
+            "are durable when the session has a checkpoint directory"
         )
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
     return df.checkpoint(eager=True)
-
-
-class ParquetSpill:
-    """Spill strategy: write the DataFrame to a fresh parquet table
-    under ``spill_dir`` and read it back — durable AND inspectable.
-
-    Every spill path is registered on the instance so the caller can
-    reclaim the space: call :meth:`cleanup` when the downstream
-    consumers are done, or use the :func:`parquet_spill_dir` context
-    manager to scope the whole lifetime. Retention contract: spill
-    tables live until ``cleanup()`` (or the context exit) — an
-    iterative job like ``resolve_dup_groups`` writes one table per
-    round, so an uncleaned multi-hour run would otherwise accumulate
-    unbounded storage (the round-3 behavior this class replaces).
-
-    NOTE: cleanup() invalidates the returned DataFrames — only call
-    it after every consumer has finished (collected / written out).
-    """
-
-    def __init__(self, spill_dir: str):
-        self.spill_dir = spill_dir
-        self.paths: list[str] = []
-        self._spark = None
-
-    def __call__(self, df: DataFrame) -> DataFrame:
-        self._spark = df.sparkSession
-        path = f"{self.spill_dir}/mat-{uuid.uuid4().hex}.parquet"
-        df.write.mode("errorifexists").parquet(path)
-        self.paths.append(path)
-        return df.sparkSession.read.parquet(path)
-
-    def cleanup(self) -> int:
-        """Delete every spill table written so far; returns the number
-        of tables actually removed. Local paths go through
-        shutil.rmtree; scheme'd paths (hdfs://, s3a://, gs://) go
-        through Hadoop's FileSystem via the writing session — a plain
-        rmtree cannot touch object storage, and pretending it did
-        would leak every cluster spill silently. Paths that could not
-        be removed stay registered (so a retry is possible) and are
-        not counted."""
-        import os
-        import shutil
-
-        removed = 0
-        remaining: list[str] = []
-        while self.paths:
-            path = self.paths.pop()
-            if os.path.isdir(path):
-                shutil.rmtree(path, ignore_errors=True)
-                if os.path.isdir(path):
-                    remaining.append(path)
-                else:
-                    removed += 1
-            elif self._spark is not None:
-                try:
-                    jvm = self._spark._jvm
-                    jpath = jvm.org.apache.hadoop.fs.Path(path)
-                    fs = jpath.getFileSystem(self._spark._jsc.hadoopConfiguration())
-                    if fs.delete(jpath, True):
-                        removed += 1
-                    # delete() False = already gone: neither removed nor kept
-                except Exception:
-                    remaining.append(path)
-            # no local dir and no session: nothing to do (already gone)
-        self.paths = remaining
-        return removed
-
-
-_SPILL_INSTANCES: dict[str, ParquetSpill] = {}
-
-
-def parquet_spill(spill_dir: str) -> ParquetSpill:
-    """Strategy factory (see :class:`ParquetSpill`). Returns the SAME
-    registered instance per ``spill_dir`` — string-configured call
-    sites (``materialize='parquet:<dir>'`` coerces through here on
-    every call) would otherwise each write through a throwaway
-    instance whose path registry is immediately lost, making their
-    spills unreclaimable. With the registry,
-    ``parquet_spill(dir).cleanup()`` reclaims everything any strategy
-    pointed at that dir has written."""
-    inst = _SPILL_INSTANCES.get(spill_dir)
-    if inst is None:
-        inst = _SPILL_INSTANCES[spill_dir] = ParquetSpill(spill_dir)
-    return inst
-
-
-@contextmanager
-def parquet_spill_dir(spill_dir: str):
-    """Scoped spill strategy: sets ``parquet:<dir>`` as the module
-    default for the block and deletes every spill table on exit::
-
-        with parquet_spill_dir('/durable/tmp') as spill:
-            keepers = dedup_pipeline(...)
-            keepers.write.parquet(out)   # consume BEFORE exit
-        # all mat-*.parquet under /durable/tmp are gone
-
-    Uses the REGISTRY instance for ``spill_dir`` (not a private one):
-    a call site inside the block passing an explicit
-    ``materialize='parquet:<same dir>'`` coerces through
-    ``parquet_spill``'s registry, and with a private instance those
-    spill tables would silently survive the context exit — breaking
-    the "all gone" contract above. The flip side is documented scope:
-    spills registered against the same dir BEFORE the block are also
-    reclaimed on exit."""
-    spill = parquet_spill(spill_dir)
-    old = _current[0]
-    _current[0] = spill
-    try:
-        yield spill
-    finally:
-        _current[0] = old
-        spill.cleanup()
-
-
-def passthrough(df: DataFrame) -> DataFrame:
-    """No materialization — caller owns caching/pushdown."""
-    return df
-
-
-_NAMED: dict[str, MaterializeFn] = {
-    "localCheckpoint": local_checkpoint,
-    "checkpoint": reliable_checkpoint,
-    "none": passthrough,
-}
-
-_current: list[MaterializeFn] = [local_checkpoint]
-
-
-def _coerce(strategy: str | MaterializeFn | bool | None) -> MaterializeFn:
-    if strategy is None:
-        return _current[0]
-    if strategy is False:
-        return passthrough
-    if strategy is True:
-        return local_checkpoint
-    if isinstance(strategy, str):
-        if strategy.startswith("parquet:"):
-            return parquet_spill(strategy.split(":", 1)[1])
-        if strategy in _NAMED:
-            return _NAMED[strategy]
-        raise ValueError(
-            f"unknown materialize strategy {strategy!r}: expected one of "
-            f"{sorted(_NAMED)} or 'parquet:<dir>' or a callable"
-        )
-    return strategy
-
-
-def set_materializer(strategy: str | MaterializeFn) -> None:
-    """Set the module-wide default strategy (name or callable)."""
-    _current[0] = _coerce(strategy if strategy is not None else "localCheckpoint")
-
-
-def get_materializer() -> MaterializeFn:
-    return _current[0]
-
-
-@contextmanager
-def materializer(strategy: str | MaterializeFn):
-    """Scoped strategy override:
-    ``with materializer('checkpoint'): ...``"""
-    old = _current[0]
-    set_materializer(strategy)
-    try:
-        yield
-    finally:
-        _current[0] = old
-
-
-def materialize(
-    df: DataFrame, strategy: str | MaterializeFn | bool | None = None
-) -> DataFrame:
-    """Materialize ``df`` with the given strategy (default: the
-    module-wide one)."""
-    return _coerce(strategy)(df)

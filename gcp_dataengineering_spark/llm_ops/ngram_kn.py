@@ -77,7 +77,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 from .ngram_lm import (
     _doc_scores,
@@ -306,7 +305,7 @@ def kn_perplexity(
     id_col: str = "doc_id",
     min_count: int = 2,
     frac_bits: int = FRAC_BITS,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
     prune: dict[int, int] | None = None,
 ) -> DataFrame:
     """Order-``order`` Kneser-Ney perplexity: train on ``ref``
@@ -332,7 +331,7 @@ def kn_lm_fit(
     id_col: str = "doc_id",
     min_count: int = 2,
     frac_bits: int = FRAC_BITS,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
     prune: dict[int, int] | None = None,
 ) -> dict:
     """Fit-once form of :func:`kn_perplexity` at any order — the

@@ -66,7 +66,6 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 from .quality_model import FRAC_BITS, llog2, llog2_py, llog2_sql
 
@@ -324,7 +323,7 @@ def bigram_perplexity(
     backoff_bits: int = 4,
     frac_bits: int = FRAC_BITS,
     smoothing: str = "laplace",
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Train the bigram backoff LM on ``ref`` (default: ``docs``
     itself — the self-scored corpus form the oracle replays) and
@@ -343,10 +342,10 @@ def bigram_perplexity(
     the human-facing knob a deployment thresholds on (CCNet buckets
     head/middle/tail on exactly this number).
 
-    Branch points are materialized per the module-wide strategy
-    (``materialize``; see llm_ops.materialize): the distinct-word
-    table feeds the vocab, the unigram fold AND the totals collect,
-    and the mapped transition table feeds both the bigram counts and
+    Branch points are pinned per ``materialize`` (see
+    llm_ops.materialize): the distinct-word table feeds the vocab,
+    the unigram fold AND the totals collect, and the mapped
+    transition table feeds both the bigram counts and
     (self-trained) the scoring join — unmaterialized, the corpus
     explode+window lineage would re-run once per consumer (the
     r2 minhash lesson; the un-pinned plan showed 21 exchanges and
@@ -743,7 +742,7 @@ def bigram_lm_fit(
     min_count: int = 2,
     frac_bits: int = FRAC_BITS,
     smoothing: str = "laplace",
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> dict:
     """Train the bigram backoff LM ONCE and return it as a model
     dict of plain DataFrames + bounded scalars — the deployable form
@@ -790,7 +789,7 @@ def trigram_perplexity(
     backoff_bits_uni: int = 8,
     frac_bits: int = FRAC_BITS,
     smoothing: str = "laplace",
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Trigram backoff LM — one order closer to CCNet's 5-gram while
     staying fully SQL-replayable. Same vocab fold and <s> padding as
@@ -827,7 +826,7 @@ def trigram_lm_fit(
     min_count: int = 2,
     frac_bits: int = FRAC_BITS,
     smoothing: str = "laplace",
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> dict:
     """Order-3 mirror of :func:`bigram_lm_fit` (r17 — the r16
     verdict's item 3: before this, the trigram LM existed only as

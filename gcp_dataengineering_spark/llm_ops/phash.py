@@ -56,7 +56,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _band_pairs, resolve_dup_groups
-from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 from .multimodal import (
     _map_payloads,
@@ -202,7 +201,7 @@ def phash_candidate_pairs(
     hash_col: str = "dhash",
     bands: int = 4,
     id_col: str = "media_id",
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Pigeonhole blocking over a 64-bit hash column: split into
     ``bands`` equal-width segments; any pair within hamming distance
@@ -258,7 +257,7 @@ def image_neardup(
     hash_col: str = "dhash",
     bands: int = 4,
     batch_rows: int = 1024,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """End-to-end pixel near-dup: payloads → perceptual hashes →
     banded candidate pairs → exact hamming filter → connected

@@ -353,10 +353,10 @@ def build_training_corpus(
       balance, span dedup, the tokenizers) and the small trained
       models (quality model, DSIR weights, duplicate spans).
 
-    Pass ``None`` for the module-wide strategy (localCheckpoint
-    locally, checkpoint/parquet-spill on a cluster; see
-    llm_ops.materialize). The caller owns the pins and releases them
-    when done (``llm_build.main`` unpersists every RDD the build
+    Pass ``None`` to pin (localCheckpoint, or a reliable checkpoint
+    when the session has a checkpoint directory, as on a cluster;
+    see llm_ops.materialize). The caller owns the pins and releases
+    them when done (``llm_build.main`` unpersists every RDD the build
     pinned). Keep the default ``False`` to stay fully lazy: the
     stage_counts path persists every stage itself, and one-stage
     consumers don't pay for materialization they don't need."""

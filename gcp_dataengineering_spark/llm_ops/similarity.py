@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 
 # Fixed-point scale for the deterministic k-means: 1e-6 resolution.
@@ -387,7 +386,7 @@ def ivf_index(
     vec_col: str = "embedding",
     seed: int = 42,
     n_iter: int = 3,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF index build: fixed-iteration Lloyd's k-means as pure
     DataFrame ops, producing (assignments, centroids) —
@@ -419,8 +418,8 @@ def ivf_index(
     assignments (exact integer distances, same (dist, cluster)
     lexicographic tie-break). At 100 TB the index is built once,
     persisted with the table (ideally as the bucketing key), and
-    reused by every query batch; intermediates materialize per the
-    ``materialize`` strategy (llm_ops.materialize)."""
+    reused by every query batch; intermediates are pinned per
+    ``materialize`` (llm_ops.materialize)."""
     from .corpus import hash_bucket
 
     if n_iter < 1:
@@ -499,7 +498,7 @@ def cluster_balanced_sample(
     n_iter: int = 3,
     order_salt: str = "cbal",
     flag_col: str = "selected",
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """D4-style cluster-balanced selection (Tirumala et al. 2023 —
     the published recipe that follows semantic dedup: k-means the
@@ -884,7 +883,7 @@ def pq_index(
     vec_col: str = "embedding",
     seed: int = 42,
     n_iter: int = 2,
-    materialize: MaterializeFn | str = "localCheckpoint",
+    materialize: bool | None = None,
     rotation: tuple[list[int], list[int]] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization codebooks + codes: ``m`` independent

@@ -54,7 +54,6 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .materialize import MaterializeFn
 from .materialize import materialize as _materialize
 from .quality_model import FRAC_BITS, llog2, llog2_py
 
@@ -300,7 +299,7 @@ def unigram_train(
     vocab_size: int = 2000,
     max_piece_len: int = 6,
     em_iters: int = 1,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Learn the unigram-LM piece table: seed (substring counts →
     prune → scores), then ``em_iters`` hard-EM rounds (Viterbi
@@ -912,7 +911,7 @@ def unigram_train_soft(
     vocab_size: int = 2000,
     max_piece_len: int = 6,
     em_iters: int = 1,
-    materialize: str | MaterializeFn | bool | None = None,
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Expected-count (soft) EM unigram-LM training — the
     SentencePiece-family statistic (Kudo 2018 §3.2: E-step =

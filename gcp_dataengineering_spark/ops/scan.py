@@ -17,36 +17,26 @@ is a literal no-op (no exchange added to the plan). Round-robin
 repartition is deterministic under task retry because Spark sorts
 partitions before assignment (``spark.sql.execution.sortBeforeRepartition``,
 on by default — SPARK-23207).
-
-Override the threshold with ``SPARK_GRAFT_SCAN_MIN_PARTITIONS``
-(0 disables fan-out entirely).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
-def fan_out_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out_scan(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to the session's default parallelism iff its
     planned partitioning has fewer partitions — the few-unsplittable-
     files case. No-op (returns ``df`` unchanged, no exchange) when the
     scan already parallelizes."""
-    if min_partitions is None:
-        env = os.environ.get("SPARK_GRAFT_SCAN_MIN_PARTITIONS")
-        if env is not None:
-            min_partitions = int(env)
-        else:
-            min_partitions = df.sparkSession.sparkContext.defaultParallelism
-    if min_partitions <= 1:
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if par <= 1:
         return df
     try:
         n = df.rdd.getNumPartitions()
     except Exception:
         # planning failure here must not mask the query's own error
         return df
-    if n >= min_partitions:
+    if n >= par:
         return df
-    return df.repartition(min_partitions)
+    return df.repartition(par)

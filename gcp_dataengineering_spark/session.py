@@ -44,13 +44,10 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
-    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

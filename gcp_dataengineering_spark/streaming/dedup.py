@@ -170,11 +170,10 @@ def fuzzy_dedup_batch(
         bands=bands,
         n=n,
         min_shared_bands=min_shared_bands,
-        # default strategy (localCheckpoint unless globally overridden):
-        # ingest_batch eagerly pins `appendable`, so everything below —
-        # sink, segment write, counts — reads the PINNED result, not a
-        # lineage that would re-read the store after this batch's
-        # segment publish changes it
+        # the default pin: ingest_batch eagerly pins `appendable`, so
+        # everything below — sink, segment write, counts — reads the
+        # PINNED result, not a lineage that would re-read the store
+        # after this batch's segment publish changes it
         materialize=None,
     )
 

@@ -279,9 +279,8 @@ def semantic_dedup_batch(
     (ADVICE r14: the caller may hold the frame across the next
     batch, whose segment GC deletes the store files a lazy plan
     would still reference — pinning here is a correctness
-    requirement, not a tuning choice, so the global materializer
-    setting does not apply). ``sink`` (admitted → None) runs BEFORE
-    the store update, the at-least-once publish order.
+    requirement, not a tuning choice). ``sink`` (admitted → None)
+    runs BEFORE the store update, the at-least-once publish order.
 
     Without ``event_time_col`` the store is exact and grows with
     distinct seen docs (the ``dedup_stream_against_corpus``
@@ -363,9 +362,9 @@ def semantic_dedup_batch(
     )
 
     # 5. drop anchored components whole; admit min-id keepers of the
-    # rest — pinned eagerly and UNCONDITIONALLY (True, not the global
-    # default): the caller's handle must survive the next batch's
-    # segment GC — see the docstring (ADVICE r14)
+    # rest — pinned eagerly and UNCONDITIONALLY (True): the caller's
+    # handle must survive the next batch's segment GC — see the
+    # docstring (ADVICE r14)
     keeper_ids = _admitted_keepers(groups, matched, id_col)
     admitted = _materialize(batch.join(keeper_ids, id_col, "left_semi"), True)
     if sink is not None:
@@ -498,11 +497,10 @@ def compact_semantic_store(
             "(pre-r15 store?) — pass cos_num/cos_den explicitly"
         )
     # replay duplicates from at-least-once batches fold away here;
-    # pinned EAGERLY (strategy True, not the process-global default —
-    # same rule as semantic_dedup_batch) because both the pair
-    # self-join and the segment rewrite read these frames, and the
-    # rewrite retires the very segments they were read from: under a
-    # lazy global materializer a re-read after GC would miss files.
+    # pinned EAGERLY (True — same rule as semantic_dedup_batch)
+    # because both the pair self-join and the segment rewrite read
+    # these frames, and the rewrite retires the very segments they
+    # were read from: a lazy re-read after GC would miss files.
     docs = _materialize(docs.dropDuplicates(["_sid"]), True)
     buckets = _materialize(
         buckets.dropDuplicates(["_sid", "tbl", "bucket"]), True

@@ -22,6 +22,7 @@ from ..ops.allocate import allocate_window, grouped_totals, reach_share
 from ..ops.conform import parse_money, recode, typed_null, week_to_month
 from ..ops.pivot import conditional_pivot
 from ..ops.vintage import union_vintages
+from ..sources.io import local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -106,7 +107,8 @@ def q_tam_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("reach", F.lit(1.0) / F.col("display_order"))
         .withColumn("year", F.year("o_orderdate").cast("int"))
     )
-    pots = spark.createDataFrame(
+    pots = local_frame(
+        spark,
         [(y, 32000000.0 - 1000000.0 * (y - 1995)) for y in range(1995, 2002)],
         "year int, pot double",
     )
@@ -463,7 +465,8 @@ def q_missing_cost_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("year", "month", "channel")
         .agg(F.sum("l_quantity").alias("reach"))
     )
-    pots = spark.createDataFrame(
+    pots = local_frame(
+        spark,
         [
             (y, m, ch, 10000.0 + y - 1995 + m)
             for y in range(1995, 2002)
@@ -514,7 +517,8 @@ def q_expr_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
     o2 = o.withColumn("ym", F.date_format("o_orderdate", "yyyyMM"))
-    costs = spark.createDataFrame(
+    costs = local_frame(
+        spark,
         [(str(y), 1000.0 * (y - 1994)) for y in range(1995, 2002)],
         "year string, year_cost double",
     )
@@ -750,7 +754,8 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents joined to a language dim on lang AND
     array_contains(split(text), 'spark')."""
     docs = _t(spark, sf_dir, "documents")
-    langs = spark.createDataFrame(
+    langs = local_frame(
+        spark,
         [("en", "English"), ("es", "Spanish"), ("fr", "French"),
          ("de", "German"), ("zh", "Chinese")],
         "lang string, lang_name string",

@@ -23,6 +23,20 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A session checkpoint directory for one test: pins made while it
+    is set are reliable checkpoints under it. Cleared afterwards, so
+    later tests pin with localCheckpoint again."""
+    d = tmp_path / "ckpt"
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(d))
+    try:
+        yield d
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+
+
 @pytest.fixture(scope="session")
 def ref_inputs():
     return synth_inputs()

@@ -51,6 +51,8 @@ def test_audit_rows(spark, tmp_path):
     from gcp_dataengineering_spark.fixtures import FIXTURE_TABLES, ensure_parquet, fixture_path
     from gcp_dataengineering_spark.pipelines.digital import nvs_digital
     from gcp_dataengineering_spark.pipelines.tam import nvs_tam
+    from gcp_dataengineering_spark.suite import core
+    from conftest import SF_DIR
 
     path = str(tmp_path / "audit")
     start = datetime(2024, 2, 29, 23, 59, 58, 123456, tzinfo=timezone(timedelta(hours=-5)))
@@ -91,6 +93,11 @@ def test_audit_rows(spark, tmp_path):
     tables = {name: spark.read.parquet(fixture_path(name)) for name in FIXTURE_TABLES}
     pins = []
     frames = [appends[0], nvs_tam(spark, tables), nvs_digital(spark, tables, pins)]
+    frames += [
+        q(spark, SF_DIR)
+        for q in (core.q_tam_flagship, core.q_missing_cost_full_join,
+                  core.q_expr_key_join, core.q_array_ops)
+    ]
     try:
         for frame in frames:
             plans = frame._jdf.queryExecution().toString()
@@ -98,6 +105,27 @@ def test_audit_rows(spark, tmp_path):
     finally:
         for pin in pins:
             pin.unpersist()
+
+
+def test_fan_out_scan(spark, tmp_path):
+    """A scan narrower than the default parallelism is spread to it; an
+    input already that wide comes back as the same object, no
+    Exchange added."""
+    from gcp_dataengineering_spark.ops.scan import fan_out_scan
+
+    par = spark.sparkContext.defaultParallelism
+    assert par > 1
+    path = str(tmp_path / "one.parquet")
+    spark.range(100).coalesce(1).write.parquet(path)
+    narrow = spark.read.parquet(path)
+    assert narrow.rdd.getNumPartitions() < par
+    spread = fan_out_scan(narrow)
+    assert spread.rdd.getNumPartitions() == par
+    assert spread.count() == 100
+
+    wide = spark.range(0, 100, numPartitions=par)
+    assert fan_out_scan(wide) is wide
+    assert "Exchange" not in wide._jdf.queryExecution().executedPlan().toString()
 
 
 def test_csv_dir_to_parquet(spark, tmp_path):

@@ -460,79 +460,76 @@ def test_containment_catches_subset_duplication(spark):
 
 
 # ---------------------------------------------------------------- materialization
-@pytest.mark.parametrize("strategy", ["localCheckpoint", "checkpoint", "parquet", "none"])
-def test_materialize_strategies_equivalent(spark, docs, tmp_path, strategy):
-    """Every materialization strategy (single-JVM localCheckpoint,
-    reliable checkpoint, parquet spill, none) yields identical
-    near-dup pairs, LSH candidates, and CC groups — the strategy is a
-    durability/deployment knob, never a semantics knob."""
+def _checkpoint_files(d) -> list[str]:
+    return [p for p in d.rglob("*") if p.is_file()]
+
+
+def _dedup_results(docs, pin):
+    """Jaccard pairs, LSH candidates and CC groups under one pin."""
     from gcp_dataengineering_spark.llm_ops.dedup import resolve_dup_groups
 
+    pairs = ngram_jaccard_pairs(docs, min_jaccard=0.1, materialize=pin)
+    return (
+        {(r["id_a"], r["id_b"]): round(r["jaccard"], 4) for r in pairs.collect()},
+        {
+            (r["id_a"], r["id_b"]): r["shared_bands"]
+            for r in minhash_dedup_pairs(docs, materialize=pin).collect()
+        },
+        {
+            r["doc_id"]: r["group_id"]
+            for r in resolve_dup_groups(docs, pairs, materialize=pin).collect()
+        },
+    )
+
+
+@pytest.mark.parametrize("strategy", ["localCheckpoint", "checkpoint", "none", "parquet"])
+def test_materialize_strategies_equivalent(spark, docs, request, tmp_path, strategy):
+    """The pin rule's three forms — no checkpoint dir (localCheckpoint),
+    a session checkpoint dir (reliable checkpoint) and ``False`` (no
+    pin) — yield identical near-dup pairs, LSH candidates and CC
+    groups: durability is a deployment knob, never a semantics knob.
+    A strategy string such as ``'parquet:<dir>'`` is not a pin value:
+    it raises TypeError before anything is written."""
+    if strategy == "parquet":
+        spill = tmp_path / "spill"
+        with pytest.raises(TypeError, match="None, True or False"):
+            ngram_jaccard_pairs(docs, min_jaccard=0.1, materialize=f"parquet:{spill}")
+        assert not spill.exists()
+        return
+
+    expected = _dedup_results(docs, None)
+    assert all(len(part) > 0 for part in expected)
     if strategy == "checkpoint":
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        strat = "checkpoint"
-    elif strategy == "parquet":
-        strat = f"parquet:{tmp_path}/spill"
-    elif strategy == "none":
-        strat = False
+        ckpt = request.getfixturevalue("checkpoint_dir")
+        assert _dedup_results(docs, None) == expected
+        assert _checkpoint_files(ckpt)  # the reliable path really ran
     else:
-        strat = "localCheckpoint"
-
-    pairs = ngram_jaccard_pairs(docs, min_jaccard=0.1, materialize=strat)
-    got_pairs = {(r["id_a"], r["id_b"]): round(r["jaccard"], 4) for r in pairs.collect()}
-    got_mh = {
-        (r["id_a"], r["id_b"]): r["shared_bands"]
-        for r in minhash_dedup_pairs(docs, materialize=strat).collect()
-    }
-    got_groups = {
-        r["doc_id"]: r["group_id"]
-        for r in resolve_dup_groups(docs, pairs, materialize=strat).collect()
-    }
-
-    exp_pairs = {
-        (r["id_a"], r["id_b"]): round(r["jaccard"], 4)
-        for r in ngram_jaccard_pairs(docs, min_jaccard=0.1).collect()
-    }
-    exp_mh = {
-        (r["id_a"], r["id_b"]): r["shared_bands"]
-        for r in minhash_dedup_pairs(docs).collect()
-    }
-    exp_groups = {
-        r["doc_id"]: r["group_id"]
-        for r in resolve_dup_groups(
-            docs, ngram_jaccard_pairs(docs, min_jaccard=0.1)
-        ).collect()
-    }
-    assert got_pairs == exp_pairs and len(got_pairs) > 0
-    assert got_mh == exp_mh and len(got_mh) > 0
-    assert got_groups == exp_groups
+        assert spark.sparkContext.getCheckpointDir() is None
+        pin = None if strategy == "localCheckpoint" else False
+        assert _dedup_results(docs, pin) == expected
 
 
-def test_materializer_module_default_scoped(spark, docs, tmp_path):
-    """set_materializer / the materializer context manager swap the
-    module-wide default; operators with no explicit materialize=
-    follow it."""
-    from gcp_dataengineering_spark.llm_ops import materialize as M
-
-    with M.materializer(f"parquet:{tmp_path}/modspill"):
-        assert M.get_materializer()(docs).count() == docs.count()
-        out = {r["keep_id"] for r in dedup_exact(docs).collect()}
-    assert M.get_materializer() is M.local_checkpoint
-    assert len(out) == 5
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown materialize strategy"):
-        M.set_materializer("bogus")
-    assert M.get_materializer() is M.local_checkpoint
+def test_materializer_module_default_scoped(spark, docs, request):
+    """Operators called with no ``materialize=`` follow the session:
+    with no checkpoint dir their pins are localCheckpoints (no files);
+    inside the ``checkpoint_dir`` fixture's scope the same call writes
+    reliable checkpoints under the dir, with the same answer."""
+    assert spark.sparkContext.getCheckpointDir() is None
+    local = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(docs, min_jaccard=0.3).collect()}
+    assert (0, 1) in local
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    assert not _checkpoint_files(ckpt)
+    durable = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(docs, min_jaccard=0.3).collect()}
+    assert durable == local
+    assert _checkpoint_files(ckpt)
 
 
 def test_reliable_checkpoint_guard_without_dir():
-    """reliable_checkpoint's missing-checkpoint-dir guard, exercised
-    via a unit-level stub so it holds regardless of whether an earlier
-    test set a checkpoint dir on the shared session (the round-3
-    version raised its own fallback RuntimeError whose message ALSO
-    matched the pattern — vacuous either way)."""
-    from gcp_dataengineering_spark.llm_ops import materialize as M
+    """The pin rule at unit level, on a stub frame: with no checkpoint
+    dir ``None``/``True`` fall back to an eager localCheckpoint (no
+    error); with one they take an eager reliable checkpoint; ``False``
+    returns the frame untouched."""
+    from gcp_dataengineering_spark.llm_ops.materialize import materialize
 
     class _FakeSC:
         def __init__(self, ckpt_dir):
@@ -543,65 +540,54 @@ def test_reliable_checkpoint_guard_without_dir():
 
     class _FakeDF:
         def __init__(self, ckpt_dir):
-            self.sparkSession = type(
-                "S", (), {"sparkContext": _FakeSC(ckpt_dir)}
-            )()
-            self.checkpointed = False
+            self.sparkSession = type("S", (), {"sparkContext": _FakeSC(ckpt_dir)})()
+            self.calls = []
 
-        def checkpoint(self, eager=True):
-            self.checkpointed = True
+        def localCheckpoint(self, eager=False):
+            self.calls.append(("localCheckpoint", eager))
             return self
 
-    with pytest.raises(RuntimeError, match="requires a checkpoint dir"):
-        M.reliable_checkpoint(_FakeDF(None))
+        def checkpoint(self, eager=False):
+            self.calls.append(("checkpoint", eager))
+            return self
 
-    ok = _FakeDF("/durable/ckpt")
-    assert M.reliable_checkpoint(ok) is ok and ok.checkpointed
-
-
-def test_parquet_spill_cleanup_and_context_manager(spark, docs, tmp_path):
-    """ParquetSpill registers every spill table and cleanup() (or the
-    parquet_spill_dir context exit) removes them — the round-3
-    strategy leaked one mat-*.parquet dir per materialize call."""
-    import os
-
-    from gcp_dataengineering_spark.llm_ops import materialize as M
-
-    d = str(tmp_path / "spill_explicit")
-    spill = M.parquet_spill(d)
-    out1 = spill(docs.limit(3))
-    out2 = spill(docs.limit(2))
-    assert out1.count() == 3 and out2.count() == 2
-    assert len(spill.paths) == 2
-    assert sorted(os.listdir(d)) == sorted(os.path.basename(p) for p in spill.paths)
-    assert spill.cleanup() == 2
-    assert os.listdir(d) == [] and spill.paths == []
-    assert spill.cleanup() == 0  # idempotent
-
-    d2 = str(tmp_path / "spill_scoped")
-    with M.parquet_spill_dir(d2) as scoped:
-        assert M.get_materializer() is scoped
-        # ngram_jaccard_pairs materializes its shingle table through
-        # the module default -> at least one spill table appears
-        pairs = {
-            (r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(docs, min_jaccard=0.3).collect()
-        }
-        assert (0, 1) in pairs
-        assert len(scoped.paths) >= 1
-        assert sorted(os.listdir(d2)) == sorted(os.path.basename(p) for p in scoped.paths)
-    assert M.get_materializer() is M.local_checkpoint
-    assert os.listdir(d2) == []
+    for pin in (None, True):
+        local, durable = _FakeDF(None), _FakeDF("/durable/ckpt")
+        assert materialize(local, pin) is local and local.calls == [("localCheckpoint", True)]
+        assert materialize(durable, pin) is durable and durable.calls == [("checkpoint", True)]
+    skipped = _FakeDF("/durable/ckpt")
+    assert materialize(skipped, False) is skipped and skipped.calls == []
 
 
-def test_durable_strategies_full_dedup_pipeline(spark, tmp_path):
+def test_parquet_spill_cleanup_and_context_manager(docs):
+    """The named strategies and callables (the parquet spill was one)
+    are gone, so there is no spill to clean up: every pin value other
+    than None/True/False raises TypeError naming the accepted values,
+    before any Spark work."""
+    from gcp_dataengineering_spark.llm_ops.materialize import materialize
+
+    for bad in ("localCheckpoint", "checkpoint", "none", lambda df: df, 1):
+        with pytest.raises(TypeError, match="None, True or False"):
+            materialize(docs, bad)
+
+
+def test_parquet_spill_dir_scopes_explicit_same_dir_strategy(spark, docs, checkpoint_dir):
+    """An explicit ``materialize=True`` (the streaming gates pass it to
+    pin unconditionally) follows the session checkpoint dir exactly
+    like the default: inside the fixture's scope its pins are reliable
+    checkpoints under the dir."""
+    pairs = ngram_jaccard_pairs(docs, min_jaccard=0.3, materialize=True)
+    assert (0, 1) in {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    assert _checkpoint_files(checkpoint_dir)
+
+
+def test_durable_strategies_full_dedup_pipeline(spark, request):
     """The COMPOSED dedup pipeline (jaccard pairs → CC groups →
     keepers → per-lang rollup) — what a cluster user actually runs —
-    under each durable materialization strategy, end-to-end at
-    sf0.01, must equal the localCheckpoint result exactly. The
-    per-operator equivalence test covers operators in isolation; this
-    covers the composition, where a strategy bug would compound
-    across the chain."""
-    from gcp_dataengineering_spark.llm_ops import materialize as M
+    at sf0.01 with a session checkpoint dir (reliable checkpoints)
+    must equal the localCheckpoint result exactly. The per-operator
+    equivalence test covers operators in isolation; this covers the
+    composition, where a pin bug would compound across the chain."""
     from gcp_dataengineering_spark.suite.llm import q_dedup_pipeline
 
     sf_dir = "/root/testdata/sf0.01"
@@ -615,16 +601,10 @@ def test_durable_strategies_full_dedup_pipeline(spark, tmp_path):
     baseline = run()
     assert baseline and sum(v[0] for v in baseline.values()) > 0
 
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    with M.materializer("checkpoint"):
-        assert run() == baseline
-
-    with M.parquet_spill_dir(str(tmp_path / "spill")) as spill:
-        assert run() == baseline
-        assert len(spill.paths) >= 3  # shingles + edges + >=1 CC round
-    import os
-
-    assert os.listdir(str(tmp_path / "spill")) == []
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    assert run() == baseline
+    # shingles + edges + >=1 CC round, each its own rdd-<id> dir
+    assert len({p.parent for p in _checkpoint_files(ckpt)}) >= 3
 
 
 def test_spread_guard_skips_well_partitioned_input(spark, tmp_path):
@@ -1674,29 +1654,6 @@ def test_script_counts_spark_duckdb_parity(spark):
     for i, t in enumerate(texts):
         want = con.execute(f"SELECT {sel} FROM (SELECT ? AS t)", [t]).fetchone()
         assert got[i] == tuple(want), (t, got[i], want)
-
-
-def test_parquet_spill_dir_scopes_explicit_same_dir_strategy(spark, docs, tmp_path):
-    """A call site inside a parquet_spill_dir block that passes an
-    EXPLICIT materialize='parquet:<same dir>' coerces through the
-    module registry; the context must reclaim those spills too on
-    exit, honoring its 'all mat-*.parquet under <dir> are gone'
-    contract (previously the context held a private instance and the
-    registry instance's spills leaked)."""
-    import os
-
-    from gcp_dataengineering_spark.llm_ops import materialize as M
-
-    d = str(tmp_path / "spill_shared")
-    with M.parquet_spill_dir(d) as scoped:
-        pairs = ngram_jaccard_pairs(
-            docs, min_jaccard=0.3, materialize=f"parquet:{d}"
-        )
-        assert (0, 1) in {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-        assert len(scoped.paths) >= 1
-        # the explicit string coerced to the SAME registry instance
-        assert M.parquet_spill(d) is scoped
-    assert os.listdir(d) == []
 
 
 def test_shuffle_plan_deterministic_and_duckdb_replayable(spark):
