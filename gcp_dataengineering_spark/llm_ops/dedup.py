@@ -22,8 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..ops.scan import fan_out_scan
 from .materialize import materialize as _materialize
-from .text import fingerprint, md5_60bit
+from .text import _word_grams, fingerprint, md5_60bit
 
 # Every operator below that materializes an intermediate takes a
 # ``materialize=`` parameter (None/True pin, False skips) and pins
@@ -48,54 +49,45 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 # ------------------------------------------------------------ shingles
-def shingle_rows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    spread: bool = True,
-) -> DataFrame:
-    """(doc_id, shingle) rows: distinct word n-grams per document.
-    Built with sequence/transform/slice — codegen'd projections + one
-    explode; no UDF.
+# Every word-gram row table (distinct shingles for the Jaccard /
+# containment / MinHash / decontamination families, positional grams
+# for span dedup) is one projection of _gram_rows, whose grams come
+# from text._word_grams — the one word n-gram builder of llm_ops.
+def _gram_rows(df: DataFrame, text_col: str, id_col: str, n: int, rows) -> DataFrame:
+    """(doc_id, *rows(grams)): ``rows`` turns a doc's in-order word
+    n-gram array into the generator (explode / posexplode) that makes
+    its rows. Codegen'd projections + one generator; no UDF.
 
     Two scale-critical details:
     - The words array is projected into a REAL column (`_w`) before
-      the shingle transform. Spark does no subexpression elimination
-      inside higher-order-function lambdas, so referencing the
-      split/filter expression from inside the `transform` lambda
-      re-evaluates it per sequence element — O(words²) per document.
-      CollapseProject keeps the two projections separate (the words
-      expression is non-cheap and multiply-referenced), so `_w` is
-      evaluated once per row: O(words) per document.
-    - `spread` round-robin-repartitions the (id, text) input to
-      defaultParallelism first — but ONLY when the input has fewer
-      partitions than that. Shingling is ~10× the scan cost, so a
-      few-file input (one parquet file at small SF; a skewed split at
-      100 TB) would otherwise serialize the whole map stage on a
-      handful of tasks. A well-partitioned input (a 100 TB table read
-      as thousands of splits) skips the shuffle entirely: the guard
-      keeps the default safe without the caller knowing to pass
-      spread=False."""
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
-    if spread:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
-        if base.rdd.getNumPartitions() < parallelism:
-            base = base.repartition(parallelism)
+      the gram transform (see text._word_grams): CollapseProject keeps
+      the two projections separate (the words expression is non-cheap
+      and multiply-referenced), so `_w` is evaluated once per row —
+      O(words) per document, not O(words²).
+    - The (doc_id, _text) projection goes through ops.scan.fan_out_scan
+      first: shingling is ~10× the scan cost, so a few-file input (one
+      parquet file at small SF; a skewed split at 100 TB) is spread to
+      defaultParallelism instead of serializing the map stage on a
+      handful of tasks. A well-partitioned input (thousands of splits)
+      gets no shuffle at all, and the exchange carries only the two
+      projected columns."""
+    grams = _word_grams(F.col("_w"), n)
+    base = fan_out_scan(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
+    )
     words = F.filter(F.split(F.lower(F.col("_text")), "\\s+"), lambda t: t != "")
     wdf = base.select("doc_id", words.alias("_w"))
-    w = F.col("_w")
-    k = F.size(w) - F.lit(n - 1)
-    shingles = F.when(
-        k > 0,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return wdf.select("doc_id", F.explode(shingles).alias("shingle"))
+    return wdf.select("doc_id", rows(grams))
+
+
+def shingle_rows(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+) -> DataFrame:
+    """(doc_id, shingle) rows: distinct word n-grams per document
+    (lowercased, whitespace-split). Scale notes: :func:`_gram_rows`."""
+    return _gram_rows(
+        df, text_col, id_col, n, lambda g: F.explode(F.array_distinct(g)).alias("shingle")
+    )
 
 
 def doc_shingle_sizes(shingles: DataFrame) -> DataFrame:
@@ -760,35 +752,15 @@ def simhash16(
 
 # ------------------------------------------- exact substring (span) dedup
 def positional_gram_rows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    spread: bool = True,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 8
 ) -> DataFrame:
     """(doc_id, pos, gram) rows: EVERY word k-gram with its 0-based
     word position — the positional sibling of :func:`shingle_rows`
-    (which is distinct and position-free). Same scale discipline:
-    words projected to a real column before the transform (no O(n²)
-    lambda re-evaluation), `spread` guard for few-file inputs, and
-    the n < k case yields no rows (sequence would otherwise DESCEND)."""
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
-    if spread:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
-        if base.rdd.getNumPartitions() < parallelism:
-            base = base.repartition(parallelism)
-    words = F.filter(F.split(F.lower(F.col("_text")), "\\s+"), lambda t: t != "")
-    wdf = base.select("doc_id", words.alias("_w"))
-    w = F.col("_w")
-    n = F.size(w) - F.lit(k - 1)
-    grams = F.when(
-        n > 0,
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.concat_ws(" ", F.slice(w, i, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return wdf.select("doc_id", F.posexplode(grams).alias("pos", "gram"))
+    (which is distinct and position-free); a doc with fewer than k
+    words yields no rows. Scale notes: :func:`_gram_rows`."""
+    return _gram_rows(
+        df, text_col, id_col, k, lambda g: F.posexplode(g).alias("pos", "gram")
+    )
 
 
 def duplicate_spans(
@@ -797,7 +769,6 @@ def duplicate_spans(
     id_col: str = "doc_id",
     k: int = 8,
     min_docs: int = 2,
-    spread: bool = True,
 ) -> DataFrame:
     """Cross-document EXACT-substring duplication (the span-level
     dedup of Lee et al. 2022, "Deduplicating Training Data Makes
@@ -833,7 +804,7 @@ def duplicate_spans(
     task's memory."""
     from pyspark.sql import Window
 
-    grams = positional_gram_rows(df, text_col, id_col, k=k, spread=spread)
+    grams = positional_gram_rows(df, text_col, id_col, k=k)
     dup = (
         grams.groupBy("gram")
         .agg(F.count_distinct("doc_id").alias("_nd"))
@@ -868,7 +839,6 @@ def duplicate_spans_exact(
     k: int = 8,
     min_docs: int = 2,
     max_gram_occurrences: int = 64,
-    spread: bool = True,
 ) -> DataFrame:
     """Per-PARTNER exact duplicated spans (r12 — the exactness option
     the r11 verdict sketched for :func:`duplicate_spans`'s
@@ -902,7 +872,7 @@ def duplicate_spans_exact(
     diagonal)-keyed window — never all-pairs over documents."""
     from pyspark.sql import Window
 
-    grams = positional_gram_rows(df, text_col, id_col, k=k, spread=spread)
+    grams = positional_gram_rows(df, text_col, id_col, k=k)
     keep = (
         grams.groupBy("gram")
         .agg(

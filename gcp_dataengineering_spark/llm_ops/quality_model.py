@@ -53,7 +53,7 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import md5_60bit
+from .text import _bind1, _word_grams, md5_60bit
 
 __all__ = [
     "FRAC_BITS", "NB_WORD_PATTERN", "CHAR_NGRAM_MODE",
@@ -137,19 +137,9 @@ def _feature_array(
     if ngrams == 1:
         return toks
     if ngrams == 2:
-        # adjacent pairs: zip the array with itself shifted by one
-        # (slice(2..) pads short with null; filter drops the tail)
-        pairs = F.filter(
-            F.zip_with(
-                toks,
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-                lambda a, b: F.when(
-                    b.isNotNull(), F.concat(a, F.lit("\x1e"), b)
-                ),
-            ),
-            lambda p: p.isNotNull(),
-        )
-        return F.concat(toks, pairs)
+        # bound once: the gram lambda re-evaluates an inline words
+        # expression per element (see text._word_grams)
+        return _bind1(toks, lambda t: F.concat(t, _word_grams(t, 2, sep="\x1e")))
     if ngrams == CHAR_NGRAM_MODE:
         from .embed import char_ngrams
 

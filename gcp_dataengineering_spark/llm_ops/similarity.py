@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ops.scan import fan_out_scan
 from .materialize import materialize as _materialize
 
 # Fixed-point scale for the deterministic k-means: 1e-6 resolution.
@@ -181,11 +182,9 @@ def with_gaussian_buckets(
     The bucket arithmetic is tables×planes×dim multiply-adds per row
     through higher-order-function lambdas (interpreted, not codegen),
     so a few-file input would serialize the dominant CPU on a couple
-    of tasks — under-partitioned inputs are spread to
-    defaultParallelism first (same guard as dedup.shingle_rows)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    of tasks — the input goes through ops.scan.fan_out_scan first,
+    which spreads an under-partitioned input to defaultParallelism."""
+    df = fan_out_scan(df)
     carry = [vec_out] if vec_out else []
     extra = list(carry_cols)
     # quantize=False takes the vector column as ALREADY-integer

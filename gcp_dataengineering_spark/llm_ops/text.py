@@ -683,6 +683,70 @@ def gopher_pass(min_words: int = 50, max_words: int = 100_000) -> Column:
     )
 
 
+def _word_grams(words: Column, n: int, sep: str = " ") -> Column:
+    """The in-order word n-grams of a words array, each joined with
+    ``sep``; empty when the doc has fewer than n words (sequence would
+    otherwise DESCEND). The one word-gram builder of llm_ops (dedup
+    shingles and positional grams, both repetition operators, the
+    hashed-feature bigrams) and the one place that validates ``n``:
+    a size below 1 raises ``ValueError`` before any Spark job.
+
+    Pass a REAL column as ``words``: Spark does no subexpression
+    elimination inside higher-order-function lambdas, so an inline
+    split/filter expression here would be re-evaluated per sequence
+    element — O(words²) per document."""
+    if n < 1:
+        raise ValueError(f"n-gram size must be at least 1, got {n}")
+    k = F.size(words) - F.lit(n - 1)
+    return F.when(
+        k > 0,
+        F.transform(
+            F.sequence(F.lit(1), k),
+            lambda i: F.concat_ws(sep, F.slice(words, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _top_gram(words: Column, n: int, finish) -> Column:
+    """``finish`` applied to the most frequent word n-gram of a words
+    array: its count ``acc["bc"]`` and the gram ``acc["bg"]``, by
+    (count desc, length desc, gram asc); (0, '') for a doc with fewer
+    than n words. Row-wise: a gram's occurrence count is its run
+    length in the doc's SORTED gram array, so one fold finds the
+    longest equal-run; ties switch only to a longer gram (equal-length
+    ties keep the earlier, lexicographically smaller gram — the sort
+    order). The best count is the same under any tie rule. ``finish``
+    reads the fold's result in place, so a caller that needs both the
+    count and the gram evaluates the fold once."""
+    zero = F.lit(0).cast("long")
+
+    def step(acc: Column, x: Column) -> Column:
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(
+            F.lit(1).cast("long")
+        )
+        better = (run > acc["bc"]) | (
+            (run == acc["bc"]) & (F.length(x) > F.length(acc["bg"]))
+        )
+        return F.struct(
+            x.alias("prev"),
+            run.alias("run"),
+            F.when(better, run).otherwise(acc["bc"]).alias("bc"),
+            F.when(better, x).otherwise(acc["bg"]).alias("bg"),
+        )
+
+    return F.aggregate(
+        F.array_sort(_word_grams(words, n)),
+        F.struct(
+            F.lit(None).cast("string").alias("prev"),
+            zero.alias("run"),
+            zero.alias("bc"),
+            F.lit("").alias("bg"),
+        ),
+        step,
+        finish,
+    )
+
+
 # Gopher §A1.2 (Rae et al. 2021, Table A1): the COMPLETE published
 # repetition-filter thresholds. repetition_features carries the
 # occurrence-share forms (dup words, top 2/3-gram share);
@@ -740,25 +804,14 @@ def gopher_repetition_features(
     everywhere and pass.
 
     Shape at scale: one explode per unit kind (lines, paragraphs) and
-    one tagged n-gram explode per consumer family — the 9× token
-    fan-out is inherent to the published rule set. Every aggregation
-    is keyed on doc_id (documents are the unit of work, no skew); the
-    per-(doc, n) top-gram window runs over the gram-count table, not
-    corpus rows. The tokenized base feeds every leg and is
-    branch-point materialized (see llm_ops.materialize).
-
-    r18 optimization (guide §2.4 — remove shuffles/barriers
-    outright): the gram table is no longer a shared materialized
-    branch point. Orders 2..4 never explode at all — the top gram by
-    (count desc, length desc, gram asc) is a row-wise
-    longest-equal-run fold over the doc's SORTED gram array (the
-    repetition_features trick), so the whole top-gram leg rides in
-    the doc_stats projection at scan speed with zero exchanges;
-    orders 5..10 explode WITH positions and get their occurrence
-    count from a window over the same (doc, n, gram) key the old
-    aggregate used — value-identical counts, but the
-    aggregate+join-back pair (which re-shuffled the full gram table
-    a second time) and BOTH eager gram checkpoints are gone."""
+    one positioned 5..10-gram explode whose occurrence counts come
+    from one window over the (doc, n, gram) key. Orders 2..4 never
+    explode: the top gram is the row-wise sorted-run fold
+    :func:`_top_gram` (shared with repetition_features), riding in the
+    doc_stats projection with zero exchanges. Every aggregation is
+    keyed on doc_id (documents are the unit of work, no skew). The
+    tokenized base feeds every leg and is branch-point materialized
+    (see llm_ops.materialize)."""
     from .materialize import materialize as _materialize
 
     raw = F.coalesce(F.col(text_col), F.lit(""))
@@ -772,47 +825,9 @@ def gopher_repetition_features(
     w = F.col("_w")
 
     def _top_cov(n: int) -> Column:
-        # coverage (count × gram length) of the top n-gram by
-        # (count desc, length desc, gram asc), row-wise: fold the
-        # sorted gram array for the longest equal-run; ties switch
-        # only to a longer gram (equal-length ties keep the earlier
-        # = lexicographically smaller gram, the sort order)
-        k = F.size(w) - F.lit(n - 1)
-        garr = F.array_sort(
-            F.when(
-                k > 0,
-                F.transform(
-                    F.sequence(F.lit(1), k),
-                    lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        )
-        zero = F.lit(0).cast("long")
-
-        def step(acc: Column, x: Column) -> Column:
-            run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                F.lit(1).cast("long")
-            )
-            better = (run > acc["bc"]) | (
-                (run == acc["bc"]) & (F.length(x) > F.length(acc["bg"]))
-            )
-            return F.struct(
-                x.alias("prev"),
-                run.alias("run"),
-                F.when(better, run).otherwise(acc["bc"]).alias("bc"),
-                F.when(better, x).otherwise(acc["bg"]).alias("bg"),
-            )
-
-        return F.aggregate(
-            garr,
-            F.struct(
-                F.lit(None).cast("string").alias("prev"),
-                zero.alias("run"),
-                zero.alias("bc"),
-                F.lit("").alias("bg"),
-            ),
-            step,
-            lambda acc: acc["bc"] * F.length(acc["bg"]).cast("long"),
+        # coverage (count × gram length) of the top n-gram
+        return _top_gram(
+            w, n, lambda acc: acc["bc"] * F.length(acc["bg"]).cast("long")
         )
 
     doc_stats = base.select(
@@ -869,18 +884,13 @@ def gopher_repetition_features(
 
     # ------------------------------------------------ n-gram tables
     def _grams(n: int) -> Column:
-        k = F.size(w) - F.lit(n - 1)
-        return F.when(
-            k > 0,
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.struct(
-                    F.lit(n).alias("n"),
-                    i.cast("int").alias("p"),
-                    F.concat_ws(" ", F.slice(w, i, n)).alias("gram"),
-                ),
+        # positioned grams: p is the 1-based word position
+        return F.transform(
+            _word_grams(w, n),
+            lambda g, i: F.struct(
+                F.lit(n).alias("n"), (i + 1).alias("p"), g.alias("gram")
             ),
-        ).otherwise(F.array().cast("array<struct<n:int,p:int,gram:string>>"))
+        )
 
     # top 2/3/4-gram character coverage over the collapsed content —
     # row-wise from the _top_cov folds riding on doc_stats
@@ -1084,14 +1094,10 @@ def repetition_features(
       has fewer than n words) — the published repeated-phrase
       filters (Gopher §A1.2 uses exactly these fractions).
 
-    Shape at scale (r18 — the whole query is now a pure projection,
-    scan speed, ZERO shuffles): a gram's occurrence count is its run
-    length in the doc's SORTED gram array, so the top-gram share is
-    a row-wise longest-equal-run fold over ``array_sort`` — the old
-    explode → count per (doc, n, gram) → max/sum per (doc, n) →
-    pivot-back chain (two corpus-gram exchanges + a join) computed
-    the identical value. Per-doc work is O(g log g) in the doc's own
-    gram count; documents stay the unit of work, no skew.
+    Shape at scale: a pure projection, scan speed, ZERO shuffles —
+    the top-gram count comes from the row-wise sorted-run fold
+    :func:`_top_gram`, O(g log g) in the doc's own gram count;
+    documents stay the unit of work, no skew.
     Returns (id, n_words, dup_word_frac, top_bigram_frac,
     top_trigram_frac), fractions rounded to 4 decimals. NULL text is
     treated as empty (coalesce before split — size(NULL) would
@@ -1104,41 +1110,9 @@ def repetition_features(
     w = F.col("_w")
 
     def top_frac(n: int) -> Column:
-        # top n-gram occurrence share, row-wise: sort the doc's gram
-        # array, fold for the longest run of equal neighbors (= the
-        # max occurrence count), divide by the gram total
+        # top n-gram occurrence share: its count over the gram total
         k = F.size(w) - F.lit(n - 1)
-        garr = F.array_sort(
-            F.when(
-                k > 0,
-                F.transform(
-                    F.sequence(F.lit(1), k),
-                    lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        )
-        zero = F.lit(0).cast("long")
-        best = F.aggregate(
-            garr,
-            F.struct(
-                F.lit(None).cast("string").alias("prev"),
-                zero.alias("run"),
-                zero.alias("best"),
-            ),
-            lambda acc, x: F.struct(
-                x.alias("prev"),
-                F.when(x == acc["prev"], acc["run"] + 1)
-                .otherwise(F.lit(1).cast("long"))
-                .alias("run"),
-                F.greatest(
-                    acc["best"],
-                    F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                        F.lit(1).cast("long")
-                    ),
-                ).alias("best"),
-            ),
-            lambda acc: acc["best"],
-        )
+        best = _top_gram(w, n, lambda acc: acc["bc"])
         return F.round(
             F.when(
                 k > 0, best.cast("double") / k.cast("double")

@@ -17,6 +17,12 @@ is a literal no-op (no exchange added to the plan). Round-robin
 repartition is deterministic under task retry because Spark sorts
 partitions before assignment (``spark.sql.execution.sortBeforeRepartition``,
 on by default — SPARK-23207).
+
+Callers: the llm_ops word-gram row builder (``dedup._gram_rows``,
+behind ``shingle_rows`` / ``positional_gram_rows``), the Gaussian LSH
+bucketer ``similarity.with_gaussian_buckets``, and the suite's and
+bench's document reads (``suite.llm``, ``bench.py``). It is the one
+place that reads a frame's partition count.
 """
 
 from __future__ import annotations

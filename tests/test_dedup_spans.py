@@ -13,11 +13,19 @@ def _docs(spark, rows):
 def test_positional_gram_rows_positions(spark):
     from gcp_dataengineering_spark.llm_ops.dedup import positional_gram_rows
 
-    df = _docs(spark, [(1, "a b c d"), (2, "x y"), (3, "")])
+    df = _docs(
+        spark,
+        [(1, "a b c d"), (2, "x y"), (3, ""), (4, None), (5, " \t\n "),
+         (6, "\tP\nq  R\ts\n")],
+    )
     out = positional_gram_rows(df, k=3).collect()
     got = {(r.doc_id, r.pos): r.gram for r in out}
-    # doc 1: two 3-grams at positions 0 and 1; docs 2/3 too short -> none
-    assert got == {(1, 0): "a b c", (1, 1): "b c d"}
+    # doc 1: two 3-grams at positions 0 and 1; docs 2-5 too short or
+    # no words -> none; doc 6: TAB/newline/double-space separators
+    # and uppercase split and lowercase like doc 1's spaces
+    assert got == {
+        (1, 0): "a b c", (1, 1): "b c d", (6, 0): "p q r", (6, 1): "q r s",
+    }
 
 
 def test_duplicate_spans_semantics(spark):

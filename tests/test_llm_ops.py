@@ -384,31 +384,75 @@ def test_hash_split_validates_percents(spark):
 def test_shingle_rows_matches_python_reference(spark):
     """Property check of the O(L) shingle rewrite against a pure
     Python reference: distinct word 3-grams per document, across
-    generated word-list shapes (empty, short, repeated words)."""
+    generated word-list shapes (empty, short, repeated words), mixed
+    case and space/TAB/newline separators, plus fixed NULL,
+    whitespace-only and mixed-separator docs — pinning the words
+    expression every word-gram builder shares."""
+    import re
+
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from gcp_dataengineering_spark.llm_ops.dedup import shingle_rows
 
-    word = st.text(alphabet="abcd", min_size=1, max_size=3)
+    word = st.text(alphabet="abcAB", min_size=1, max_size=3)
+    sep = st.sampled_from([" ", "\t", "\n", " \t\n "])
+    fixed = [None, " \t\n  ", "A\tb\nC  d", "x Y\tx y\nX y"]
 
     @settings(max_examples=15, deadline=None)
-    @given(st.lists(st.lists(word, min_size=0, max_size=12), min_size=1, max_size=6))
-    def check(docs_words):
-        rows = [(i, " ".join(ws)) for i, ws in enumerate(docs_words)]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
+    @given(st.lists(st.tuples(st.lists(word, min_size=0, max_size=12), sep), min_size=1, max_size=6))
+    def check(docs):
+        texts = [s.join(ws) for ws, s in docs] + fixed
+        df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
         got = {
             (r["doc_id"], r["shingle"])
-            for r in shingle_rows(df, spread=False).collect()
+            for r in shingle_rows(df).collect()
         }
         expect = set()
-        for i, ws in enumerate(docs_words):
-            toks = [w.lower() for w in ws if w]
+        for i, text in enumerate(texts):
+            # Java's \s: ASCII space, TAB, LF, VT, FF, CR
+            toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", (text or "").lower()) if t]
             for j in range(len(toks) - 2):
                 expect.add((i, " ".join(toks[j : j + 3])))
         assert got == expect
 
     check()
+
+
+@pytest.mark.parametrize("size", [0, -1])
+@pytest.mark.parametrize(
+    "op, kw",
+    [
+        ("shingle_rows", "n"),
+        ("positional_gram_rows", "k"),
+        ("minhash_signatures", "n"),
+        ("ngram_jaccard_pairs", "n"),
+        ("ngram_containment_pairs", "n"),
+        ("duplicate_spans", "k"),
+        ("duplicate_spans_exact", "k"),
+    ],
+)
+def test_gram_size_below_one_rejected(spark, op, kw, size):
+    """An n-gram size below 1 raises ValueError at call time, before
+    any Spark job: n=0 would give every doc (even an empty one) the
+    one shingle '' — an all-pairs join at jaccard 1.0 — and n=-1
+    would fail inside the job in slice()."""
+    from gcp_dataengineering_spark.llm_ops import dedup
+
+    sc = spark.sparkContext
+    group = f"gram-size-{op}-{size}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df = spark.createDataFrame(
+            [(1, "a b c"), (2, "a b c"), (3, None), (4, "")],
+            "doc_id long, text string",
+        )
+        with pytest.raises(ValueError, match="n-gram size"):
+            getattr(dedup, op)(df, **{kw: size})
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
 
 
 def test_lsh_candidate_pairs_agrees_with_minhash_pairs(docs):
@@ -608,10 +652,10 @@ def test_durable_strategies_full_dedup_pipeline(spark, request):
 
 
 def test_spread_guard_skips_well_partitioned_input(spark, tmp_path):
-    """shingle_rows(spread=True) must NOT round-robin an input that
-    already has >= defaultParallelism partitions (a 100 TB table read
-    as thousands of splits would otherwise pay a full-text shuffle);
-    it MUST spread a single-partition input."""
+    """shingle_rows must NOT round-robin an input that already has >=
+    defaultParallelism partitions (a 100 TB table read as thousands of
+    splits would otherwise pay a full-text shuffle); it MUST spread a
+    single-partition input (ops.scan.fan_out_scan)."""
     from gcp_dataengineering_spark.llm_ops.dedup import shingle_rows
 
     par = spark.sparkContext.defaultParallelism
@@ -622,12 +666,12 @@ def test_spread_guard_skips_well_partitioned_input(spark, tmp_path):
     ).repartition(2 * par).write.parquet(path)
     wide = spark.read.parquet(path)
     assert wide.rdd.getNumPartitions() >= par
-    plan = shingle_rows(wide)._jdf.queryExecution().optimizedPlan().toString()
-    assert "RoundRobinPartitioning" not in plan and "Repartition" not in plan
+    plan = shingle_rows(wide)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
 
     narrow = spark.read.parquet(path).coalesce(1)
-    plan2 = shingle_rows(narrow)._jdf.queryExecution().optimizedPlan().toString()
-    assert "Repartition" in plan2 or "RoundRobinPartitioning" in plan2
+    plan2 = shingle_rows(narrow)._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan2
 
 
 def test_image_header_parser_real_formats(spark):
@@ -726,7 +770,10 @@ def test_repetition_features_flags_looping_text(spark):
 
     looped = "buy cheap pills " * 40
     diverse = " ".join(f"w{i}" for i in range(120))
-    rows = [(0, looped), (1, diverse), (2, ""), (3, "one"), (4, "one two"), (5, None)]
+    rows = [
+        (0, looped), (1, diverse), (2, ""), (3, "one"), (4, "one two"), (5, None),
+        (6, "a b a b xx yy xx yy"),
+    ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r for r in repetition_features(docs).collect()}
     assert got[5]["n_words"] == 0 and got[5]["dup_word_frac"] == 0.0  # NULL text, not -1
@@ -744,6 +791,10 @@ def test_repetition_features_flags_looping_text(spark):
     assert got[2]["top_bigram_frac"] == 0.0 and got[2]["top_trigram_frac"] == 0.0
     assert got[3]["top_bigram_frac"] == 0.0  # 1 word: no bigrams
     assert got[4]["top_bigram_frac"] == 1.0 and got[4]["top_trigram_frac"] == 0.0
+    # "a b" and "xx yy" tie at 2 of 7 bigrams: the share is the
+    # count's, whichever gram the tie rule picks
+    assert got[6]["top_bigram_frac"] == round(2 / 7, 4)
+    assert got[6]["top_trigram_frac"] == round(1 / 6, 4)
 
 
 def test_decontamination_flags_and_removes_leaked_docs(spark):
@@ -6980,6 +7031,7 @@ def test_gopher_repetition_features_full_ruleset(spark):
         (3, ""),
         (4, None),
         (5, "para one\n\npara one\n\npara two"),
+        (6, "a b a b xx yy xx yy"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: r.asDict() for r in gopher_repetition_features(df).collect()}
@@ -7008,6 +7060,9 @@ def test_gopher_repetition_features_full_ruleset(spark):
     assert got[5]["dup_para_frac"] == 0.6667
     assert got[5]["dup_para_char_frac"] == 0.6667
     assert got[5]["dup_line_frac"] == 0.6667
+    # doc 6: "a b" and "xx yy" tie at 2 occurrences; the longer gram
+    # wins -> 2 x 5 chars over the 19-char content ("a b" would be 6)
+    assert got[6]["top_2gram_char_frac"] == round(10 / 19, 4)
 
     # DuckDB replay of the SAME frame through the generated oracle
     con = _duckdb.connect()
