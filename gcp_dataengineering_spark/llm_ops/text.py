@@ -824,19 +824,19 @@ def gopher_repetition_features(
     )
     w = F.col("_w")
 
-    def _top_cov(n: int) -> Column:
-        # coverage (count × gram length) of the top n-gram
-        return _top_gram(
-            w, n, lambda acc: acc["bc"] * F.length(acc["bg"]).cast("long")
-        )
-
     doc_stats = base.select(
         "doc_id",
         F.size(w).cast("long").alias("_nw"),
         F.aggregate(
             w, F.lit(0).cast("long"), lambda a, x: a + F.length(x)
         ).alias("_wchars"),
-        *[_top_cov(n).alias(f"_tc{n}") for n in (2, 3, 4)],
+        # coverage (count × gram length) of each top n-gram
+        *[
+            _top_gram(
+                w, n, lambda acc: acc["bc"] * F.length(acc["bg"]).cast("long")
+            ).alias(f"_tc{n}")
+            for n in (2, 3, 4)
+        ],
     )
 
     # ------------------------------------------------ line/para units
@@ -893,7 +893,7 @@ def gopher_repetition_features(
         )
 
     # top 2/3/4-gram character coverage over the collapsed content —
-    # row-wise from the _top_cov folds riding on doc_stats
+    # row-wise from the _top_gram folds riding on doc_stats
     collapsed_len = F.greatest(
         (F.col("_wchars") + F.greatest(F.col("_nw") - 1, F.lit(0))).cast(
             "double"
