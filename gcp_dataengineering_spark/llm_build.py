@@ -13,19 +13,26 @@ Writes under --out:
   shards/   the shard plan (doc_id → split/lang shard assignment)
   report.json  one JSON object of per-stage row counts
 
-and prints the report JSON to stdout (one line — scriptable)."""
+and prints the report JSON to stdout (one line — scriptable).
+
+With --bpe-train or --unigram-train the tokenizer trains on its own
+driver thread (``session.submit``), beside the gate → LM → scrub →
+dedup → semantic chain, which reads the vocabulary only at its encode
+step. Both are chains of small Spark jobs, so each fills the other's
+driver gaps. The build waits for the trainer before it releases its
+pins, whether it returned or raised; a trainer error is re-raised
+unless the chain failed first."""
 
 from __future__ import annotations
 
 import argparse
 import json
 import os
-from contextlib import contextmanager
-
-from pyspark.sql import functions as F
+from concurrent.futures import wait
+from contextlib import ExitStack, contextmanager
 
 from .llm_ops.pipeline import PipelineConfig, build_training_corpus, stage_counts
-from .session import get_spark
+from .session import get_spark, submit
 
 
 def build_arg_parser() -> argparse.ArgumentParser:
@@ -355,21 +362,47 @@ def _parse_frac(text: str, flag: str) -> tuple[int, int]:
 
 @contextmanager
 def released_pins(spark):
-    """Unpersist, on exit, every RDD pinned inside the block — the
-    build's localCheckpoint / persist blocks — whether the block
-    returned or raised. RDDs persistent before the block (frames the
-    caller cached) keep their storage. Reliable-checkpoint files
-    (pins made under a session checkpoint directory) are not
-    persistent RDDs: they stay under that directory, which the
-    deployment owns."""
-    jsc = spark.sparkContext._jsc
+    """Release, on exit, every pin made inside the block, whether the
+    block returned or raised: unpersist each RDD that became
+    persistent (the build's localCheckpoint / persist blocks), then
+    delete each entry that appeared under the session's checkpoint
+    directory (the reliable-checkpoint files of pins made while one
+    is set). RDDs persistent before the block (frames the caller
+    cached) keep their storage, and checkpoint entries that existed
+    before it stay."""
+    sc = spark.sparkContext
+    jsc = sc._jsc
     before = set(jsc.getPersistentRDDs().keySet())
+    ckpt = sc.getCheckpointDir()
+    if ckpt is not None:
+        ckpt_path = sc._jvm.org.apache.hadoop.fs.Path(ckpt)
+        fs = ckpt_path.getFileSystem(jsc.hadoopConfiguration())
+        kept = _entries(fs, ckpt_path)
     try:
         yield
     finally:
         for rdd_id, rdd in jsc.getPersistentRDDs().items():
             if rdd_id not in before:
                 rdd.unpersist(True)
+        if ckpt is not None:
+            for name, path in _entries(fs, ckpt_path).items():
+                if name not in kept:
+                    fs.delete(path, True)
+
+
+def _entries(fs, path) -> dict:
+    """Name -> Hadoop path of each entry in the directory ``path``."""
+    if not fs.exists(path):
+        return {}
+    return {st.getPath().getName(): st.getPath() for st in fs.listStatus(path)}
+
+
+def _write_table(df, out: str, name: str) -> None:
+    """``df`` as the one-file parquet table ``<out>/<name>``: the
+    tokenizer and models a release ships beside its corpus (a release
+    without them is not reproducible)."""
+    os.makedirs(out, exist_ok=True)
+    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, name))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -446,7 +479,7 @@ def main(argv: list[str] | None = None) -> int:
         else None
     )
     spark = get_spark("llm_build", cpus=args.cpus)
-    with released_pins(spark):
+    with released_pins(spark), ExitStack() as waits:
         docs = spark.read.parquet(args.docs)
         eval_df = spark.read.parquet(args.eval) if args.eval else None
         from .llm_ops.bpe import UNICODE_WORD_PATTERN
@@ -459,47 +492,54 @@ def main(argv: list[str] | None = None) -> int:
             # byte-level)
             None: None,
         }[args.bpe_word_pattern]
-        merges_df = None
+        # the tokenizer trains on its own driver thread while the
+        # gate-and-dedup chain runs; the build waits for the table
+        # only at its encode step (PipelineConfig takes the Future)
+        merges_df = unigram_df = trainer = None
         if args.bpe_train is not None:
             from .llm_ops.bpe import bpe_train
 
-            learned = bpe_train(
-                docs, args.bpe_train, word_pattern=word_pattern,
-                byte_level=args.bpe_byte_level,
-            )
-            merges_df = spark.createDataFrame(
-                learned, "left string, right string, rank long"
-            )
-            # persist the vocabulary next to the corpus: a release without
-            # its tokenizer is not reproducible
-            os.makedirs(args.out, exist_ok=True)
-            merges_df.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(args.out, "merges.parquet")
-            )
+            def train_bpe():
+                learned = bpe_train(
+                    docs, args.bpe_train, word_pattern=word_pattern,
+                    byte_level=args.bpe_byte_level,
+                )
+                merges = spark.createDataFrame(
+                    learned, "left string, right string, rank long"
+                )
+                _write_table(merges, args.out, "merges.parquet")
+                return merges
+
+            merges_df = trainer = submit(spark, train_bpe)
         elif args.bpe_merges is not None:
             merges_df = spark.read.parquet(args.bpe_merges)
-        unigram_df = None
         if args.unigram_train:
             from .llm_ops.unigram import unigram_train
 
-            unigram_df = unigram_train(
-                docs,
-                vocab_size=args.unigram_vocab_size,
-                max_piece_len=args.unigram_max_piece_len,
-                em_iters=args.unigram_em_iters,
-                # EM rounds + every downstream encode consume this table:
-                # pin it, the same contract bpe_train honors by returning
-                # driver-side rules
-                materialize=None,
-            )
-            # persist the vocabulary next to the corpus: a release without
-            # its tokenizer is not reproducible (the BPE branch's rule)
-            os.makedirs(args.out, exist_ok=True)
-            unigram_df.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(args.out, "unigram_vocab.parquet")
-            )
+            def train_unigram():
+                vocab = unigram_train(
+                    docs,
+                    vocab_size=args.unigram_vocab_size,
+                    max_piece_len=args.unigram_max_piece_len,
+                    em_iters=args.unigram_em_iters,
+                    # EM rounds + every downstream encode consume this
+                    # table: pin it, the same contract bpe_train honors
+                    # by returning driver-side rules
+                    materialize=None,
+                )
+                _write_table(vocab, args.out, "unigram_vocab.parquet")
+                return vocab
+
+            unigram_df = trainer = submit(spark, train_unigram)
         elif args.unigram_vocab is not None:
             unigram_df = spark.read.parquet(args.unigram_vocab)
+        if trainer is not None:
+            # whether the build returns or raises, the trainer ends
+            # before released_pins releases: it must not pin after the
+            # release or run on a stopped session. A trainer error
+            # reaches the build at its encode step; an earlier build
+            # error wins.
+            waits.callback(wait, [trainer])
         stages = build_training_corpus(
             docs,
             eval_df,
@@ -565,17 +605,11 @@ def main(argv: list[str] | None = None) -> int:
         corpus_dir = os.path.join(args.out, "corpus")
         shards_dir = os.path.join(args.out, "shards")
         if "quality_model" in stages:
-            # persist the gate the corpus shipped under: a release
-            # without its quality model is not reproducible
-            stages["quality_model"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(args.out, "quality_model.parquet")
-            )
+            # the gate the corpus shipped under
+            _write_table(stages["quality_model"], args.out, "quality_model.parquet")
         if "dsir_model" in stages:
-            # same rule for the selection model: the density-ratio
-            # weights the shipped corpus was sampled under
-            stages["dsir_model"].coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(args.out, "dsir_model.parquet")
-            )
+            # the density-ratio weights the corpus was sampled under
+            _write_table(stages["dsir_model"], args.out, "dsir_model.parquet")
         stages["corpus"].write.mode("overwrite").partitionBy("split").parquet(corpus_dir)
         stages["shards"].select(
             "doc_id", "_shard_part", "shard_id", "n_tokens"

@@ -50,6 +50,7 @@ narrow."""
 
 from __future__ import annotations
 
+from concurrent.futures import Future
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -127,7 +128,10 @@ class PipelineConfig:
     # bpe_word_pattern MUST match the corpus's scripts: the
     # lowercase-Latin default tokenizes non-Latin text to ZERO tokens,
     # which would silently un-cap those documents' budgets — widen it
-    # (e.g. r"[^\p{L}]+") for multilingual builds.
+    # (e.g. r"[^\p{L}]+") for multilingual builds. A Future of the
+    # table is accepted too (a trainer still running on another
+    # driver thread, see session.submit): the build takes its
+    # .result() at the encode step, the first stage that reads it.
     bpe_merges: object | None = None
     # None resolves in llm_ops.bpe to the classic "[^a-z]+" (or
     # whitespace when bpe_byte_level — the lossless-per-word choice)
@@ -146,6 +150,8 @@ class PipelineConfig:
     # piece sequences ride to the shards as `tokens`, and the vocab
     # ids ride as `token_ids` (NULL id = OOV single char). Mutually
     # exclusive with bpe_merges — one tokenizer denominates a build.
+    # Like bpe_merges it may be a Future of the table, resolved at
+    # the encode step.
     unigram_vocab: object | None = None
     unigram_max_piece_len: int = 6
     # r18 (r17 verdict item 5): SentencePiece-style byte fallback for
@@ -318,6 +324,11 @@ class PipelineConfig:
     # per-source ones. None = the pipeline's source column.
     mixture_by: str | None = None
     extra: dict = field(default_factory=dict)
+
+
+def _resolved(table):
+    """A tokenizer table, waiting for it when it is a ``Future``."""
+    return table.result() if isinstance(table, Future) else table
 
 
 def build_training_corpus(
@@ -804,7 +815,7 @@ def build_training_corpus(
         decontaminated = _materialize(decontaminated, materialize)
         tok = bpe_encode(
             decontaminated.select(id_col, text_col),
-            cfg.bpe_merges,
+            _resolved(cfg.bpe_merges),
             text_col=text_col,
             id_col=id_col,
             word_pattern=cfg.bpe_word_pattern,
@@ -826,12 +837,13 @@ def build_training_corpus(
         from .unigram import unigram_encode_docs, unigram_sample_docs
 
         decontaminated = _materialize(decontaminated, materialize)
+        vocab = _resolved(cfg.unigram_vocab)
         if cfg.unigram_sample_alpha is not None:
             # subword regularization: budgets count the pieces this
             # epoch's SAMPLED corpus consumes (salt picks the epoch)
             tok = unigram_sample_docs(
                 decontaminated.select(id_col, text_col),
-                cfg.unigram_vocab,
+                vocab,
                 id_col=id_col,
                 text_col=text_col,
                 max_piece_len=cfg.unigram_max_piece_len,
@@ -841,7 +853,7 @@ def build_training_corpus(
         else:
             tok = unigram_encode_docs(
                 decontaminated.select(id_col, text_col),
-                cfg.unigram_vocab,
+                vocab,
                 id_col=id_col,
                 text_col=text_col,
                 max_piece_len=cfg.unigram_max_piece_len,

@@ -12,12 +12,11 @@ append → audit rows appended.
 table jobs (nvs_tam, nvs_digital) at once on two driver threads, then
 writes the COMPLETED row. The two jobs share no input or output path,
 and each is a chain of many small Spark jobs, so the JVM fills one's
-driver gaps with the other's tasks. The threads are
-``InheritableThread``s: in PySpark's pinned-thread mode each Python
-thread has its own JVM thread, and these start with the caller's
-local properties (job group, description, scheduler pool). If either
-table job raises, ``run_all`` waits for the other, re-raises the
-first error in table order and writes no COMPLETED row.
+driver gaps with the other's tasks. Each starts through
+``session.submit``, so its thread carries the caller's local
+properties (job group, description, scheduler pool). If either table
+job raises, ``run_all`` waits for the other, re-raises the first error
+in table order and writes no COMPLETED row.
 
 Audit appends take ``_AUDIT_LOCK``: both table jobs append to the one
 ``audit_job_info`` directory, and two concurrent parquet appends to
@@ -31,11 +30,12 @@ from __future__ import annotations
 import os
 import threading
 from collections.abc import Callable, Sequence
+from concurrent.futures import wait
 from datetime import datetime, timezone
 
-from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import submit
 from ..sources.io import (
     append_audit,
     audit_rows,
@@ -112,27 +112,12 @@ def run_digital_job(spark: SparkSession, tables: dict[str, DataFrame], out_root:
 
 
 def _run_concurrently(spark: SparkSession, calls: Sequence[Callable[[], object]]) -> list:
-    """Each call on its own ``InheritableThread``; waits for all of
-    them, then returns their results in order or re-raises the first
-    error in order."""
-    results: list = [None] * len(calls)
-    errors: list = [None] * len(calls)
-
-    def target(i: int) -> None:
-        try:
-            results[i] = calls[i]()
-        except BaseException as e:  # re-raised on the caller's thread
-            errors[i] = e
-
-    threads = [InheritableThread(target, args=(i,), session=spark) for i in range(len(calls))]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    for e in errors:
-        if e is not None:
-            raise e
-    return results
+    """Each call on its own thread (``session.submit``); waits for all
+    of them, then returns their results in order or re-raises the
+    first error in order."""
+    futures = [submit(spark, call) for call in calls]
+    wait(futures)
+    return [f.result() for f in futures]
 
 
 def run_all(spark: SparkSession, tables: dict[str, DataFrame], out_root: str,

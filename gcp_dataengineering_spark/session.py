@@ -18,12 +18,18 @@ plain local session with scale-aware defaults:
 - UTC session timezone so timestamp semantics match the DuckDB
   oracle used for differential testing.
 - Arrow enabled for the Pandas-UDF paths in llm_ops.
+
+``submit`` is the package's one way to run Spark work on another
+driver thread (see its docstring).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import Future
 
+from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 
 
@@ -64,3 +70,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def submit(spark: SparkSession, fn: Callable[[], object]) -> Future:
+    """Start ``fn()`` on its own driver thread and return a
+    ``Future`` that gets its result or its exception.
+
+    The thread is a ``pyspark.InheritableThread``: in PySpark's
+    pinned-thread mode each Python thread has its own JVM thread,
+    and this one starts with the caller's local properties (job
+    group, job description, scheduler pool) and tags. The Spark jobs
+    ``fn`` submits share the session's cores with the caller's, so
+    two independent chains of small jobs fill each other's driver
+    gaps."""
+    future: Future = Future()
+    future.set_running_or_notify_cancel()
+
+    def target() -> None:
+        try:
+            future.set_result(fn())
+        except BaseException as e:  # re-raised by future.result()
+            future.set_exception(e)
+
+    name = f"submit-{getattr(fn, '__name__', 'fn')}"
+    InheritableThread(target, session=spark, name=name).start()
+    return future

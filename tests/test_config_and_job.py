@@ -182,6 +182,46 @@ def test_concurrent_audit_appends_all_land(spark, tmp_path):
     assert sorted(rows) == sorted((f"t{i}", i) for i in range(n))
 
 
+def test_run_concurrently_results_errors_and_job_group(spark):
+    """_run_concurrently (on session.submit) returns the results in
+    call order, not finish order; raises the first error in call
+    order only after every call has ended; and each thread sees the
+    job group its caller set."""
+    import threading
+    import time
+
+    from gcp_dataengineering_spark.pipelines.jobs import _run_concurrently
+    from gcp_dataengineering_spark.session import submit
+
+    assert _run_concurrently(spark, [
+        lambda: time.sleep(0.3) or "slow", lambda: "fast",
+    ]) == ["slow", "fast"]
+
+    ended = threading.Event()
+
+    def late_ok():
+        time.sleep(0.5)
+        ended.set()
+
+    def fail(msg):
+        raise RuntimeError(msg)
+
+    with pytest.raises(RuntimeError, match="^first$"):
+        _run_concurrently(spark, [
+            lambda: fail("first"), late_ok, lambda: fail("second"),
+        ])
+    assert ended.is_set()
+
+    sc = spark.sparkContext
+    key = "spark.jobGroup.id"
+    sc.setLocalProperty(key, "caller-group")
+    try:
+        seen = submit(spark, lambda: sc.getLocalProperty(key)).result(timeout=60)
+    finally:
+        sc.setLocalProperty(key, None)
+    assert seen == "caller-group"
+
+
 def test_fixture_table_constant_in_sync():
     from gcp_dataengineering_spark.fixtures import FIXTURE_TABLES, synth_inputs
 

@@ -429,6 +429,12 @@ def test_llm_build_cli_bpe_train(spark, tmp_path):
     # the trainer stops early if the tiny vocabulary exhausts its pairs
     assert 1 <= merges.count() <= 6
     assert set(merges.columns) == {"left", "right", "rank"}
+    # the rules trained beside the build are the standalone trainer's
+    from gcp_dataengineering_spark.llm_ops.bpe import bpe_train
+
+    want = bpe_train(spark.read.parquet(docs_path), 6, word_pattern=None)
+    assert [tuple(r) for r in merges.orderBy("rank").select("left", "right", "rank")
+            .collect()] == [tuple(m) for m in want]
     corpus = spark.read.parquet(out + "/corpus")
     row = corpus.first()
     assert row.n_tokens == len(row.tokens) and len(row.tokens) > 0
@@ -1188,6 +1194,15 @@ def test_llm_build_cli_unigram_train(spark, tmp_path):
     # tiny alphabet (w/banana/band): at least every single char plus
     # some learned multi-char pieces
     assert vocab.count() >= 5
+    # the table trained beside the build is the standalone trainer's
+    from gcp_dataengineering_spark.llm_build import released_pins
+    from gcp_dataengineering_spark.llm_ops.unigram import unigram_train
+
+    with released_pins(spark):
+        want = unigram_train(spark.read.parquet(docs_path), vocab_size=50,
+                             max_piece_len=4, em_iters=1).collect()
+    assert sorted(map(tuple, vocab.select(*want[0].__fields__).collect())) == sorted(
+        map(tuple, want))
     corpus = spark.read.parquet(out + "/corpus")
     row = corpus.first()
     assert row.n_tokens == len(row.tokens) and len(row.tokens) > 0
@@ -1539,17 +1554,20 @@ def test_build_training_corpus_pins_tokenized_corpus_and_lm_scores(spark):
     assert len(want) == 11
 
 
-def test_llm_build_releases_its_pins(spark, tmp_path):
+def test_llm_build_releases_its_pins(spark, tmp_path, request):
     """llm_build.main unpersists every RDD the build pinned (the
     trained vocab, the branch-point checkpoints) before it returns,
     and a failed block releases too. A frame the caller cached before
-    the call keeps its storage."""
+    the call keeps its storage. With a session checkpoint directory
+    the pins are reliable checkpoints: the build deletes the entries
+    it wrote there and keeps the ones that were there before."""
     import json
     import os
 
     import pytest as _pytest
 
     from gcp_dataengineering_spark.llm_build import main, released_pins
+    from gcp_dataengineering_spark.llm_ops.materialize import materialize
 
     docs_path = os.path.join(tmp_path, "docs.parquet")
     _fluent_docs(spark).write.parquet(docs_path)
@@ -1579,5 +1597,111 @@ def test_llm_build_releases_its_pins(spark, tmp_path):
                 spark.range(10).localCheckpoint(eager=True)
                 raise RuntimeError("build failed")
         assert set(jsc.getPersistentRDDs().keySet()) == before
+
+        ckpt = request.getfixturevalue("checkpoint_dir")
+        theirs = spark.range(5).checkpoint(eager=True)
+        entries = set(ckpt.glob("*/*"))
+        assert any(p.name.startswith("rdd-") for p in entries)
+        rc = main([
+            "--docs", docs_path, "--out", os.path.join(tmp_path, "build_ckpt"),
+            "--shard-budget", "500", "--tokenizer", "unigram", "--unigram-train",
+            "--unigram-vocab-size", "40", "--unigram-max-piece-len", "4",
+            "--unigram-em-iters", "1",
+        ])
+        assert rc == 0
+        assert set(ckpt.glob("*/*")) == entries
+        assert theirs.count() == 5
+
+        with _pytest.raises(RuntimeError, match="build failed"):
+            with released_pins(spark):
+                materialize(spark.range(10))
+                assert set(ckpt.glob("*/*")) > entries
+                raise RuntimeError("build failed")
+        assert set(ckpt.glob("*/*")) == entries
+        assert set(jsc.getPersistentRDDs().keySet()) == before
     finally:
         mine.unpersist()
+
+
+def _trainer_threads():
+    """The llm_build unigram trainer threads still alive after a
+    short join (a thread that has set its future's result may need a
+    moment to return)."""
+    import threading
+
+    threads = [t for t in threading.enumerate() if t.name == "submit-train_unigram"]
+    for t in threads:
+        t.join(timeout=10)
+    return [t for t in threads if t.is_alive()]
+
+
+_UNIGRAM_ARGV = ("--shard-budget", "500", "--tokenizer", "unigram", "--unigram-train",
+                 "--unigram-vocab-size", "40", "--unigram-max-piece-len", "4",
+                 "--unigram-em-iters", "1")
+
+
+def test_llm_build_trainer_error_is_raised_after_its_pins_release(
+        spark, tmp_path, monkeypatch):
+    """A trainer that pins and then raises makes llm_build.main raise
+    its error (the chain meets it at the encode step), with no new
+    persistent RDD and no trainer thread left running."""
+    import os
+
+    from gcp_dataengineering_spark.llm_build import main
+    from gcp_dataengineering_spark.llm_ops import unigram
+    from gcp_dataengineering_spark.llm_ops.materialize import materialize
+
+    def failing_train(docs, **kwargs):
+        materialize(docs.select("doc_id"))
+        raise RuntimeError("trainer failed")
+
+    monkeypatch.setattr(unigram, "unigram_train", failing_train)
+    docs_path = os.path.join(tmp_path, "docs.parquet")
+    _fluent_docs(spark).write.parquet(docs_path)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    with pytest.raises(RuntimeError, match="trainer failed"):
+        main(["--docs", docs_path, "--out", os.path.join(tmp_path, "out"),
+              *_UNIGRAM_ARGV])
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == before
+    assert _trainer_threads() == []
+
+
+def test_llm_build_chain_error_waits_for_the_trainer(spark, tmp_path, monkeypatch):
+    """When the chain raises while the trainer is still running,
+    llm_build.main re-raises the chain's error only after the trainer
+    has ended, and the pin the trainer made after the chain failed is
+    released too."""
+    import os
+    import threading
+
+    from gcp_dataengineering_spark import llm_build
+    from gcp_dataengineering_spark.llm_ops import unigram
+    from gcp_dataengineering_spark.llm_ops.materialize import materialize
+
+    started, ended = threading.Event(), threading.Event()
+    chain_failed = threading.Event()
+
+    def slow_train(docs, **kwargs):
+        started.set()
+        assert chain_failed.wait(60)
+        vocab = materialize(spark.createDataFrame(
+            [("a", 1, -1, 0)], "piece string, cnt long, score long, piece_id int"))
+        ended.set()
+        return vocab
+
+    def failing_chain(*args, **kwargs):
+        assert started.wait(60)
+        chain_failed.set()
+        raise RuntimeError("chain failed")
+
+    monkeypatch.setattr(unigram, "unigram_train", slow_train)
+    monkeypatch.setattr(llm_build, "build_training_corpus", failing_chain)
+    docs_path = os.path.join(tmp_path, "docs.parquet")
+    _fluent_docs(spark).write.parquet(docs_path)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    with pytest.raises(RuntimeError, match="chain failed"):
+        llm_build.main(["--docs", docs_path, "--out", os.path.join(tmp_path, "out"),
+                        *_UNIGRAM_ARGV])
+    assert ended.is_set()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == before
+    assert _trainer_threads() == []
